@@ -7,6 +7,14 @@ object Bench {
     case i  => k.substring(0, i)
   }
 
+  /** Exact query selection shared by every main: a wanted entry names a
+    * query by its full name or its qNN short name, never by prefix — a
+    * raw `startsWith` made "q14" also select q140–q149, and streaming
+    * queries RUN their stream on construction, so an over-broad match
+    * silently paid those drains. */
+  private[graft] def selects(wanted: Set[String], name: String): Boolean =
+    wanted.contains(name) || wanted.contains(shortOf(name))
+
   /** True median: middle element on odd counts, middle-pair average on
     * even — shared by the per-query medians and the calibration so an
     * even run count (SPARK_GRAFT_BENCH_RUNS=2/4) cannot re-open the
@@ -135,13 +143,28 @@ object Bench {
     // steady-state per-query cost a cluster would see.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
-    // local iteration aid: comma-separated query-name (or qNN prefix)
-    // filter — lets a single hot query be re-timed without the full batch
+    // local iteration aid: comma-separated query names (full or qNN,
+    // see [[selects]]) — lets a single hot query be re-timed without the
+    // full batch; with SPARK_GRAFT_BENCH_RUNS=1 the warm pass is its
+    // cold run
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.filter { case (name, _) =>
-      only.forall(s => s.contains(name) || s.exists(name.startsWith))
+      only.forall(selects(_, name))
     }
+    // stream-running queries, observed rather than listed: a query that
+    // starts a stream while it runs carries microbatch + state-store
+    // machinery a continuous deployment amortizes, so `batch_value`
+    // leaves it out. onQueryStarted runs synchronously in the thread
+    // that starts the stream, i.e. inside the query's own run.
+    val streaming = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    var running = ""
+    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = streaming.add(running)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    })
     // WARM PASS (run 0, excluded from medians): execute every selected
     // query once so one-time costs land here, not in a timed sample —
     // whole-stage codegen compilation, and above all the SHARED session
@@ -166,6 +189,7 @@ object Bench {
     val samplesOut = java.nio.file.Files.newBufferedWriter(samplesPath)
     def runPass(run: Int): Seq[(String, Option[Double])] =
       selected.map { case (name, fn) =>
+        running = name
         val t0 = System.nanoTime()
         // noop sink: full materialization of every output column —
         // count() would let Catalyst prune aggregate values and
@@ -283,6 +307,7 @@ object Bench {
     // rule; BenchCalibrationSpec pins it)
     def soloRun(name: String): Option[Double] =
       selected.find(_._1 == name).map { case (_, fn) =>
+        running = name
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -336,17 +361,6 @@ object Bench {
     // not work done; the failed list makes partial runs machine-visible
     val ok = results.filter { case (k, _) => !failed.contains(k) }
     val total = ok.map(_._2).sum
-    // informational split: streaming queries carry constant microbatch +
-    // state-store machinery that a continuous deployment amortizes
-    val streaming = Set("q32_stream_daily", "q52_stream_join",
-                        "q56_stateful_totals", "q96_stream_sessions",
-                        "q106_stream_ingest_dedup",
-                        "q145_revenue_segment_stream",
-                        // r12: the split now covers EVERY stream-running
-                        // query (q146/q148/q154/q164 were missing)
-                        "q146_stream_asof", "q148_stream_asof_final",
-                        "q154_cdc_summing_stream", "q164_stream_hybrid_daily",
-                        "q168_stream_orders_hybrid")
     val batchTotal = ok.collect {
       case (k, v) if !streaming.contains(k) => v
     }.sum

@@ -1,9 +1,10 @@
 package graft
 
 /** Dev tool (r19 optimization round): dump `.explain("formatted")` for a
-  * comma-separated list of query names (or qNN prefixes) into a directory
-  * of one `<qNN>_<suffix>.txt` file each — the before/after plan evidence
-  * the optimization deliverable commits under `plans/r19/`.
+  * comma-separated list of query names (full or qNN, [[Bench.selects]])
+  * into a directory of one `<qNN>_<suffix>.txt` file each — the
+  * before/after plan evidence the optimization deliverable commits under
+  * `plans/r19/`.
   *
   *   sbt "runMain graft.DumpPlans q16,q99 plans/r19 before [sfDir]"
   *
@@ -20,13 +21,7 @@ object DumpPlans {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     SparkEntry.queries.toSeq
-      // exact full-name or exact qNN-prefix match (the r19 advice: a
-      // raw startsWith made "q16" also select q160–q169, and streaming
-      // queries RUN their stream on construction — an over-broad match
-      // silently paid those drains and dumped unrequested plans)
-      .filter { case (name, _) =>
-        wanted.contains(name) || wanted.contains(Bench.shortOf(name))
-      }
+      .filter { case (name, _) => Bench.selects(wanted, name) }
       .foreach { case (name, fn) =>
         val short = Bench.shortOf(name)
         val df = fn(spark, sfDir)

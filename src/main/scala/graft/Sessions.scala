@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** One session recipe for all local mains (Verify/Bench/Explain) — the
+/** One session recipe for all local mains (Verify/Bench/DumpPlans) — the
   * nanosAsLong conf is load-bearing (events.ts is TIMESTAMP(NANOS)) and
   * must never drift between the tool that debugs and the tool that
   * measures. */

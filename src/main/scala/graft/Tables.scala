@@ -18,35 +18,16 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  // r20 (guide §1.2 per-query fixed costs): every spark.read.parquet
-  // call re-lists the path and runs a one-task schema-inference job on
-  // the footer — ~40 ms of driver+job latency per call, paid 1–4× by
-  // every one of ~300 queries. The resolved relation (schema + file
-  // index) is immutable for an immutable fixture file, so memoize it
-  // per (session identity, path) — the registry acting as the catalog
-  // a warehouse resolves tables through. This caches ONLY the logical
-  // relation; every query still scans parquet at execution. Keyed on
-  // session OBJECT identity like the llm index cache (a stopped
-  // session's entries are inert, never served to a live one).
-  private val relCache =
-    new java.util.IdentityHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
+  /** `spark.read.parquet(path)` memoized per session until the file at
+    * `path` changes ([[SessionCache]]). r20: every read otherwise
+    * re-lists the path and runs a one-task schema-inference job on the
+    * footer, ~40 ms per call paid 1–4× by every query. Only the logical
+    * relation is cached; every query still scans parquet at execution. */
+  def loadPath(spark: SparkSession, path: String): DataFrame =
+    SessionCache(spark, "relation", path)(Seq(path))(spark.read.parquet(path))
 
-  /** Memoized `spark.read.parquet(path)` for an immutable input file —
-    * see [[relCache]]. */
-  def loadPath(spark: SparkSession, path: String): DataFrame = {
-    val perSession = relCache.synchronized {
-      var m = relCache.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, DataFrame]
-        relCache.put(spark, m)
-      }
-      m
-    }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(path, spark.read.parquet(path))
-    }
-  }
+  /** The file behind table `name` of a scale-factor directory. */
+  def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
   /** Load one table from a scale-factor directory. Plain parquet scan:
     * Catalyst handles column pruning + predicate pushdown into the scan
@@ -54,7 +35,7 @@ object Tables {
     * `usdc-transfers/src/main.ts:46-57`; with Parquet they are free).
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    loadPath(spark, s"$sfDir/$name.parquet")
+    loadPath(spark, path(sfDir, name))
 
   /** Normalize a raw `ts` column to session-zoned TimestampType whatever
     * parquet encoding the fixture generator used — the loader-contract

@@ -9,11 +9,11 @@ object Verify {
     val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
     // local iteration aid (mirrors Bench): dump + oracle only the named
-    // queries; the driver never sets this, so its runs stay exhaustive
+    // queries (full name or qNN, [[Bench.selects]]); unset, every
+    // query runs
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(',').map(_.trim).toSet)
-    def selected(name: String): Boolean =
-      only.forall(s => s.contains(name) || s.exists(name.startsWith))
+    def selected(name: String): Boolean = only.forall(Bench.selects(_, name))
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

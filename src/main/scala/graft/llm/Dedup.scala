@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionCache, Tables}
 
 /** Deduplication operators over `documents` (north-star, SURVEY §7.5):
   * exact, n-gram Jaccard with blocking, MinHash-LSH, SimHash.
@@ -246,6 +246,9 @@ object Dedup {
       .toDF("doc_id", "lang", "source", "n_chars", "shingles")
   }
 
+  /** What the text indexes' [[SessionCache]] entries are valid for. */
+  private def corpus(sfDir: String): Seq[String] = Seq(Tables.path(sfDir, "documents"))
+
   /** Session-scoped SHINGLE INDEX: the distinct word-trigram set per
     * document, built once per (session, corpus dir) and persisted.
     * Five operators (blocked Jaccard, both MinHash paths, both
@@ -255,48 +258,10 @@ object Dedup {
     * the reference materializes its rollups once per insert batch.
     * The index is hash-partitioned by doc_id (built by that groupBy),
     * so downstream per-doc aggregations reuse the partitioning without
-    * a new exchange. Entries live for the session (bounded: one per
-    * corpus dir). */
-  // keyed by SESSION OBJECT IDENTITY (not a hash that could collide
-  // across a stopped and a live session and serve stale plans); entries
-  // for dead sessions are inert and bounded by dirs × sessions per JVM
-  private val indexCache =
-    new java.util.IdentityHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
-
-  /** Build-once-per-(session, key) memoization behind every session
-    * index below: the first consumer builds and persists, every later
-    * consumer reuses the materialized frame — the local stand-in for
-    * the per-snapshot artifacts a production lake persists. */
-  private[llm] def sessionCached(spark: SparkSession, key: String)
-                                (build: => DataFrame): DataFrame = {
-    val perSession = indexCache.synchronized {
-      var m = indexCache.get(spark)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, DataFrame]
-        indexCache.put(spark, m)
-      }
-      m
-    }
-    perSession.synchronized(perSession.get(key)) match {
-      case Some(df) => df
-      case None =>
-        // build OUTSIDE the lock: some builds (the component
-        // contraction) run eager Spark jobs, and holding the map lock
-        // through them would stall every cache hit on every other key
-        val built = build
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // on a lost same-key race, do NOT unpersist the loser: Spark's
-        // CacheManager keys on the canonicalized plan, so the loser's
-        // persist was a no-op against the winner's entry and an
-        // unpersist here would evict the SHARED cache entry — every
-        // later consumer would silently recompute the index
-        perSession.synchronized(perSession.getOrElseUpdate(key, built))
-    }
-  }
-
+    * a new exchange. */
   def shingleIndex(spark: SparkSession, sfDir: String): DataFrame =
-    sessionCached(spark, sfDir)(shingled(Tables.documents(spark, sfDir)))
+    SessionCache.persisted(spark, "llm.shingles", sfDir)(corpus(sfDir))(
+      shingled(Tables.documents(spark, sfDir)))
 
   /** N-gram Jaccard near-dedup with blocking: candidate pairs share
     * (lang, source, n_chars DIV 50); top-20 most similar pairs.
@@ -358,7 +323,7 @@ object Dedup {
     * the near-dup paths persist (see [[writeNearDupIndex]]), so the
     * session cache is the local stand-in for that materialization. */
   def signatureIndex(spark: SparkSession, sfDir: String): DataFrame =
-    sessionCached(spark, "sig:" + sfDir)(
+    SessionCache.persisted(spark, "llm.signatures", sfDir)(corpus(sfDir))(
       signaturesOf(shingleIndex(spark, sfDir)))
 
   /** (doc_id, band, bh) banded rows from a signature frame: 8 bands of
@@ -685,7 +650,7 @@ object Dedup {
     // keep (q114), and any other consumer pay the iterative label
     // propagation once per corpus snapshot — in production this frame
     // is itself a persisted per-snapshot artifact.
-    sessionCached(spark, "cc:" + sfDir)(
+    SessionCache.persisted(spark, "llm.components", sfDir)(corpus(sfDir))(
       componentsOf(nearDupEdgeIndex(spark, sfDir)))
 
   /** Session-scoped exact-Jaccard near-dup EDGE index — [[nearDupEdges]]
@@ -693,7 +658,7 @@ object Dedup {
     * and the cross-source matrix ([[crossSourceDups]]) both consume the
     * same skinny (a_id, b_id) frame. */
   def nearDupEdgeIndex(spark: SparkSession, sfDir: String): DataFrame =
-    sessionCached(spark, "edges:" + sfDir)(
+    SessionCache.persisted(spark, "llm.edges", sfDir)(corpus(sfDir))(
       nearDupEdges(
         shingleIndex(spark, sfDir)
           .select(col("doc_id"), col("lang"), col("n_chars"), col("shingles"))))
@@ -712,7 +677,7 @@ object Dedup {
     // the connected-component frame explicitly), and both consumers
     // (the clustering report q88 and the keep decision q107) re-ran
     // the iterative label propagation per invocation before this.
-    sessionCached(spark, "mcc:" + sfDir)(
+    SessionCache.persisted(spark, "llm.minhash_components", sfDir)(corpus(sfDir))(
       componentsOf(
         minhashVerifiedPairs(spark, sfDir).filter(col("jaccard") >= 0.7)
           .select(col("a_id"), col("b_id"))))

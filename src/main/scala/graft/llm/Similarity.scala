@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionCache, Tables}
 import graft.expr.DotProduct
 
 /** Similarity search over the `embeddings` table (north-star, SURVEY
@@ -173,9 +173,8 @@ object Similarity {
       .orderBy("label")
   }
 
-  private val modelCache =
-    new java.util.IdentityHashMap[SparkSession,
-      scala.collection.mutable.Map[String, org.apache.spark.ml.clustering.KMeansModel]]()
+  /** What the vector indexes' [[SessionCache]] entries are valid for. */
+  private def vectors(sfDir: String): Seq[String] = Seq(Tables.path(sfDir, "embeddings"))
 
   /** One IVF coarse-quantizer (k-means) build per (session, corpus,
     * nlist) — the amortized index-build step every consumer shares:
@@ -185,21 +184,13 @@ object Similarity {
     * exactly as one production snapshot job builds one index. */
   private def ivfModel(spark: SparkSession, sfDir: String,
                        nlist: Int): org.apache.spark.ml.clustering.KMeansModel =
-    modelCache.synchronized {
-      var perSession = modelCache.get(spark)
-      if (perSession == null) {
-        perSession = scala.collection.mutable.Map.empty[
-          String, org.apache.spark.ml.clustering.KMeansModel]
-        modelCache.put(spark, perSession)
-      }
-      perSession.getOrElseUpdate(s"$sfDir:$nlist", {
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        new KMeans().setK(nlist).setSeed(42L).setMaxIter(5)
-          .setFeaturesCol("features")
-          .fit(Tables.embeddings(spark, sfDir)
-            .withColumn("features", array_to_vector(col("embedding"))))
-      })
+    SessionCache(spark, "llm.ivf", s"$sfDir:$nlist")(vectors(sfDir)) {
+      import org.apache.spark.ml.clustering.KMeans
+      import org.apache.spark.ml.functions.array_to_vector
+      new KMeans().setK(nlist).setSeed(42L).setMaxIter(5)
+        .setFeaturesCol("features")
+        .fit(Tables.embeddings(spark, sfDir)
+          .withColumn("features", array_to_vector(col("embedding"))))
     }
 
   /** True IVF (inverted-file) ANN: build nlist coarse centroids with
@@ -459,7 +450,7 @@ object Similarity {
     * ([[writeIvfIndex]]); the session cache is the local stand-in. */
   def lshPairIndex(spark: SparkSession, sfDir: String,
                    tables: Int = 8, bits: Int = 0): DataFrame =
-    Dedup.sessionCached(spark, s"lshpairs:$sfDir:$tables:$bits")(
+    SessionCache.persisted(spark, "llm.lsh_pairs", s"$sfDir:$tables:$bits")(vectors(sfDir))(
       lshCandidatePairs(spark, sfDir, tables, bits))
 
   /** SEMANTIC dedup clusters at 100 TB — [[semanticClusters]] with the
@@ -478,7 +469,8 @@ object Similarity {
     // cluster labels cached per (corpus, threshold, tables, bits) like
     // the text path's component cache: the clustering (q111) and the
     // materializing keep (q113) pay the iterative contraction once
-    Dedup.sessionCached(spark, s"lshcc:$sfDir:$threshold:$tables:$bits") {
+    SessionCache.persisted(spark, "llm.lsh_components",
+                           s"$sfDir:$threshold:$tables:$bits")(vectors(sfDir)) {
       val edges = lshPairIndex(spark, sfDir, tables, bits)
         .filter(col("sim") >= threshold)
         .select(col("a_id"), col("b_id"))

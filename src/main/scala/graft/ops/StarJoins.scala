@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionCache, Tables}
 import Fns._
 
 /** Star-schema join capability (SURVEY §2.3 — the reference has zero
@@ -189,36 +189,17 @@ object StarJoins {
     * `RollupRouting.JoinSpec` registration points at). */
   def revenueSegmentRollupDir(sfDir: String): String = scratch(sfDir, "revseg_rollup")
 
-  // Build-once-per-(session, dir) memo for the persisted join rollups —
-  // the same session-artifact policy as the llm index caches
-  // (Dedup.sessionCached): each MV is maintained by its own pipeline
-  // (q145's streaming insert-maintenance); dashboard reads pay the
-  // build at most once per session, and the bench's warm pass absorbs
-  // it like every other shared index build. Fixture inputs are
-  // immutable within a session, so the memo can never serve stale data.
-  private val builtRollups =
-    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]()
+  /** Writes `build` to `dir` once per session ([[SessionCache]]) and
+    * again once a file the build frame read changes. The sources are
+    * those input files, never `dir`: coverage stamps and stream appends
+    * change the rollup dir without staling its build. */
   private[graft] def ensureRollup(spark: SparkSession, dir: String)
                                  (build: => DataFrame): String = {
-    val perSession = builtRollups.synchronized {
-      var s = builtRollups.get(spark)
-      if (s == null) {
-        s = java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
-        builtRollups.put(spark, s)
-      }
-      s
+    lazy val df = build
+    SessionCache(spark, "rollup", dir)(df.inputFiles.toSeq) {
+      df.write.mode("overwrite").parquet(dir)
+      dir
     }
-    // memo AFTER the write succeeds (and hold the per-session lock
-    // across it): marking first would poison the memo on a failed
-    // write, leaving later reads pointed at a missing or partially-
-    // written rollup instead of rebuilding
-    perSession.synchronized {
-      if (!perSession.contains(dir)) {
-        build.write.mode("overwrite").parquet(dir)
-        perSession.add(dir)
-      }
-    }
-    dir
   }
   private def ensureRevenueSegmentRollup(spark: SparkSession, sfDir: String): String =
     ensureRollup(spark, revenueSegmentRollupDir(sfDir)) {

@@ -1777,31 +1777,9 @@ object RollupRouting {
     }
   }
 
-  /** Per-(path, directory-mtime) cache of each rollup's ANALYZED scan
-    * plan (round 12). Without it, every Aggregate visit × every
-    * candidate spec re-ran `spark.read.parquet` — file listing +
-    * schema inference — INSIDE an optimizer rule that runs to a fixed
-    * point, so planning latency grew O(specs × aggregates × listing):
-    * invisible at 4 registered specs, a scale-killer at a 100-MV
-    * deployment. The directory mtime keys invalidation — every writer
-    * here creates/removes files in the rollup dir (parquet overwrite,
-    * partial appends, the sidecar's ATOMIC_MOVE), each of which
-    * updates it — so a rebuilt rollup misses the cache and re-lists.
-    * The coverage SIDECAR is deliberately NOT cached: it is the
-    * hybrid read's commit point and is re-read fresh on every rewrite
-    * ([[RuleImpl.coveredUpTo]]). Each cache hit is handed out via
-    * `MultiInstanceRelation.newInstance()` so every use gets fresh
-    * ExprIds — exactly what a fresh read produced before. */
-  /** Keyed by (session, path, mtime): an analyzed relation holds its
-    * session's state, so a cached plan must never outlive its session
-    * into a new one (single-session deployments never notice; the
-    * guard costs one string compare). */
-  private[plans] val planCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), LogicalPlan]
-  /** Actual listing+inference reads performed (cache misses); the
-    * RollupRoutingSpec planning-cost case asserts one per distinct
-    * path per rollup state, not one per optimizer visit. */
-  @volatile private[graft] var planListings: Long = 0L
+  /** Rollup listing+inference reads so far (the plan cache's builds);
+    * RollupRoutingSpec asserts one per path per rollup state. */
+  private[graft] def planListings: Long = graft.SessionCache.stats("plan").builds
 
   class RuleImpl(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -1883,28 +1861,21 @@ object RollupRouting {
       case _ => None
     }
 
-    /** The rollup's analyzed scan, via the companion's per-(path,
-      * dir-mtime) cache — one file listing + schema inference per
-      * rollup state, however many optimizer visits and candidate specs
-      * probe it. Every hand-out goes through `newInstance()` for fresh
-      * output ExprIds (two routed subtrees in one query must not share
-      * attribute ids — a fresh read never did). */
+    /** The rollup's analyzed scan, cached per (session, path) while the
+      * rollup dir's (length, mtime) holds (round 12): without it every
+      * Aggregate visit × candidate spec re-ran listing + schema
+      * inference inside a fixed-point rule. Every writer here adds or
+      * removes files in the dir, so a rebuilt rollup re-lists. The
+      * coverage SIDECAR is the hybrid read's commit point and is re-read
+      * fresh ([[coveredUpTo]]). Hand-outs go through `newInstance()`:
+      * two routed subtrees in one query must not share ExprIds. */
     private def analyzedRollup(path: String): Option[LogicalPlan] = {
-      val mtime = new java.io.File(path).lastModified // 0 when missing
-      if (mtime == 0L) return None
-      val key = (System.identityHashCode(spark).toString, path, mtime)
-      planCache.get(key).orElse {
-        val read = try Some(spark.read.parquet(path).queryExecution.analyzed)
-                   catch { case scala.util.control.NonFatal(_) => None }
-        read.foreach { p =>
-          RollupRouting.planListings += 1
-          // drop stale states of the same path so the cache stays
-          // bounded by the registry size, not its rebuild history
-          planCache.filterInPlace { case ((_, pth, mt), _) => pth != path || mt == mtime }
-          planCache.put(key, p)
-        }
-        read
-      }.map {
+      if (!new java.io.File(path).exists) return None
+      val read =
+        try Some(graft.SessionCache(spark, "plan", path)(Seq(path))(
+               spark.read.parquet(path).queryExecution.analyzed))
+        catch { case scala.util.control.NonFatal(_) => None }
+      read.map {
         case m: org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation =>
           m.newInstance().asInstanceOf[LogicalPlan]
         case other => other

@@ -155,4 +155,11 @@ class BenchCalibrationSpec extends AnyFunSuite {
     assert(pick2.contains("q09_c"),
       s"with q68 failed the next-largest band must be picked: $pick2")
   }
+
+  test("query selection is exact: q14 selects q14_point_lookup, not q140_fn_catalog") {
+    val picked = SparkEntry.queries.keys.filter(Bench.selects(Set("q14"), _)).toSet
+    assert(picked == Set("q14_point_lookup"), s"$picked")
+    assert(Bench.selects(Set("q140_fn_catalog"), "q140_fn_catalog"))
+    assert(!Bench.selects(Set("q140_fn"), "q140_fn_catalog"))
+  }
 }
