@@ -366,13 +366,18 @@ object Bench {
     }.sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val flakyJson = flaky.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def line(keyOf: String => String, dp: Int): String = {
+    def line(keyOf: String => String, dp: Int, extra: String = ""): String = {
       val qs = results.map { case (k, v) => "\"" + keyOf(k) + "\":" + f(v, dp) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${f(total, dp)},"unit":"sec","runs":$runs,"queries":$qs,"isolated":${isolatedJson(keyOf)},"machine_factor":${f(machineFactor, 3)},"factor_check":"$factorCheck","sentinel_solo":$sentinelSoloJson,"norm_value":${f(total / machineFactor, dp)},"bands":$bandsJson,"sf":"$sfDir","batch_value":${f(batchTotal, dp)},"warm_sec":${f(warmSec, dp)},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"flaky":$flakyJson,"sink":"noop"}"""
+      s"""{"metric":"total","value":${f(total, dp)},"unit":"sec","runs":$runs,"queries":$qs,"isolated":${isolatedJson(keyOf)},"machine_factor":${f(machineFactor, 3)},"factor_check":"$factorCheck","sentinel_solo":$sentinelSoloJson,"norm_value":${f(total / machineFactor, dp)},"bands":$bandsJson,"sf":"$sfDir","batch_value":${f(batchTotal, dp)},"warm_sec":${f(warmSec, dp)},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"flaky":$flakyJson,"sink":"noop"$extra}"""
     }
+    // what the session built and reused, per SessionCache namespace
+    val sessionCacheJson = SessionCache.namespaces.map { ns =>
+      val st = SessionCache.stats(ns)
+      s""""$ns":{"hits":${st.hits},"misses":${st.misses},"builds":${st.builds},"build_s":${f(st.buildSeconds, 3)}}"""
+    }.mkString("{", ",", "}")
     // Full-precision, full-name report for humans and diffing.
-    val fullJson = line(identity, 3)
+    val fullJson = line(identity, 3, s""","session_cache":$sessionCacheJson""")
     val out = java.nio.file.Paths.get("target/bench_full.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))

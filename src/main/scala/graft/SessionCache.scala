@@ -72,6 +72,12 @@ object SessionCache {
                (sources: => Seq[String])(build: => DataFrame): DataFrame =
     apply(spark, ns, key)(sources)(build.persist(StorageLevel.MEMORY_AND_DISK))
 
+  /** The namespaces used since JVM start, sorted. */
+  def namespaces: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    counters.keySet.asScala.toSeq.sorted
+  }
+
   def stats(ns: String): Stats = {
     val c = counters.computeIfAbsent(ns, _ => new Counters)
     Stats(c.hits.sum, c.misses.sum, c.builds.sum, c.buildNanos.sum / 1e9)
@@ -89,11 +95,14 @@ object SessionCache {
     })
 
   /** (path, length, mtime) per path via Hadoop, so object stores work
-    * too; a missing path reads as length -1. */
+    * too; a missing path reads as length -1. A path with a scheme is a
+    * URI (`inputFiles` percent-encodes it: `file:/a%20b/x`); a plain
+    * path is taken literally. */
   private def fingerprint(spark: SparkSession, paths: Seq[String]): Seq[(String, Long, Long)] = {
     val conf = spark.sparkContext.hadoopConfiguration
     paths.map { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
+      val path = scala.util.Try(new java.net.URI(p)).toOption.filter(_.getScheme != null)
+        .map(new org.apache.hadoop.fs.Path(_)).getOrElse(new org.apache.hadoop.fs.Path(p))
       try {
         val st = path.getFileSystem(conf).getFileStatus(path)
         (p, st.getLen, st.getModificationTime)

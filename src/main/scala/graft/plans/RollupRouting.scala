@@ -1867,7 +1867,7 @@ object RollupRouting {
       * inference inside a fixed-point rule. Every writer here adds or
       * removes files in the dir, so a rebuilt rollup re-lists. The
       * coverage SIDECAR is the hybrid read's commit point and is re-read
-      * fresh ([[coveredUpTo]]). Hand-outs go through `newInstance()`:
+      * fresh ([[coveredUpToPath]]). Hand-outs go through `newInstance()`:
       * two routed subtrees in one query must not share ExprIds. */
     private def analyzedRollup(path: String): Option[LogicalPlan] = {
       if (!new java.io.File(path).exists) return None
@@ -2106,6 +2106,430 @@ object RollupRouting {
       cur
     }
 
+    // ——— registry members: one read side for both rewrite paths ———
+
+    /** Rewrite every aggregate in `ne` that a member of `aggs` answers
+      * onto that member's rollup column(s) — the registry's read side,
+      * shared by [[rewrite]] and [[rewriteJoin]] (the reference declares
+      * each MV once, `usdc-transfers/sql/analytics.sql:9-94`). The first
+      * member in `aggs` order that maps an aggregate wins; an aggregate
+      * no member maps stays as it is, and the caller's reference check
+      * then keeps the query live.
+      *  - `resolve` maps a source expression through the Projects below
+      *    the query's aggregate ([[resolveThroughProjects]]);
+      *  - `attr` finds a rollup column by name;
+      *  - `inLattice` marks a grouping-set rewrite ([[rewriteExpand]]);
+      *  - `grainCount(g)` is the path's own [[CountDistinctGrain]] rule:
+      *    the expression whose COUNT over rollup rows equals
+      *    COUNT(DISTINCT g), or None where the spec's shape does not
+      *    make the rollup's rows one per distinct g.
+      * Every member needs a non-distinct, unfiltered aggregate unless
+      * its case says otherwise; a re-aggregated state gets a fresh
+      * resultId wherever a scalar wraps it (two AggregateExpressions
+      * sharing one id would collide in the aggregate buffer). */
+    private def routeAggregates(ne: NamedExpression, aggs: Seq[AggMap],
+                                resolve: Expression => Expression,
+                                attr: String => Option[Attribute],
+                                inLattice: Boolean,
+                                grainCount: String => Option[Expression]): NamedExpression = {
+      def isBareRef(se: Expression, name: String): Boolean = resolve(se) match {
+        case a: AttributeReference => a.name == name
+        case _ => false
+      }
+      // Average's own decimal evaluate tree over a sum partial and a
+      // non-null-count partial: identical exact sum type (38,6),
+      // identical count, the identical single HALF_UP division to (38,10)
+      def exactAvg(ae: AggregateExpression, mode: EvalMode.Value,
+                   sp: String, cp: String): Option[Expression] =
+        for (s <- attr(sp); c <- attr(cp)) yield {
+          val sumAE = ae.copy(aggregateFunction = Sum(s),
+                              resultId = NamedExpression.newExprId)
+          val cntAE = ae.copy(aggregateFunction = Sum(c),
+                              resultId = NamedExpression.newExprId)
+          DecimalDivideWithOverflowCheck(
+            sumAE, Cast(cntAE, DecimalType(20, 0)),
+            DecimalType(38, 10), null,
+            mode != EvalMode.ANSI)
+        }
+      def mapAgg(ae: AggregateExpression): Option[Expression] = {
+        val plain = !ae.isDistinct && ae.filter.isEmpty
+        aggs.view.flatMap { m =>
+          (m, ae.aggregateFunction) match {
+            // the Sum's child must be the EXACT dsum shape the partial
+            // was built from — `cast(expr as decimal(38,6))` — not any
+            // cast chain: a bare double sum routed onto decimal
+            // partials would change the result type and its rounding
+            // under a preserved ExprId (round 11)
+            case (SumOf(pat, partial), Sum(se, _))
+                if plain && isExactPartialCast(resolve(se), pat.matchesOrdered) =>
+              attr(partial).map(p => ae.copy(aggregateFunction = Sum(p)))
+            // COUNT is non-nullable and 0 on empty input; SUM of the
+            // partial is nullable and null on empty — coalesce restores
+            // the exact contract (schema AND the empty-group value)
+            case (CountStarTo(partial), Count(children))
+                if plain && children.forall(_.isInstanceOf[Literal]) =>
+              attr(partial).map(p => Coalesce(Seq(
+                ae.copy(aggregateFunction = Sum(p)), Literal(0L))))
+            // null-skipping COUNT(expr) — the countIf member (round 14):
+            // non-null counts add, with the same 0-on-empty coalesce
+            case (CountOf(pat, partial), Count(Seq(se)))
+                if plain && pat.matchesOrdered(resolve(se)) =>
+              attr(partial).map(p => Coalesce(Seq(
+                ae.copy(aggregateFunction = Sum(p)), Literal(0L))))
+            // MIN/MAX only for a bare column reference: a cast in between
+            // could reorder or change the output type under a preserved
+            // ExprId
+            case (MinOf(cn, partial), Min(se)) if plain && isBareRef(se, cn) =>
+              attr(partial).map(p => ae.copy(aggregateFunction = Min(p)))
+            case (MaxOf(cn, partial), Max(se)) if plain && isBareRef(se, cn) =>
+              attr(partial).map(p => ae.copy(aggregateFunction = Max(p)))
+            // PATTERN extrema (round 13, the argMax/argMin shape):
+            // ORDER-SENSITIVE measure match (casts retained unless
+            // order-embedding — round 14) + RESULT-TYPE equality
+            case (MinPatOf(pt, partial), Min(se))
+                if plain && pt.matchesOrdered(resolve(se)) =>
+              attr(partial).filter(_.dataType == se.dataType)
+                .map(p => ae.copy(aggregateFunction = Min(p)))
+            case (MaxPatOf(pt, partial), Max(se))
+                if plain && pt.matchesOrdered(resolve(se)) =>
+              attr(partial).filter(_.dataType == se.dataType)
+                .map(p => ae.copy(aggregateFunction = Max(p)))
+            // COUNT(DISTINCT grain) → COUNT over rollup ROWS (round 12,
+            // the reference's uniq() dashboard shape), where the path's
+            // rule says rollup rows per group = distinct grain values.
+            // NEVER inside a grouping-set lattice: a subtotal group holds
+            // more rollup rows than distinct grain values (the SetOf and
+            // BitmapUniqOf mappings below ARE subtotal-safe — set union)
+            case (CountDistinctGrain(g), Count(Seq(se)))
+                if !inLattice && ae.isDistinct && ae.filter.isEmpty && isBareRef(se, g) =>
+              grainCount(g).map(c =>
+                ae.copy(aggregateFunction = Count(Seq(c)), isDistinct = false))
+            // uniqExact / uniqExactIf (round 15): the EXACT
+            // COUNT(DISTINCT expr) from the distinct-set state —
+            // count-distinct skips NULLs exactly like the collect_set
+            // that built the state
+            case (SetOf(pt, partial), Count(Seq(se)))
+                if ae.isDistinct && ae.filter.isEmpty && pt.matchesOrdered(resolve(se)) =>
+              attr(partial).map { p =>
+                val merged = ae.copy(aggregateFunction = CollectList(p),
+                  isDistinct = false,
+                  resultId = NamedExpression.newExprId)
+                Cast(Size(ArrayDistinct(Flatten(merged)), false), LongType)
+              }
+            // DISTINCT-SET via array state (round 13, groupUniqArrayMerge):
+            // the union of per-group set partials IS the single-pass set
+            // (order unspecified on both plans, collect_set's contract).
+            // The routed array's element type is the partial's, so it
+            // must equal the query's (r15 pattern sources, setIf).
+            case (SetOf(pt, partial), cs: CollectSet)
+                if plain && pt.matchesOrdered(resolve(cs.child)) =>
+              attr(partial).collect {
+                case p if (p.dataType match {
+                      case org.apache.spark.sql.types.ArrayType(et, _) =>
+                        et == cs.child.dataType
+                      case _ => false
+                    }) =>
+                  val merged = ae.copy(
+                    aggregateFunction = CollectList(p),
+                    resultId = NamedExpression.newExprId)
+                  ArrayDistinct(Flatten(merged))
+              }
+            // uniqExact from BITMAP states (round 15): the same exact
+            // COUNT(DISTINCT expr) by OR-union of compressed bitmaps —
+            // the scale member for integral keys
+            case (BitmapUniqOf(pt, partial), Count(Seq(se)))
+                if ae.isDistinct && ae.filter.isEmpty && pt.matchesOrdered(resolve(se)) =>
+              attr(partial).map { p =>
+                val merged = ae.copy(
+                  aggregateFunction = graft.expr.BitmapMergeAgg(p),
+                  isDistinct = false,
+                  resultId = NamedExpression.newExprId)
+                graft.expr.BitmapCardinality(merged)
+              }
+            // the explicit state read `graft_bitmap_agg(col)` re-aggregates
+            // as the OR-union of the stored states — bit-equal
+            // (canonical serialized form of the identical exact set)
+            case (BitmapUniqOf(pt, partial), ba: graft.expr.BitmapAgg)
+                if plain && pt.matchesOrdered(resolve(ba.child)) =>
+              attr(partial).map(p =>
+                ae.copy(aggregateFunction = graft.expr.BitmapMergeAgg(p)))
+            // approx_count_distinct onto the EXACT bitmap state: a
+            // zero-error answer dominates ANY requested tolerance
+            // (values remain plan-dependent — same knob as HLL below)
+            case (BitmapUniqOf(pt, partial), h: HyperLogLogPlusPlus)
+                if plain && pt.matchesOrdered(resolve(h.child)) &&
+                   estimatorSubstitutionEnabled =>
+              attr(partial).map { p =>
+                val merged = ae.copy(
+                  aggregateFunction = graft.expr.BitmapMergeAgg(p),
+                  resultId = NamedExpression.newExprId)
+                graft.expr.BitmapCardinality(merged)
+              }
+            // the theta member (round 15): the explicit state read
+            // re-aggregates as union at the REGISTERED lgK — states are
+            // value-set deterministic, so routed ≡ live bit-equal
+            case (ThetaUniqOf(pt, partial, k), ta: graft.expr.ThetaAgg)
+                if plain && pt.matchesOrdered(resolve(ta.child)) && ta.lgK == k =>
+              attr(partial).map(p =>
+                ae.copy(aggregateFunction = graft.expr.ThetaUnionAgg(p, k)))
+            // the LIST member (round 15, groupArrayMerge): collect_list
+            // re-aggregates as flatten of per-grain list states —
+            // multiset-exact, order unspecified on both plans. The
+            // parquet roundtrip relaxes struct-field nullability inside
+            // the stored element type, so nullability must not block the
+            // rewrite; a rollup built from the RAW scan may store the
+            // pre-loader NTZ label where the query reads TimestampType —
+            // value-identical under the pinned-UTC session, aligned by
+            // an explicit element cast (round 16, [[relabelFlatten]])
+            case (ListOf(pt, partial), cl: CollectList)
+                if plain && pt.matchesOrdered(resolve(cl.child)) =>
+              attr(partial).collect {
+                case p if (p.dataType match {
+                      case org.apache.spark.sql.types.ArrayType(et, _) =>
+                        org.apache.spark.sql.graftx.Bridge.sameTypeIgnoreNullability(et, cl.child.dataType) ||
+                          relabelOnly(et, cl.child.dataType)
+                      case _ => false
+                    }) =>
+                  val merged = ae.copy(
+                    aggregateFunction = CollectList(p),
+                    resultId = NamedExpression.newExprId)
+                  relabelFlatten(merged, p.dataType, cl.child.dataType)
+              }
+            // AVG routes only in its dsum-shaped exact form —
+            // avg(cast(col as decimal(38,6))); a bare double avg stays
+            // live (not bit-reproducible from decimal partials)
+            case (AvgOf(cn, sp, cp), Average(se, mode))
+                if plain && isExactPartialCast(resolve(se), {
+                     case a: AttributeReference => a.name == cn
+                     case _ => false
+                   }) =>
+              exactAvg(ae, mode, sp, cp)
+            // avgIf (round 14): Average over a PATTERN measure pairs the
+            // registered SumOf with the CountOf counting the SAME
+            // pattern's non-null rows — Average's numerator and
+            // denominator, from two partial columns
+            case (SumOf(pat, sp), Average(se, mode))
+                if plain && isExactPartialCast(resolve(se), pat.matchesOrdered) =>
+              aggs.collectFirst {
+                case CountOf(patC, cp) if samePattern(patC, pat) => cp
+              }.flatMap(cp => exactAvg(ae, mode, sp, cp))
+            // APPROX-DISTINCT via sketch state (round 12, uniqState/
+            // uniqMerge): an HLL state is a set-function of its inputs,
+            // so the union of per-group partials IS the single-pass
+            // sketch. Only the registered lgK routes; both node types
+            // are BinaryType, so the preserved ExprId keeps its type.
+            case (HllUniqOf(pt, partial, lgK), hs: HllSketchAgg)
+                if plain && pt.matchesOrdered(resolve(hs.left)) && (hs.right match {
+                     case Literal(k: Int, _) => k == lgK
+                     case _ => false
+                   }) =>
+              attr(partial).map(p =>
+                ae.copy(aggregateFunction = HllUnionAgg(p, Literal(false))))
+            // approx_count_distinct (HLL++) onto the SAME state (round
+            // 13): estimator substitution, routed only where the
+            // registered sketch's rsd 1.04/√2^lgK is at or under the
+            // query's own tolerance. States union across ANY regrouping,
+            // so CUBE/ROLLUP lattices route too.
+            case (HllUniqOf(pt, partial, lgK), h: HyperLogLogPlusPlus)
+                if plain && pt.matchesOrdered(resolve(h.child)) &&
+                   hllRsd(lgK) <= h.relativeSD && estimatorSubstitutionEnabled =>
+              attr(partial).map { p =>
+                val union = ae.copy(
+                  aggregateFunction = HllUnionAgg(p, Literal(false)),
+                  resultId = NamedExpression.newExprId)
+                HllSketchEstimate(union)
+              }
+            // QUANTILE via KLL state (round 12, quantileState/Merge):
+            // the registered k must match
+            case (KllQuantileOf(pt, partial, k), ka: graft.expr.KllDoublesAgg)
+                if plain && pt.matchesOrdered(resolve(ka.child)) && ka.k == k =>
+              attr(partial).map(p =>
+                ae.copy(aggregateFunction = graft.expr.KllMergeAgg(p, k)))
+            // percentile_approx (GK) onto the KLL state under RANK
+            // dominance (round 15): GK promises rank error ≤ 1/accuracy,
+            // so the state's published error must fit inside the query's
+            // own tolerance; scalar double form only (the substituted
+            // estimate must keep the output type)
+            case (KllQuantileOf(pt, partial, k), pa: ApproximatePercentile)
+                if plain &&
+                   pa.dataType == org.apache.spark.sql.types.DoubleType &&
+                   pt.matchesOrdered(resolve(pa.child)) &&
+                   pa.percentageExpression.foldable &&
+                   pa.accuracyExpression.foldable &&
+                   estimatorSubstitutionEnabled && {
+                     val acc = pa.accuracyExpression.eval() match {
+                       case i: Int => i.toDouble
+                       case l: Long => l.toDouble
+                       case _ => Double.MaxValue
+                     }
+                     kllRankError(k) <= 1.0 / acc
+                   } =>
+              attr(partial).flatMap { p =>
+                pa.percentageExpression.eval() match {
+                  case d: Double =>
+                    val merged = ae.copy(
+                      aggregateFunction = graft.expr.KllMergeAgg(p, k),
+                      resultId = NamedExpression.newExprId)
+                    Some(graft.expr.KllQuantileEst(merged, d))
+                  case _ => None // array percentages stay live
+                }
+              }
+            // TOP-K via frequent-items state (round 12, topKState/Merge):
+            // the query's own k is free; the registered CAPACITY must
+            // match. The estimate's item type is the SKETCH's, so the
+            // rewrite also requires item-type equality (r15: a widening
+            // the tree match tolerates must not change the output type).
+            case (TopKOf(pt, partial, m), t: ApproxTopK)
+                if plain && pt.matchesOrdered(resolve(t.expr)) && t.k.foldable &&
+                   (t.maxItemsTracked match {
+                     case Literal(i: Int, _) => i == m
+                     case _ => false
+                   }) =>
+              attr(partial).flatMap { p =>
+                val combined = ae.copy(
+                  aggregateFunction = ApproxTopKCombine(p, Literal(m)),
+                  resultId = NamedExpression.newExprId)
+                val est = ApproxTopKEstimate(combined, t.k)
+                val same = try est.dataType == ae.dataType
+                  catch { case scala.util.control.NonFatal(_) => false }
+                if (same) Some(est) else None
+              }
+            // WEIGHTED TOP-K (round 16, topKWeightedState/Merge): the
+            // state read re-aggregates as the weight-map sum-merge —
+            // item AND weight patterns must match and the capacity must
+            // equal the query's; the `graft_topk_weighted(st, k)`
+            // estimate scalar above survives the rewrite untouched
+            case (TopKWeightedOf(ip, wp, partial, m), tk: graft.expr.TopKWeightedAgg)
+                if plain && ip.matchesOrdered(resolve(tk.left)) &&
+                   wp.matchesOrdered(resolve(tk.right)) && tk.maxMapSize == m =>
+              attr(partial).map(p =>
+                ae.copy(aggregateFunction = graft.expr.TopKWeightedMergeAgg(p, m)))
+            case _ => None
+          }
+        }.headOption
+      }
+      // uniqUpTo (round 13): the whole `least(count(DISTINCT col), n+1)`
+      // OUTPUT maps onto the capped-set partial — the distinct
+      // aggregate alone is not mergeable; only the capped form is
+      // (see [[UniqUpToOf]]), so the match lives at the expression
+      // level where the limit literal is visible
+      def mapUpTo(l: Least): Option[Expression] = l.children match {
+        case Seq(ae: AggregateExpression, limE)
+            if limE.foldable && limE.dataType == LongType =>
+          val lim = limE.eval().asInstanceOf[Long]
+          (ae.aggregateFunction, ae.isDistinct, ae.filter) match {
+            case (Count(Seq(se)), true, None) =>
+              aggs.view.flatMap {
+                case UniqUpToOf(pt, partial, n)
+                    if lim == n + 1 && pt.matchesOrdered(resolve(se)) =>
+                  attr(partial).map { p =>
+                    val merged = ae.copy(aggregateFunction = CollectList(p),
+                      isDistinct = false,
+                      resultId = NamedExpression.newExprId)
+                    Least(Seq(
+                      Cast(Size(ArrayDistinct(Flatten(merged)), false), LongType),
+                      Literal((n + 1).toLong)))
+                  }
+                case _ => None
+              }.headOption
+            case _ => None
+          }
+        case _ => None
+      }
+      ne.transformUp {
+        case l: Least => mapUpTo(l).getOrElse(l)
+        case ae: AggregateExpression => mapAgg(ae).getOrElse(ae)
+      }.asInstanceOf[NamedExpression]
+    }
+
+    /** The hybrid tail's own partial for rollup column `n`, if member
+      * `m` writes it: the aggregate [[partialColumns]] builds, over the
+      * raw scan's attributes (`attrOf`). None when `m` writes another
+      * column or a source column is missing. */
+    private def tailPartial(m: AggMap, n: String,
+                            attrOf: String => Option[Attribute]): Option[Expression] = {
+      def of(pat: SrcPat)(f: Expression => AggregateFunction): Option[Expression] =
+        pat.rebuild(attrOf).map(e => f(e).toAggregateExpression())
+      m match {
+        case SumOf(pat, p) if p == n => of(pat)(e => Sum(Cast(e, DecimalType(38, 6))))
+        case CountStarTo(p) if p == n => Some(Count(Seq(Literal(1))).toAggregateExpression())
+        case CountOf(pat, p) if p == n => of(pat)(e => Count(Seq(e)))
+        case MinOf(cn, p) if p == n => of(ColRef(cn))(Min(_))
+        case MaxOf(cn, p) if p == n => of(ColRef(cn))(Max(_))
+        case AvgOf(cn, _, p) if p == n => of(ColRef(cn))(e => Count(Seq(e)))
+        // avg's sum partial, when no SumOf writes the same column (the
+        // builder reuses it)
+        case AvgOf(cn, sp, _) if sp == n =>
+          of(ColRef(cn))(e => Sum(Cast(e, DecimalType(38, 6))))
+        case HllUniqOf(pt, p, lgK) if p == n => of(pt)(e => HllSketchAgg(e, Literal(lgK)))
+        case KllQuantileOf(pt, p, k) if p == n => of(pt)(graft.expr.KllDoublesAgg(_, k))
+        case TopKOf(pt, p, cap) if p == n => of(pt)(ApproxTopKAccumulate(_, Literal(cap)))
+        case SetOf(pt, p) if p == n => of(pt)(CollectSet(_))
+        case UniqUpToOf(pt, p, lim) if p == n => // the tail's capped set
+          of(pt)(CollectSet(_)).map(Slice(_, Literal(1), Literal(lim + 1)))
+        case BitmapUniqOf(pt, p) if p == n => of(pt)(graft.expr.BitmapAgg(_))
+        case ThetaUniqOf(pt, p, k) if p == n => of(pt)(graft.expr.ThetaAgg(_, k))
+        case ListOf(pt, p) if p == n => of(pt)(CollectList(_))
+        case TopKWeightedOf(ip, wp, p, cap) if p == n =>
+          for (ie <- ip.rebuild(attrOf); we <- wp.rebuild(attrOf))
+            yield graft.expr.TopKWeightedAgg(ie, we, cap).toAggregateExpression()
+        case MinPatOf(pt, p) if p == n => of(pt)(Min(_))
+        case MaxPatOf(pt, p) if p == n => of(pt)(Max(_))
+        case _ => None
+      }
+    }
+
+    /** A whole-grain bound on the RAW time column, rewritten onto the
+      * rollup's truncated time key — or None for any other shape. A
+      * grain-g group's rows all lie in [g, g+grain), so a cut at a
+      * whole-grain boundary never splits a group:
+      *  - `IsNotNull(ts)` ⟺ `IsNotNull(key)` (truncation preserves
+      *    null-ness) — the shape InferFiltersFromConstraints plants;
+      *  - half-open bounds `ts >= b`, `ts < b` and their commuted forms
+      *    ⟺ the same bound on the key, for a boundary literal `b`;
+      *  - the INCLUSIVE-upper dashboard bound `ts <= b − 1µs` (the
+      *    `BETWEEN d1 AND 'd2 23:59:59.999999'` shape) ⟺ `key < b`.
+      * A mid-grain literal (or a whole-grain inclusive upper, which
+      * keeps one instant of the next group) has no case. Either
+      * timestamp flavor qualifies: the session pins UTC, so an NTZ
+      * literal (the shape UnwrapCastInBinaryComparison leaves after
+      * pushing a comparison through the loader's NTZ→TZ relabel cast)
+      * holds the same micros. `keyLit` renders a boundary in the key's
+      * own type. */
+    private def wholeGrainBound(grainMicros: Long, isTime: Expression => Boolean,
+                                key: Expression, keyLit: Long => Expression)
+                               (e: Expression): Option[Expression] = {
+      object Boundary {
+        def unapply(x: Expression): Option[Long] = x match {
+          case Literal(us: Long, TimestampType | TimestampNTZType)
+              if us % grainMicros == 0 => Some(us)
+          case _ => None
+        }
+      }
+      // the last instant of a grain: us + 1µs is a boundary (returned)
+      object InclusiveUpper {
+        def unapply(x: Expression): Option[Long] = x match {
+          case Literal(us: Long, TimestampType | TimestampNTZType)
+              if (us + 1) % grainMicros == 0 => Some(us + 1)
+          case _ => None
+        }
+      }
+      e match {
+        case IsNotNull(t) if isTime(t) => Some(IsNotNull(key))
+        case GreaterThanOrEqual(t, Boundary(us)) if isTime(t) =>
+          Some(GreaterThanOrEqual(key, keyLit(us)))
+        case LessThan(t, Boundary(us)) if isTime(t) => Some(LessThan(key, keyLit(us)))
+        case LessThanOrEqual(Boundary(us), t) if isTime(t) =>
+          Some(GreaterThanOrEqual(key, keyLit(us)))
+        case GreaterThan(Boundary(us), t) if isTime(t) => Some(LessThan(key, keyLit(us)))
+        case LessThanOrEqual(t, InclusiveUpper(us)) if isTime(t) =>
+          Some(LessThan(key, keyLit(us)))
+        case GreaterThanOrEqual(InclusiveUpper(us), t) if isTime(t) =>
+          Some(LessThan(key, keyLit(us)))
+        case _ => None
+      }
+    }
+
     // ——— join-derived rollups: registry-driven matching ———
 
     /** Strip pruning Projects, drop the IsNotNull Filters that
@@ -2222,50 +2646,14 @@ object RollupRouting {
           attr(rc).flatMap(a => p.subst(e, a))
         }.headOption
       // whole-grain bounds on the RAW time column subsume onto the
-      // truncated key (the optimizer rewrites `to_date(ts) >= d` into
-      // `ts >= midnight` and pushes it to the scan — the same shapes
-      // the single-table subsumeConjunct proves lossless: a grain-g
-      // group's rows all lie in [g, g+grain), so an aligned boundary
-      // cut never splits a group; the inclusive-upper dashboard bound
-      // `ts <= boundary − 1µs` is the same half-open cut)
+      // truncated key ([[wholeGrainBound]]; the optimizer rewrites
+      // `to_date(ts) >= d` into `ts >= midnight` and pushes it to the scan)
       def substTimeBound(e: Expression): Option[Expression] =
         spec.timeGroupings.view.flatMap { case (p, rc) =>
-          attr(rc).map { a =>
-            val g = p.micros
-            def keyLit(us: Long): Expression =
-              if (p.grain == "day") Literal((us / 86400000000L).toInt, DateType)
-              else Literal(us, TimestampType)
-            object Bound {
-              def unapply(x: Expression): Option[Long] = x match {
-                case Literal(us: Long, TimestampType | TimestampNTZType)
-                    if us % g == 0 => Some(us)
-                case _ => None
-              }
-            }
-            object InclUpper {
-              def unapply(x: Expression): Option[Long] = x match {
-                case Literal(us: Long, TimestampType | TimestampNTZType)
-                    if (us + 1) % g == 0 => Some(us + 1)
-                case _ => None
-              }
-            }
-            def isT(t: Expression): Boolean = isNormTime(t, p.col)
-            e match {
-              case IsNotNull(t) if isT(t) => Some(IsNotNull(a))
-              case GreaterThanOrEqual(t, Bound(us)) if isT(t) =>
-                Some(GreaterThanOrEqual(a, keyLit(us)))
-              case LessThan(t, Bound(us)) if isT(t) => Some(LessThan(a, keyLit(us)))
-              case LessThanOrEqual(Bound(us), t) if isT(t) =>
-                Some(GreaterThanOrEqual(a, keyLit(us)))
-              case GreaterThan(Bound(us), t) if isT(t) => Some(LessThan(a, keyLit(us)))
-              case LessThanOrEqual(t, InclUpper(us)) if isT(t) =>
-                Some(LessThan(a, keyLit(us)))
-              case GreaterThanOrEqual(InclUpper(us), t) if isT(t) =>
-                Some(LessThan(a, keyLit(us)))
-              case _ => None
-            }
-          }
-        }.flatten.headOption
+          attr(rc).flatMap(a => wholeGrainBound(p.micros, isNormTime(_, p.col), a,
+            us => if (p.grain == "day") Literal((us / MicrosPerDay).toInt, DateType)
+                  else Literal(us, TimestampType))(e))
+        }.headOption
       /** Rewrite an expression onto the rollup's columns: registered
         * truncations substitute whole subtrees (top-down, so the
         * replacement's own rollup attribute is not re-visited), then
@@ -2309,330 +2697,16 @@ object RollupRouting {
           case None => return None
         }
       }.toMap
-      def isBareRefJ(se: Expression, name: String): Boolean =
-        resolved(se) match {
-          case a: AttributeReference => a.name == name
-          case _ => false
-        }
-      def mapAgg(ae: AggregateExpression): Option[Expression] =
-        spec.aggs.view.flatMap { m =>
-          (m, ae.aggregateFunction) match {
-            // the Sum's child must be the EXACT dsum shape the partial
-            // was built from — `cast(expr as decimal(38,6))` — not any
-            // cast chain: a bare double sum routed onto decimal
-            // partials would change the result type and its rounding
-            // under a preserved ExprId (round-11 tightening, caught by
-            // the routing PropertySpec)
-            case (SumOf(pat, partial), Sum(se, _))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   isExactPartialCast(resolved(se), pat.matchesOrdered) =>
-              attr(partial).map(p => ae.copy(aggregateFunction = Sum(p)))
-            // COUNT is non-nullable and 0 on empty input; SUM of the
-            // partial is nullable and null on empty — coalesce restores
-            // the exact contract (schema AND the empty-group value)
-            case (CountStarTo(partial), Count(children))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   children.forall(_.isInstanceOf[Literal]) =>
-              attr(partial).map(p => Coalesce(Seq(
-                ae.copy(aggregateFunction = Sum(p)), Literal(0L))))
-            // null-skipping COUNT(expr) — the countIf member (round
-            // 14): non-null counts add, so SUM of the per-group
-            // partial with the same 0-on-empty coalesce
-            case (CountOf(pat, partial), Count(Seq(se)))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pat.matchesOrdered(resolved(se)) =>
-              attr(partial).map(p => Coalesce(Seq(
-                ae.copy(aggregateFunction = Sum(p)), Literal(0L))))
-            // NEVER inside a grouping-set lattice: a subtotal group
-            // holds more rollup rows than distinct grain values, so
-            // the row-count mapping is not subtotal-safe (the SetOf
-            // mapping below is — set union)
-            case (CountDistinctGrain(grain), Count(Seq(se)))
-                if !inLattice &&
-                   ae.isDistinct && ae.filter.isEmpty && (resolved(se) match {
-                  case a: AttributeReference => a.name == grain
-                  case _ => false
-                }) =>
-              Some(ae.copy(aggregateFunction = Count(Seq(Literal(1))),
-                           isDistinct = false))
-            // uniqExact / uniqExactIf (round 15): the EXACT
-            // COUNT(DISTINCT expr) answered from the distinct-set
-            // state — count-distinct skips NULLs exactly like the
-            // collect_set that built the state, and set union is
-            // subtotal-safe, so unlike the row-count mapping this one
-            // also serves grouping-set lattices
-            case (SetOf(pt, partial), Count(Seq(se)))
-                if ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(se)) =>
-              attr(partial).map { p =>
-                val merged = ae.copy(aggregateFunction = CollectList(p),
-                  isDistinct = false,
-                  resultId = NamedExpression.newExprId)
-                Cast(Size(ArrayDistinct(Flatten(merged)), false), LongType)
-              }
-            // uniqExact from BITMAP states (round 15) — see the
-            // single-table twin: exact, OR-union mergeable, the scale
-            // member for integral keys
-            case (BitmapUniqOf(pt, partial), Count(Seq(se)))
-                if ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(se)) =>
-              attr(partial).map { p =>
-                val merged = ae.copy(
-                  aggregateFunction = graft.expr.BitmapMergeAgg(p),
-                  isDistinct = false,
-                  resultId = NamedExpression.newExprId)
-                graft.expr.BitmapCardinality(merged)
-              }
-            case (BitmapUniqOf(pt, partial), ba: graft.expr.BitmapAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(ba.child)) =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.BitmapMergeAgg(p)))
-            case (ThetaUniqOf(pt, partial, k), ta: graft.expr.ThetaAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(ta.child)) && ta.lgK == k =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.ThetaUnionAgg(p, k)))
-            // the weighted top-k member on the JOIN path (round 16) —
-            // same two-pattern + capacity guards as the single-table
-            // twin; the estimate scalar above survives untouched
-            case (TopKWeightedOf(ip, wp, partial, m), tk: graft.expr.TopKWeightedAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   ip.matchesOrdered(resolved(tk.left)) &&
-                   wp.matchesOrdered(resolved(tk.right)) &&
-                   tk.maxMapSize == m =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.TopKWeightedMergeAgg(p, m)))
-            case (ListOf(pt, partial), cl: CollectList)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(cl.child)) =>
-              // sameType: the parquet roundtrip relaxes struct-field
-              // nullability inside the stored element type — values
-              // and ordering are unaffected, so nullability must not
-              // block the rewrite (strict equality would)
-              attr(partial).collect {
-                case p if (p.dataType match {
-                      case org.apache.spark.sql.types.ArrayType(et, _) =>
-                        org.apache.spark.sql.graftx.Bridge.sameTypeIgnoreNullability(et, cl.child.dataType)
-                      case _ => false
-                    }) =>
-                  val merged = ae.copy(
-                    aggregateFunction = CollectList(p),
-                    resultId = NamedExpression.newExprId)
-                  Flatten(merged)
-              }
-            case (BitmapUniqOf(pt, partial), h: HyperLogLogPlusPlus)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(h.child)) &&
-                   estimatorSubstitutionEnabled =>
-              attr(partial).map { p =>
-                val merged = ae.copy(
-                  aggregateFunction = graft.expr.BitmapMergeAgg(p),
-                  resultId = NamedExpression.newExprId)
-                graft.expr.BitmapCardinality(merged)
-              }
-            // MIN/MAX/AVG on the join path (round 12) — the same
-            // vocabulary and guards as the single-table mapAgg: bare
-            // column refs for min/max, the dsum-shaped exact form for
-            // avg (reproducing Average's own decimal evaluate tree
-            // over sum + non-null-count partials, fresh resultIds).
-            case (MinOf(cn, partial), Min(se))
-                if !ae.isDistinct && ae.filter.isEmpty && isBareRefJ(se, cn) =>
-              attr(partial).map(p => ae.copy(aggregateFunction = Min(p)))
-            case (MaxOf(cn, partial), Max(se))
-                if !ae.isDistinct && ae.filter.isEmpty && isBareRefJ(se, cn) =>
-              attr(partial).map(p => ae.copy(aggregateFunction = Max(p)))
-            // PATTERN extrema (round 13, the argMax/argMin shape):
-            // ORDER-SENSITIVE measure match (casts retained unless
-            // order-embedding — round 14) + RESULT-TYPE equality
-            case (MinPatOf(pt, partial), Min(se))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(se)) =>
-              attr(partial).filter(_.dataType == se.dataType)
-                .map(p => ae.copy(aggregateFunction = Min(p)))
-            case (MaxPatOf(pt, partial), Max(se))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(se)) =>
-              attr(partial).filter(_.dataType == se.dataType)
-                .map(p => ae.copy(aggregateFunction = Max(p)))
-            case (AvgOf(cn, sp, cp), Average(se, mode))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   isExactPartialCast(resolved(se),
-                                      x => x.isInstanceOf[AttributeReference] &&
-                                           x.asInstanceOf[AttributeReference].name == cn) =>
-              for (s <- attr(sp); c <- attr(cp)) yield {
-                val sumAE = ae.copy(aggregateFunction = Sum(s),
-                                    resultId = NamedExpression.newExprId)
-                val cntAE = ae.copy(aggregateFunction = Sum(c),
-                                    resultId = NamedExpression.newExprId)
-                DecimalDivideWithOverflowCheck(
-                  sumAE, Cast(cntAE, DecimalType(20, 0)),
-                  DecimalType(38, 10), null,
-                  mode != EvalMode.ANSI)
-              }
-            // avgIf (round 14): Average over a PATTERN measure pairs
-            // the registered SumOf with the CountOf counting the SAME
-            // pattern's non-null rows — exactly Average's numerator
-            // and denominator, reproduced from two partial columns
-            case (SumOf(pat, sp), Average(se, mode))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   isExactPartialCast(resolved(se), pat.matchesOrdered) =>
-              spec.aggs.collectFirst {
-                case CountOf(patC, cp) if samePattern(patC, pat) => cp
-              }.flatMap { cp =>
-                for (s <- attr(sp); c <- attr(cp)) yield {
-                  val sumAE = ae.copy(aggregateFunction = Sum(s),
-                                      resultId = NamedExpression.newExprId)
-                  val cntAE = ae.copy(aggregateFunction = Sum(c),
-                                      resultId = NamedExpression.newExprId)
-                  DecimalDivideWithOverflowCheck(
-                    sumAE, Cast(cntAE, DecimalType(20, 0)),
-                    DecimalType(38, 10), null,
-                    mode != EvalMode.ANSI)
-                }
-              }
-            // the sketch members (round 12) — same guards as the
-            // single-table path: bare column, EQUAL precision (a
-            // different lgK/k is a different sketch)
-            case (HllUniqOf(pt, partial, lgK), hs: HllSketchAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(hs.left)) && (hs.right match {
-                     case Literal(k: Int, _) => k == lgK
-                     case _ => false
-                   }) =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = HllUnionAgg(p, Literal(false))))
-            // approx_count_distinct onto the state member (round 13)
-            // — same precision-dominance rule as the single-table
-            // path: route only when the registered sketch's rsd
-            // 1.04/√2^lgK is at or under the query's tolerance
-            case (HllUniqOf(pt, partial, lgK), h: HyperLogLogPlusPlus)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(h.child)) &&
-                   hllRsd(lgK) <= h.relativeSD &&
-                   estimatorSubstitutionEnabled =>
-              attr(partial).map { p =>
-                val union = ae.copy(
-                  aggregateFunction = HllUnionAgg(p, Literal(false)),
-                  resultId = NamedExpression.newExprId)
-                HllSketchEstimate(union)
-              }
-            case (KllQuantileOf(pt, partial, k), ka: graft.expr.KllDoublesAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(ka.child)) && ka.k == k =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.KllMergeAgg(p, k)))
-            // percentile_approx (GK) onto the KLL state under RANK
-            // dominance (round 15) — the HLL++ precedent on quantiles:
-            // GK promises rank error ≤ 1/accuracy, so the state's
-            // published error must fit inside the query's own
-            // tolerance; same opt-out knob, scalar double form only
-            // (the substituted estimate must keep the output type)
-            case (KllQuantileOf(pt, partial, k), pa: ApproximatePercentile)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pa.dataType == org.apache.spark.sql.types.DoubleType &&
-                   pt.matchesOrdered(resolved(pa.child)) &&
-                   pa.percentageExpression.foldable &&
-                   pa.accuracyExpression.foldable &&
-                   estimatorSubstitutionEnabled && {
-                     val acc = pa.accuracyExpression.eval() match {
-                       case i: Int => i.toDouble
-                       case l: Long => l.toDouble
-                       case _ => Double.MaxValue
-                     }
-                     kllRankError(k) <= 1.0 / acc
-                   } =>
-              attr(partial).flatMap { p =>
-                pa.percentageExpression.eval() match {
-                  case d: Double =>
-                    val merged = ae.copy(
-                      aggregateFunction = graft.expr.KllMergeAgg(p, k),
-                      resultId = NamedExpression.newExprId)
-                    Some(graft.expr.KllQuantileEst(merged, d))
-                  case _ => None // array percentages stay live
-                }
-              }
-            // topKIf (r15 pattern members): the ESTIMATE's item type is
-            // the sketch's — a widening the order-embedding strip
-            // tolerates on the tree would CHANGE the routed output's
-            // element type under a preserved ExprId, so the rewrite
-            // additionally requires type equality of the items
-            case (TopKOf(pt, partial, m), t: ApproxTopK)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(t.expr)) && t.k.foldable &&
-                   (t.maxItemsTracked match {
-                     case Literal(i: Int, _) => i == m
-                     case _ => false
-                   }) =>
-              attr(partial).flatMap { p =>
-                val combined = ae.copy(
-                  aggregateFunction = ApproxTopKCombine(p, Literal(m)),
-                  resultId = NamedExpression.newExprId)
-                val est = ApproxTopKEstimate(combined, t.k)
-                val same = try est.dataType == ae.dataType
-                  catch { case scala.util.control.NonFatal(_) => false }
-                if (same) Some(est) else None
-              }
-            // distinct-set member (round 13): groupUniqArrayMerge —
-            // union of per-group set partials, set-equal to the
-            // single-pass collect_set (order unspecified on BOTH
-            // plans; see SetOf). Same element-type guard as topK: the
-            // routed array's element type is the partial's.
-            case (SetOf(pt, partial), cs: CollectSet)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolved(cs.child)) =>
-              attr(partial).collect {
-                case p if (p.dataType match {
-                      case org.apache.spark.sql.types.ArrayType(et, _) =>
-                        et == cs.child.dataType
-                      case _ => false
-                    }) =>
-                  val merged = ae.copy(
-                    aggregateFunction = CollectList(p),
-                    resultId = NamedExpression.newExprId)
-                  ArrayDistinct(Flatten(merged))
-              }
-            case _ => None
-          }
-        }.headOption
-      // uniqUpTo (round 13): the whole `least(count(DISTINCT col), n+1)`
-      // OUTPUT maps onto the capped-set partial — the distinct
-      // aggregate alone is not mergeable; only the capped form is
-      // (see [[UniqUpToOf]]), so the match lives at the expression
-      // level where the limit literal is visible
-      def mapUpTo(l: Least): Option[Expression] = l.children match {
-        case Seq(ae: AggregateExpression, limE)
-            if limE.foldable && limE.dataType == LongType =>
-          val lim = limE.eval().asInstanceOf[Long]
-          (ae.aggregateFunction, ae.isDistinct, ae.filter) match {
-            case (Count(Seq(se)), true, None) =>
-              spec.aggs.view.flatMap {
-                case UniqUpToOf(pt, partial, n)
-                    if lim == n + 1 && pt.matchesOrdered(resolved(se)) =>
-                  attr(partial).map { p =>
-                    val merged = ae.copy(aggregateFunction = CollectList(p),
-                      isDistinct = false,
-                      resultId = NamedExpression.newExprId)
-                    Least(Seq(
-                      Cast(Size(ArrayDistinct(Flatten(merged)), false), LongType),
-                      Literal((n + 1).toLong)))
-                  }
-                case _ => None
-              }.headOption
-            case _ => None
-          }
-        case _ => None
-      }
       var ok = true
       val newAggExprs: Seq[NamedExpression] = aggExprs.map {
         case ne if groupingExpr(ne match { case Alias(c, _) => c; case x => x }).isDefined =>
           val target = groupingExpr(ne match { case Alias(c, _) => c; case x => x }).get
           Alias(target, ne.name)(exprId = ne.exprId)
         case ne =>
-          val rewritten = ne.transformUp {
-            case l: Least => mapUpTo(l).getOrElse(l)
-            case ae: AggregateExpression => mapAgg(ae).getOrElse(ae)
-          }.asInstanceOf[NamedExpression]
+          // the grain columns are rollup group keys, so each rollup row
+          // of a group carries one distinct grain value: rows count them
+          val rewritten = routeAggregates(ne, spec.aggs, resolved, attr, inLattice,
+                                          _ => Some(Literal(1)))
           if (!rewritten.references.subsetOf(AttributeSet(rollup.output))) ok = false
           rewritten
       }
@@ -2763,46 +2837,9 @@ object RollupRouting {
           Alias(attrOf(srcOfRollupCol(n)).getOrElse(return None), n)()
         case n if timeOfRollupCol.contains(n) =>
           Alias(rebuildTime(timeOfRollupCol(n)).getOrElse(return None), n)()
-        case n => spec.aggs.view.flatMap {
-          case SumOf(pat, p) if p == n =>
-            pat.rebuild(attrOf).map(e =>
-              Alias(Sum(Cast(e, DecimalType(38, 6))).toAggregateExpression(), n)())
-          case CountStarTo(p) if p == n =>
-            Some(Alias(Count(Seq(Literal(1))).toAggregateExpression(), n)())
-          case CountOf(pat, p) if p == n => // the tail's own non-null count
-            pat.rebuild(attrOf).map(e =>
-              Alias(Count(Seq(e)).toAggregateExpression(), n)())
-          case MinOf(cn, p) if p == n =>
-            attrOf(cn).map(a => Alias(Min(a).toAggregateExpression(), n)())
-          case MaxOf(cn, p) if p == n =>
-            attrOf(cn).map(a => Alias(Max(a).toAggregateExpression(), n)())
-          case AvgOf(cn, _, p) if p == n =>
-            attrOf(cn).map(a => Alias(Count(Seq(a)).toAggregateExpression(), n)())
-          case AvgOf(cn, sp, _) if sp == n =>
-            attrOf(cn).map(a => Alias(
-              Sum(Cast(a, DecimalType(38, 6))).toAggregateExpression(), n)())
-          case HllUniqOf(pt, p, lgK) if p == n => // the tail's own sketch
-            pt.rebuild(attrOf).map(e => Alias(
-              HllSketchAgg(e, Literal(lgK)).toAggregateExpression(), n)())
-          case KllQuantileOf(pt, p, k) if p == n =>
-            pt.rebuild(attrOf).map(e => Alias(
-              graft.expr.KllDoublesAgg(e, k).toAggregateExpression(), n)())
-          case TopKOf(pt, p, m) if p == n =>
-            pt.rebuild(attrOf).map(e => Alias(
-              ApproxTopKAccumulate(e, Literal(m)).toAggregateExpression(), n)())
-          case SetOf(pt, p) if p == n =>
-            pt.rebuild(attrOf).map(e =>
-              Alias(CollectSet(e).toAggregateExpression(), n)())
-          case UniqUpToOf(pt, p, lim) if p == n =>
-            pt.rebuild(attrOf).map(e => Alias(
-              Slice(CollectSet(e).toAggregateExpression(),
-                Literal(1), Literal(lim + 1)), n)())
-          case MinPatOf(pt, p) if p == n =>
-            pt.rebuild(attrOf).map(e => Alias(Min(e).toAggregateExpression(), n)())
-          case MaxPatOf(pt, p) if p == n =>
-            pt.rebuild(attrOf).map(e => Alias(Max(e).toAggregateExpression(), n)())
-          case _ => None
-        }.headOption.getOrElse(return None) // a column the tail can't rebuild
+        case n => spec.aggs.view.flatMap(tailPartial(_, n, attrOf)).headOption
+          .map(Alias(_, n)())
+          .getOrElse(return None) // a column the tail can't rebuild
       }
       alignTailTypes(aggExprs, rollup.output)
         .map(as => Aggregate(groupKeys, as, Filter(tailCond, tree)))
@@ -2837,22 +2874,10 @@ object RollupRouting {
       *    and the subset check bails. A DATE-typed time column is
       *    itself the day key, so ANY deterministic predicate over it
       *    subsumes — a date key is group-constant at day grain.
-      *  - `IsNotNull(ts)` ⟺ `IsNotNull(<time key>)` (to_date and
-      *    date_trunc both preserve null-ness) — the shape
-      *    InferFiltersFromConstraints plants
-      *  - half-open whole-GRAIN `ts` bounds (`ts >= boundary`,
-      *    `ts < boundary`, and their commuted forms) ⟺ the same bound
-      *    on the time key — a grain-g group's rows all lie in
-      *    [g, g+grain), so a boundary cut never splits a group. For an
-      *    hourly rollup any whole-hour literal qualifies (midnights
-      *    included); for a daily rollup only midnights do; a mid-grain
-      *    literal splits a group, and bails.
-      *  - the INCLUSIVE-upper dashboard bound `ts <= boundary − 1µs`
-      *    (the `BETWEEN d1 AND 'd2 23:59:59.999999'` shape) ⟺
-      *    `time key < boundary` — the literal is the last instant of
-      *    its grain, so the cut is the same half-open boundary. A
-      *    whole-grain INCLUSIVE upper (`ts <= midnight`) keeps only
-      *    one instant of the next group and bails.
+      *  - `IsNotNull(ts)` and whole-GRAIN `ts` bounds
+      *    ([[wholeGrainBound]]): for an hourly rollup any whole-hour
+      *    literal qualifies (midnights included); for a daily rollup
+      *    only midnights do.
       * A NONDETERMINISTIC conjunct never subsumes (round-12 guard): it
       * may carry no references at all (`rand() < 0.5`), passing the
       * subset check while filtering pre-aggregated groups instead of
@@ -2878,31 +2903,11 @@ object RollupRouting {
           Some(rewrittenK)
         else None
       }
-      val grainMicros = if (spec.grain == "hour") MicrosPerHour else MicrosPerDay
-      def timeLit(us: Long): Expression =
-        if (spec.grain == "hour") Literal(us, TimestampType)
-        else Literal((us / MicrosPerDay).toInt, DateType)
-      // a whole-grain boundary literal, in either timestamp flavor: the
-      // session pins UTC, so an NTZ literal (the shape
-      // UnwrapCastInBinaryComparison leaves after pushing a comparison
-      // through the loader's NTZ→TZ relabel cast) holds the same micros
-      object Boundary {
-        def unapply(e: Expression): Option[Long] = e match {
-          case Literal(us: Long, TimestampType | TimestampNTZType)
-              if us % grainMicros == 0 => Some(us)
-          case _ => None
-        }
-      }
-      // the last representable instant of a grain: us + 1µs is a
-      // whole-grain boundary (returned), so `<= us` ⟺ `< boundary`
-      object InclusiveUpper {
-        def unapply(e: Expression): Option[Long] = e match {
-          case Literal(us: Long, TimestampType | TimestampNTZType)
-              if (us + 1) % grainMicros == 0 => Some(us + 1)
-          case _ => None
-        }
-      }
-      def isTs(t: Expression): Boolean = isNormTime(t, spec.timeCol)
+      val bound = wholeGrainBound(
+        if (spec.grain == "hour") MicrosPerHour else MicrosPerDay,
+        isNormTime(_, spec.timeCol), timeKey,
+        us => if (spec.grain == "hour") Literal(us, TimestampType)
+              else Literal((us / MicrosPerDay).toInt, DateType)) _
       val rewritten = c.transformDown {
         case e if keyOf(e, spec).exists(k =>
             keyAttrs.contains(k) || grainExpr.contains(k)) =>
@@ -2912,17 +2917,7 @@ object RollupRouting {
           }
         case e if calendarTarget(e, spec, timeKey).isDefined =>
           calendarTarget(e, spec, timeKey).get
-        case IsNotNull(t) if isTs(t) => IsNotNull(timeKey)
-        case GreaterThanOrEqual(t, Boundary(us)) if isTs(t) =>
-          GreaterThanOrEqual(timeKey, timeLit(us))
-        case LessThan(t, Boundary(us)) if isTs(t) => LessThan(timeKey, timeLit(us))
-        case LessThanOrEqual(Boundary(us), t) if isTs(t) =>
-          GreaterThanOrEqual(timeKey, timeLit(us))
-        case GreaterThan(Boundary(us), t) if isTs(t) => LessThan(timeKey, timeLit(us))
-        case LessThanOrEqual(t, InclusiveUpper(us)) if isTs(t) =>
-          LessThan(timeKey, timeLit(us))
-        case GreaterThanOrEqual(InclusiveUpper(us), t) if isTs(t) =>
-          LessThan(timeKey, timeLit(us))
+        case e if bound(e).isDefined => bound(e).get
       }
       if (rewritten.references.subsetOf(
             AttributeSet(timeKey +: keyAttrs.values.toSeq)))
@@ -3055,384 +3050,17 @@ object RollupRouting {
         }
       }.toMap
 
-      // aggregate mapping is registry-driven (round 12) — the same
-      // AggMap vocabulary as the join path, so a spec over any table
-      // shape can register. The guards are unchanged from round 11:
-      // SUM routes only for the exact dsum cast the partial was built
-      // from; COUNT re-routes through coalesce(SUM(partial), 0) to
-      // keep its non-nullable 0-on-empty contract; MIN/MAX only for a
-      // bare column reference (a cast in between could reorder or
-      // change the output type under a preserved ExprId).
-      def isBareRef(se: Expression, name: String): Boolean =
-        resolveThroughProjects(se, child) match {
-          case a: AttributeReference => a.name == name
-          case _ => false
-        }
-      def mapAgg(ae: AggregateExpression): Option[Expression] =
-        spec.aggs.view.flatMap { m =>
-          (m, ae.aggregateFunction) match {
-            case (SumOf(pat, partial), Sum(se, _))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   isExactPartialCast(resolveThroughProjects(se, child),
-                                      pat.matchesOrdered) =>
-              attr(partial).map(p => ae.copy(aggregateFunction = Sum(p)))
-            case (CountStarTo(partial), Count(children))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   children.forall(_.isInstanceOf[Literal]) =>
-              attr(partial).map(p => Coalesce(Seq(
-                ae.copy(aggregateFunction = Sum(p)), Literal(0L))))
-            // null-skipping COUNT(expr) — the countIf member (round 14)
-            case (CountOf(pat, partial), Count(Seq(se)))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pat.matchesOrdered(resolveThroughProjects(se, child)) =>
-              attr(partial).map(p => Coalesce(Seq(
-                ae.copy(aggregateFunction = Sum(p)), Literal(0L))))
-            case (MinOf(cn, partial), Min(se))
-                if !ae.isDistinct && ae.filter.isEmpty && isBareRef(se, cn) =>
-              attr(partial).map(p => ae.copy(aggregateFunction = Min(p)))
-            case (MaxOf(cn, partial), Max(se))
-                if !ae.isDistinct && ae.filter.isEmpty && isBareRef(se, cn) =>
-              attr(partial).map(p => ae.copy(aggregateFunction = Max(p)))
-            // PATTERN extrema (round 13, the argMax/argMin shape) —
-            // same ORDER-SENSITIVE match + result-type guard as the
-            // join path (casts retained unless order-embedding, r14)
-            case (MinPatOf(pt, partial), Min(se))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(se, child)) =>
-              attr(partial).filter(_.dataType == se.dataType)
-                .map(p => ae.copy(aggregateFunction = Min(p)))
-            case (MaxPatOf(pt, partial), Max(se))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(se, child)) =>
-              attr(partial).filter(_.dataType == se.dataType)
-                .map(p => ae.copy(aggregateFunction = Max(p)))
-            // COUNT(DISTINCT keyCol) → COUNT(keyCol) over rollup ROWS
-            // (round 12, the reference's uniq() dashboard shape):
-            // valid exactly when the rollup is grain-unique (the
-            // registration's claim — a one-shot groupBy build; NOT a
-            // partial-block append stream, whose groups span rows) AND
-            // the query groups by every OTHER rollup key at exactly
-            // the rollup's own grain, so rollup rows per group =
-            // distinct keyCol values per group. Count of the key
-            // attribute (not COUNT(*)) preserves countDistinct's
-            // null-skipping.
-            // NEVER inside a grouping-set lattice: a subtotal group
-            // holds more rollup rows than distinct grain values (the
-            // SetOf mapping below IS subtotal-safe — set union)
-            case (CountDistinctGrain(gcol), Count(Seq(se)))
-                if !inLattice &&
-                   ae.isDistinct && ae.filter.isEmpty &&
-                   isBareRef(se, gcol) && keyAttrs.contains(gcol) &&
-                   keyMap.values.toSet ==
-                     ((timeKeyOpt.toSet[Expression] ++ keyAttrs.values) -
-                        keyAttrs(gcol)) =>
-              Some(ae.copy(aggregateFunction = Count(Seq(keyAttrs(gcol))),
-                           isDistinct = false))
-            // uniqExact / uniqExactIf (round 15): EXACT COUNT(DISTINCT
-            // expr) from the distinct-set state — null-skipping on
-            // both sides, set union subtotal-safe, so this mapping
-            // (unlike the row-count one above) serves lattices too
-            case (SetOf(pt, partial), Count(Seq(se)))
-                if ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(se, child)) =>
-              attr(partial).map { p =>
-                val merged = ae.copy(aggregateFunction = CollectList(p),
-                  isDistinct = false,
-                  resultId = NamedExpression.newExprId)
-                Cast(Size(ArrayDistinct(Flatten(merged)), false), LongType)
-              }
-            // uniqExact from BITMAP states (round 15): the same exact
-            // COUNT(DISTINCT expr), answered by OR-union of compressed
-            // bitmaps instead of array merges — the scale member for
-            // integral keys; subtotal-safe (set union), so lattices
-            // route here too
-            case (BitmapUniqOf(pt, partial), Count(Seq(se)))
-                if ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(se, child)) =>
-              attr(partial).map { p =>
-                val merged = ae.copy(
-                  aggregateFunction = graft.expr.BitmapMergeAgg(p),
-                  isDistinct = false,
-                  resultId = NamedExpression.newExprId)
-                graft.expr.BitmapCardinality(merged)
-              }
-            // the explicit state read `graft_bitmap_agg(col)` (usually
-            // under graft_bitmap_count) re-aggregates as the OR-union
-            // of the stored states — bit-equal (canonical serialized
-            // form of the identical exact set)
-            case (BitmapUniqOf(pt, partial), ba: graft.expr.BitmapAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(ba.child, child)) =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.BitmapMergeAgg(p)))
-            // the theta member (round 15): the explicit state read
-            // re-aggregates as union at the REGISTERED lgK — states
-            // are value-set deterministic, so routed ≡ live bit-equal
-            case (ThetaUniqOf(pt, partial, k), ta: graft.expr.ThetaAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(ta.child, child)) &&
-                   ta.lgK == k =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.ThetaUnionAgg(p, k)))
-            // the LIST member (round 15, groupArrayMerge): collect_list
-            // re-aggregates as flatten of per-grain list states —
-            // multiset-exact, order unspecified on both plans (the
-            // collect_list contract); element-type guard as SetOf
-            case (ListOf(pt, partial), cl: CollectList)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(cl.child, child)) =>
-              // sameType: the parquet roundtrip relaxes struct-field
-              // nullability inside the stored element type — values
-              // and ordering are unaffected, so nullability must not
-              // block the rewrite (strict equality would). Round 16:
-              // an ADVISED sequence rollup is built from the RAW scan,
-              // so its stored ts labels may be the pre-loader NTZ
-              // while the query reads the relabeled TimestampType —
-              // value-identical under the pinned-UTC session, aligned
-              // with an explicit element cast (see relabelFlatten).
-              attr(partial).collect {
-                case p if (p.dataType match {
-                      case org.apache.spark.sql.types.ArrayType(et, _) =>
-                        org.apache.spark.sql.graftx.Bridge.sameTypeIgnoreNullability(et, cl.child.dataType) ||
-                          relabelOnly(et, cl.child.dataType)
-                      case _ => false
-                    }) =>
-                  val merged = ae.copy(
-                    aggregateFunction = CollectList(p),
-                    resultId = NamedExpression.newExprId)
-                  relabelFlatten(merged, p.dataType, cl.child.dataType)
-              }
-            // approx_count_distinct onto the EXACT bitmap state: a
-            // zero-error answer dominates ANY requested tolerance, so
-            // the substitution is always inside the approx function's
-            // contract (values remain plan-dependent — same knob)
-            case (BitmapUniqOf(pt, partial), h: HyperLogLogPlusPlus)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(h.child, child)) &&
-                   estimatorSubstitutionEnabled =>
-              attr(partial).map { p =>
-                val merged = ae.copy(
-                  aggregateFunction = graft.expr.BitmapMergeAgg(p),
-                  resultId = NamedExpression.newExprId)
-                graft.expr.BitmapCardinality(merged)
-              }
-            // AVG routes only in its dsum-shaped exact form —
-            // avg(cast(col as decimal(38,6))) — and reproduces
-            // Average's own decimal evaluate tree over the partials:
-            // identical exact sum type (38,6), identical count, the
-            // identical single HALF_UP division to (38,10). A bare
-            // double avg stays live (not bit-reproducible from
-            // decimal partials). Each re-aggregated partial gets a
-            // fresh resultId: two AggregateExpressions sharing one id
-            // would collide in the aggregate buffer.
-            case (AvgOf(cn, sp, cp), Average(se, mode))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   isExactPartialCast(resolveThroughProjects(se, child),
-                                      x => x.isInstanceOf[AttributeReference] &&
-                                           x.asInstanceOf[AttributeReference].name == cn) =>
-              for (s <- attr(sp); c <- attr(cp)) yield {
-                val sumAE = ae.copy(aggregateFunction = Sum(s),
-                                    resultId = NamedExpression.newExprId)
-                val cntAE = ae.copy(aggregateFunction = Sum(c),
-                                    resultId = NamedExpression.newExprId)
-                DecimalDivideWithOverflowCheck(
-                  sumAE, Cast(cntAE, DecimalType(20, 0)),
-                  DecimalType(38, 10), null,
-                  mode != EvalMode.ANSI)
-              }
-            // avgIf (round 14) — same pairing as the join path: the
-            // SumOf and the same-pattern CountOf reproduce Average
-            case (SumOf(pat, sp), Average(se, mode))
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   isExactPartialCast(resolveThroughProjects(se, child),
-                                      pat.matchesOrdered) =>
-              spec.aggs.collectFirst {
-                case CountOf(patC, cp) if samePattern(patC, pat) => cp
-              }.flatMap { cp =>
-                for (s <- attr(sp); c <- attr(cp)) yield {
-                  val sumAE = ae.copy(aggregateFunction = Sum(s),
-                                      resultId = NamedExpression.newExprId)
-                  val cntAE = ae.copy(aggregateFunction = Sum(c),
-                                      resultId = NamedExpression.newExprId)
-                  DecimalDivideWithOverflowCheck(
-                    sumAE, Cast(cntAE, DecimalType(20, 0)),
-                    DecimalType(38, 10), null,
-                    mode != EvalMode.ANSI)
-                }
-              }
-            // APPROX-DISTINCT via sketch state (round 12, the
-            // uniqState/uniqMerge member): `hll_sketch_agg(col, lgK)`
-            // re-aggregates as `hll_union_agg(partial)` — an HLL state
-            // is a set-function of its inputs (coupons set-union,
-            // registers max-merge), so the union of per-group partials
-            // IS the single-pass sketch. Only a BARE column with the
-            // registered lgK routes; a different precision or a cast
-            // stays live. Both node types are BinaryType, so the
-            // preserved ExprId keeps its type.
-            case (HllUniqOf(pt, partial, lgK), hs: HllSketchAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(hs.left, child)) &&
-                   (hs.right match {
-                     case Literal(k: Int, _) => k == lgK
-                     case _ => false
-                   }) =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = HllUnionAgg(p, Literal(false))))
-            // approx_count_distinct (HLL++) routed onto the SAME
-            // state (round 13): its contract is "estimate within
-            // relativeSD", and the registered sketch's error
-            // 1.04/√2^lgK at or under the query's rsd keeps the
-            // answer inside that contract without scanning the fact
-            // — estimator substitution, the thing an approx function
-            // permits by definition (values differ between sketch
-            // families, so this routes only where the precision
-            // dominates). States union across ANY regrouping, so
-            // CUBE/ROLLUP lattices route too — where the EXACT
-            // count-distinct correctly never can (subtotal rows
-            // cannot re-count; that guard is unchanged).
-            case (HllUniqOf(pt, partial, lgK), h: HyperLogLogPlusPlus)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(h.child, child)) &&
-                   hllRsd(lgK) <= h.relativeSD &&
-                   estimatorSubstitutionEnabled =>
-              attr(partial).map { p =>
-                val union = ae.copy(
-                  aggregateFunction = HllUnionAgg(p, Literal(false)),
-                  resultId = NamedExpression.newExprId)
-                HllSketchEstimate(union)
-              }
-            // QUANTILE via KLL state (round 12, quantileState/
-            // quantileMerge): same bare-column + registered-k guards;
-            // percentile_approx (GK, no storable state) never matches
-            case (KllQuantileOf(pt, partial, k), ka: graft.expr.KllDoublesAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(ka.child, child)) &&
-                   ka.k == k =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.KllMergeAgg(p, k)))
-            // percentile_approx (GK) onto the KLL state under RANK
-            // dominance (round 15) — see the join-path twin's note
-            case (KllQuantileOf(pt, partial, k), pa: ApproximatePercentile)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pa.dataType == org.apache.spark.sql.types.DoubleType &&
-                   pt.matchesOrdered(resolveThroughProjects(pa.child, child)) &&
-                   pa.percentageExpression.foldable &&
-                   pa.accuracyExpression.foldable &&
-                   estimatorSubstitutionEnabled && {
-                     val acc = pa.accuracyExpression.eval() match {
-                       case i: Int => i.toDouble
-                       case l: Long => l.toDouble
-                       case _ => Double.MaxValue
-                     }
-                     kllRankError(k) <= 1.0 / acc
-                   } =>
-              attr(partial).flatMap { p =>
-                pa.percentageExpression.eval() match {
-                  case d: Double =>
-                    val merged = ae.copy(
-                      aggregateFunction = graft.expr.KllMergeAgg(p, k),
-                      resultId = NamedExpression.newExprId)
-                    Some(graft.expr.KllQuantileEst(merged, d))
-                  case _ => None // array percentages stay live
-                }
-              }
-            // TOP-K via frequent-items state (round 12, topKState/
-            // topKMerge): the query's own k is free; the registered
-            // CAPACITY must match — a different maxItems is a
-            // different sketch. The rewrite wraps the combine in the
-            // estimate scalar (same output type as approx_top_k).
-            // r15: pattern sources (topKIf); the estimate's item type
-            // is the SKETCH's, so the rewrite additionally requires
-            // item-type equality (a widening the tree match tolerates
-            // must not change the routed output type)
-            case (TopKOf(pt, partial, m), t: ApproxTopK)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(t.expr, child)) &&
-                   t.k.foldable &&
-                   (t.maxItemsTracked match {
-                     case Literal(i: Int, _) => i == m
-                     case _ => false
-                   }) =>
-              attr(partial).flatMap { p =>
-                val combined = ae.copy(
-                  aggregateFunction = ApproxTopKCombine(p, Literal(m)),
-                  resultId = NamedExpression.newExprId)
-                val est = ApproxTopKEstimate(combined, t.k)
-                val same = try est.dataType == ae.dataType
-                  catch { case scala.util.control.NonFatal(_) => false }
-                if (same) Some(est) else None
-              }
-            // WEIGHTED TOP-K via frequent-items state (round 16,
-            // topKWeightedState/topKWeightedMerge): the state read
-            // `graft_topk_weighted_agg(item, w, m)` re-aggregates as
-            // the weight-map sum-merge of the stored per-group states
-            // — both item AND weight patterns must match the query's
-            // own expressions, and the registered capacity must equal
-            // the query's (a different maxMapSize is a different
-            // sketch). Both nodes are BinaryType, so the preserved
-            // ExprId keeps its type; the `graft_topk_weighted(st, k)`
-            // estimate scalar above survives the rewrite untouched.
-            case (TopKWeightedOf(ip, wp, partial, m), tk: graft.expr.TopKWeightedAgg)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   ip.matchesOrdered(resolveThroughProjects(tk.left, child)) &&
-                   wp.matchesOrdered(resolveThroughProjects(tk.right, child)) &&
-                   tk.maxMapSize == m =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.TopKWeightedMergeAgg(p, m)))
-            // DISTINCT-SET via array state (round 13, the
-            // groupUniqArrayState/Merge member): `collect_set(col)`
-            // re-aggregates as distinct-flatten over the per-group set
-            // partials — a set is a set-function of its inputs, so the
-            // union IS the single-pass set (order unspecified on both
-            // plans, collect_set's own contract; `size(...)` on top
-            // yields the EXACT distinct count from the same state).
-            // r15: pattern sources (setIf) with the element-type guard.
-            case (SetOf(pt, partial), cs: CollectSet)
-                if !ae.isDistinct && ae.filter.isEmpty &&
-                   pt.matchesOrdered(resolveThroughProjects(cs.child, child)) =>
-              attr(partial).collect {
-                case p if (p.dataType match {
-                      case org.apache.spark.sql.types.ArrayType(et, _) =>
-                        et == cs.child.dataType
-                      case _ => false
-                    }) =>
-                  val merged = ae.copy(
-                    aggregateFunction = CollectList(p),
-                    resultId = NamedExpression.newExprId)
-                  ArrayDistinct(Flatten(merged))
-              }
-            case _ => None
-          }
-        }.headOption
-      // uniqUpTo (round 13): the whole `least(count(DISTINCT col), n+1)`
-      // OUTPUT maps onto the capped-set partial — the distinct
-      // aggregate alone is not mergeable; only the capped form is
-      // (see [[UniqUpToOf]]), so the match lives at the expression
-      // level where the limit literal is visible
-      def mapUpTo(l: Least): Option[Expression] = l.children match {
-        case Seq(ae: AggregateExpression, limE)
-            if limE.foldable && limE.dataType == LongType =>
-          val lim = limE.eval().asInstanceOf[Long]
-          (ae.aggregateFunction, ae.isDistinct, ae.filter) match {
-            case (Count(Seq(se)), true, None) =>
-              spec.aggs.view.flatMap {
-                case UniqUpToOf(pt, partial, n)
-                    if lim == n + 1 &&
-                       pt.matchesOrdered(resolveThroughProjects(se, child)) =>
-                  attr(partial).map { p =>
-                    val merged = ae.copy(aggregateFunction = CollectList(p),
-                      isDistinct = false,
-                      resultId = NamedExpression.newExprId)
-                    Least(Seq(
-                      Cast(Size(ArrayDistinct(Flatten(merged)), false), LongType),
-                      Literal((n + 1).toLong)))
-                  }
-                case _ => None
-              }.headOption
-            case _ => None
-          }
-        case _ => None
-      }
+      // COUNT(DISTINCT keyCol) → COUNT(keyCol) over rollup ROWS (round
+      // 12): valid exactly when the rollup is grain-unique (the
+      // registration's claim — a one-shot groupBy build; NOT a
+      // partial-block append stream, whose groups span rows) AND the
+      // query groups by every OTHER rollup key at exactly the rollup's
+      // own grain, so rollup rows per group = distinct keyCol values per
+      // group. Counting the key attribute (not COUNT(*)) preserves
+      // countDistinct's null-skipping.
+      def grainCount(g: String): Option[Expression] =
+        keyAttrs.get(g).filter(k =>
+          keyMap.values.toSet == ((timeKeyOpt.toSet[Expression] ++ keyAttrs.values) - k))
       var ok = true
       val newAggExprs: Seq[NamedExpression] = aggExprs.map {
         case ne if keyOfResolved(ne match { case Alias(c, _) => c; case x => x }).isDefined =>
@@ -3443,10 +3071,8 @@ object RollupRouting {
           Alias(mapTimeExpr(ne match { case Alias(c, _) => c; case x => x }).get,
                 ne.name)(exprId = ne.exprId)
         case ne =>
-          val rewritten = ne.transformUp {
-            case l: Least => mapUpTo(l).getOrElse(l)
-            case ae: AggregateExpression => mapAgg(ae).getOrElse(ae)
-          }.asInstanceOf[NamedExpression]
+          val rewritten = routeAggregates(ne, spec.aggs, resolveThroughProjects(_, child),
+                                          attr, inLattice, grainCount)
           // bail if any raw-table reference survived (unknown aggregate)
           if (!rewritten.references.subsetOf(AttributeSet(rollup.output))) ok = false
           rewritten
@@ -3469,7 +3095,7 @@ object RollupRouting {
       // every step. A watermark that is not a whole-grain boundary
       // would split the boundary group across the two sides, so the
       // rule refuses it (stays live) rather than answer wrong.
-      val newChild: LogicalPlan = coveredUpTo(spec) match {
+      val newChild: LogicalPlan = coveredUpToPath(spec.rollupPath) match {
         case None => return None // unreadable sidecar: never answer from it
         case Some(None) =>
           routedFilters.reduceOption(And).map(Filter(_, rollup)).getOrElse(rollup)
@@ -3528,7 +3154,7 @@ object RollupRouting {
       * delegates the real work to [[rewrite]] on a PSEUDO flat
       * aggregate (the full grouping set, only the aggregate-valued
       * output columns) — inheriting predicate subsumption, grain
-      * hierarchy, the hybrid rollup∪tail read, and every mapAgg guard
+      * hierarchy, the hybrid rollup∪tail read, and every [[routeAggregates]] guard
       * — then rebuilds Expand on top of the routed child, preserving
       * each expanded-attribute and grouping-id ExprId so the parent
       * plan and the null/gid semantics are untouched. The one
@@ -3952,9 +3578,6 @@ object RollupRouting {
       * the rewrite must ABORT (stay live) rather than fall back to
       * treating it as complete; inner None = no sidecar at all (a
       * complete rollup). */
-    private def coveredUpTo(spec: Spec): Option[Option[Long]] =
-      coveredUpToPath(spec.rollupPath)
-
     private def coveredUpToPath(rollupPath: String): Option[Option[Long]] = {
       val f = new java.io.File(rollupPath, RollupRouting.CoverageSidecar)
       if (!f.exists()) Some(None)
@@ -4045,62 +3668,9 @@ object RollupRouting {
       val aggExprs: Seq[NamedExpression] = rollup.output.map(_.name).map {
         case n if n == timeKeyName => Alias(grainKey, n)()
         case n if keyLookup.contains(n) => Alias(keyLookup(n), n)()
-        case n => spec.aggs.view.flatMap {
-          case SumOf(pat, p) if p == n =>
-            pat.rebuild(scanAttr).map(e =>
-              Alias(Sum(Cast(e, DecimalType(38, 6))).toAggregateExpression(), n)())
-          case CountStarTo(p) if p == n =>
-            Some(Alias(Count(Seq(Literal(1))).toAggregateExpression(), n)())
-          case CountOf(pat, p) if p == n => // the tail's own non-null count
-            pat.rebuild(scanAttr).map(e =>
-              Alias(Count(Seq(e)).toAggregateExpression(), n)())
-          case MinOf(cn, p) if p == n =>
-            scanAttr(cn).map(a => Alias(Min(a).toAggregateExpression(), n)())
-          case MaxOf(cn, p) if p == n =>
-            scanAttr(cn).map(a => Alias(Max(a).toAggregateExpression(), n)())
-          case AvgOf(cn, _, p) if p == n => // non-null count of cn
-            scanAttr(cn).map(a => Alias(Count(Seq(a)).toAggregateExpression(), n)())
-          case AvgOf(cn, sp, _) if sp == n => // avg's sum partial, when
-            // no SumOf writes the same column (the builder reuses it)
-            scanAttr(cn).map(a => Alias(
-              Sum(Cast(a, DecimalType(38, 6))).toAggregateExpression(), n)())
-          case HllUniqOf(pt, p, lgK) if p == n => // the tail's own sketch
-            pt.rebuild(scanAttr).map(e => Alias(
-              HllSketchAgg(e, Literal(lgK)).toAggregateExpression(), n)())
-          case KllQuantileOf(pt, p, k) if p == n =>
-            pt.rebuild(scanAttr).map(e => Alias(
-              graft.expr.KllDoublesAgg(e, k).toAggregateExpression(), n)())
-          case TopKOf(pt, p, m) if p == n =>
-            pt.rebuild(scanAttr).map(e => Alias(
-              ApproxTopKAccumulate(e, Literal(m)).toAggregateExpression(), n)())
-          case SetOf(pt, p) if p == n => // the tail's own distinct set
-            pt.rebuild(scanAttr).map(e =>
-              Alias(CollectSet(e).toAggregateExpression(), n)())
-          case UniqUpToOf(pt, p, lim) if p == n => // the tail's capped set
-            pt.rebuild(scanAttr).map(e => Alias(
-              Slice(CollectSet(e).toAggregateExpression(),
-                Literal(1), Literal(lim + 1)), n)())
-          case BitmapUniqOf(pt, p) if p == n => // the tail's own bitmap
-            pt.rebuild(scanAttr).map(e => Alias(
-              graft.expr.BitmapAgg(e).toAggregateExpression(), n)())
-          case ThetaUniqOf(pt, p, k) if p == n => // the tail's own theta state
-            pt.rebuild(scanAttr).map(e => Alias(
-              graft.expr.ThetaAgg(e, k).toAggregateExpression(), n)())
-          case ListOf(pt, p) if p == n => // the tail's own list state
-            pt.rebuild(scanAttr).map(e =>
-              Alias(CollectList(e).toAggregateExpression(), n)())
-          case TopKWeightedOf(ip, wp, p, m) if p == n => // the tail's own state
-            for {
-              ie <- ip.rebuild(scanAttr)
-              we <- wp.rebuild(scanAttr)
-            } yield Alias(
-              graft.expr.TopKWeightedAgg(ie, we, m).toAggregateExpression(), n)()
-          case MinPatOf(pt, p) if p == n =>
-            pt.rebuild(scanAttr).map(e => Alias(Min(e).toAggregateExpression(), n)())
-          case MaxPatOf(pt, p) if p == n =>
-            pt.rebuild(scanAttr).map(e => Alias(Max(e).toAggregateExpression(), n)())
-          case _ => None
-        }.headOption.getOrElse(return None) // a column the tail can't rebuild
+        case n => spec.aggs.view.flatMap(tailPartial(_, n, scanAttr)).headOption
+          .map(Alias(_, n)())
+          .getOrElse(return None) // a column the tail can't rebuild
       }
       val tailGroupings: Seq[Expression] =
         if (spec.grain == "all") keyByRollupCol.map(_._2)

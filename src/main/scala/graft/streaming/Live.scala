@@ -891,9 +891,8 @@ object Live {
     // per-partition commit overhead still dominates there). r20:
     // conf-parameterized rather than hard-coded so a cluster sizes it
     // to cores × state bytes instead of inheriting a fixture constant.
-    val sessionParts = spark.conf.get(
-      "spark.graft.stream.sessionizePartitions",
-      sys.env.getOrElse("SPARK_GRAFT_SESSIONIZE_PARTS", "8")).toInt
+    val sessionParts =
+      spark.conf.get("spark.graft.stream.sessionizePartitions", "8").toInt
     val all = drainToParquet(updates.toDF(), "update",
                              statePartitions = sessionParts)
     val wv = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))

@@ -231,6 +231,51 @@ class BitmapSpec extends AnyFunSuite {
     }
   }
 
+  /** The hybrid check above, on the JOIN path: a day × segment bitmap
+    * rollup over events⋈customer, stamped with a coverage watermark,
+    * serves the distinct-users dashboard as rollup days before the
+    * watermark ∪ a live-tail re-join that rebuilds the bitmap partial. */
+  test("stamped join bitmap rollup serves hybrid: states ∪ live-tail re-join") {
+    import RollupRouting.{BitmapUniqOf, JoinSpec, TimeGrainPat}
+    val dir = java.nio.file.Files.createTempDirectory("graft_bmjh")
+      .resolve("bmjoinrollup").toString
+    val spec = JoinSpec(dir,
+      tables = Set("events", "customer"),
+      joinKeys = Set(("c_custkey", "user_id")),
+      groupings = Map("c_mktsegment" -> "c_mktsegment"),
+      aggs = Seq(BitmapUniqOf("user_id", "users_bm")),
+      coverage = Some("ts_day"),
+      timeGroupings = Seq(TimeGrainPat("day", "ts") -> "ts_day"))
+    RollupRouting.buildJoinPartials(
+        Map("events" -> Tables.events(spark, sf),
+            "customer" -> Tables.customer(spark, sf)), spec)
+      .write.parquet(dir)
+    // a midnight inside the fixture's 2024-01 range
+    RollupRouting.stampCoverage(dir,
+      java.time.LocalDate.parse("2024-01-15").toEpochDay * 86400000000L)
+    val q = () => Tables.events(spark, sf)
+      .join(Tables.customer(spark, sf), $"user_id" === $"c_custkey")
+      .groupBy(to_date($"ts").as("day"), $"c_mktsegment")
+      .agg(countDistinct($"user_id").as("n_users"))
+      .orderBy("day", "c_mktsegment")
+    val live = q().collect().toSeq
+    RollupRouting.registerJoin(spec)
+    spark.experimental.extraOptimizations = Seq(new RollupRouting.RuleImpl(spark))
+    try {
+      val hybrid = q()
+      val plan = hybrid.queryExecution.executedPlan.toString
+      assert(plan.contains("bmjoinrollup") && plan.contains("events.parquet") &&
+        hybrid.queryExecution.optimizedPlan.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
+        s"hybrid must read states AND a union'd tail:\n$plan")
+      assert(hybrid.collect().toSeq == live,
+        "stale states ∪ tail must OR-union to the live join's exact count")
+    } finally {
+      spark.experimental.extraOptimizations = Nil
+      RollupRouting.clear()
+    }
+  }
+
   /** The multi-distinct inversion's REGULAR-aggregate leg: in Spark's
     * Expand+gid encoding, non-distinct aggregates arrive as
     * `first(x) FILTER (gid=0)` over an inner partial — the inversion

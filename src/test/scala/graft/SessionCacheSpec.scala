@@ -43,9 +43,10 @@ class SessionCacheSpec extends AnyFunSuite {
       .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
       .toSeq.flatMap(cd => sizes(cd.plan))
 
-  test("a table rewritten mid-session is re-read by the relation memo, " +
-       "the shingle index and an ensureRollup-built routed read") {
-    val dir = Files.createTempDirectory("graft_sessioncache").resolve("sf")
+  /** Rewrites orders and documents in a scratch copy of the fixtures
+    * (a temp dir named `prefix`) and checks every memo follows them. */
+  private def rewrittenMidSession(prefix: String): Unit = {
+    val dir = Files.createTempDirectory(prefix).resolve("sf")
     Files.createDirectories(dir)
     Files.list(java.nio.file.Paths.get(TestSpark.sf)).forEach(f =>
       Files.copy(f, dir.resolve(f.getFileName)))
@@ -88,6 +89,13 @@ class SessionCacheSpec extends AnyFunSuite {
       deleteTree(dir.getParent)
       deleteTree(java.nio.file.Paths.get(Rollups.ordersRollupDir(sf)))
     }
+  }
+
+  test("a table rewritten mid-session is re-read by the relation memo, " +
+       "the shingle index and an ensureRollup-built routed read") {
+    // the second dir name has a space: `inputFiles` percent-encodes it,
+    // and the routed read's rollup must still see its source change
+    Seq("graft_sessioncache", "graft session cache").foreach(rewrittenMidSession)
   }
 
   test("two threads asking for the same key run one build") {
