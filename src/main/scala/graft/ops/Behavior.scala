@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.RollupRouting.{Catalog, route}
 
 /** Behavioral analytics (round 15) — ClickHouse's parametric
   * aggregate family (`windowFunnel`, `retention`, `sequenceMatch`)
@@ -121,7 +122,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), funnelSeqSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(funnelSeqSpec(dir))) {
+    route(spark, Catalog(Seq(funnelSeqSpec(dir)))) {
       windowFunnelGuardedRead(Tables.events(spark, sfDir))
     }
   }
@@ -162,7 +163,7 @@ object Behavior {
     val advice = graft.plans.Advisor.advise(Seq(workload), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    graft.plans.Advisor.runRouted(spark, advice) {
+    route(spark, graft.plans.Advisor.build(spark, advice)) {
       windowFunnelGuardedRead(Tables.events(spark, sfDir))
     }
   }
@@ -238,7 +239,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), funnelAllSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(funnelAllSpec(dir)))(read)
+    route(spark, Catalog(Seq(funnelAllSpec(dir))))(read)
   }
 
   /** Driver entry (q271, oracled): `windowFunnel(..., 'strict_dedup')`
@@ -350,8 +351,8 @@ object Behavior {
     StarJoins.ensureRollup(spark, dir) {
       truncatedFunnelAllPartials(Tables.events(spark, sfDir), week)
     }
-    Rollups.withRoutingSpecs(spark,
-      Seq(funnelAllSpec(dir).copy(truncatedToWindowUs = Some(week))))(read)
+    route(spark, Catalog(
+      Seq(funnelAllSpec(dir).copy(truncatedToWindowUs = Some(week)))))(read)
   }
 
   /** Driver entry (q274, oracled — shares q239's positional oracle):
@@ -397,7 +398,7 @@ object Behavior {
       s"advisor unexpectedly skipped: ${advice.skipped}")
     require(advice.splits.exists(_.contains("all-events")),
       "the opt-in must surface its state-cost warning")
-    graft.plans.Advisor.runRouted(spark, advice) {
+    route(spark, graft.plans.Advisor.build(spark, advice)) {
       windowFunnelStrictOrder(spark, sfDir)
     }
   }
@@ -769,7 +770,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), funnelSeqSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(funnelSeqSpec(dir))) {
+    route(spark, Catalog(Seq(funnelSeqSpec(dir)))) {
       sequenceMatchTimed(spark, sfDir)
     }
   }
@@ -823,7 +824,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), funnelSeqSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(funnelSeqSpec(dir))) {
+    route(spark, Catalog(Seq(funnelSeqSpec(dir)))) {
       windowFunnelMaxAnchorOver(Tables.events(spark, sfDir))
     }
   }
@@ -890,7 +891,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), thetaSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(thetaSpec(dir))) {
+    route(spark, Catalog(Seq(thetaSpec(dir)))) {
       val states = Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(Tht.agg(col("user_id")).as("st"))
@@ -950,7 +951,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), thetaSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(thetaSpec(dir))) {
+    route(spark, Catalog(Seq(thetaSpec(dir)))) {
       audienceBoundsOver(Tables.events(spark, sfDir))
     }
   }
@@ -1014,7 +1015,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), seqCountSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(seqCountSpec(dir))) {
+    route(spark, Catalog(Seq(seqCountSpec(dir)))) {
       sequenceCountsOver(Tables.events(spark, sfDir))
     }
   }
@@ -1150,7 +1151,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), retentionCondSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(retentionCondSpec(dir))) {
+    route(spark, Catalog(Seq(retentionCondSpec(dir)))) {
       retentionConds(Tables.events(spark, sfDir), retentionCondSet)
     }
   }
@@ -1188,7 +1189,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), retentionCondSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(retentionCondSpec(dir))) {
+    route(spark, Catalog(Seq(retentionCondSpec(dir)))) {
       retentionConds(retentionWindow(Tables.events(spark, sfDir)),
         retentionCondSet)
     }
@@ -1210,7 +1211,7 @@ object Behavior {
     val advice = graft.plans.Advisor.advise(Seq(workload), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    graft.plans.Advisor.runRouted(spark, advice) {
+    route(spark, graft.plans.Advisor.build(spark, advice)) {
       retentionConds(Tables.events(spark, sfDir), retentionCondSet)
     }
   }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.RollupRouting.{Catalog, route}
 
 /** Data-lifecycle jobs (SURVEY §2.1 S11, §2.10 P1/P2).
   *
@@ -226,7 +227,7 @@ object Lifecycle {
     val rollupDir = base.resolve("ttl_rollup").toString
     writeDayPartitionedLake(graft.Tables.events(spark, sfDir), lakeDir)
     expireIntoRollup(spark, lakeDir, rollupDir, Rollups.HybridCutoffUs)
-    Rollups.withRoutingSpecs(spark, Seq(RollupRouting.Spec("ttl_lake", rollupDir))) {
+    route(spark, Catalog(Seq(RollupRouting.Spec("ttl_lake", rollupDir)))) {
       spark.read.parquet(lakeDir)
         .groupBy(to_date(col("ts")).as("day"), col("user_id"))
         .agg(Fns.dsum(col("value")).as("total_value"), count(lit(1)).as("tx_count"))
@@ -270,7 +271,7 @@ object Lifecycle {
     // here just to produce the byte total)
     expireIntoRollup(spark, lakeDir, spec, cutoffUs,
                      writeTasks = Lifecycle.AutoWriteTasks)
-    Rollups.withRoutingSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(Seq(spec))) {
       spark.read.parquet(lakeDir)
         .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
         .filter(col("o_orderdate") >= lit("1997-01-01 00:00:00").cast("timestamp") &&

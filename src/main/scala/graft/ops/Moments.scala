@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.RollupRouting.{Catalog, route}
 
 /** Statistical moments over the SUM vocabulary (round 15). ClickHouse
   * ships `varSampState` / `corrState` as dedicated mergeable states;
@@ -86,7 +87,7 @@ object Moments {
     val advice = graft.plans.Advisor.advise(Seq(momentsRaw(spark, sfDir)), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    graft.plans.Advisor.runRouted(spark, advice) { momentsRaw(spark, sfDir) }
+    route(spark, graft.plans.Advisor.build(spark, advice)) { momentsRaw(spark, sfDir) }
   }
 
   /** The A/B test cohorts — ONE definition shared by the raw read,
@@ -177,7 +178,7 @@ object Moments {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), abSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(abSpec(dir))) {
+    route(spark, Catalog(Seq(abSpec(dir)))) {
       abTestsOver(Tables.events(spark, sfDir))
     }
   }
@@ -208,17 +209,24 @@ object Moments {
   def mannWhitney(spark: SparkSession, sfDir: String): DataFrame =
     mannWhitneyOver(Tables.events(spark, sfDir))
 
-  private[graft] def mannWhitneyOver(events: DataFrame): DataFrame = {
-    // the cohort restriction lives ABOVE the aggregate (a HAVING over
-    // the combined count), never as a scan filter — a pre-aggregate
-    // filter on event_type would block the grainless value-histogram
-    // rewrite (event_type is not a spec key), and the stored
-    // conditional partials already carry the cohort split
-    val perValue = events
+  private[graft] def mannWhitneyOver(events: DataFrame): DataFrame =
+    mannWhitneyRanks(mannWhitneyPerValue(events))
+
+  // the cohort restriction lives ABOVE the aggregate (a HAVING over
+  // the combined count), never as a scan filter — a pre-aggregate
+  // filter on event_type would block the grainless value-histogram
+  // rewrite (event_type is not a spec key), and the stored
+  // conditional partials already carry the cohort split
+  private def mannWhitneyPerValue(events: DataFrame): DataFrame =
+    events
       .groupBy(col("value"))
       .agg(count(when(isA, 1)).as("n1_v"),
            count(when(isA || isB, 1)).as("cnt"))
       .filter(col("cnt") > 0)
+
+  // the running total runs a job while the frame is built, so the
+  // routed entry point routes `perValue` before this, not after
+  private def mannWhitneyRanks(perValue: DataFrame): DataFrame = {
     val cum = GlobalRank.withRunningTotal(
       perValue, Seq(col("value")), col("cnt"), "__cum")
       .withColumn("cumL", col("__cum").cast("long"))
@@ -266,8 +274,8 @@ object Moments {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), mannWhitneySpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(mannWhitneySpec(dir))) {
-      mannWhitneyOver(Tables.events(spark, sfDir))
-    }
+    mannWhitneyRanks(route(spark, Catalog(Seq(mannWhitneySpec(dir)))) {
+      mannWhitneyPerValue(Tables.events(spark, sfDir))
+    })
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import Fns._
+import graft.plans.RollupRouting.{Catalog, route}
 
 /** Batch analogs of the reference's six ClickHouse materialized views
   * (`usdc-transfers/sql/analytics.sql`, `scripts/setup-analytics.sh`) on
@@ -96,7 +97,7 @@ object Rollups {
   def dailyVolumeWindowRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureDailyRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(RollupRouting.Spec("events.parquet", dir))) {
+    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
       dailyVolumeWindowRaw(spark, sfDir)
     }
   }
@@ -126,7 +127,7 @@ object Rollups {
   def rollupDashboardRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureDailyRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(RollupRouting.Spec("events.parquet", dir))) {
+    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
       rollupDashboardRaw(spark, sfDir)
     }
   }
@@ -153,39 +154,6 @@ object Rollups {
       hourlyPartialsOf(Tables.events(spark, sfDir))
     }
 
-  /** Install the routing rule with the given specs registered, run
-    * `q`, and snapshot the result before restoring the session. */
-  private[graft] def withRoutingSpecs[A](spark: SparkSession,
-                                  specs: Seq[graft.plans.RollupRouting.Spec])
-                                 (q: => DataFrame): DataFrame = {
-    import graft.plans.RollupRouting
-    val prev = spark.experimental.extraOptimizations
-    specs.foreach(RollupRouting.register)
-    spark.experimental.extraOptimizations =
-      prev :+ new RollupRouting.RuleImpl(spark)
-    try q.localCheckpoint()
-    finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
-    }
-  }
-
-  /** [[withRoutingSpecs]] for the join registry. */
-  private[graft] def withRoutingJoinSpecs(spark: SparkSession,
-                                  specs: Seq[graft.plans.RollupRouting.JoinSpec])
-                                 (q: => DataFrame): DataFrame = {
-    import graft.plans.RollupRouting
-    val prev = spark.experimental.extraOptimizations
-    specs.foreach(RollupRouting.registerJoin)
-    spark.experimental.extraOptimizations =
-      prev :+ new RollupRouting.RuleImpl(spark)
-    try q.localCheckpoint()
-    finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
-    }
-  }
-
   /** Driver entry (q155, shares q151's oracle): GRAIN-HIERARCHY
     * routing — the UNCHANGED day-windowed dashboard query
     * ([[dailyVolumeWindowRaw]]) with only the HOURLY rollup
@@ -200,7 +168,7 @@ object Rollups {
   def dailyWindowHourlyRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureHourlyRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(RollupRouting.Spec("events.parquet", dir, "hour"))) {
+    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir, "hour")))) {
       dailyVolumeWindowRaw(spark, sfDir)
     }
   }
@@ -227,7 +195,7 @@ object Rollups {
   def hourlyVolumeWindowRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureHourlyRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(RollupRouting.Spec("events.parquet", dir, "hour"))) {
+    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir, "hour")))) {
       hourlyVolumeWindowRaw(spark, sfDir)
     }
   }
@@ -255,7 +223,7 @@ object Rollups {
   def monthlyVolumeRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureDailyRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(RollupRouting.Spec("events.parquet", dir))) {
+    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
       monthlyVolumeRaw(spark, sfDir)
     }
   }
@@ -267,7 +235,7 @@ object Rollups {
     * output row; the fact is never scanned. */
   def monthlyUniqSketchRouted(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureUniqSketchRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(uniqSketchSpec(dir))) {
+    route(spark, Catalog(Seq(uniqSketchSpec(dir)))) {
       Tables.events(spark, sfDir)
         .groupBy(date_trunc("month", col("ts")).as("month"))
         .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 12))
@@ -307,7 +275,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), latticeUniqSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(latticeUniqSpec(dir))) {
+    route(spark, Catalog(Seq(latticeUniqSpec(dir)))) {
       Tables.events(spark, sfDir)
         .rollup(to_date(col("ts")).as("day"), col("event_type"))
         .agg(approx_count_distinct(col("user_id")).as("uniq_users_approx"),
@@ -344,7 +312,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), uniqArraySpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(uniqArraySpec(dir))) {
+    route(spark, Catalog(Seq(uniqArraySpec(dir)))) {
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(
@@ -386,7 +354,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), condSetSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(condSetSpec(dir))) {
+    route(spark, Catalog(Seq(condSetSpec(dir)))) {
       Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(
@@ -435,7 +403,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), uniqExactSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(uniqExactSpec(dir))) {
+    route(spark, Catalog(Seq(uniqExactSpec(dir)))) {
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_users"),
@@ -480,7 +448,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), uniqBitmapSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(uniqBitmapSpec(dir))) {
+    route(spark, Catalog(Seq(uniqBitmapSpec(dir)))) {
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_users"),
@@ -517,7 +485,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), bitmapDaySpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(bitmapDaySpec(dir))) {
+    route(spark, Catalog(Seq(bitmapDaySpec(dir)))) {
       Tables.events(spark, sfDir)
         .rollup(to_date(col("ts")).as("day"), col("event_type"))
         .agg(countDistinct(col("user_id")).as("uniq_users"),
@@ -733,7 +701,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), dayTypeValueSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(dayTypeValueSpec(dir))) {
+    route(spark, Catalog(Seq(dayTypeValueSpec(dir)))) {
       minAvgMapRead(Tables.events(spark, sfDir))
     }
   }
@@ -759,7 +727,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), dayTypeValueSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(dayTypeValueSpec(dir))) {
+    route(spark, Catalog(Seq(dayTypeValueSpec(dir)))) {
       sumMapRead(Tables.events(spark, sfDir)
         .filter(col("event_type").isin(filteredMapKeys: _*)))
     }
@@ -781,7 +749,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), dayTypeValueSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(dayTypeValueSpec(dir))) {
+    route(spark, Catalog(Seq(dayTypeValueSpec(dir)))) {
       minAvgMapRead(Tables.events(spark, sfDir)
         .filter(col("event_type").isin(filteredMapKeys: _*)))
     }
@@ -798,7 +766,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), dayTypeValueSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(dayTypeValueSpec(dir))) {
+    route(spark, Catalog(Seq(dayTypeValueSpec(dir)))) {
       sumMapRead(Tables.events(spark, sfDir))
     }
   }
@@ -843,7 +811,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), topKWeightedSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(topKWeightedSpec(dir))) {
+    route(spark, Catalog(Seq(topKWeightedSpec(dir)))) {
       topKWeightedUsers(spark, sfDir)
     }
   }
@@ -864,7 +832,7 @@ object Rollups {
     val advice = graft.plans.Advisor.advise(Seq(workload), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    graft.plans.Advisor.runRouted(spark, advice) {
+    route(spark, graft.plans.Advisor.build(spark, advice)) {
       topKWeightedUsers(spark, sfDir)
     }
   }
@@ -921,7 +889,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), uniqUpToSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(uniqUpToSpec(dir))) {
+    route(spark, Catalog(Seq(uniqUpToSpec(dir)))) {
       Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(least(countDistinct(col("user_id")), lit(51).cast("long"))
@@ -969,7 +937,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), condAggSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(condAggSpec(dir))) {
+    route(spark, Catalog(Seq(condAggSpec(dir)))) {
       Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(when(col("value") > 1.0, 1)).as("n_over_1"),
@@ -996,7 +964,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), uniqArraySpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(uniqArraySpec(dir))) {
+    route(spark, Catalog(Seq(uniqArraySpec(dir)))) {
       Tables.events(spark, sfDir)
         .rollup(to_date(col("ts")).as("day"), col("event_type"))
         .agg(
@@ -1052,7 +1020,7 @@ object Rollups {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), argExtremesSpec("unused"))
     }
-    withRoutingSpecs(spark, Seq(argExtremesSpec(dir))) {
+    route(spark, Catalog(Seq(argExtremesSpec(dir)))) {
       argExtremes(spark, sfDir)
     }
   }
@@ -1098,7 +1066,7 @@ object Rollups {
     * the exact distinct count). */
   def dailyUniqSketchRouted(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureUniqSketchRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(uniqSketchSpec(dir))) {
+    route(spark, Catalog(Seq(uniqSketchSpec(dir)))) {
       dailyUniqSketchRaw(spark, sfDir)
     }
   }
@@ -1139,7 +1107,7 @@ object Rollups {
     val spec = uniqSketchSpec(dir)
     if (!new java.io.File(dir).exists())
       writeRollupUpTo(Tables.events(spark, sfDir), spec, HybridCutoffUs)
-    withRoutingSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(Seq(spec))) {
       dailyUniqSketchRaw(spark, sfDir)
     }
   }
@@ -1185,7 +1153,7 @@ object Rollups {
     * exact CDF (the contract), not bit equality. */
   def dailyQuantileSketchRouted(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureQuantileSketchRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(quantileSketchSpec(dir))) {
+    route(spark, Catalog(Seq(quantileSketchSpec(dir)))) {
       dailyQuantileSketchRaw(spark, sfDir)
     }
   }
@@ -1222,7 +1190,7 @@ object Rollups {
     val spec = quantileSketchSpec(dir)
     if (!new java.io.File(dir).exists())
       writeRollupUpTo(Tables.events(spark, sfDir), spec, HybridCutoffUs)
-    withRoutingSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(Seq(spec))) {
       dailyQuantileSketchRaw(spark, sfDir)
     }
   }
@@ -1298,7 +1266,7 @@ object Rollups {
     * included. */
   def dailyTopUsersRouted(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureTopKSketchRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(topKSketchSpec(dir))) {
+    route(spark, Catalog(Seq(topKSketchSpec(dir)))) {
       dailyTopUsersScalar(spark, sfDir)
     }
   }
@@ -1313,7 +1281,7 @@ object Rollups {
     val spec = topKSketchSpec(dir)
     if (!new java.io.File(dir).exists())
       writeRollupUpTo(Tables.events(spark, sfDir), spec, HybridCutoffUs)
-    withRoutingSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(Seq(spec))) {
       dailyTopUsersScalar(spark, sfDir)
     }
   }
@@ -1505,7 +1473,7 @@ object Rollups {
   def dailyWindowHybridRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureHybridRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(RollupRouting.Spec("events.parquet", dir))) {
+    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
       hybridWindowRaw(spark, sfDir)
     }
   }
@@ -1625,7 +1593,7 @@ object Rollups {
   def dailyAvgRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureDailyRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(RollupRouting.Spec("events.parquet", dir))) {
+    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
       dailyAvgRaw(spark, sfDir)
     }
   }
@@ -1655,8 +1623,8 @@ object Rollups {
     import graft.plans.RollupRouting
     val dir = ensureDailyRollup(spark, sfDir)
     val base = RollupRouting.Spec("events.parquet", dir)
-    withRoutingSpecs(spark,
-        Seq(base.copy(aggs = base.aggs :+ RollupRouting.CountDistinctGrain("user_id")))) {
+    route(spark, Catalog(
+        Seq(base.copy(aggs = base.aggs :+ RollupRouting.CountDistinctGrain("user_id"))))) {
       dailyUniqUsersRaw(spark, sfDir)
     }
   }
@@ -1719,7 +1687,7 @@ object Rollups {
     * differently-shaped table registered as data. */
   def ordersDailySalesRouted(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureOrdersRollup(spark, sfDir)
-    withRoutingSpecs(spark, Seq(ordersSpec(dir))) {
+    route(spark, Catalog(Seq(ordersSpec(dir)))) {
       ordersDailySalesRaw(spark, sfDir)
     }
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{SessionCache, Tables}
 import Fns._
+import graft.plans.RollupRouting.{Catalog, route}
 
 /** Star-schema join capability (SURVEY §2.3 — the reference has zero
   * joins; these are added capability required by the north star).
@@ -290,9 +291,9 @@ object StarJoins {
   def chargeSegmentRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureChargeSegmentRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.chargeSegment(dir))) {
-      chargeBySegment(spark, sfDir).localCheckpoint()
+    route(spark, starCatalog(spark, sfDir,
+        extra = Seq(RollupRouting.JoinSpec.chargeSegment(dir)))) {
+      chargeBySegment(spark, sfDir)
     }
   }
 
@@ -334,8 +335,8 @@ object StarJoins {
   def segmentCustomersRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureSegmentCustomersRollup(spark, sfDir)
-    Rollups.withRoutingJoinSpecs(spark,
-        Seq(RollupRouting.JoinSpec.segmentCustomers(dir))) {
+    route(spark, Catalog(joinSpecs =
+        Seq(RollupRouting.JoinSpec.segmentCustomers(dir)))) {
       segmentCustomers(spark, sfDir)
     }
   }
@@ -383,9 +384,9 @@ object StarJoins {
   def segmentQtyRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureSegmentQtyRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.segmentQty(dir))) {
-      segmentQtyStats(spark, sfDir).localCheckpoint()
+    route(spark, starCatalog(spark, sfDir,
+        extra = Seq(RollupRouting.JoinSpec.segmentQty(dir)))) {
+      segmentQtyStats(spark, sfDir)
     }
   }
 
@@ -402,20 +403,15 @@ object StarJoins {
   def chargeSegmentPersistedRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureChargeSegmentRollup(spark, sfDir)
-    val reg = java.nio.file.Files.createTempDirectory("graft_registry")
-      .resolve("registry.json").toString
-    RollupRouting.registerJoin(RollupRouting.JoinSpec.chargeSegment(dir))
-    RollupRouting.saveRegistry(reg)
-    RollupRouting.clear()
-    RollupRouting.loadRegistry(spark, reg)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prev :+ new RollupRouting.RuleImpl(spark)
-    try chargeBySegment(spark, sfDir).localCheckpoint()
-    finally {
-      spark.experimental.extraOptimizations = prev
+    val reg = s"${scratch(sfDir, "charge_registry")}/registry.json"
+    val reloaded = RollupRouting.keepingRegistry {
+      RollupRouting.registerJoin(RollupRouting.JoinSpec.chargeSegment(dir))
+      RollupRouting.saveRegistry(reg)
       RollupRouting.clear()
+      RollupRouting.loadRegistry(spark, reg)
+      RollupRouting.catalog
     }
+    route(spark, reloaded)(chargeBySegment(spark, sfDir))
   }
 
   /** Daily revenue by segment over the star join — the by-date
@@ -458,9 +454,9 @@ object StarJoins {
   def revenueByDaySegmentRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureRevenueSegmentDatedRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.revenueSegmentDated(dir))) {
-      revenueByDaySegment(spark, sfDir).localCheckpoint()
+    route(spark, starCatalog(spark, sfDir,
+        extra = Seq(RollupRouting.JoinSpec.revenueSegmentDated(dir)))) {
+      revenueByDaySegment(spark, sfDir)
     }
   }
 
@@ -515,9 +511,9 @@ object StarJoins {
   def uniqSegmentDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureUniqSegmentRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.uniqSegmentDaily(dir))) {
-      uniqSegmentDailyRaw(spark, sfDir).localCheckpoint()
+    route(spark, starCatalog(spark, sfDir,
+        extra = Seq(RollupRouting.JoinSpec.uniqSegmentDaily(dir)))) {
+      uniqSegmentDailyRaw(spark, sfDir)
     }
   }
 
@@ -543,9 +539,9 @@ object StarJoins {
   def eventsSegmentDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureEventsSegmentHourlyRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.eventsSegmentHourly(dir))) {
-      eventsSegmentDaily(spark, sfDir).localCheckpoint()
+    route(spark, starCatalog(spark, sfDir,
+        extra = Seq(RollupRouting.JoinSpec.eventsSegmentHourly(dir)))) {
+      eventsSegmentDaily(spark, sfDir)
     }
   }
 
@@ -576,48 +572,35 @@ object StarJoins {
     import graft.plans.RollupRouting
     val fineDir = ensureChargeSegmentRollup(spark, sfDir)
     val coarseDir = ensureChargeSegmentCoarseRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
+    route(spark, starCatalog(spark, sfDir,
         extra = Seq(RollupRouting.JoinSpec.chargeSegmentCoarse(coarseDir),
-                    RollupRouting.JoinSpec.chargeSegment(fineDir))) {
-      chargeBySegment(spark, sfDir).localCheckpoint()
+                    RollupRouting.JoinSpec.chargeSegment(fineDir)))) {
+      chargeBySegment(spark, sfDir)
     }
   }
 
-  /** Run `f` with BOTH round-11 join MVs (plus any `extra` specs)
-    * registered (the multi-MV registry in action — the reference
-    * maintains six MVs side by side,
-    * `usdc-transfers/sql/analytics.sql:9-94`) and the routing rule
-    * installed; the session's optimizer state is restored afterwards so
-    * no other query in the run is affected. */
-  private def withJoinRouting[A](spark: SparkSession, sfDir: String,
-                                 extra: Seq[graft.plans.RollupRouting.JoinSpec] = Nil)
-                                (f: => A): A = {
-    import graft.plans.RollupRouting
-    val revDir = ensureRevenueSegmentRollup(spark, sfDir)
-    val volDir = ensureCustomerVolumeRollup(spark, sfDir)
-    val prev = spark.experimental.extraOptimizations
-    RollupRouting.registerJoin(RollupRouting.JoinSpec.revenueSegment(revDir))
-    RollupRouting.registerJoin(RollupRouting.JoinSpec.customerVolume(volDir))
-    extra.foreach(RollupRouting.registerJoin)
-    spark.experimental.extraOptimizations =
-      prev :+ new RollupRouting.RuleImpl(spark)
-    try f finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
-    }
+  /** Both round-11 join MVs plus any `extra` specs as one catalog —
+    * the multi-MV registry in action (the reference maintains six MVs
+    * side by side, `usdc-transfers/sql/analytics.sql:9-94`). */
+  private def starCatalog(spark: SparkSession, sfDir: String,
+                          extra: Seq[graft.plans.RollupRouting.JoinSpec] = Nil): Catalog = {
+    import graft.plans.RollupRouting.JoinSpec
+    Catalog(joinSpecs =
+      Seq(JoinSpec.revenueSegment(ensureRevenueSegmentRollup(spark, sfDir)),
+          JoinSpec.customerVolume(ensureCustomerVolumeRollup(spark, sfDir))) ++ extra)
   }
 
   /** Driver entry (q144, shares q16's oracle): transparent
-    * answering-queries-using-views end-to-end — build + register the
-    * join rollups, install the optimizer rule, and run the UNCHANGED
-    * raw 3-table query; `RollupRouting` picks the matching spec out of
-    * the registry and rewrites onto its rollup (join-free plan — shape
+    * answering-queries-using-views end-to-end — build the join
+    * rollups and route the UNCHANGED raw 3-table query over their
+    * catalog; `RollupRouting` picks the matching spec and rewrites onto
+    * its rollup (join-free plan — shape
     * asserted in RollupRoutingSpec, which also proves near-miss queries
-    * stay on the live join). The result is pinned via an eager
-    * localCheckpoint while the rule is installed. */
+    * stay on the live join). The returned frame is lazy: its own plan
+    * scans the rollup. */
   def revenueSegmentRouted(spark: SparkSession, sfDir: String): DataFrame =
-    withJoinRouting(spark, sfDir) {
-      revenueBySegment(spark, sfDir).localCheckpoint()
+    route(spark, starCatalog(spark, sfDir)) {
+      revenueBySegment(spark, sfDir)
     }
 
   /** Driver entry (q150, shares q17's oracle): the SECOND registered
@@ -627,8 +610,8 @@ object StarJoins {
     * registered, proving the registry selects by join core rather than
     * matching a single hardcoded shape. */
   def topCustomersRouted(spark: SparkSession, sfDir: String): DataFrame =
-    withJoinRouting(spark, sfDir) {
-      topCustomers(spark, sfDir).localCheckpoint()
+    route(spark, starCatalog(spark, sfDir)) {
+      topCustomers(spark, sfDir)
     }
 
   /** The two filter segments q152 pins (also used by its spec). */
@@ -642,8 +625,8 @@ object StarJoins {
     * dim predicate — stay live; RollupRoutingSpec). Oracle: q16's SQL
     * plus the WHERE. */
   def revenueSegmentFilteredRouted(spark: SparkSession, sfDir: String): DataFrame =
-    withJoinRouting(spark, sfDir) {
-      revenueBySegmentPlan(spark, sfDir, Some(Q152Segments)).localCheckpoint()
+    route(spark, starCatalog(spark, sfDir)) {
+      revenueBySegmentPlan(spark, sfDir, Some(Q152Segments))
     }
 
   /** Spec access: the filtered raw query without routing installed. */

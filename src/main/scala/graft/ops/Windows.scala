@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.RollupRouting.{Catalog, route}
 
 /** Window-function and multi-grain analytics (library capability beyond
   * the reference, which has no OVER clauses — SURVEY §2.5; the only
@@ -171,7 +172,7 @@ object Windows {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), centsSeqSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(centsSeqSpec(dir)))(read)
+    route(spark, Catalog(Seq(centsSeqSpec(dir))))(read)
   }
 
   /** The per-user sorted cents sequence — the ListOf-routable collect
@@ -281,7 +282,7 @@ object Windows {
     val dir = StarJoins.ensureRollup(spark, Rollups.dailyRollupDir(sfDir)) {
       Rollups.dailyPartialsOf(Tables.events(spark, sfDir))
     }
-    Rollups.withRoutingSpecs(spark, Seq(RollupRouting.Spec("events.parquet", dir))) {
+    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
       deltaSumDailyOver(Tables.events(spark, sfDir))
     }
   }

@@ -1490,11 +1490,11 @@ object Advisor {
   }
 
   /** Build every advised rollup from its captured scans (spec-driven
-    * builders — the same code a hand registration uses) and register
-    * it. `memoized` reuses the per-session build cache for stable
-    * scratch paths. */
-  def buildAndRegister(spark: SparkSession, advice: Advice,
-                       memoized: Boolean = false): Advice = {
+    * builders — the same code a hand registration uses) and return the
+    * advised specs as one catalog, for [[RollupRouting.route]].
+    * `memoized` reuses the per-session build cache for stable scratch
+    * paths. */
+  def build(spark: SparkSession, advice: Advice, memoized: Boolean = true): Catalog = {
     import org.apache.spark.sql.graftx.Bridge
     def write(dir: String, df: => DataFrame): Unit =
       if (memoized) { graft.ops.StarJoins.ensureRollup(spark, dir)(df); () }
@@ -1514,14 +1514,22 @@ object Advisor {
             org.apache.spark.sql.functions.col(a.spec.timeCol).cast("timestamp"))
         else raw
       write(a.spec.rollupPath, buildPartials(src, a.spec))
-      register(a.spec)
     }
     advice.joins.foreach { a =>
       write(a.spec.rollupPath,
         buildJoinPartials(a.tables.map { case (n, p) => n -> Bridge.ofRows(spark, p) },
                           a.spec))
-      registerJoin(a.spec)
     }
+    Catalog(advice.singles.map(_.spec), advice.joins.map(_.spec))
+  }
+
+  /** [[build]] (one-shot unless `memoized`), then register every
+    * advised spec on the active session. */
+  def buildAndRegister(spark: SparkSession, advice: Advice,
+                       memoized: Boolean = false): Advice = {
+    val built = build(spark, advice, memoized)
+    built.specs.foreach(register)
+    built.joinSpecs.foreach(registerJoin)
     advice
   }
 
@@ -1575,25 +1583,11 @@ object Advisor {
     * instead of by hand. `memoized = true` reuses an existing build
     * at the spec's path (idempotent re-adopt). */
   def adopt(spark: SparkSession, advice: Advice, registryPath: String,
-            memoized: Boolean = false, installRule: Boolean = true): Adopted = {
+            memoized: Boolean = false): Adopted = {
     buildAndRegister(spark, advice, memoized)
     RollupRouting.saveRegistry(registryPath)
-    if (installRule &&
-        !spark.experimental.extraOptimizations.exists(_.isInstanceOf[RollupRouting.RuleImpl]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new RollupRouting.RuleImpl(spark)
+    RollupRouting.install(spark)
     Adopted(advice, registryPath)
-  }
-
-  private[graft] def runRouted(spark: SparkSession, advice: Advice)
-                       (f: => DataFrame): DataFrame = {
-    buildAndRegister(spark, advice, memoized = true)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ new RollupRouting.RuleImpl(spark)
-    try f.localCheckpoint() finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
-    }
   }
 
   /** Driver entry (q176, shares q165's oracle): the advisor reads the
@@ -1615,7 +1609,7 @@ object Advisor {
       Seq(graft.ops.Rollups.rollupDashboardRaw(spark, sfDir)), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    runRouted(spark, advice) { graft.ops.Rollups.rollupDashboardRaw(spark, sfDir) }
+    route(spark, build(spark, advice)) { graft.ops.Rollups.rollupDashboardRaw(spark, sfDir) }
   }
 
   /** Driver entry (q220, oracled — shares q219's oracle): the EXACT
@@ -1641,7 +1635,7 @@ object Advisor {
         _.isInstanceOf[RollupRouting.BitmapUniqOf]),
       s"the lattice distinct must advise the bitmap member: " +
         advice.singles.head.spec.aggs)
-    runRouted(spark, advice) { q() }
+    route(spark, build(spark, advice)) { q() }
   }
 
   /** Driver entry (q232, oracled): the GRAIN-CLAIM → BITMAP swap. A
@@ -1671,7 +1665,7 @@ object Advisor {
         _.isInstanceOf[RollupRouting.BitmapUniqOf]) &&
       advice.splits.exists(_.contains("bitmap")),
       s"the claim must swap to the bitmap member: $advice")
-    runRouted(spark, advice) { qA() }
+    route(spark, build(spark, advice)) { qA() }
   }
 
   def advisedOrdersDashboard(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1679,7 +1673,7 @@ object Advisor {
     val advice = advise(Seq(graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir)), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    runRouted(spark, advice) { graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir) }
+    route(spark, build(spark, advice)) { graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir) }
   }
 
   /** Driver entry (q178, shares q01's oracle): a DAY-grain keyed
@@ -1704,7 +1698,7 @@ object Advisor {
     require(advice.singles.size == 2 && advice.skipped.isEmpty &&
         advice.splits.nonEmpty,
       s"the keyed + keyless demands must advise per-grain specs: $advice")
-    runRouted(spark, advice) { graft.ops.Rollups.daily(spark, sfDir) }
+    route(spark, build(spark, advice)) { graft.ops.Rollups.daily(spark, sfDir) }
   }
 
   /** Driver entry (q180, shares q179's oracle): a BY-DATE star
@@ -1719,7 +1713,7 @@ object Advisor {
     val advice = advise(Seq(StarJoins.revenueByDaySegment(spark, sfDir)), root)
     require(advice.joins.size == 1 && advice.skipped.isEmpty,
       s"advisor must propose the dated join MV: $advice")
-    runRouted(spark, advice) { StarJoins.revenueByDaySegment(spark, sfDir) }
+    route(spark, build(spark, advice)) { StarJoins.revenueByDaySegment(spark, sfDir) }
   }
 
   /** Driver entry (q182, shares q181's oracle): a TRUNCATING time
@@ -1745,7 +1739,7 @@ object Advisor {
         advice.joins.head.spec.timeGroupings.map(_._1) ==
           Seq(TimeGrainPat("hour", "ts")),
       s"advisor must merge hour+day into one hourly time-grain MV: $advice")
-    runRouted(spark, advice) { StarJoins.eventsSegmentDaily(spark, sfDir) }
+    route(spark, build(spark, advice)) { StarJoins.eventsSegmentDaily(spark, sfDir) }
   }
 
   /** Driver entry (q177, shares q166's oracle): the advisor reads
@@ -1768,7 +1762,7 @@ object Advisor {
     require(advice.joins.size == 2 && advice.skipped.isEmpty &&
         advice.splits.nonEmpty,
       s"the per-order grain must split off the segment dashboards: $advice")
-    runRouted(spark, advice) { StarJoins.chargeBySegment(spark, sfDir) }
+    route(spark, build(spark, advice)) { StarJoins.chargeBySegment(spark, sfDir) }
   }
 
   /** Driver entry (q187, rows-only like the q184 sketch family): the
@@ -1786,7 +1780,7 @@ object Advisor {
       graft.ops.Rollups.daily(spark, sfDir)), root)
     require(advice.singles.size == 2 && advice.skipped.isEmpty,
       s"the sketch + keyed volume demands must advise per-grain specs: $advice")
-    runRouted(spark, advice) { graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir) }
+    route(spark, build(spark, advice)) { graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir) }
   }
 
   /** Driver entry (q196, shares q194's oracle): a MONTHLY workload
@@ -1801,7 +1795,7 @@ object Advisor {
     require(advice.singles.size == 1 && advice.skipped.isEmpty &&
         advice.singles.head.spec.grain == "day",
       s"a monthly demand must advise a day-grain spec: $advice")
-    runRouted(spark, advice) { graft.ops.Rollups.monthlyVolumeRaw(spark, sfDir) }
+    route(spark, build(spark, advice)) { graft.ops.Rollups.monthlyVolumeRaw(spark, sfDir) }
   }
 
   /** Driver entry (q208, shares q133's oracle): the ARG-EXTREMA
@@ -1827,7 +1821,7 @@ object Advisor {
     require(aggs.exists(_.isInstanceOf[MaxPatOf]) &&
             aggs.exists(_.isInstanceOf[MinPatOf]),
       s"the advised spec must carry both struct-extremum states: $aggs")
-    runRouted(spark, advice) { graft.ops.Rollups.argExtremes(spark, sfDir) }
+    route(spark, build(spark, advice)) { graft.ops.Rollups.argExtremes(spark, sfDir) }
   }
 
   /** The five dashboards [[advisedStateSuite]] pools into one spec. */
@@ -1856,7 +1850,7 @@ object Advisor {
     require(advice.singles.size == 2 && advice.skipped.isEmpty &&
         advice.splits.nonEmpty,
       s"the state suite must advise per-grain specs: $advice")
-    runRouted(spark, advice) { graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir) }
+    route(spark, build(spark, advice)) { graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir) }
   }
 
   /** Driver entry (q202, shares q165's oracle): the ADOPTED catalog
@@ -1872,16 +1866,13 @@ object Advisor {
     val advice = advise(Seq(graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir)), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    val prev = spark.experimental.extraOptimizations
-    try {
+    val reloaded = keepingRegistry {
       val adopted = adopt(spark, advice, s"$root/registry.json", memoized = true)
       RollupRouting.clear()
       RollupRouting.loadRegistry(spark, adopted.registryPath)
-      graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir).localCheckpoint()
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
+      RollupRouting.catalog
     }
+    route(spark, reloaded)(graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir))
   }
 
   /** Driver entry (q205, shares q204's oracle): the FOUR-STATE
@@ -1943,16 +1934,13 @@ object Advisor {
       .find(_.aggs.exists(_.isInstanceOf[SetOf])).get
     require(setSpec.keyCols.keySet == Set("event_type"),
       s"the set state must land on the (day, type) grain: $setSpec")
-    val prev = spark.experimental.extraOptimizations
-    try {
+    val reloaded = keepingRegistry {
       val adopted = adopt(spark, advice, s"$root/registry.json", memoized = true)
       RollupRouting.clear()
       RollupRouting.loadRegistry(spark, adopted.registryPath)
-      setDashboard(spark, sfDir).localCheckpoint()
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
+      RollupRouting.catalog
     }
+    route(spark, reloaded)(setDashboard(spark, sfDir))
   }
 
   /** Driver entry (q212): the GRAINLESS advising loop (round 15) —
@@ -1981,7 +1969,7 @@ object Advisor {
     require(advice.skipped.isEmpty &&
         advice.singles.nonEmpty && advice.singles.forall(_.spec.grain == "all"),
       s"a purely grainless workload must advise all-grain specs: $advice")
-    runRouted(spark, advice) {
+    route(spark, build(spark, advice)) {
       graft.Tables.events(spark, sfDir)
         .groupBy(col("user_id"))
         .agg(graft.ops.Fns.dsum(col("value")).as("total_value"),
@@ -2018,7 +2006,7 @@ object Advisor {
         advice.singles.head.spec.sourceSuffix == "events.parquet" &&
         advice.skipped.exists(s => s.contains("budget(1)") && s.contains("orders")),
       s"the 6x-captured dashboard must win the budget over the one-off: $advice")
-    runRouted(spark, advice) { hot() }
+    route(spark, build(spark, advice)) { hot() }
   }
 
   /** Driver entry (q216): the DAY-2 advising loop (round 15) — the
@@ -2044,8 +2032,7 @@ object Advisor {
            count(lit(1)).as("n_events"))
       .orderBy("day")
     captureWorkload(Seq(volume(), orders()), log)
-    val prev = spark.experimental.extraOptimizations
-    try {
+    val adopted = keepingRegistry {
       val day1 = adviseCaptured(spark, log, root)
       require(day1.singles.size == 2, s"day 1 must advise both sources: $day1")
       buildAndRegister(spark, day1, memoized = true)
@@ -2059,12 +2046,9 @@ object Advisor {
           day3.singles.head.spec.aggs.exists(_.isInstanceOf[MinOf]),
         s"day 3 must advise exactly the new dashboard: $day3")
       buildAndRegister(spark, day3, memoized = true)
-      spark.experimental.extraOptimizations = prev :+ new RollupRouting.RuleImpl(spark)
-      extrema().localCheckpoint()
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
+      RollupRouting.catalog
     }
+    route(spark, adopted)(extrema())
   }
 
   /** Driver entry (q214, rows-only — sketch values are estimator-
@@ -2091,7 +2075,7 @@ object Advisor {
         advice.singles.head.spec.aggs.exists {
           case HllUniqOf(_: ExprPat, _, 12) => true; case _ => false },
       s"the conditional-distinct demand must advise a pattern HLL state: $advice")
-    runRouted(spark, advice) { q() }
+    route(spark, build(spark, advice)) { q() }
   }
 
   /** Driver entry (q210, shares q204's oracle): the OFFLINE advising
@@ -2112,15 +2096,12 @@ object Advisor {
     require(advice.singles.flatMap(_.spec.aggs)
               .exists(_.isInstanceOf[SetOf]),
       s"the captured set demand must survive the file round-trip: $advice")
-    val prev = spark.experimental.extraOptimizations
-    try {
+    val reloaded = keepingRegistry {
       val adopted = adopt(spark, advice, s"$root/registry.json", memoized = true)
       RollupRouting.clear()
       RollupRouting.loadRegistry(spark, adopted.registryPath)
-      setDashboard(spark, sfDir).localCheckpoint()
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
+      RollupRouting.catalog
     }
+    route(spark, reloaded)(setDashboard(spark, sfDir))
   }
 }

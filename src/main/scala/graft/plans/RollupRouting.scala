@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -1544,18 +1545,29 @@ object RollupRouting {
     merges.toSeq
   }
 
-  private var specs: List[Spec] = Nil
-  private var joinSpecs: List[JoinSpec] = Nil
+  /** The MVs one routing pass may answer from; a session's registry
+    * is one too. */
+  final case class Catalog(specs: Seq[Spec] = Nil, joinSpecs: Seq[JoinSpec] = Nil)
+
+  /** A session's registry: one [[graft.SessionCache]] entry with no
+    * sources, so it never goes stale and is released with the session. */
+  private def registry(spark: SparkSession): AtomicReference[Catalog] =
+    graft.SessionCache(spark, "routing", "registry")(Nil)(new AtomicReference(Catalog()))
+  private def update(f: Catalog => Catalog): Catalog =
+    registry(SparkSession.active).getAndUpdate(c => f(c))
+
   // registration is idempotent (specs are pure data with structural
   // equality) so re-running an adopt/setup script never bloats the
   // catalog or the persisted JSON with duplicates
-  def register(spec: Spec): Unit = synchronized {
-    if (!specs.contains(spec)) specs = spec :: specs
-  }
-  def registerJoin(spec: JoinSpec): Unit = synchronized {
-    if (!joinSpecs.contains(spec)) joinSpecs = spec :: joinSpecs
-  }
-  def clear(): Unit = synchronized { specs = Nil; joinSpecs = Nil }
+  private def added(c: Catalog, spec: Spec): Catalog =
+    if (c.specs.contains(spec)) c else c.copy(specs = spec +: c.specs)
+  private def addedJoin(c: Catalog, spec: JoinSpec): Catalog =
+    if (c.joinSpecs.contains(spec)) c else c.copy(joinSpecs = spec +: c.joinSpecs)
+
+  /** The registry calls below act on the ACTIVE session's registry. */
+  def register(spec: Spec): Unit = update(added(_, spec))
+  def registerJoin(spec: JoinSpec): Unit = update(addedJoin(_, spec))
+  def clear(): Unit = update(_ => Catalog())
   /** RETIRE one registration by its rollup path (the spec's identity —
     * the reference's `DROP TABLE mv` analog, round 14). Returns true
     * if something was removed. Queries immediately fall back to the
@@ -1565,14 +1577,50 @@ object RollupRouting {
     * reads; see the `estimatorSubstitution` knob). The rollup's FILES
     * are deliberately left in place: dropping data is the owner's
     * call, and a re-register of the same spec serves them again. */
-  def unregister(rollupPath: String): Boolean = synchronized {
-    val before = specs.size + joinSpecs.size
-    specs = specs.filterNot(_.rollupPath == rollupPath)
-    joinSpecs = joinSpecs.filterNot(_.rollupPath == rollupPath)
-    specs.size + joinSpecs.size < before
+  def unregister(rollupPath: String): Boolean = {
+    val before = update(c => Catalog(c.specs.filterNot(_.rollupPath == rollupPath),
+                                     c.joinSpecs.filterNot(_.rollupPath == rollupPath)))
+    before.specs.exists(_.rollupPath == rollupPath) ||
+      before.joinSpecs.exists(_.rollupPath == rollupPath)
   }
-  def registered: List[Spec] = specs
-  def registeredJoins: List[JoinSpec] = joinSpecs
+  /** The active session's registry as one catalog value. */
+  def catalog: Catalog = registry(SparkSession.active).get
+  /** Run `f`, then put the active session's registry back as it was
+    * before `f` (the adopt/reload flows register, persist and reload,
+    * yet leave a session's registry as they found it). */
+  def keepingRegistry[A](f: => A): A = {
+    val before = catalog
+    try f finally update(_ => before)
+  }
+  def registered: List[Spec] = catalog.specs.toList
+  def registeredJoins: List[JoinSpec] = catalog.joinSpecs.toList
+
+  /** Install a [[RuleImpl]] over `spark`'s registry unless one is
+    * already installed. With an empty registry the rule changes
+    * nothing. */
+  def install(spark: SparkSession): Unit =
+    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[RuleImpl]))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ new RuleImpl(spark)
+
+  /** `q` answered from `catalog`'s MVs, as a LAZY frame: [[RuleImpl]]
+    * rewrites `q`'s optimized plan to a fixed point (the optimizer's
+    * user-rule batch, run here once), and the result is a frame whose
+    * own plan holds the rollup scan. Building it writes no optimizer
+    * state, touches no registry and runs no Spark job; the catalog
+    * travels with the frame, so a raw query planned later in the
+    * session stays live. A `q` the catalog cannot answer comes back
+    * as it is. */
+  def route(spark: SparkSession, catalog: Catalog)(q: => DataFrame): DataFrame = {
+    val df = q
+    val plan = df.queryExecution.optimizedPlan
+    val routed = new org.apache.spark.sql.catalyst.rules.RuleExecutor[LogicalPlan] {
+      override protected def batches: Seq[Batch] = Seq(Batch("Rollup routing",
+        FixedPoint(spark.sessionState.conf.optimizerMaxIterations), new RuleImpl(spark, catalog)))
+    }.execute(plan)
+    if (routed.fastEquals(plan)) df
+    else org.apache.spark.sql.graftx.Bridge.ofRows(spark, routed)
+  }
 
   // ——— registry persistence (round 12) ———
   //
@@ -1771,17 +1819,19 @@ object RollupRouting {
             (t \ "rollupCol").extract[String]
         })
     }
-    synchronized {
-      singles.reverse.foreach(register)
-      joins.reverse.foreach(registerJoin)
-    }
+    update(c => joins.reverse.foldLeft(singles.reverse.foldLeft(c)(added))(addedJoin))
   }
 
   /** Rollup listing+inference reads so far (the plan cache's builds);
     * RollupRoutingSpec asserts one per path per rollup state. */
   private[graft] def planListings: Long = graft.SessionCache.stats("plan").builds
 
-  class RuleImpl(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
+  /** The routing rule, over a fixed [[Catalog]] or over a session's
+    * registry as it stands at each pass. */
+  class RuleImpl private (spark: SparkSession, catalog: () => Catalog)
+      extends Rule[LogicalPlan] with PredicateHelper {
+    def this(spark: SparkSession, catalog: Catalog) = this(spark, () => catalog)
+    def this(spark: SparkSession) = this(spark, registry(spark).get _)
 
     /** The exact shape every decimal partial is built from
       * ([[graft.ops.Fns.dsumPartial]]): `cast(<source expr> as
@@ -1885,7 +1935,7 @@ object RollupRouting {
     /** All registered rollups over the scanned source. Order is not
       * the cost choice ([[apply]] ranks every successful rewrite by
       * grain then size); the sort only keeps tie-breaks stable. */
-    private def specsOf(plan: LogicalPlan): Seq[Spec] = {
+    private def specsOf(plan: LogicalPlan, specs: Seq[Spec]): Seq[Spec] = {
       val matching = plan.collect {
         case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
           specs.filter(s => fs.location.rootPaths.exists(_.toString.endsWith(s.sourceSuffix)))
@@ -1908,20 +1958,20 @@ object RollupRouting {
       * whose output is the partial block ([[isPartialBlock]]) — both
       * must be left alone or the plan grows a union level per
       * iteration until the optimizer's iteration cap. */
-    private def alreadyRouted(plan: LogicalPlan): Boolean = plan.exists {
+    private def alreadyRouted(plan: LogicalPlan, specs: Seq[Spec]): Boolean = plan.exists {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
         specs.exists(s => fs.location.rootPaths.exists(_.toString.endsWith(s.rollupPath)))
       case _ => false
     }
-    private def isPartialBlock(aggExprs: Seq[NamedExpression]): Boolean = {
+    private def isPartialBlock(aggExprs: Seq[NamedExpression], cat: Catalog): Boolean = {
       // BOTH registries' partial names (round 12): the join-path
       // hybrid tail is an Aggregate over the raw join whose output is
       // the spec's partial block — without the join names here, a
       // covered spec whose tail groups only by preserved groupings
       // would be re-routed on the next fixed-point pass, growing a
       // union level per iteration
-      val partials = (specs.flatMap(_.aggs.flatMap(partialName)) ++
-        joinSpecs.flatMap(_.aggs.flatMap(partialName))).toSet
+      val partials = (cat.specs.flatMap(_.aggs.flatMap(partialName)) ++
+        cat.joinSpecs.flatMap(_.aggs.flatMap(partialName))).toSet
       aggExprs.exists(ne => partials.contains(ne.name))
     }
 
@@ -2021,13 +2071,15 @@ object RollupRouting {
       * branch shadow the join registry, silently missing a routing
       * opportunity. Single-table rewrites that fail now fall through
       * to the join specs. */
-    override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    override def apply(plan: LogicalPlan): LogicalPlan = routeAll(plan, catalog())
+
+    private def routeAll(plan: LogicalPlan, cat: Catalog): LogicalPlan = plan.transformUp {
       case agg @ Aggregate(groupings, aggExprs, child, _)
-          if (specs.nonEmpty && specsOf(child).nonEmpty) ||
-             (joinSpecs.nonEmpty && child.exists(_.isInstanceOf[Join])) =>
+          if (cat.specs.nonEmpty && specsOf(child, cat.specs).nonEmpty) ||
+             (cat.joinSpecs.nonEmpty && child.exists(_.isInstanceOf[Join])) =>
         val viaSingle =
-          if (specs.nonEmpty && specsOf(child).nonEmpty &&
-              !alreadyRouted(child) && !isPartialBlock(aggExprs))
+          if (cat.specs.nonEmpty && specsOf(child, cat.specs).nonEmpty &&
+              !alreadyRouted(child, cat.specs) && !isPartialBlock(aggExprs, cat))
             // COST CHOICE (round 12): every candidate that CAN answer
             // competes, and the cheapest rollup wins — coarser grain
             // first (a day rollup is ~24× smaller than the hourly one
@@ -2036,7 +2088,7 @@ object RollupRouting {
             // (day, user) one for a day-only query by the key
             // cardinality). Sizes come from the cached analyzed scan,
             // so the choice adds no I/O.
-            specsOf(child)
+            specsOf(child, cat.specs)
               // r19: a truncated-directory spec competes only for
               // provably truncation-invariant consumers (see
               // truncationSafe above)
@@ -2052,14 +2104,14 @@ object RollupRouting {
               }.map(_._2)
           else None
         viaSingle.orElse {
-          if (joinSpecs.nonEmpty && child.exists(_.isInstanceOf[Join]) &&
-              !isPartialBlock(aggExprs))
+          if (cat.joinSpecs.nonEmpty && child.exists(_.isInstanceOf[Join]) &&
+              !isPartialBlock(aggExprs, cat))
             // same cost choice on the join registry: among every join
             // MV whose core + groupings + measures match, the fewest
             // on-disk bytes answers (a segment-grain aggregate table
             // beats the per-order rollup by orders of magnitude);
             // registration order only breaks exact ties
-            joinSpecs
+            cat.joinSpecs
               .flatMap(s => rewriteJoin(agg, groupings, aggExprs, s)
                               .orElse(rewriteExpand(agg, groupings, aggExprs,
                                 rewriteJoin(_, _, _, s, inLattice = true)))

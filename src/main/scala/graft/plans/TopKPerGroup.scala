@@ -159,7 +159,7 @@ object TopKPerGroup {
 
   /** Idempotently add the strategy to an existing session (the driver
     * builds its own sessions, so registration must be callable at query
-    * time — same pattern as RollupRouting via extraOptimizations). */
+    * time — the same idempotent install as `RollupRouting.install`). */
   def ensureRegistered(spark: SparkSession): Unit = synchronized {
     val cur = spark.experimental.extraStrategies
     if (!cur.contains(Strategy)) spark.experimental.extraStrategies = cur :+ Strategy

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.ops.Fns._
+import graft.plans.RollupRouting.{Catalog, route}
 
 /** Structured-Streaming variants of the ingest/rollup pipeline
   * (SURVEY §2.8 T1–T6).
@@ -551,7 +552,7 @@ object Live {
       fileStream(spark, sfDir, "lineitem.parquet", Some(1)), "lineitem",
       Map("orders" -> o, "customer" -> c), spec)
     graft.ops.Rollups.compactJoinRollup(spark, spec)
-    graft.ops.Rollups.withRoutingJoinSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(joinSpecs = Seq(spec))) {
       graft.ops.StarJoins.revenueBySegment(spark, sfDir)
     }
   }
@@ -577,7 +578,7 @@ object Live {
       fileStream(spark, sfDir, "events.parquet", Some(1)), "events",
       Map("customer" -> c), spec, grainUs = 3600000000L)
     graft.ops.Rollups.compactJoinRollup(spark, spec)
-    graft.ops.Rollups.withRoutingJoinSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(joinSpecs = Seq(spec))) {
       graft.ops.StarJoins.eventsSegmentDaily(spark, sfDir)
     }
   }
@@ -603,7 +604,7 @@ object Live {
       fileStream(spark, sfDir, "events.parquet", Some(1)), "events",
       Map("customer" -> c), spec)
     graft.ops.Rollups.compactJoinRollup(spark, spec)
-    graft.ops.Rollups.withRoutingJoinSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(joinSpecs = Seq(spec))) {
       graft.ops.StarJoins.uniqSegmentDailyRaw(spark, sfDir)
     }
   }
@@ -674,8 +675,8 @@ object Live {
     // of the max event time the drain saw)
     val wmUs = java.time.Instant.parse("2024-01-27T00:00:00Z").toEpochMilli * 1000L
     graft.plans.RollupRouting.stampCoverage(rollupDir, wmUs)
-    graft.ops.Rollups.withRoutingSpecs(spark,
-        Seq(graft.plans.RollupRouting.Spec("events.parquet", rollupDir))) {
+    route(spark, Catalog(
+        Seq(graft.plans.RollupRouting.Spec("events.parquet", rollupDir)))) {
       graft.Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"), col("user_id"))
         .agg(graft.ops.Fns.dsum(col("value")).as("total_value"),
@@ -704,7 +705,7 @@ object Live {
       fileStream(spark, sfDir, "orders.parquet", Some(1))
         .filter(col("o_orderdate").cast("timestamp") < seenUpTo),
       spec)
-    graft.ops.Rollups.withRoutingSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(Seq(spec))) {
       graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir)
     }
   }
@@ -728,7 +729,7 @@ object Live {
         .filter(col("o_orderdate").cast("timestamp") < seenUpTo),
       spec)
     graft.ops.Rollups.compactRollup(spark, spec)
-    graft.ops.Rollups.withRoutingSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(Seq(spec))) {
       graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir)
     }
   }
@@ -750,7 +751,7 @@ object Live {
     val spec = graft.ops.Rollups.uniqSketchSpec(rollupDir)
     maintainRollup(eventStream(spark, sfDir), spec)
     graft.ops.Rollups.compactRollup(spark, spec)
-    graft.ops.Rollups.withRoutingSpecs(spark, Seq(spec)) {
+    route(spark, Catalog(Seq(spec))) {
       graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir)
     }
   }

@@ -521,8 +521,8 @@ class BehaviorSpec extends AnyFunSuite {
        "routed ≡ live on the fixture AND a 300-user random corpus") {
     import graft.plans.RollupRouting
     // fixture: the driver query, MV-served, equals the live scan
-    // (withRoutingSpecs materializes, so the plan is asserted on an
-    // inline-registered scope below)
+    // (the plan is also pinned below, on an inline-registered scope
+    // routed by the session's own rule)
     assert(ops.Behavior.sequenceCountsFromStates(spark, sf).collect().toSeq ==
              ops.Behavior.sequenceCounts(spark, sf).collect().toSeq,
       "MV-served sequenceCount must equal the live scan (multiset-exact states)")
@@ -922,8 +922,8 @@ class BehaviorSpec extends AnyFunSuite {
              .collect().toSeq ==
            ops.Behavior.windowFunnelMaxAnchor(spark, sf).collect().toSeq,
       "MV-served max-anchor histogram must equal the live scan")
-    // plan pin on an inline-registered scope (withRoutingSpecs
-    // materializes, so the returned frame's plan is a checkpoint scan)
+    // plan pin on an inline-registered scope, routed by the session's
+    // own rule rather than the entry point's catalog
     val dir = ops.StarJoins.scratch(sf, "funnel_seq_rollup")
     RollupRouting.register(ops.Behavior.funnelSeqSpec(dir))
     spark.experimental.extraOptimizations = Seq(new RollupRouting.RuleImpl(spark))
