@@ -6,9 +6,38 @@ import org.apache.spark.sql.SparkSession
   * must never drift between the tool that debugs and the tool that
   * measures. */
 object Sessions {
+  /** Settings that change what a run costs, not what it returns. The
+    * test session applies them too, so the tests run on the same
+    * FileSystem and code cache as the mains. */
+  val engineConf: Map[String, String] = Map(
+    // Spark caches generated classes under (context class loader, source
+    // text). With artifact isolation every cloned session (each
+    // `writeStream` runs in one, and StarJoins' `newSession` conf scope)
+    // gets a fresh artifact UUID and with it a fresh executor class
+    // loader, so each stream run misses the cache and recompiles code
+    // identical to the previous run's: per warm run 7 Janino compiles
+    // for q32, 14 for q56, 19 for q171, and 14-44 newly loaded classes
+    // for the JIT to warm again (0 compiles without isolation). The
+    // engine adds no session jars or files, so isolation protects
+    // nothing here. A deployment that adds per-session artifacts
+    // (Spark Connect) needs isolation back on.
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // Without libhadoop, Hadoop's local FileSystem forks `chmod` per file
+    // create / mkdirs-with-mode and `readlink` per FileContext rename
+    // (every streaming log write): 482 process starts per `maintain`
+    // pass (q56 185, q160 173, q171 71, q32 53), each ~1.3 ms of JVM
+    // CPU and ~2.7 ms of wall on a 4-core Xeon VM. LocalFs does both
+    // through java.nio (~0.02 ms). Only `file:` paths; HDFS and object
+    // stores are untouched. Together with the isolation entry: `maintain`
+    // query_cpu_p50_s 2.875 -> 2.115 s, pass_cpu_s 15.80 -> 12.39 s
+    // (medians of 10 interleaved bench pairs, same VM).
+    "spark.hadoop.fs.file.impl" -> classOf[LocalChecksumFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalChecksumFs].getName)
+
   def local(cpus: String): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(engineConf)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -1340,11 +1340,11 @@ object Rollups {
                              coveredUpToUs: Option[Long]): Unit = {
     val target = java.nio.file.Paths.get(dir)
     val scratch = java.nio.file.Paths.get(dir + ".inprogress")
-    deleteTree(scratch)
+    graft.LocalFs.deleteTree(scratch)
     partials.write.mode("overwrite").parquet(scratch.toString)
     coveredUpToUs.foreach(
       graft.plans.RollupRouting.stampCoverage(scratch.toString, _))
-    deleteTree(target)
+    graft.LocalFs.deleteTree(target)
     java.nio.file.Files.move(scratch, target,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
@@ -1430,13 +1430,6 @@ object Rollups {
     try writeCommitted(merged, path, wm)
     finally spark.sparkContext.setJobDescription(null)
   }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
 
   def hybridRollupDir(sfDir: String): String = StarJoins.scratch(sfDir, "hybrid_rollup")
   private def ensureHybridRollup(spark: SparkSession, sfDir: String): String = {

@@ -78,11 +78,24 @@ object StarJoins {
            sum(col("n_lines_o")).as("n_lines"))
       .orderBy("c_mktsegment")
 
+  /** This process's root for scratch artifacts, removed when the JVM
+    * exits. One root per process keeps two JVMs over one fixture from
+    * building the same rollup directory at once; nothing is lost by it,
+    * since every session rebuilds its scratch rollups through
+    * [[graft.SessionCache]] anyway. */
+  private[graft] lazy val scratchRoot: java.io.File = {
+    val root = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_run_${ProcessHandle.current.pid}").getAbsoluteFile
+    sys.addShutdownHook(graft.LocalFs.deleteTree(root.toPath))
+    root
+  }
+
   /** Per-(sfDir, name) scratch dir for persisted rollup artifacts —
-    * stable across runs (writes are mode=overwrite) and disjoint across
-    * scale factors, same convention as the llm persisted indices. */
+    * stable across runs of one process (writes are mode=overwrite) and
+    * disjoint across scale factors, same convention as the llm
+    * persisted indices. */
   private[graft] def scratch(sfDir: String, name: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
+    new java.io.File(scratchRoot,
       s"graft_${name}_${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}").getAbsolutePath
 
   /** The q16 join's partial state at (o_orderkey, c_mktsegment) grain —

@@ -46,10 +46,8 @@ object Live {
   private def withRunCheckpoint[A](f: String => A): A = {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
     val out = f(dir.toString)
-    // success path only: walk depth-first and remove
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    // success path only
+    graft.LocalFs.deleteTree(dir)
     out
   }
 

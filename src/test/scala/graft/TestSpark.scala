@@ -15,6 +15,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
+      .config(Sessions.engineConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
