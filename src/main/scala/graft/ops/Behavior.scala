@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.RollupRouting.{Catalog, route}
+import graft.plans.RollupRouting.{Catalog, Spec, materialize, route}
+import Rollups.eventsMV
 
 /** Behavioral analytics (round 15) — ClickHouse's parametric
   * aggregate family (`windowFunnel`, `retention`, `sequenceMatch`)
@@ -108,6 +109,8 @@ object Behavior {
         ListOf(ExprPat(funnelStruct(FunnelSteps)), "ev_seq"),
         CountStarTo("c_p")))
   }
+  private def funnelSeqMV(spark: SparkSession, sfDir: String): Spec =
+    eventsMV(spark, sfDir, funnelSeqSpec(StarJoins.scratch(sfDir, "funnel_seq_rollup")))
 
   /** Driver entry (q230, oracled — shares q221's oracle): the SAME
     * windowFunnel histogram answered from EVENT-SEQUENCE MV STATES —
@@ -117,12 +120,7 @@ object Behavior {
     * scans the merged sequence — ClickHouse's groupArrayState +
     * windowFunnel-at-read MV pattern; the fact is never scanned. */
   def windowFunnelFromStates(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "funnel_seq_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), funnelSeqSpec("unused"))
-    }
-    route(spark, Catalog(Seq(funnelSeqSpec(dir)))) {
+    route(spark, Catalog(Seq(funnelSeqMV(spark, sfDir)))) {
       windowFunnelGuardedRead(Tables.events(spark, sfDir))
     }
   }
@@ -234,12 +232,9 @@ object Behavior {
     * registration can never diverge between them. */
   private def withFunnelAllStates(spark: SparkSession, sfDir: String)
                                  (read: => DataFrame): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "funnel_all_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), funnelAllSpec("unused"))
-    }
-    route(spark, Catalog(Seq(funnelAllSpec(dir))))(read)
+    val mv = eventsMV(spark, sfDir,
+      funnelAllSpec(StarJoins.scratch(sfDir, "funnel_all_rollup")))
+    route(spark, Catalog(Seq(mv)))(read)
   }
 
   /** Driver entry (q271, oracled): `windowFunnel(..., 'strict_dedup')`
@@ -314,7 +309,15 @@ object Behavior {
     * [[graft.ops.Rollups.writeRollupUpTo]]'s scratch-build + atomic
     * swap is that one-call. */
   def truncatedFunnelAllPartials(events: DataFrame,
-                                 windowMicros: Long): DataFrame = {
+                                 windowMicros: Long): DataFrame =
+    graft.plans.RollupRouting.buildPartials(
+      truncatedFunnelEvents(events, windowMicros), funnelAllSpec("unused"))
+
+  /** The events [[truncatedFunnelAllPartials]] keeps: every funnel step
+    * and each non-step event within `windowMicros` after one of its
+    * user's step-0 anchors. */
+  private def truncatedFunnelEvents(events: DataFrame,
+                                    windowMicros: Long): DataFrame = {
     // the anchor/keep rule and the registered ListOf pattern share ONE
     // steps constant ([[FunnelSteps]]) — r19, the r18 advice: two
     // independent literals could drift and silently break losslessness
@@ -323,7 +326,7 @@ object Behavior {
       .filter(col("event_type") === steps.head)
       .groupBy(col("user_id"))
       .agg(collect_list(unix_micros(col("ts"))).as("anchor_us"))
-    val kept = events
+    events
       .join(anchors, Seq("user_id"), "left")
       .filter(col("event_type").isin(steps: _*) ||
         (col("anchor_us").isNotNull &&
@@ -331,7 +334,6 @@ object Behavior {
            unix_micros(col("ts")) >= a &&
            unix_micros(col("ts")) - a <= lit(windowMicros))))
       .drop("anchor_us")
-    graft.plans.RollupRouting.buildPartials(kept, funnelAllSpec("unused"))
   }
 
   /** Build-once + route scope for the TRUNCATED all-events rollup —
@@ -347,12 +349,10 @@ object Behavior {
   private def withFunnelAllTruncStates(spark: SparkSession, sfDir: String)
                                       (read: => DataFrame): DataFrame = {
     val week = 7L * 24 * 3600 * 1000000L
-    val dir = StarJoins.scratch(sfDir, "funnel_all_trunc_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      truncatedFunnelAllPartials(Tables.events(spark, sfDir), week)
-    }
-    route(spark, Catalog(
-      Seq(funnelAllSpec(dir).copy(truncatedToWindowUs = Some(week)))))(read)
+    val spec = funnelAllSpec(StarJoins.scratch(sfDir, "funnel_all_trunc_rollup"))
+      .copy(truncatedToWindowUs = Some(week))
+    val mv = materialize(spark, spec)(truncatedFunnelEvents(Tables.events(spark, sfDir), week))
+    route(spark, Catalog(Seq(mv)))(read)
   }
 
   /** Driver entry (q274, oracled — shares q239's positional oracle):
@@ -765,12 +765,7 @@ object Behavior {
     * registry; the fact is never scanned. */
   def sequenceMatchTimedFromStates(spark: SparkSession,
                                    sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "funnel_seq_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), funnelSeqSpec("unused"))
-    }
-    route(spark, Catalog(Seq(funnelSeqSpec(dir)))) {
+    route(spark, Catalog(Seq(funnelSeqMV(spark, sfDir)))) {
       sequenceMatchTimed(spark, sfDir)
     }
   }
@@ -819,12 +814,7 @@ object Behavior {
     * economics routed). */
   def windowFunnelMaxAnchorFromStates(spark: SparkSession,
                                       sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "funnel_seq_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), funnelSeqSpec("unused"))
-    }
-    route(spark, Catalog(Seq(funnelSeqSpec(dir)))) {
+    route(spark, Catalog(Seq(funnelSeqMV(spark, sfDir)))) {
       windowFunnelMaxAnchorOver(Tables.events(spark, sfDir))
     }
   }
@@ -876,6 +866,8 @@ object Behavior {
       aggs = Seq(
         graft.plans.RollupRouting.ThetaUniqOf("user_id", "users_theta"),
         graft.plans.RollupRouting.CountStarTo("c_p")))
+  private def thetaMV(spark: SparkSession, sfDir: String): Spec =
+    eventsMV(spark, sfDir, thetaSpec(StarJoins.scratch(sfDir, "theta_rollup")))
 
   /** Driver entry (q229, oracled — shares q228's oracle): the SAME
     * audience-overlap dashboard ROUTED through a registered theta MV —
@@ -886,12 +878,7 @@ object Behavior {
     * first-class registry member, next to HLL/KLL/top-k/set/bitmap. */
   def audienceOverlapRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.expr.Tht
-    val dir = StarJoins.scratch(sfDir, "theta_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), thetaSpec("unused"))
-    }
-    route(spark, Catalog(Seq(thetaSpec(dir)))) {
+    route(spark, Catalog(Seq(thetaMV(spark, sfDir)))) {
       val states = Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(Tht.agg(col("user_id")).as("st"))
@@ -946,12 +933,7 @@ object Behavior {
     * never scanned (the r16 verdict's second weak row: 3.4× at ×100
     * raw, q229's 2.0× economics routed). */
   def audienceBoundsFromStates(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "theta_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), thetaSpec("unused"))
-    }
-    route(spark, Catalog(Seq(thetaSpec(dir)))) {
+    route(spark, Catalog(Seq(thetaMV(spark, sfDir)))) {
       audienceBoundsOver(Tables.events(spark, sfDir))
     }
   }
@@ -1010,12 +992,9 @@ object Behavior {
     * ×100), while this read flattens per-(day, user) list states
     * (q230's 2.5× economics; the fact is never scanned). */
   def sequenceCountsFromStates(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "seqcount_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), seqCountSpec("unused"))
-    }
-    route(spark, Catalog(Seq(seqCountSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      seqCountSpec(StarJoins.scratch(sfDir, "seqcount_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       sequenceCountsOver(Tables.events(spark, sfDir))
     }
   }
@@ -1136,6 +1115,9 @@ object Behavior {
         BitmapUniqOf(ExprPat(when(c, col("user_id"))), s"cond${i}_bm_p")
       } :+ CountStarTo("c_p"))
   }
+  private def retentionCondMV(spark: SparkSession, sfDir: String): Spec =
+    eventsMV(spark, sfDir,
+      retentionCondSpec(StarJoins.scratch(sfDir, "retention_cond_rollup")))
 
   /** Driver entry (q252, oracled — shares q247's oracle): the SAME
     * condition-retention report answered from REGISTERED per-condition
@@ -1146,12 +1128,7 @@ object Behavior {
     * dashboard becomes a calendar-sized state read. */
   def retentionConditionsFromStates(spark: SparkSession,
                                     sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "retention_cond_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), retentionCondSpec("unused"))
-    }
-    route(spark, Catalog(Seq(retentionCondSpec(dir)))) {
+    route(spark, Catalog(Seq(retentionCondMV(spark, sfDir)))) {
       retentionConds(Tables.events(spark, sfDir), retentionCondSet)
     }
   }
@@ -1184,12 +1161,7 @@ object Behavior {
     * scanned at any window width. */
   def retentionConditionsWindowedRouted(spark: SparkSession,
                                         sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "retention_cond_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), retentionCondSpec("unused"))
-    }
-    route(spark, Catalog(Seq(retentionCondSpec(dir)))) {
+    route(spark, Catalog(Seq(retentionCondMV(spark, sfDir)))) {
       retentionConds(retentionWindow(Tables.events(spark, sfDir)),
         retentionCondSet)
     }
@@ -1233,15 +1205,10 @@ object Behavior {
     * q222 because both compute exact sets (spec-pinned, plan-pinned). */
   def retentionFromStates(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.expr.Bmp
-    val dir = StarJoins.scratch(sfDir, "lattice_bitmap_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), Rollups.bitmapDaySpec("unused"))
-    }
     val anchor = "2024-01-05"
     val returns = Seq("2024-01-06", "2024-01-12")
     val days = (anchor +: returns).map(java.sql.Date.valueOf)
-    val daily = spark.read.parquet(dir)
+    val daily = spark.read.parquet(Rollups.latticeBitmapMV(spark, sfDir).rollupPath)
       .filter(col("day").isin(days: _*))
       .groupBy(col("day"))
       .agg(Bmp.merge(col("users_bm")).as("bm"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.RollupRouting.{Catalog, route}
+import Rollups.eventsMV
 
 /** Statistical moments over the SUM vocabulary (round 15). ClickHouse
   * ships `varSampState` / `corrState` as dedicated mergeable states;
@@ -173,12 +174,8 @@ object Moments {
     * the six conditional sums rewrite onto partials, the test
     * arithmetic rides above, and the fact is never scanned. */
   def abTestsRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "ab_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), abSpec("unused"))
-    }
-    route(spark, Catalog(Seq(abSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir, abSpec(StarJoins.scratch(sfDir, "ab_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       abTestsOver(Tables.events(spark, sfDir))
     }
   }
@@ -269,12 +266,8 @@ object Moments {
     * rides above; the cohort HAVING filters state rows, not the
     * fact. */
   def mannWhitneyRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "mw_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), mannWhitneySpec("unused"))
-    }
-    mannWhitneyRanks(route(spark, Catalog(Seq(mannWhitneySpec(dir)))) {
+    val mv = eventsMV(spark, sfDir, mannWhitneySpec(StarJoins.scratch(sfDir, "mw_rollup")))
+    mannWhitneyRanks(route(spark, Catalog(Seq(mv))) {
       mannWhitneyPerValue(Tables.events(spark, sfDir))
     })
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import Fns._
-import graft.plans.RollupRouting.{Catalog, route}
+import graft.plans.RollupRouting.{Catalog, Spec, ensureRollup, materialize, route}
 
 /** Batch analogs of the reference's six ClickHouse materialized views
   * (`usdc-transfers/sql/analytics.sql`, `scripts/setup-analytics.sh`) on
@@ -43,11 +43,10 @@ object Rollups {
 
   /** The daily rollup's PARTIAL-STATE block (day × user grain): the
     * exact DECIMAL value partial, the row count, and the min/max
-    * partials — the one shared definition behind the streaming
-    * insert-maintenance sink ([[graft.streaming.Live
-    * .appendDailyPartials]]), the batch MV build
-    * ([[ensureDailyRollup]]), and what `RollupRouting.Spec` routes
-    * onto. All three re-aggregate losslessly by construction. */
+    * partials. The streaming insert-maintenance sink
+    * ([[graft.streaming.Live.appendDailyPartials]]) builds with it,
+    * and it is the pinned reference for the daily spec's own build
+    * ([[dailyMV]]); both re-aggregate losslessly by construction. */
   def dailyPartialsOf(events: DataFrame): DataFrame =
     events
       .groupBy(to_date(col("ts")).as("day"), col("user_id"))
@@ -62,13 +61,15 @@ object Rollups {
            // would silently shift the mean on a null-bearing source
            count(col("value")).as("vn_partial"))
 
+  /** `spec`'s MV built by [[materialize]] from the events table. */
+  private[ops] def eventsMV(spark: SparkSession, sfDir: String, spec: Spec): Spec =
+    materialize(spark, spec)(Tables.events(spark, sfDir))
+
   /** Canonical persisted daily rollup for a scale-factor dir (what
     * [[dailyVolumeWindowRouted]] registers), built once per session. */
   def dailyRollupDir(sfDir: String): String = StarJoins.scratch(sfDir, "daily_rollup")
-  private def ensureDailyRollup(spark: SparkSession, sfDir: String): String =
-    StarJoins.ensureRollup(spark, dailyRollupDir(sfDir)) {
-      dailyPartialsOf(Tables.events(spark, sfDir))
-    }
+  private[ops] def dailyMV(spark: SparkSession, sfDir: String): Spec =
+    eventsMV(spark, sfDir, Spec("events.parquet", dailyRollupDir(sfDir)))
 
   /** The raw day-windowed dashboard query — the reference's own MV
     * WHERE shape (`usdc-transfers/sql/analytics.sql:106`, a time-range
@@ -95,9 +96,7 @@ object Rollups {
     * economy: a 7-day window reads 7 days of rollup rows, not the fact
     * table. */
   def dailyVolumeWindowRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureDailyRollup(spark, sfDir)
-    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
+    route(spark, Catalog(Seq(dailyMV(spark, sfDir)))) {
       dailyVolumeWindowRaw(spark, sfDir)
     }
   }
@@ -125,9 +124,7 @@ object Rollups {
     * this collapses a dashboard's per-grain MV fleet into one MV: the
     * fact table is never read (plan asserted in RollupRoutingSpec). */
   def rollupDashboardRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureDailyRollup(spark, sfDir)
-    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
+    route(spark, Catalog(Seq(dailyMV(spark, sfDir)))) {
       rollupDashboardRaw(spark, sfDir)
     }
   }
@@ -149,10 +146,8 @@ object Rollups {
            count(col("value")).as("vn_partial"))
 
   def hourlyRollupDir(sfDir: String): String = StarJoins.scratch(sfDir, "hourly_rollup")
-  private def ensureHourlyRollup(spark: SparkSession, sfDir: String): String =
-    StarJoins.ensureRollup(spark, hourlyRollupDir(sfDir)) {
-      hourlyPartialsOf(Tables.events(spark, sfDir))
-    }
+  private def hourlyMV(spark: SparkSession, sfDir: String): Spec =
+    eventsMV(spark, sfDir, Spec("events.parquet", hourlyRollupDir(sfDir), "hour"))
 
   /** Driver entry (q155, shares q151's oracle): GRAIN-HIERARCHY
     * routing — the UNCHANGED day-windowed dashboard query
@@ -166,9 +161,7 @@ object Rollups {
     * that with BOTH rollups registered the day query picks the
     * ~24×-smaller DAILY one instead (cost choice). */
   def dailyWindowHourlyRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureHourlyRollup(spark, sfDir)
-    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir, "hour")))) {
+    route(spark, Catalog(Seq(hourlyMV(spark, sfDir)))) {
       dailyVolumeWindowRaw(spark, sfDir)
     }
   }
@@ -193,9 +186,7 @@ object Rollups {
     * RollupRoutingSpec, which also pins the near-miss: a MID-hour cut
     * stays on the live scan). */
   def hourlyVolumeWindowRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureHourlyRollup(spark, sfDir)
-    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir, "hour")))) {
+    route(spark, Catalog(Seq(hourlyMV(spark, sfDir)))) {
       hourlyVolumeWindowRaw(spark, sfDir)
     }
   }
@@ -221,9 +212,7 @@ object Rollups {
     * match against the raw month recompute proves the composition
     * lossless; a FINER truncation (minute) provably stays live. */
   def monthlyVolumeRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureDailyRollup(spark, sfDir)
-    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
+    route(spark, Catalog(Seq(dailyMV(spark, sfDir)))) {
       monthlyVolumeRaw(spark, sfDir)
     }
   }
@@ -234,8 +223,7 @@ object Rollups {
     * AggregatingMergeTree exists for. ~30 state rows re-aggregate per
     * output row; the fact is never scanned. */
   def monthlyUniqSketchRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureUniqSketchRollup(spark, sfDir)
-    route(spark, Catalog(Seq(uniqSketchSpec(dir)))) {
+    route(spark, Catalog(Seq(uniqSketchMV(spark, sfDir)))) {
       Tables.events(spark, sfDir)
         .groupBy(date_trunc("month", col("ts")).as("month"))
         .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 12))
@@ -270,12 +258,9 @@ object Rollups {
     * Reference analog: `uniq()` inside MVs, `sql/analytics.sql:34-35`
     * — one MV per grain there, one lattice read here. */
   def latticeUniqRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "lattice_uniq_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), latticeUniqSpec("unused"))
-    }
-    route(spark, Catalog(Seq(latticeUniqSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      latticeUniqSpec(StarJoins.scratch(sfDir, "lattice_uniq_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       Tables.events(spark, sfDir)
         .rollup(to_date(col("ts")).as("day"), col("event_type"))
         .agg(approx_count_distinct(col("user_id")).as("uniq_users_approx"),
@@ -307,12 +292,9 @@ object Rollups {
     * live bit-for-bit and the query DuckDB-oracleable even though
     * raw set order is unspecified on both plans. */
   def groupUniqArrayRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "uniq_array_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), uniqArraySpec("unused"))
-    }
-    route(spark, Catalog(Seq(uniqArraySpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      uniqArraySpec(StarJoins.scratch(sfDir, "uniq_array_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(
@@ -349,12 +331,9 @@ object Rollups {
     * because sets sort deterministically and the capped count is a
     * scalar. */
   def condSetRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "cond_set_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), condSetSpec("unused"))
-    }
-    route(spark, Catalog(Seq(condSetSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      condSetSpec(StarJoins.scratch(sfDir, "cond_set_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(
@@ -398,12 +377,9 @@ object Rollups {
     * values never were; caught by a plan probe, pinned by
     * BitmapSpec's grainless multi-distinct plan assert). */
   def uniqExactRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "uniq_exact_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), uniqExactSpec("unused"))
-    }
-    route(spark, Catalog(Seq(uniqExactSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      uniqExactSpec(StarJoins.scratch(sfDir, "uniq_exact_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_users"),
@@ -443,12 +419,9 @@ object Rollups {
     * compressed bitmaps, exact at any cardinality; the fact is never
     * scanned. */
   def uniqBitmapRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "uniq_bitmap_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), uniqBitmapSpec("unused"))
-    }
-    route(spark, Catalog(Seq(uniqBitmapSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      uniqBitmapSpec(StarJoins.scratch(sfDir, "uniq_bitmap_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_users"),
@@ -461,11 +434,13 @@ object Rollups {
 
   /** The (day × event_type) BITMAP rollup registration (round 15):
     * per-day-per-type exact-distinct states for the lattice read. */
-  def bitmapDaySpec(dir: String): graft.plans.RollupRouting.Spec =
-    graft.plans.RollupRouting.Spec("events.parquet", dir, grain = "day",
+  def bitmapDaySpec(dir: String): Spec =
+    Spec("events.parquet", dir, grain = "day",
       timeCol = "ts", keyCols = Map("event_type" -> "event_type"),
       aggs = Seq(graft.plans.RollupRouting.BitmapUniqOf("user_id", "users_bm"),
                  graft.plans.RollupRouting.CountStarTo("c_partial")))
+  private[ops] def latticeBitmapMV(spark: SparkSession, sfDir: String): Spec =
+    eventsMV(spark, sfDir, bitmapDaySpec(StarJoins.scratch(sfDir, "lattice_bitmap_rollup")))
 
   /** Driver entry (q219, oracled): the EXACT distinct-count LATTICE —
     * `GROUP BY ROLLUP(day, event_type)` over `COUNT(DISTINCT
@@ -480,12 +455,7 @@ object Rollups {
     * MV per grain (`sql/analytics.sql:34-35`) — here one state MV
     * serves all grains with exact values. */
   def latticeBitmapRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "lattice_bitmap_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), bitmapDaySpec("unused"))
-    }
-    route(spark, Catalog(Seq(bitmapDaySpec(dir)))) {
+    route(spark, Catalog(Seq(latticeBitmapMV(spark, sfDir)))) {
       Tables.events(spark, sfDir)
         .rollup(to_date(col("ts")).as("day"), col("event_type"))
         .agg(countDistinct(col("user_id")).as("uniq_users"),
@@ -610,7 +580,7 @@ object Rollups {
     * inline q273 row's extra cost is purely the corpus derivation. */
   def sumMapArrayPairsStored(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = StarJoins.scratch(sfDir, "pairs_corpus")
-    StarJoins.ensureRollup(spark, dir) {
+    ensureRollup(spark, dir) {
       pairedCorpus(Tables.events(spark, sfDir))
     }
     val pairs = spark.read.parquet(dir)
@@ -629,11 +599,11 @@ object Rollups {
     * [[graft.plans.RollupRouting.Spec]]'s scaladoc). */
   def sumMapArrayPairsRollup(spark: SparkSession, sfDir: String): DataFrame = {
     val pairsDir = StarJoins.scratch(sfDir, "pairs_corpus")
-    StarJoins.ensureRollup(spark, pairsDir) {
+    ensureRollup(spark, pairsDir) {
       pairedCorpus(Tables.events(spark, sfDir))
     }
     val dir = StarJoins.scratch(sfDir, "pairs_value_rollup")
-    StarJoins.ensureRollup(spark, dir) {
+    ensureRollup(spark, dir) {
       pairInnerAgg(spark.read.parquet(pairsDir),
           col("day"), col("k_arr"), col("v_arr"))
         .withColumnRenamed("vol", "vol_p")
@@ -650,7 +620,7 @@ object Rollups {
     * the exact decimal sum, the bare extrema, and the row count — one
     * registration serves the whole keyed-map family (sum/max/min/avg,
     * plain and key-filtered). */
-  def dayTypeValueSpec(dir: String): graft.plans.RollupRouting.Spec = {
+  def dayTypeValueSpec(dir: String): Spec = {
     import graft.plans.RollupRouting._
     Spec("events.parquet", dir, grain = "day",
       timeCol = "ts", keyCols = Map("event_type" -> "event_type"),
@@ -660,6 +630,8 @@ object Rollups {
         MinOf("value", "mn_p"),
         CountStarTo("c_p")))
   }
+  private def dayTypeValueMV(spark: SparkSession, sfDir: String): Spec =
+    eventsMV(spark, sfDir, dayTypeValueSpec(StarJoins.scratch(sfDir, "daytype_value_rollup")))
 
   /** ClickHouse's `minMap` / `avgMap` (round 17) — completing the
     * keyed-measure family next to [[sumMapDaily]]: per day,
@@ -696,12 +668,7 @@ object Rollups {
     * min-of-partials, avg as the sum/count partial pair (the A6
     * invariant); the fact is never scanned. */
   def minAvgMapDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "daytype_value_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), dayTypeValueSpec("unused"))
-    }
-    route(spark, Catalog(Seq(dayTypeValueSpec(dir)))) {
+    route(spark, Catalog(Seq(dayTypeValueMV(spark, sfDir)))) {
       minAvgMapRead(Tables.events(spark, sfDir))
     }
   }
@@ -722,12 +689,7 @@ object Rollups {
     * rollup's OWN key column, so it subsumes losslessly onto the
     * registered (day × type) states and the fact is never scanned. */
   def sumMapFilteredDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "daytype_value_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), dayTypeValueSpec("unused"))
-    }
-    route(spark, Catalog(Seq(dayTypeValueSpec(dir)))) {
+    route(spark, Catalog(Seq(dayTypeValueMV(spark, sfDir)))) {
       sumMapRead(Tables.events(spark, sfDir)
         .filter(col("event_type").isin(filteredMapKeys: _*)))
     }
@@ -744,12 +706,7 @@ object Rollups {
     * min/avg maps ROUTED through the same single value rollup. */
   def minAvgMapFilteredDailyRouted(spark: SparkSession,
                                    sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "daytype_value_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), dayTypeValueSpec("unused"))
-    }
-    route(spark, Catalog(Seq(dayTypeValueSpec(dir)))) {
+    route(spark, Catalog(Seq(dayTypeValueMV(spark, sfDir)))) {
       minAvgMapRead(Tables.events(spark, sfDir)
         .filter(col("event_type").isin(filteredMapKeys: _*)))
     }
@@ -761,12 +718,7 @@ object Rollups {
     * calendar-sized state read (the map fold rides above the routed
     * aggregate untouched); the fact is never scanned. */
   def sumMapDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "daytype_value_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), dayTypeValueSpec("unused"))
-    }
-    route(spark, Catalog(Seq(dayTypeValueSpec(dir)))) {
+    route(spark, Catalog(Seq(dayTypeValueMV(spark, sfDir)))) {
       sumMapRead(Tables.events(spark, sfDir))
     }
   }
@@ -806,12 +758,9 @@ object Rollups {
     * reference's "top senders by volume" dashboard
     * (`usdc-transfers/README.md:73-78`) answered from MV state. */
   def topKWeightedUsersRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "topkw_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), topKWeightedSpec("unused"))
-    }
-    route(spark, Catalog(Seq(topKWeightedSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      topKWeightedSpec(StarJoins.scratch(sfDir, "topkw_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       topKWeightedUsers(spark, sfDir)
     }
   }
@@ -847,13 +796,8 @@ object Rollups {
     * states range join is calendar-sized on both sides — broadcast,
     * never a fact scan. */
   def slidingUniqueBitmap(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "lattice_bitmap_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), bitmapDaySpec("unused"))
-    }
     import graft.expr.Bmp
-    val daily = spark.read.parquet(dir)
+    val daily = spark.read.parquet(latticeBitmapMV(spark, sfDir).rollupPath)
       .groupBy(col("day"))
       .agg(Bmp.merge(col("users_bm")).as("bm"))
     val spine = daily.select(col("day").as("anchor"))
@@ -884,12 +828,9 @@ object Rollups {
     * both regimes are exercised and DuckDB-oracled. The bounded-state
     * answer to the SetOf member's unbounded-cardinality caveat. */
   def uniqUpToRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "uniq_upto_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), uniqUpToSpec("unused"))
-    }
-    route(spark, Catalog(Seq(uniqUpToSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      uniqUpToSpec(StarJoins.scratch(sfDir, "uniq_upto_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(least(countDistinct(col("user_id")), lit(51).cast("long"))
@@ -932,12 +873,9 @@ object Rollups {
     * DuckDB-oracled. ClickHouse's countIfState/sumIfState inside an
     * AggregatingMergeTree, as registry members. */
   def condAggRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "cond_agg_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), condAggSpec("unused"))
-    }
-    route(spark, Catalog(Seq(condAggSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      condAggSpec(StarJoins.scratch(sfDir, "cond_agg_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(when(col("value") > 1.0, 1)).as("n_over_1"),
@@ -959,12 +897,9 @@ object Rollups {
     * Sorted members render to csv and `size(...)` is the exact count,
     * so the whole lattice is DuckDB-oracled. */
   def latticeSetRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "lattice_set_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), uniqArraySpec("unused"))
-    }
-    route(spark, Catalog(Seq(uniqArraySpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      uniqArraySpec(StarJoins.scratch(sfDir, "lattice_set_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       Tables.events(spark, sfDir)
         .rollup(to_date(col("ts")).as("day"), col("event_type"))
         .agg(
@@ -1015,12 +950,9 @@ object Rollups {
     * rewrite, and the struct's (v, u) lexicographic order makes ties
     * deterministic on both plans — hence the DuckDB oracle. */
   def argExtremesRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "arg_extremes_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), argExtremesSpec("unused"))
-    }
-    route(spark, Catalog(Seq(argExtremesSpec(dir)))) {
+    val mv = eventsMV(spark, sfDir,
+      argExtremesSpec(StarJoins.scratch(sfDir, "arg_extremes_rollup")))
+    route(spark, Catalog(Seq(mv))) {
       argExtremes(spark, sfDir)
     }
   }
@@ -1040,11 +972,8 @@ object Rollups {
 
   def uniqSketchRollupDir(sfDir: String): String =
     StarJoins.scratch(sfDir, "uniq_sketch_rollup")
-  private def ensureUniqSketchRollup(spark: SparkSession, sfDir: String): String =
-    StarJoins.ensureRollup(spark, uniqSketchRollupDir(sfDir)) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), uniqSketchSpec("unused"))
-    }
+  private def uniqSketchMV(spark: SparkSession, sfDir: String): Spec =
+    eventsMV(spark, sfDir, uniqSketchSpec(uniqSketchRollupDir(sfDir)))
 
   /** The raw daily approx-uniques dashboard, written in the engine's
     * sketch form — `hll_sketch_estimate(hll_sketch_agg(user_id, 12))`
@@ -1065,8 +994,7 @@ object Rollups {
     * RollupRoutingSpec; the estimate itself is spec-bounded against
     * the exact distinct count). */
   def dailyUniqSketchRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureUniqSketchRollup(spark, sfDir)
-    route(spark, Catalog(Seq(uniqSketchSpec(dir)))) {
+    route(spark, Catalog(Seq(uniqSketchMV(spark, sfDir)))) {
       dailyUniqSketchRaw(spark, sfDir)
     }
   }
@@ -1083,8 +1011,7 @@ object Rollups {
     * each window's estimate is BIT-equal to the single-pass sketch
     * over that window's raw rows (spec-pinned). */
   def slidingUniqueUsersFromStates(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureUniqSketchRollup(spark, sfDir)
-    val states = spark.read.parquet(dir)
+    val states = spark.read.parquet(uniqSketchMV(spark, sfDir).rollupPath)
     val trailing = broadcast(
       states.select(col("day").as("d2"), col("uniq_state"), col("c_partial")))
     states.select(col("day"))
@@ -1125,11 +1052,8 @@ object Rollups {
 
   def quantileSketchRollupDir(sfDir: String): String =
     StarJoins.scratch(sfDir, "quantile_sketch_rollup")
-  private def ensureQuantileSketchRollup(spark: SparkSession, sfDir: String): String =
-    StarJoins.ensureRollup(spark, quantileSketchRollupDir(sfDir)) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), quantileSketchSpec("unused"))
-    }
+  private def quantileSketchMV(spark: SparkSession, sfDir: String): Spec =
+    eventsMV(spark, sfDir, quantileSketchSpec(quantileSketchRollupDir(sfDir)))
 
   /** The raw daily value-quantiles dashboard in the engine's sketch
     * form — `graft_kll_quantile(graft_kll_agg(value, 200), q)` over
@@ -1152,8 +1076,7 @@ object Rollups {
     * randomized, so the spec pins the ±rank-error bound against the
     * exact CDF (the contract), not bit equality. */
   def dailyQuantileSketchRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureQuantileSketchRollup(spark, sfDir)
-    route(spark, Catalog(Seq(quantileSketchSpec(dir)))) {
+    route(spark, Catalog(Seq(quantileSketchMV(spark, sfDir)))) {
       dailyQuantileSketchRaw(spark, sfDir)
     }
   }
@@ -1168,8 +1091,7 @@ object Rollups {
     * each window. */
   def slidingQuantilesFromStates(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.expr.Kll
-    val dir = ensureQuantileSketchRollup(spark, sfDir)
-    val states = spark.read.parquet(dir)
+    val states = spark.read.parquet(quantileSketchMV(spark, sfDir).rollupPath)
     val trailing = broadcast(
       states.select(col("day").as("d2"), col("value_kll"), col("c_partial")))
     states.select(col("day"))
@@ -1207,11 +1129,6 @@ object Rollups {
 
   def topKSketchRollupDir(sfDir: String): String =
     StarJoins.scratch(sfDir, "topk_sketch_rollup")
-  private def ensureTopKSketchRollup(spark: SparkSession, sfDir: String): String =
-    StarJoins.ensureRollup(spark, topKSketchRollupDir(sfDir)) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), topKSketchSpec("unused"))
-    }
 
   /** The raw daily top-users dashboard — `approx_top_k` over RAW
     * events (the reference's `topK(...)` shape). */
@@ -1265,8 +1182,8 @@ object Rollups {
     * routed ≡ raw ≡ the DuckDB exact window-count oracle, ties
     * included. */
   def dailyTopUsersRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureTopKSketchRollup(spark, sfDir)
-    route(spark, Catalog(Seq(topKSketchSpec(dir)))) {
+    route(spark, Catalog(Seq(
+        eventsMV(spark, sfDir, topKSketchSpec(topKSketchRollupDir(sfDir)))))) {
       dailyTopUsersScalar(spark, sfDir)
     }
   }
@@ -1432,15 +1349,6 @@ object Rollups {
   }
 
   def hybridRollupDir(sfDir: String): String = StarJoins.scratch(sfDir, "hybrid_rollup")
-  private def ensureHybridRollup(spark: SparkSession, sfDir: String): String = {
-    val dir = StarJoins.ensureRollup(spark, hybridRollupDir(sfDir)) {
-      dailyPartialsOf(Tables.events(spark, sfDir)
-        .filter(col("ts") < timestamp_micros(lit(HybridCutoffUs))))
-    }
-    // stamp (idempotent; ensureRollup's overwrite clears the dir first)
-    graft.plans.RollupRouting.stampCoverage(dir, HybridCutoffUs)
-    dir
-  }
 
   /** The raw dashboard window that CROSSES the hybrid cutoff: four
     * covered days answered by the rollup, four uncovered ones by the
@@ -1464,9 +1372,11 @@ object Rollups {
     * the fact scan is bounded by the REFRESH LAG (hours of raw rows),
     * not the query window — history is rollup-sized. */
   def dailyWindowHybridRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureHybridRollup(spark, sfDir)
-    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
+    val mv = materialize(spark, Spec("events.parquet", hybridRollupDir(sfDir)))(
+      Tables.events(spark, sfDir).filter(col("ts") < timestamp_micros(lit(HybridCutoffUs))))
+    // stamp (idempotent; a rebuild's overwrite clears the dir first)
+    graft.plans.RollupRouting.stampCoverage(mv.rollupPath, HybridCutoffUs)
+    route(spark, Catalog(Seq(mv))) {
       hybridWindowRaw(spark, sfDir)
     }
   }
@@ -1556,7 +1466,8 @@ object Rollups {
     val isLate = to_date(col("ts"))
       .between(lit("2024-01-10").cast("date"), lit("2024-01-11").cast("date")) &&
       col("event_id") % 3 === 0
-    val dir = java.nio.file.Files.createTempDirectory("graft_refresh")
+    val dir = java.nio.file.Files
+      .createTempDirectory(StarJoins.scratchRoot.toPath, "graft_refresh")
       .resolve("rollup").toString
     writePartitionedDailyRollup(ev.filter(!isLate), dir)
     refreshStaleDays(spark, ev, ev.filter(isLate), dir)
@@ -1584,9 +1495,7 @@ object Rollups {
     * because every intermediate is exact and the scaled quotient
     * stays inside double's exact-integer range. */
   def dailyAvgRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureDailyRollup(spark, sfDir)
-    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
+    route(spark, Catalog(Seq(dailyMV(spark, sfDir)))) {
       dailyAvgRaw(spark, sfDir)
     }
   }
@@ -1614,8 +1523,7 @@ object Rollups {
     * append-maintained rollup without the registration. */
   def dailyUniqUsersRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
-    val dir = ensureDailyRollup(spark, sfDir)
-    val base = RollupRouting.Spec("events.parquet", dir)
+    val base = dailyMV(spark, sfDir)
     route(spark, Catalog(
         Seq(base.copy(aggs = base.aggs :+ RollupRouting.CountDistinctGrain("user_id"))))) {
       dailyUniqUsersRaw(spark, sfDir)
@@ -1640,10 +1548,6 @@ object Rollups {
            count(lit(1)).as("n_partial"))
 
   def ordersRollupDir(sfDir: String): String = StarJoins.scratch(sfDir, "orders_rollup")
-  private def ensureOrdersRollup(spark: SparkSession, sfDir: String): String =
-    StarJoins.ensureRollup(spark, ordersRollupDir(sfDir)) {
-      ordersDailyPartialsOf(Tables.orders(spark, sfDir))
-    }
 
   /** The orders rollup's registration — the single-table registry entry
     * carrying its own time column, key map, and aggregate→partial
@@ -1679,8 +1583,8 @@ object Rollups {
     * round-12 Spec generalization end-to-end: same engine rule, a
     * differently-shaped table registered as data. */
   def ordersDailySalesRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureOrdersRollup(spark, sfDir)
-    route(spark, Catalog(Seq(ordersSpec(dir)))) {
+    val mv = materialize(spark, ordersSpec(ordersRollupDir(sfDir)))(Tables.orders(spark, sfDir))
+    route(spark, Catalog(Seq(mv))) {
       ordersDailySalesRaw(spark, sfDir)
     }
   }

@@ -2,9 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{SessionCache, Tables}
+import graft.Tables
 import Fns._
-import graft.plans.RollupRouting.{Catalog, route}
+import graft.plans.RollupRouting.{Catalog, JoinSpec, materialize, route}
 
 /** Star-schema join capability (SURVEY §2.3 — the reference has zero
   * joins; these are added capability required by the north star).
@@ -86,6 +86,7 @@ object StarJoins {
   private[graft] lazy val scratchRoot: java.io.File = {
     val root = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_run_${ProcessHandle.current.pid}").getAbsoluteFile
+    java.nio.file.Files.createDirectories(root.toPath)
     sys.addShutdownHook(graft.LocalFs.deleteTree(root.toPath))
     root
   }
@@ -203,27 +204,18 @@ object StarJoins {
     * `RollupRouting.JoinSpec` registration points at). */
   def revenueSegmentRollupDir(sfDir: String): String = scratch(sfDir, "revseg_rollup")
 
-  /** Writes `build` to `dir` once per session ([[SessionCache]]) and
-    * again once a file the build frame read changes. The sources are
-    * those input files, never `dir`: coverage stamps and stream appends
-    * change the rollup dir without staling its build. */
-  private[graft] def ensureRollup(spark: SparkSession, dir: String)
-                                 (build: => DataFrame): String = {
-    lazy val df = build
-    SessionCache(spark, "rollup", dir)(df.inputFiles.toSeq) {
-      df.write.mode("overwrite").parquet(dir)
-      dir
-    }
-  }
-  private def ensureRevenueSegmentRollup(spark: SparkSession, sfDir: String): String =
-    ensureRollup(spark, revenueSegmentRollupDir(sfDir)) {
-      revenueSegmentPartialsOf(Tables.lineitem(spark, sfDir),
-                               Tables.orders(spark, sfDir),
-                               Tables.customer(spark, sfDir))
-    }
+  /** `spec`'s MV built by [[materialize]] from this scale factor's
+    * tables. */
+  private def joinMV(spark: SparkSession, sfDir: String, spec: JoinSpec): JoinSpec =
+    materialize(spark, spec)(spec.tables.toSeq.map { t =>
+      t -> (if (t == "events") Tables.events(spark, sfDir) else Tables.load(spark, sfDir, t))
+    }.toMap)
+
+  private def revenueSegmentMV(spark: SparkSession, sfDir: String): JoinSpec =
+    joinMV(spark, sfDir, JoinSpec.revenueSegment(revenueSegmentRollupDir(sfDir)))
 
   def revenueSegmentViaRollup(spark: SparkSession, sfDir: String): DataFrame =
-    readRevenueSegmentRollup(spark, ensureRevenueSegmentRollup(spark, sfDir))
+    readRevenueSegmentRollup(spark, revenueSegmentMV(spark, sfDir).rollupPath)
 
   /** The second registered join MV ([[graft.plans.RollupRouting.JoinSpec
     * .customerVolume]]): per-customer order volume at c_custkey grain —
@@ -240,12 +232,6 @@ object StarJoins {
               col("vol_partial"), col("n_orders_partial"))
 
   def customerVolumeRollupDir(sfDir: String): String = scratch(sfDir, "custvol_rollup")
-
-  private def ensureCustomerVolumeRollup(spark: SparkSession, sfDir: String): String =
-    ensureRollup(spark, customerVolumeRollupDir(sfDir)) {
-      customerVolumePartialsOf(Tables.orders(spark, sfDir),
-                               Tables.customer(spark, sfDir))
-    }
 
   /** Gross charge by market segment — [[revenueBySegment]]'s sibling
     * with the USER-DEFINED charge measure
@@ -286,12 +272,8 @@ object StarJoins {
               col("charge_partial"), col("n_lines_partial"))
 
   def chargeSegmentRollupDir(sfDir: String): String = scratch(sfDir, "charge_rollup")
-  private def ensureChargeSegmentRollup(spark: SparkSession, sfDir: String): String =
-    ensureRollup(spark, chargeSegmentRollupDir(sfDir)) {
-      chargeSegmentPartialsOf(Tables.lineitem(spark, sfDir),
-                              Tables.orders(spark, sfDir),
-                              Tables.customer(spark, sfDir))
-    }
+  private def chargeSegmentMV(spark: SparkSession, sfDir: String): JoinSpec =
+    joinMV(spark, sfDir, JoinSpec.chargeSegment(chargeSegmentRollupDir(sfDir)))
 
   /** Driver entry (q166): a join MV with a USER-REGISTERED measure
     * expression routing transparently — the unchanged [[chargeBySegment]]
@@ -301,14 +283,10 @@ object StarJoins {
     * columns, different operator) provably stays on the live join
     * (RollupRoutingSpec). Registered alongside BOTH round-11 join MVs,
     * so the registry picks by measure+core, not arrival order. */
-  def chargeSegmentRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureChargeSegmentRollup(spark, sfDir)
-    route(spark, starCatalog(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.chargeSegment(dir)))) {
+  def chargeSegmentRouted(spark: SparkSession, sfDir: String): DataFrame =
+    route(spark, starCatalog(spark, sfDir, extra = Seq(chargeSegmentMV(spark, sfDir)))) {
       chargeBySegment(spark, sfDir)
     }
-  }
 
   /** Per-segment EXACT distinct customers over orders⋈customer —
     * written against the raw join; [[segmentCustomersRouted]] runs it
@@ -325,16 +303,6 @@ object StarJoins {
 
   def segmentCustomersRollupDir(sfDir: String): String =
     scratch(sfDir, "segcust_rollup")
-  private def ensureSegmentCustomersRollup(spark: SparkSession,
-                                           sfDir: String): String = {
-    import graft.plans.RollupRouting
-    ensureRollup(spark, segmentCustomersRollupDir(sfDir)) {
-      RollupRouting.buildJoinPartials(
-        Map("orders" -> Tables.orders(spark, sfDir),
-            "customer" -> Tables.customer(spark, sfDir)),
-        RollupRouting.JoinSpec.segmentCustomers("unused"))
-    }
-  }
 
   /** Driver entry (q243, oracled — shares [[segmentCustomers]]'s
     * oracle): the EXACT-distinct BITMAP member on the JOIN path
@@ -345,14 +313,11 @@ object StarJoins {
     * never runs. The star-schema twin of the single-table q218
     * member, mirroring the reference's uniq() MVs
     * (`usdc-transfers/sql/analytics.sql:34-35`) onto a join core. */
-  def segmentCustomersRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureSegmentCustomersRollup(spark, sfDir)
-    route(spark, Catalog(joinSpecs =
-        Seq(RollupRouting.JoinSpec.segmentCustomers(dir)))) {
+  def segmentCustomersRouted(spark: SparkSession, sfDir: String): DataFrame =
+    route(spark, Catalog(joinSpecs = Seq(joinMV(spark, sfDir,
+        JoinSpec.segmentCustomers(segmentCustomersRollupDir(sfDir)))))) {
       segmentCustomers(spark, sfDir)
     }
-  }
 
   /** Per-segment line-quantity stats over the 3-table join — exact
     * decimal average (the dsum-shaped form), min, max, line count.
@@ -376,16 +341,6 @@ object StarJoins {
   }
 
   def segmentQtyRollupDir(sfDir: String): String = scratch(sfDir, "segqty_rollup")
-  private def ensureSegmentQtyRollup(spark: SparkSession, sfDir: String): String = {
-    import graft.plans.RollupRouting
-    ensureRollup(spark, segmentQtyRollupDir(sfDir)) {
-      RollupRouting.buildJoinPartials(
-        Map("lineitem" -> Tables.lineitem(spark, sfDir),
-            "orders" -> Tables.orders(spark, sfDir),
-            "customer" -> Tables.customer(spark, sfDir)),
-        RollupRouting.JoinSpec.segmentQty("unused"))
-    }
-  }
 
   /** Driver entry (q172): the FULL aggregate vocabulary routed on the
     * JOIN path — the unchanged [[segmentQtyStats]] query re-aggregates
@@ -394,14 +349,11 @@ object StarJoins {
     * partials, exactly as the single-table q167 does
     * (RollupRoutingSpec pins the join-free plan and the near-miss: a
     * bare DOUBLE avg stays on the live join). */
-  def segmentQtyRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureSegmentQtyRollup(spark, sfDir)
-    route(spark, starCatalog(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.segmentQty(dir)))) {
+  def segmentQtyRouted(spark: SparkSession, sfDir: String): DataFrame =
+    route(spark, starCatalog(spark, sfDir, extra = Seq(joinMV(spark, sfDir,
+        JoinSpec.segmentQty(segmentQtyRollupDir(sfDir)))))) {
       segmentQtyStats(spark, sfDir)
     }
-  }
 
   /** Driver entry (q174, shares q166's oracle): REGISTRY PERSISTENCE —
     * the reference's MVs are DDL in files that outlive any process
@@ -415,10 +367,10 @@ object StarJoins {
     * AggMap kind and both registries). */
   def chargeSegmentPersistedRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
-    val dir = ensureChargeSegmentRollup(spark, sfDir)
+    val charge = chargeSegmentMV(spark, sfDir)
     val reg = s"${scratch(sfDir, "charge_registry")}/registry.json"
     val reloaded = RollupRouting.keepingRegistry {
-      RollupRouting.registerJoin(RollupRouting.JoinSpec.chargeSegment(dir))
+      RollupRouting.registerJoin(charge)
       RollupRouting.saveRegistry(reg)
       RollupRouting.clear()
       RollupRouting.loadRegistry(spark, reg)
@@ -447,31 +399,17 @@ object StarJoins {
       .orderBy("o_day", "c_mktsegment")
   }
 
-  private def ensureRevenueSegmentDatedRollup(spark: SparkSession, sfDir: String): String = {
-    import graft.plans.RollupRouting
-    ensureRollup(spark, scratch(sfDir, "revseg_dated_full_rollup")) {
-      RollupRouting.buildJoinPartials(
-        Map("lineitem" -> Tables.lineitem(spark, sfDir),
-            "orders" -> Tables.orders(spark, sfDir),
-            "customer" -> Tables.customer(spark, sfDir)),
-        RollupRouting.JoinSpec.revenueSegmentDated("unused"))
-    }
-  }
-
   /** Driver entry (q179): expression groupings over preserved
     * columns on the join path — the unchanged [[revenueByDaySegment]]
     * query routes onto the dated revenue MV because `o_orderdate` is
     * one of its preserved grain columns (RollupRoutingSpec pins the
     * bare + to_date + shifted spellings, the non-preserved near miss,
     * and the hybrid read under a stamped sidecar). */
-  def revenueByDaySegmentRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureRevenueSegmentDatedRollup(spark, sfDir)
-    route(spark, starCatalog(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.revenueSegmentDated(dir)))) {
+  def revenueByDaySegmentRouted(spark: SparkSession, sfDir: String): DataFrame =
+    route(spark, starCatalog(spark, sfDir, extra = Seq(joinMV(spark, sfDir,
+        JoinSpec.revenueSegmentDated(scratch(sfDir, "revseg_dated_full_rollup")))))) {
       revenueByDaySegment(spark, sfDir)
     }
-  }
 
   /** The by-DAY events⋈customer dashboard — value volume and event
     * count per (day, segment). Unlike [[revenueByDaySegment]], the day
@@ -507,40 +445,19 @@ object StarJoins {
 
   def uniqSegmentRollupDir(sfDir: String): String =
     scratch(sfDir, "uniq_segment_rollup")
-  private def ensureUniqSegmentRollup(spark: SparkSession, sfDir: String): String = {
-    import graft.plans.RollupRouting
-    ensureRollup(spark, uniqSegmentRollupDir(sfDir)) {
-      RollupRouting.buildJoinPartials(
-        Map("events" -> Tables.events(spark, sfDir),
-            "customer" -> Tables.customer(spark, sfDir)),
-        RollupRouting.JoinSpec.uniqSegmentDaily("unused"))
-    }
-  }
 
   /** Driver entry (q186): the sketch-state MV on the JOIN path — the
     * unchanged raw sketch-over-join dashboard re-aggregates the
     * (day, segment) HLL states join-free (`uniqMerge` economy across a
     * star join; routed≡live and the error bound are spec-pinned). */
-  def uniqSegmentDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureUniqSegmentRollup(spark, sfDir)
-    route(spark, starCatalog(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.uniqSegmentDaily(dir)))) {
+  def uniqSegmentDailyRouted(spark: SparkSession, sfDir: String): DataFrame =
+    route(spark, starCatalog(spark, sfDir, extra = Seq(joinMV(spark, sfDir,
+        JoinSpec.uniqSegmentDaily(uniqSegmentRollupDir(sfDir)))))) {
       uniqSegmentDailyRaw(spark, sfDir)
     }
-  }
 
   def eventsSegmentHourlyRollupDir(sfDir: String): String =
     scratch(sfDir, "events_seg_hourly_rollup")
-  private def ensureEventsSegmentHourlyRollup(spark: SparkSession, sfDir: String): String = {
-    import graft.plans.RollupRouting
-    ensureRollup(spark, eventsSegmentHourlyRollupDir(sfDir)) {
-      RollupRouting.buildJoinPartials(
-        Map("events" -> Tables.events(spark, sfDir),
-            "customer" -> Tables.customer(spark, sfDir)),
-        RollupRouting.JoinSpec.eventsSegmentHourly("unused"))
-    }
-  }
 
   /** Driver entry (q181): TRUNCATING time-grain grouping on the join
     * path — the HOURLY (hour, segment) MV answers the unchanged
@@ -549,27 +466,14 @@ object StarJoins {
     * calendar truncations compose (RollupRoutingSpec pins the hourly/
     * daily/monthly spellings, the finer-grain and shifted near misses,
     * and the hour-aligned hybrid read). */
-  def eventsSegmentDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = ensureEventsSegmentHourlyRollup(spark, sfDir)
-    route(spark, starCatalog(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.eventsSegmentHourly(dir)))) {
+  def eventsSegmentDailyRouted(spark: SparkSession, sfDir: String): DataFrame =
+    route(spark, starCatalog(spark, sfDir, extra = Seq(joinMV(spark, sfDir,
+        JoinSpec.eventsSegmentHourly(eventsSegmentHourlyRollupDir(sfDir)))))) {
       eventsSegmentDaily(spark, sfDir)
     }
-  }
 
   def chargeSegmentCoarseRollupDir(sfDir: String): String =
     scratch(sfDir, "charge_coarse_rollup")
-  private def ensureChargeSegmentCoarseRollup(spark: SparkSession, sfDir: String): String = {
-    import graft.plans.RollupRouting
-    ensureRollup(spark, chargeSegmentCoarseRollupDir(sfDir)) {
-      RollupRouting.buildJoinPartials(
-        Map("lineitem" -> Tables.lineitem(spark, sfDir),
-            "orders" -> Tables.orders(spark, sfDir),
-            "customer" -> Tables.customer(spark, sfDir)),
-        RollupRouting.JoinSpec.chargeSegmentCoarse("unused"))
-    }
-  }
 
   /** Driver entry (q175, shares q166's oracle): COST-BASED MV CHOICE —
     * two registered MVs both answer the unchanged charge query (the
@@ -582,12 +486,10 @@ object StarJoins {
     * build is [[graft.plans.RollupRouting.buildJoinPartials]]'s merge
     * path — fact partials re-aggregated to the declared grain. */
   def chargeSegmentCostRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val fineDir = ensureChargeSegmentRollup(spark, sfDir)
-    val coarseDir = ensureChargeSegmentCoarseRollup(spark, sfDir)
-    route(spark, starCatalog(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.chargeSegmentCoarse(coarseDir),
-                    RollupRouting.JoinSpec.chargeSegment(fineDir)))) {
+    val fine = chargeSegmentMV(spark, sfDir)
+    val coarse = joinMV(spark, sfDir,
+      JoinSpec.chargeSegmentCoarse(chargeSegmentCoarseRollupDir(sfDir)))
+    route(spark, starCatalog(spark, sfDir, extra = Seq(coarse, fine))) {
       chargeBySegment(spark, sfDir)
     }
   }
@@ -596,12 +498,9 @@ object StarJoins {
     * the multi-MV registry in action (the reference maintains six MVs
     * side by side, `usdc-transfers/sql/analytics.sql:9-94`). */
   private def starCatalog(spark: SparkSession, sfDir: String,
-                          extra: Seq[graft.plans.RollupRouting.JoinSpec] = Nil): Catalog = {
-    import graft.plans.RollupRouting.JoinSpec
-    Catalog(joinSpecs =
-      Seq(JoinSpec.revenueSegment(ensureRevenueSegmentRollup(spark, sfDir)),
-          JoinSpec.customerVolume(ensureCustomerVolumeRollup(spark, sfDir))) ++ extra)
-  }
+                          extra: Seq[JoinSpec] = Nil): Catalog =
+    Catalog(joinSpecs = Seq(revenueSegmentMV(spark, sfDir), joinMV(spark, sfDir,
+      JoinSpec.customerVolume(customerVolumeRollupDir(sfDir)))) ++ extra)
 
   /** Driver entry (q144, shares q16's oracle): transparent
     * answering-queries-using-views end-to-end — build the join

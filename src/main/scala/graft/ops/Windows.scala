@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.RollupRouting.{Catalog, route}
+import graft.plans.RollupRouting.{Catalog, materialize, route}
+import Rollups.eventsMV
 
 /** Window-function and multi-grain analytics (library capability beyond
   * the reference, which has no OVER clauses — SURVEY §2.5; the only
@@ -127,11 +128,8 @@ object Windows {
     * Window(lag), outside the router's Aggregate-only contract
     * (the q277 precedent, documented on the member). */
   def deltaSumPerUserFromStates(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "delta_sum_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), deltaSumSpec("unused"))
-    }
+    val dir = eventsMV(spark, sfDir,
+      deltaSumSpec(StarJoins.scratch(sfDir, "delta_sum_rollup"))).rollupPath
     // day-sorted flat states → ONE compiled fold per user
     // ([[graft.expr.DeltaStateFold]]; the builtin aggregate() HOF is
     // interpreted per element — see SeriesFold's scaladoc)
@@ -167,12 +165,9 @@ object Windows {
     * by the q284/q286/q290 state-served reads. */
   private def withCentsSeqStates(spark: SparkSession, sfDir: String)
                                 (read: => DataFrame): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "cents_seq_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        Tables.events(spark, sfDir), centsSeqSpec("unused"))
-    }
-    route(spark, Catalog(Seq(centsSeqSpec(dir))))(read)
+    val mv = eventsMV(spark, sfDir,
+      centsSeqSpec(StarJoins.scratch(sfDir, "cents_seq_rollup")))
+    route(spark, Catalog(Seq(mv)))(read)
   }
 
   /** The per-user sorted cents sequence — the ListOf-routable collect
@@ -278,11 +273,7 @@ object Windows {
     * Aggregate rewrite serves it — no explicit state read needed)
     * and the day-ordered lag fold rides above rollup-sized rows. */
   def deltaSumDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
-    val dir = StarJoins.ensureRollup(spark, Rollups.dailyRollupDir(sfDir)) {
-      Rollups.dailyPartialsOf(Tables.events(spark, sfDir))
-    }
-    route(spark, Catalog(Seq(RollupRouting.Spec("events.parquet", dir)))) {
+    route(spark, Catalog(Seq(Rollups.dailyMV(spark, sfDir)))) {
       deltaSumDailyOver(Tables.events(spark, sfDir))
     }
   }
@@ -438,12 +429,9 @@ object Windows {
     * offset level (a per-level time histogram, unbounded state), so
     * it stays an honest scan like ClickHouse's. */
   def maxIntersectionsFromStates(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "sweep_peak_rollup")
-    StarJoins.ensureRollup(spark, dir) {
-      graft.plans.RollupRouting.buildPartials(
-        sweepPoints(spark, sfDir), sweepPeakSpec("unused"))
-    }
-    spark.read.parquet(dir)
+    val mv = materialize(spark,
+      sweepPeakSpec(StarJoins.scratch(sfDir, "sweep_peak_rollup")))(sweepPoints(spark, sfDir))
+    spark.read.parquet(mv.rollupPath)
       .groupBy(col("event_type"))
       .agg(sort_array(collect_list(struct(col("day"),
         col("sw_p.tot").as("tot"), col("sw_p.maxp").as("maxp"),

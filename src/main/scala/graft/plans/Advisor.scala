@@ -1497,7 +1497,7 @@ object Advisor {
   def build(spark: SparkSession, advice: Advice, memoized: Boolean = true): Catalog = {
     import org.apache.spark.sql.graftx.Bridge
     def write(dir: String, df: => DataFrame): Unit =
-      if (memoized) { graft.ops.StarJoins.ensureRollup(spark, dir)(df); () }
+      if (memoized) { ensureRollup(spark, dir)(df); () }
       else df.write.mode("overwrite").parquet(dir)
     advice.singles.foreach { a =>
       // the captured scan is the BARE relation, below the loader's

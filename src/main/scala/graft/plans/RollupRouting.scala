@@ -78,9 +78,8 @@ import org.apache.spark.sql.types.{DateType, DecimalType, IntegerType, LongType,
   */
 object RollupRouting {
 
-  /** A registered single-table rollup (written by
-    * [[graft.streaming.Live.appendDailyPartials]] /
-    * [[graft.ops.Rollups.hourlyPartialsOf]]). `grain` names the
+  /** A registered single-table rollup (built by [[materialize]], or
+    * appended by [[graft.streaming.Live.appendDailyPartials]]). `grain` names the
     * rollup's time grain — `"day"` (a `day: DATE` key) or `"hour"`
     * (an `hour: TIMESTAMP` key, `date_trunc('hour', ts)`). A rollup
     * answers queries AT its grain or COARSER (a day-grain query
@@ -156,7 +155,10 @@ object RollupRouting {
     private[graft] def grainRank(g: String): Int =
       g match { case "all" => 0; case "day" => 1; case _ => 2 }
     val defaultKeys: Map[String, String] = Map("user_id" -> "user_id")
-    /** The [[graft.ops.Rollups.dailyPartialsOf]] partial block. */
+    /** The daily MV's partial block: a bare `Spec(suffix, path)` IS
+      * the daily block, and [[materialize]] builds it from these
+      * aggregates. [[graft.ops.Rollups.dailyPartialsOf]] stays as the
+      * hand-written reference a spec pins equal to it. */
     val defaultAggs: Seq[AggMap] = Seq(
       SumOf(ColRef("value"), "v_partial"),
       CountStarTo("c_partial"),
@@ -1025,9 +1027,8 @@ object RollupRouting {
 
   object JoinSpec {
     /** The flagship revenue-by-segment MV over
-      * lineitem⋈orders⋈customer (build:
-      * [[graft.ops.StarJoins.revenueSegmentPartialsOf]], grain =
-      * o_orderkey). */
+      * lineitem⋈orders⋈customer (grain = o_orderkey; hand-written
+      * reference: [[graft.ops.StarJoins.revenueSegmentPartialsOf]]). */
     def revenueSegment(rollupPath: String): JoinSpec = JoinSpec(
       rollupPath,
       tables = Set("lineitem", "orders", "customer"),
@@ -1039,9 +1040,10 @@ object RollupRouting {
         CountDistinctGrain("o_orderkey")),
       grainCols = Map("o_orderkey" -> "o_orderkey"))
 
-    /** The per-customer order-volume MV over orders⋈customer (build:
-      * [[graft.ops.StarJoins.customerVolumePartialsOf]], grain =
-      * c_custkey) — answers the q17 top-customers shape join-free. */
+    /** The per-customer order-volume MV over orders⋈customer (grain =
+      * c_custkey; hand-written reference:
+      * [[graft.ops.StarJoins.customerVolumePartialsOf]]) — answers the
+      * q17 top-customers shape join-free. */
     def customerVolume(rollupPath: String): JoinSpec = JoinSpec(
       rollupPath,
       tables = Set("orders", "customer"),
@@ -1121,8 +1123,8 @@ object RollupRouting {
         Add(Literal(1.0d), UnresolvedAttribute("l_tax")))
     }
 
-    /** A THIRD join MV whose measure is [[chargeMeasure]] (build:
-      * [[graft.ops.StarJoins.chargeSegmentPartialsOf]]): proves the
+    /** A THIRD join MV whose measure is [[chargeMeasure]] (hand-written
+      * reference: [[graft.ops.StarJoins.chargeSegmentPartialsOf]]): proves the
       * registry is closed under user-defined measures — no engine
       * pattern edits, the spec is still pure data. */
     def chargeSegment(rollupPath: String): JoinSpec = JoinSpec(
@@ -1346,6 +1348,36 @@ object RollupRouting {
   def buildJoinPartials(tables: Map[String, org.apache.spark.sql.DataFrame],
                         spec: JoinSpec): org.apache.spark.sql.DataFrame =
     buildJoinPartialsPruned(tables, spec, identity, (_, df, _) => df)
+
+  /** Declares a routed MV in one call: writes `spec`'s own partial
+    * block ([[buildPartials]] over `src`) to `spec.rollupPath` through
+    * [[ensureRollup]] and returns `spec`, ready for a [[Catalog]]. */
+  def materialize(spark: SparkSession, spec: Spec)(src: => DataFrame): Spec = {
+    ensureRollup(spark, spec.rollupPath)(buildPartials(src, spec))
+    spec
+  }
+
+  /** [[materialize]] for a join MV, built by [[buildJoinPartials]]
+    * over `tables` (one frame per name in `spec.tables`). */
+  def materialize(spark: SparkSession, spec: JoinSpec)
+                 (tables: => Map[String, DataFrame]): JoinSpec = {
+    ensureRollup(spark, spec.rollupPath)(buildJoinPartials(tables, spec))
+    spec
+  }
+
+  /** Writes `build` to `dir` once per session ([[graft.SessionCache]])
+    * and again once a file the build frame read changes. The sources
+    * are those input files, never `dir`: coverage stamps and stream
+    * appends change the rollup dir without staling its build. Called
+    * directly only for a build that no spec describes. */
+  private[graft] def ensureRollup(spark: SparkSession, dir: String)
+                                 (build: => DataFrame): String = {
+    lazy val df = build
+    graft.SessionCache(spark, "rollup", dir)(df.inputFiles.toSeq) {
+      df.write.mode("overwrite").parquet(dir)
+      dir
+    }
+  }
 
   /** [[buildJoinPartials]] with two caller hooks (r20, guide §2.3/§2.4 —
     * one scan of the fact instead of two in the streaming maintainer):

@@ -86,6 +86,10 @@ class LocalFsSpec extends AnyFunSuite {
         assert(new File(dir).getParent == root, dir)
       }
     }
+    // q157's per-run refresh dir is scratch too, so the exit hook removes it
+    val refreshed = ops.Rollups.refreshedDailyRollup(spark, TestSpark.sf).inputFiles
+    assert(refreshed.nonEmpty)
+    refreshed.foreach(f => assert(new URI(f).getPath.startsWith(root + File.separator), f))
     val base = Files.createTempDirectory("graft_localfs_tree")
     val outside = Files.createTempDirectory("graft_localfs_kept")
     try {

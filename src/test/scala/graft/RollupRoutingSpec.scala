@@ -1368,6 +1368,12 @@ class RollupRoutingSpec extends AnyFunSuite {
     val handO = Rollups.ordersDailyPartialsOf(o).orderBy("day", "o_custkey")
     assert(viaSpecO.columns.toSeq == handO.columns.toSeq)
     assert(viaSpecO.collect().toSeq == handO.collect().toSeq)
+    // events hourly block (q155/q156's rollup) from its registered spec
+    val viaSpecH = RollupRouting.buildPartials(ev, Spec("events.parquet", "unused", "hour"))
+      .orderBy("hour", "user_id")
+    val handH = Rollups.hourlyPartialsOf(ev).orderBy("hour", "user_id")
+    assert(viaSpecH.columns.toSeq == handH.columns.toSeq)
+    assert(viaSpecH.collect().toSeq == handH.collect().toSeq)
     // end-to-end: commit a WATERMARKED rollup from the spec alone and
     // answer the unchanged raw query (whose window crosses the
     // watermark) as rollup ∪ tail
