@@ -1,4 +1,8 @@
 package graft
+
+import java.util.concurrent.atomic.LongAdder
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 object Bench {
   /** "qNN" prefix of a full query name — the key scheme shared by the
     * bands file, the stdout JSON line, and the calibration. */
@@ -165,6 +169,18 @@ object Bench {
       override def onQueryProgress(e: QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     })
+    // Spark jobs per (run, query). The listener bus delivers job starts
+    // after the fact, so `running` cannot key them; the query's run and
+    // name ride as a local property instead, which Spark copies into
+    // every job the query starts, from stream and broadcast threads too.
+    val jobKey = "graft.bench.query"
+    val jobCounts = new java.util.concurrent.ConcurrentHashMap[String, LongAdder]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(jobKey))).foreach { k =>
+          jobCounts.computeIfAbsent(k, _ => new LongAdder).increment()
+        }
+    })
     // WARM PASS (run 0, excluded from medians): execute every selected
     // query once so one-time costs land here, not in a timed sample —
     // whole-stage codegen compilation, and above all the SHARED session
@@ -190,6 +206,7 @@ object Bench {
     def runPass(run: Int): Seq[(String, Option[Double])] =
       selected.map { case (name, fn) =>
         running = name
+        spark.sparkContext.setLocalProperty(jobKey, s"$run $name")
         val t0 = System.nanoTime()
         // noop sink: full materialization of every output column —
         // count() would let Catalyst prune aggregate values and
@@ -201,6 +218,7 @@ object Bench {
               System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
               false
           }
+          finally spark.sparkContext.setLocalProperty(jobKey, null)
         val sec = (System.nanoTime() - t0) / 1e9
         samplesOut.write(
           s"""{"run":$run,"query":"$name","sec":${"%.3f".formatLocal(java.util.Locale.ROOT, sec)},"ok":$ok}\n""")
@@ -376,8 +394,16 @@ object Bench {
       val st = SessionCache.stats(ns)
       s""""$ns":{"hits":${st.hits},"misses":${st.misses},"builds":${st.builds},"build_s":${f(st.buildSeconds, 3)}}"""
     }.mkString("{", ",", "}")
+    // median Spark jobs per timed run of each query
+    org.apache.spark.sql.graftx.Bridge.drainListeners(spark)
+    val jobsJson = names.map { name =>
+      val perRun = (1 to runs).map(r =>
+        Option(jobCounts.get(s"$r $name")).fold(0.0)(_.sum.toDouble))
+      "\"" + name + "\":" + f(median(perRun.sorted), 1)
+    }.mkString("{", ",", "}")
     // Full-precision, full-name report for humans and diffing.
-    val fullJson = line(identity, 3, s""","session_cache":$sessionCacheJson""")
+    val fullJson = line(identity, 3,
+      s""","session_cache":$sessionCacheJson,"jobs":$jobsJson""")
     val out = java.nio.file.Paths.get("target/bench_full.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))

@@ -32,7 +32,16 @@ object Sessions {
     // query_cpu_p50_s 2.875 -> 2.115 s, pass_cpu_s 15.80 -> 12.39 s
     // (medians of 10 interleaved bench pairs, same VM).
     "spark.hadoop.fs.file.impl" -> classOf[LocalChecksumFileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalChecksumFs].getName)
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalChecksumFs].getName,
+    // A global ORDER BY over an already-small aggregate pays a
+    // RangePartitioner sampling job and a range shuffle: 18 of the 47
+    // jobs of a `dashboard` pass. plans.SmallSort turns that exchange
+    // into a one-task coalesce once AQE knows the input fits in one
+    // partition (docs/PLANS.md "Small global sorts"). Jobs per pass:
+    // dashboard 47 -> 29, maintain 49 -> 39; `dashboard`
+    // query_cpu_p50_s 0.490 -> 0.435 s, pass_cpu_s 5.68 -> 5.00 s
+    // (medians of 10 interleaved bench pairs, 4-core VM).
+    "spark.sql.extensions" -> classOf[plans.EngineExtensions].getName)
 
   def local(cpus: String): SparkSession = {
     val s = SparkSession.builder()

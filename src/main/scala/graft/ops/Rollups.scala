@@ -1030,10 +1030,8 @@ object Rollups {
     * MV-plus-recent-data read exact-in-distribution: the union of the
     * two sides' states IS the single-pass state. */
   def dailyUniqSketchHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "uniq_sketch_hybrid")
-    val spec = uniqSketchSpec(dir)
-    if (!new java.io.File(dir).exists())
-      writeRollupUpTo(Tables.events(spark, sfDir), spec, HybridCutoffUs)
+    val spec = hybridEventsMV(spark, sfDir,
+      uniqSketchSpec(StarJoins.scratch(sfDir, "uniq_sketch_hybrid")))
     route(spark, Catalog(Seq(spec))) {
       dailyUniqSketchRaw(spark, sfDir)
     }
@@ -1108,10 +1106,8 @@ object Rollups {
     * live-tail `graft_kll_agg` over only ts ≥ watermark, merged under
     * the final estimates. */
   def dailyQuantileSketchHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "quantile_sketch_hybrid")
-    val spec = quantileSketchSpec(dir)
-    if (!new java.io.File(dir).exists())
-      writeRollupUpTo(Tables.events(spark, sfDir), spec, HybridCutoffUs)
+    val spec = hybridEventsMV(spark, sfDir,
+      quantileSketchSpec(StarJoins.scratch(sfDir, "quantile_sketch_hybrid")))
     route(spark, Catalog(Seq(spec))) {
       dailyQuantileSketchRaw(spark, sfDir)
     }
@@ -1194,13 +1190,24 @@ object Rollups {
     * final estimate, then projected to deterministic scalar rows
     * ([[dailyTopUsersScalar]]). */
   def dailyTopUsersHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = StarJoins.scratch(sfDir, "topk_sketch_hybrid")
-    val spec = topKSketchSpec(dir)
-    if (!new java.io.File(dir).exists())
-      writeRollupUpTo(Tables.events(spark, sfDir), spec, HybridCutoffUs)
+    val spec = hybridEventsMV(spark, sfDir,
+      topKSketchSpec(StarJoins.scratch(sfDir, "topk_sketch_hybrid")))
     route(spark, Catalog(Seq(spec))) {
       dailyTopUsersScalar(spark, sfDir)
     }
+  }
+
+  /** [[writeRollupUpTo]] at [[HybridCutoffUs]] through the session's
+    * rollup memo, like [[eventsMV]]: built once per session and again
+    * after events.parquet changes. The watermark is part of the key. */
+  private def hybridEventsMV(spark: SparkSession, sfDir: String, spec: Spec): Spec = {
+    val events = Tables.events(spark, sfDir)
+    graft.SessionCache(spark, "rollup", s"${spec.rollupPath}@$HybridCutoffUs")(
+        events.inputFiles.toSeq) {
+      writeRollupUpTo(events, spec, HybridCutoffUs)
+      spec.rollupPath
+    }
+    spec
   }
 
   /** The hybrid-read cutoff used by the q158 fixtures: the rollup
@@ -1466,8 +1473,7 @@ object Rollups {
     val isLate = to_date(col("ts"))
       .between(lit("2024-01-10").cast("date"), lit("2024-01-11").cast("date")) &&
       col("event_id") % 3 === 0
-    val dir = java.nio.file.Files
-      .createTempDirectory(StarJoins.scratchRoot.toPath, "graft_refresh")
+    val dir = StarJoins.scratchTemp("graft_refresh")
       .resolve("rollup").toString
     writePartitionedDailyRollup(ev.filter(!isLate), dir)
     refreshStaleDays(spark, ev, ev.filter(isLate), dir)

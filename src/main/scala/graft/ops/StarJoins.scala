@@ -91,6 +91,11 @@ object StarJoins {
     root
   }
 
+  /** A fresh directory `prefix…` under [[scratchRoot]], for a run's
+    * sinks, checkpoints and stream-maintained MVs. */
+  private[graft] def scratchTemp(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchRoot.toPath, prefix)
+
   /** Per-(sfDir, name) scratch dir for persisted rollup artifacts —
     * stable across runs of one process (writes are mode=overwrite) and
     * disjoint across scale factors, same convention as the llm

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.ops.StarJoins
 import graft.ops.Fns._
 import graft.plans.RollupRouting.{Catalog, route}
 
@@ -35,20 +36,15 @@ object Live {
   }
 
   /** Run `f` with a fresh RUN-SCOPED checkpoint directory, deleted when
-    * the drain completes (each of these queries is created, drained with
-    * availableNow, and never resumed — without cleanup every invocation
-    * leaked a temp dir for the life of the host). Deletion is
-    * best-effort and skipped on failure so a crashed drain leaves its
-    * checkpoint for post-mortem. A production deployment passes a
+    * the drain ends, failed or not (each of these queries is created,
+    * drained with availableNow, and never resumed, so nothing could
+    * resume from a kept one). A production deployment passes a
     * PERSISTENT location instead and never deletes it — that is what
     * makes restarts exactly-once (see [[maintainDailyRollupPerFile]]'s
     * `checkpointDir`). */
   private def withRunCheckpoint[A](f: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    val out = f(dir.toString)
-    // success path only
-    graft.LocalFs.deleteTree(dir)
-    out
+    val dir = StarJoins.scratchTemp("graft_ckpt")
+    try f(dir.toString) finally graft.LocalFs.deleteTree(dir)
   }
 
   /** Drain a streaming frame into a parquet RESULT LAKE via
@@ -79,7 +75,7 @@ object Live {
     val stateParts =
       if (statePartitions > 0) statePartitions
       else spark.conf.get("spark.graft.stream.statePartitions", "4").toInt
-    val outDir = java.nio.file.Files.createTempDirectory("graft_sink")
+    val outDir = StarJoins.scratchTemp("graft_sink")
       .resolve("out").toString
     withStatePartitions(spark, stateParts) {
       withRunCheckpoint { ckpt =>
@@ -153,7 +149,7 @@ object Live {
     * Must equal the batch rollup bit-for-bit (partial decimal sums
     * re-aggregate losslessly), so it shares q01's oracle. */
   def streamingDaily(spark: SparkSession, sfDir: String): DataFrame = {
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_daily_mv")
+    val rollupDir = StarJoins.scratchTemp("graft_daily_mv")
       .resolve("rollup").toString
     maintainDailyRollup(spark, sfDir, rollupDir)
     readDailyRollup(spark, rollupDir)
@@ -539,7 +535,7 @@ object Live {
     * orders — the rollup alone cannot see them. */
   def streamingRevenueSegmentHybrid(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_revseg_hy")
+    val rollupDir = StarJoins.scratchTemp("graft_revseg_hy")
       .resolve("revseg_rollup").toString
     val spec = RollupRouting.JoinSpec.revenueSegmentDated(rollupDir)
     val cut = lit("1997-01-01 00:00:00").cast("timestamp")
@@ -568,7 +564,7 @@ object Live {
     * appended-but-uncovered partials. */
   def streamingEventsSegmentHourlyHybrid(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_evseg_hy")
+    val rollupDir = StarJoins.scratchTemp("graft_evseg_hy")
       .resolve("ev_hourly_rollup").toString
     val spec = RollupRouting.JoinSpec.eventsSegmentHourly(rollupDir)
     val c = graft.Tables.customer(spark, sfDir)
@@ -594,7 +590,7 @@ object Live {
     * both the batch boundary and the coverage boundary). */
   def streamingUniqSegmentHybrid(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_uniqseg_hy")
+    val rollupDir = StarJoins.scratchTemp("graft_uniqseg_hy")
       .resolve("uniqseg_rollup").toString
     val spec = RollupRouting.JoinSpec.uniqSegmentDaily(rollupDir)
     val c = graft.Tables.customer(spark, sfDir)
@@ -620,7 +616,7 @@ object Live {
     * delivery — the natural shipment unit); the partials doc and
     * RollupRoutingSpec cover the grain caveat. */
   def streamingRevenueSegment(spark: SparkSession, sfDir: String): DataFrame = {
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_revseg_mv")
+    val rollupDir = StarJoins.scratchTemp("graft_revseg_mv")
       .resolve("rollup").toString
     // per batch, the dim side is RUNTIME KEY-RANGE PRUNED from the
     // batch's own min/max orderkey before the join — incremental
@@ -656,7 +652,7 @@ object Live {
     * match against the full recompute proves the ragged day was
     * answered by the tail — the rollup alone cannot produce it. */
   def streamingHybridDaily(spark: SparkSession, sfDir: String): DataFrame = {
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_hybrid_mv")
+    val rollupDir = StarJoins.scratchTemp("graft_hybrid_mv")
       .resolve("rollup").toString
     val seenUpTo = lit("2024-01-27 13:00:00").cast("timestamp")
     withRunCheckpoint { ckpt =>
@@ -695,7 +691,7 @@ object Live {
     * declare-once/build/maintain/route loop on a table the engine has
     * no hardcoded knowledge of. */
   def streamingOrdersHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_orders_mv")
+    val rollupDir = StarJoins.scratchTemp("graft_orders_mv")
       .resolve("orders_rollup").toString
     val spec = graft.ops.Rollups.ordersSpec(rollupDir)
     val seenUpTo = lit("1997-07-15 06:00:00").cast("timestamp")
@@ -718,7 +714,7 @@ object Live {
     * router (partial states merge losslessly); the one-row-per-grain
     * and file-count claims are spec-pinned in RollupRoutingSpec. */
   def streamingOrdersCompacted(spark: SparkSession, sfDir: String): DataFrame = {
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_orders_cmp")
+    val rollupDir = StarJoins.scratchTemp("graft_orders_cmp")
       .resolve("orders_rollup").toString
     val spec = graft.ops.Rollups.ordersSpec(rollupDir)
     val seenUpTo = lit("1997-07-15 06:00:00").cast("timestamp")
@@ -744,7 +740,7 @@ object Live {
     * streaming build reproduces the single-pass estimates bit-for-bit
     * (RollupRoutingSpec pins it). */
   def streamingUniqSketchHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_hll_mv")
+    val rollupDir = StarJoins.scratchTemp("graft_hll_mv")
       .resolve("uniq_rollup").toString
     val spec = graft.ops.Rollups.uniqSketchSpec(rollupDir)
     maintainRollup(eventStream(spark, sfDir), spec)
@@ -767,7 +763,7 @@ object Live {
     * blocks and drops net-zero groups. State is the rollup itself;
     * there is no stream state store to grow. */
   def streamingCdcSummingMv(spark: SparkSession, sfDir: String): DataFrame = {
-    val rollupDir = java.nio.file.Files.createTempDirectory("graft_cdc_mv")
+    val rollupDir = StarJoins.scratchTemp("graft_cdc_mv")
       .resolve("rollup").toString
     withRunCheckpoint { ckpt =>
       val q = eventStream(spark, sfDir).writeStream
@@ -1356,8 +1352,7 @@ object Live {
   def streamingProfile(spark: SparkSession, dataDir: String, fileName: String,
                        cols: Seq[String],
                        maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_profile").toString
+    val dir = StarJoins.scratchTemp("graft_profile").toString
     withRunCheckpoint { ckpt =>
       val q = fileStream(spark, dataDir, fileName, maxFilesPerTrigger)
         .writeStream

@@ -44,6 +44,11 @@ object Bridge {
                                 b: org.apache.spark.sql.types.DataType): Boolean =
     a.sameType(b)
 
+  /** Blocks until every listener has handled every event posted so far
+    * (the listener bus is `private[spark]`). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register a native expression as a temp SQL function. */
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =

@@ -11,23 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.RollupRouting
 import graft.plans.RollupRouting.{Catalog, Spec}
 
-/** Routing is a property of the plan: a routed entry point returns a
-  * lazy frame whose own plan scans the rollup, and each session routes
-  * with its own registry. */
-class LazyRoutingSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-  val sf = TestSpark.sf
-
-  /** The root paths of every file relation `plan` reads. */
-  private def roots(plan: LogicalPlan): Seq[String] = plan.collect {
-    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-      fs.location.rootPaths.map(_.toString)
-  }.flatten
-
+/** Counts the Spark jobs a block starts. */
+object SparkJobs {
   /** Spark jobs started while `f` runs. A marker job after `f` bounds
     * the count: the listener sees job starts in order. */
-  private def jobsDuring(f: => Unit): Int = {
-    val marker = "LazyRoutingSpec.marker"
+  def during(spark: SparkSession)(f: => Unit): Int = {
+    val marker = "SparkJobs.marker"
     val starts = new LinkedBlockingQueue[String]
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = starts.put(
@@ -45,6 +34,20 @@ class LazyRoutingSpec extends AnyFunSuite {
       }.size
     } finally spark.sparkContext.removeSparkListener(l)
   }
+}
+
+/** Routing is a property of the plan: a routed entry point returns a
+  * lazy frame whose own plan scans the rollup, and each session routes
+  * with its own registry. */
+class LazyRoutingSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  val sf = TestSpark.sf
+
+  /** The root paths of every file relation `plan` reads. */
+  private def roots(plan: LogicalPlan): Seq[String] = plan.collect {
+    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+      fs.location.rootPaths.map(_.toString)
+  }.flatten
 
   test("routed construct is lazy: no job on a warm construct, the plan scans " +
        "the rollup, and raw twins constructed after it stay live") {
@@ -56,7 +59,7 @@ class LazyRoutingSpec extends AnyFunSuite {
       val construct = SparkEntry.queries(name)
       construct(spark, sf) // builds (or reuses) the rollup through SessionCache
       var df: DataFrame = null
-      val jobs = jobsDuring { df = construct(spark, sf) }
+      val jobs = SparkJobs.during(spark) { df = construct(spark, sf) }
       assert(jobs == 0, s"$name: a warm routed construct must run no Spark job, ran $jobs")
       val plan = df.queryExecution.optimizedPlan
       assert(plan.collect { case r: LogicalRDD => r }.isEmpty,

@@ -56,6 +56,24 @@ class LocalFsSpec extends AnyFunSuite {
     } finally LocalFs.deleteTree(base)
   }
 
+  test("a failed stream drain leaves no checkpoint dir behind") {
+    def checkpoints(): Set[File] =
+      Seq(ops.StarJoins.scratchRoot, new File(sys.props("java.io.tmpdir")))
+        .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+        .filter(_.getName.startsWith("graft_ckpt")).toSet
+    val before = checkpoints()
+    val rollup = Files.createTempDirectory("graft_localfs_mv").resolve("rollup")
+    try {
+      // a rollup without the mn/mx partials: the drain's first append refuses it
+      spark.range(1).toDF("day").write.parquet(rollup.toString)
+      val e = intercept[Exception](
+        streaming.Live.maintainDailyRollup(spark, TestSpark.sf, rollup.toString))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("pre-mn/mx partials")), e)
+      assert(checkpoints().subsetOf(before), checkpoints() -- before)
+    } finally LocalFs.deleteTree(rollup.getParent)
+  }
+
   test("getFileLinkStatus still reports a symlink and its target") {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = FileSystem.get(new URI("file:///"), conf)
@@ -90,6 +108,12 @@ class LocalFsSpec extends AnyFunSuite {
     val refreshed = ops.Rollups.refreshedDailyRollup(spark, TestSpark.sf).inputFiles
     assert(refreshed.nonEmpty)
     refreshed.foreach(f => assert(new URI(f).getPath.startsWith(root + File.separator), f))
+    // so are a stream drain's result sink and a stream-maintained MV (q32)
+    Seq(streaming.Live.streamingDedup(spark, TestSpark.sf),
+        streaming.Live.streamingDaily(spark, TestSpark.sf)).foreach { df =>
+      assert(df.inputFiles.nonEmpty)
+      df.inputFiles.foreach(f => assert(new URI(f).getPath.startsWith(root + File.separator), f))
+    }
     val base = Files.createTempDirectory("graft_localfs_tree")
     val outside = Files.createTempDirectory("graft_localfs_kept")
     try {

@@ -98,6 +98,40 @@ class SessionCacheSpec extends AnyFunSuite {
     Seq("graft_sessioncache", "graft session cache").foreach(rewrittenMidSession)
   }
 
+  test("the watermarked sketch rollups of q185, q189 and q192 are rebuilt " +
+       "when events.parquet changes mid-session") {
+    val dir = Files.createTempDirectory("graft_hybrid_fresh").resolve("sf")
+    Files.createDirectories(dir)
+    Files.list(java.nio.file.Paths.get(TestSpark.sf)).forEach(f =>
+      Files.copy(f, dir.resolve(f.getFileName)))
+    val sf = dir.toString
+    // each hybrid read beside its live twin; KLL states are randomized,
+    // so q189 is compared on its exact columns only
+    type Live = (org.apache.spark.sql.SparkSession, String) => DataFrame
+    val reads = Seq[(String, String, Live, Boolean)](
+      ("q185_uniq_sketch_hybrid", "uniq_sketch_hybrid", Rollups.dailyUniqSketchRaw, true),
+      ("q189_quantile_sketch_hybrid", "quantile_sketch_hybrid",
+        Rollups.dailyQuantileSketchRaw, false),
+      ("q192_topk_sketch_hybrid", "topk_sketch_hybrid", Rollups.dailyTopUsersScalar, true))
+    def txs(df: DataFrame) = df.select("day", "daily_txs").collect().toSeq
+    try {
+      val before = reads.map { case (q, _, _, _) => txs(SparkEntry.queries(q)(spark, sf)) }
+      rewrite(dir, "events", Tables.events(spark, sf).filter($"user_id" % 2 === 0))
+      reads.zip(before).foreach { case ((q, _, raw, exact), txs0) =>
+        val got = SparkEntry.queries(q)(spark, sf)
+        val live = raw(spark, sf)
+        assert(txs(got) == txs(live), s"$q must read the rewritten events")
+        assert(txs(got) != txs0, s"$q: the rewrite must change its answer")
+        if (exact) assert(got.collect().toSeq == live.collect().toSeq, q)
+      }
+    } finally {
+      deleteTree(dir.getParent)
+      reads.foreach { case (_, name, _, _) =>
+        deleteTree(java.nio.file.Paths.get(ops.StarJoins.scratch(sf, name)))
+      }
+    }
+  }
+
   test("two threads asking for the same key run one build") {
     val builds = new AtomicInteger()
     val key = s"k${System.nanoTime()}"
