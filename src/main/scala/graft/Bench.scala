@@ -203,10 +203,16 @@ object Bench {
     val samplesPath = java.nio.file.Paths.get("target/bench_samples.jsonl")
     java.nio.file.Files.createDirectories(samplesPath.getParent)
     val samplesOut = java.nio.file.Files.newBufferedWriter(samplesPath)
+    // JIT compile seconds per (run, query): compiler threads burn CPU
+    // beside the query's own, so a slow query may be paying for code
+    // the JVM is still compiling
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    val jitSeconds = scala.collection.mutable.Map.empty[(Int, String), Double]
     def runPass(run: Int): Seq[(String, Option[Double])] =
       selected.map { case (name, fn) =>
         running = name
         spark.sparkContext.setLocalProperty(jobKey, s"$run $name")
+        val jit0 = jit.getTotalCompilationTime
         val t0 = System.nanoTime()
         // noop sink: full materialization of every output column —
         // count() would let Catalyst prune aggregate values and
@@ -220,6 +226,7 @@ object Bench {
           }
           finally spark.sparkContext.setLocalProperty(jobKey, null)
         val sec = (System.nanoTime() - t0) / 1e9
+        jitSeconds((run, name)) = (jit.getTotalCompilationTime - jit0) / 1e3
         samplesOut.write(
           s"""{"run":$run,"query":"$name","sec":${"%.3f".formatLocal(java.util.Locale.ROOT, sec)},"ok":$ok}\n""")
         samplesOut.flush()
@@ -394,16 +401,17 @@ object Bench {
       val st = SessionCache.stats(ns)
       s""""$ns":{"hits":${st.hits},"misses":${st.misses},"builds":${st.builds},"build_s":${f(st.buildSeconds, 3)}}"""
     }.mkString("{", ",", "}")
-    // median Spark jobs per timed run of each query
+    // median Spark jobs and JIT compile seconds per timed run of each query
     org.apache.spark.sql.graftx.Bridge.drainListeners(spark)
-    val jobsJson = names.map { name =>
-      val perRun = (1 to runs).map(r =>
-        Option(jobCounts.get(s"$r $name")).fold(0.0)(_.sum.toDouble))
-      "\"" + name + "\":" + f(median(perRun.sorted), 1)
+    def perQueryJson(dp: Int)(perRun: (Int, String) => Double): String = names.map { name =>
+      "\"" + name + "\":" + f(median((1 to runs).map(perRun(_, name)).sorted), dp)
     }.mkString("{", ",", "}")
+    val jobsJson = perQueryJson(1)((r, name) =>
+      Option(jobCounts.get(s"$r $name")).fold(0.0)(_.sum.toDouble))
+    val jitJson = perQueryJson(3)((r, name) => jitSeconds((r, name)))
     // Full-precision, full-name report for humans and diffing.
     val fullJson = line(identity, 3,
-      s""","session_cache":$sessionCacheJson,"jobs":$jobsJson""")
+      s""","session_cache":$sessionCacheJson,"jobs":$jobsJson,"jit_s":$jitJson""")
     val out = java.nio.file.Paths.get("target/bench_full.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))

@@ -33,14 +33,16 @@ object Sessions {
     // (medians of 10 interleaved bench pairs, same VM).
     "spark.hadoop.fs.file.impl" -> classOf[LocalChecksumFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalChecksumFs].getName,
-    // A global ORDER BY over an already-small aggregate pays a
-    // RangePartitioner sampling job and a range shuffle: 18 of the 47
-    // jobs of a `dashboard` pass. plans.SmallSort turns that exchange
-    // into a one-task coalesce once AQE knows the input fits in one
-    // partition (docs/PLANS.md "Small global sorts"). Jobs per pass:
-    // dashboard 47 -> 29, maintain 49 -> 39; `dashboard`
-    // query_cpu_p50_s 0.490 -> 0.435 s, pass_cpu_s 5.68 -> 5.00 s
-    // (medians of 10 interleaved bench pairs, 4-core VM).
+    // Every shuffle the planner adds costs a job (a global ORDER BY two:
+    // the RangePartitioner sampling job and the shuffle), and over a
+    // dashboard's few-KB input that is all fixed cost. plans.OnePartition
+    // turns a planner-added exchange into a one-task coalesce when its
+    // input is provably one small partition: a materialized stage AQE
+    // would coalesce to one partition anyway, or a one-split file scan,
+    // which it sees before any stage runs, so a query over one-split
+    // scans runs as one job (docs/PLANS.md "One-partition exchanges").
+    // Jobs per pass: dashboard 47 -> 29 (global sorts) -> 19 (one-split
+    // scans), maintain 49 -> 39 -> 36.
     "spark.sql.extensions" -> classOf[plans.EngineExtensions].getName)
 
   def local(cpus: String): SparkSession = {

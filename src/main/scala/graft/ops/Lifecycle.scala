@@ -222,7 +222,7 @@ object Lifecycle {
     * the expiry boundary. */
   def ttlAggregatedDaily(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
-    val base = java.nio.file.Files.createTempDirectory("graft_ttl")
+    val base = StarJoins.scratchTemp("graft_ttl")
     val lakeDir = base.resolve("ttl_lake").toString
     val rollupDir = base.resolve("ttl_rollup").toString
     writeDayPartitionedLake(graft.Tables.events(spark, sfDir), lakeDir)
@@ -244,7 +244,7 @@ object Lifecycle {
     * partitions. One registration value now drives the entire
     * lifecycle including retention. */
   def ttlAggregatedOrders(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_ttl_orders")
+    val base = StarJoins.scratchTemp("graft_ttl_orders")
     val lakeDir = base.resolve("orders_ttl_lake").toString
     val rollupDir = base.resolve("orders_ttl_rollup").toString
     val spec = Rollups.ordersSpec(rollupDir).copy(sourceSuffix = "orders_ttl_lake")

@@ -3771,6 +3771,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(session => new RollupRouting.RuleImpl(session))
     e.injectPlannerStrategy(_ => TopKPerGroup.Strategy)
-    e.injectQueryStagePrepRule(SmallSort(_))
+    e.injectQueryStagePrepRule(OnePartition(_))
   }
 }

@@ -469,23 +469,40 @@ class EngineSpec extends AnyFunSuite {
 
   test("id-bucket rollup plans partial+final agg over a single shuffle") {
     // pins the canonical q12 shape so a plan regression (extra exchange,
-    // lost map-side combine) can never hide behind bench noise
-    val plan = Rollups.idBuckets(spark, sf).queryExecution.executedPlan.toString
+    // lost map-side combine) can never hide behind bench noise; the
+    // shuffles show with partition coalescing off, which switches off
+    // plans.OnePartition (events at this scale is one split)
+    val plan = TestSpark.withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      Rollups.idBuckets(spark, sf).queryExecution.executedPlan.toString
+    }
     def n(needle: String) = needle.r.findAllIn(plan).length
     assert(n("Exchange hashpartitioning") == 1, s"one shuffle expected in:\n$plan")
     assert(n("Exchange rangepartitioning") == 1) // only the output ORDER BY
     assert(plan.contains("partial_count") || plan.contains("partial_sum") ||
            n("HashAggregate") == 2, s"partial+final agg expected in:\n$plan")
+    // with the rule on, both shuffles become Coalesce 1 over the one split
+    val onePlan = Rollups.idBuckets(spark, sf).queryExecution.executedPlan.toString
+    def m(needle: String) = needle.r.findAllIn(onePlan).length
+    assert(m("Exchange") == 0 && m("Coalesce 1") == 2, s"one stage expected in:\n$onePlan")
+    assert(m("HashAggregate") == 2, s"partial+final agg expected in:\n$onePlan")
   }
 
   test("uniq-users rollup plans the two-phase distinct, nothing more") {
     // countDistinct's canonical shape: dedup aggregate over (hour, user)
-    // + final aggregate over hour = exactly two shuffles
-    val plan = Rollups.uniqUsersHourly(spark, sf).queryExecution.executedPlan.toString
+    // + final aggregate over hour = exactly two shuffles (shown with
+    // plans.OnePartition off, as above)
+    val plan = TestSpark.withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      Rollups.uniqUsersHourly(spark, sf).queryExecution.executedPlan.toString
+    }
     def n(needle: String) = needle.r.findAllIn(plan).length
     assert(n("Exchange hashpartitioning") == 2, s"two shuffles expected in:\n$plan")
     assert(n("Exchange rangepartitioning") == 1)
     assert(n("HashAggregate") == 4, s"4-stage distinct agg expected in:\n$plan")
+    // with the rule on, all three shuffles become Coalesce 1
+    val onePlan = Rollups.uniqUsersHourly(spark, sf).queryExecution.executedPlan.toString
+    def m(needle: String) = needle.r.findAllIn(onePlan).length
+    assert(m("Exchange") == 0 && m("Coalesce 1") == 3, s"one stage expected in:\n$onePlan")
+    assert(m("HashAggregate") == 4, s"4-stage distinct agg expected in:\n$onePlan")
   }
 
   test("point lookup pushes filters into the parquet scan") {

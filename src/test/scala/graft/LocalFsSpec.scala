@@ -114,6 +114,12 @@ class LocalFsSpec extends AnyFunSuite {
       assert(df.inputFiles.nonEmpty)
       df.inputFiles.foreach(f => assert(new URI(f).getPath.startsWith(root + File.separator), f))
     }
+    // and the TTL lifecycles' lakes and rollups (q160, q173)
+    Seq(ops.Lifecycle.ttlAggregatedDaily(spark, TestSpark.sf),
+        ops.Lifecycle.ttlAggregatedOrders(spark, TestSpark.sf)).foreach { df =>
+      assert(df.inputFiles.nonEmpty)
+      df.inputFiles.foreach(f => assert(new URI(f).getPath.startsWith(root + File.separator), f))
+    }
     val base = Files.createTempDirectory("graft_localfs_tree")
     val outside = Files.createTempDirectory("graft_localfs_kept")
     try {

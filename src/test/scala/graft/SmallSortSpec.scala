@@ -1,33 +1,16 @@
 package graft
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A global sort over a materialized input that fits in one partition
-  * runs as `Coalesce 1` instead of a sampled range shuffle
-  * ([[graft.plans.SmallSort]]); every other range exchange stays. */
-class SmallSortSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-  import spark.implicits._
-  val sf = TestSpark.sf
-
-  private def q01: DataFrame = SparkEntry.queries("q01_daily_rollup")(spark, sf)
-
-  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
+/** Final adaptive plans, read after the query ran. */
+object SavedPlan {
   /** The final adaptive plan of the noop save of `df`, as a string. */
-  private def savedPlan(df: DataFrame): String = {
+  def of(spark: SparkSession, df: DataFrame): String = {
     val plans = new LinkedBlockingQueue[QueryExecution]
     val l = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -49,12 +32,32 @@ class SmallSortSpec extends AnyFunSuite {
     assert(adaptive.nonEmpty, qe.executedPlan.toString)
     adaptive.map(_.executedPlan.toString).mkString("\n")
   }
+}
+
+/** A global sort over a materialized input that fits in one partition
+  * runs as `Coalesce 1` instead of a sampled range shuffle (the stage
+  * evidence of [[graft.plans.OnePartition]]); every other range
+  * exchange stays. */
+class SmallSortSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+  val sf = TestSpark.sf
+
+  private def q01: DataFrame = SparkEntry.queries("q01_daily_rollup")(spark, sf)
+
+  import TestSpark.withConf
+
+  private def savedPlan(df: DataFrame): String = SavedPlan.of(spark, df)
 
   private def rangeExchanges(plan: String): Int =
     "Exchange rangepartitioning".r.findAllIn(plan).length
 
   test("q01's ORDER BY runs as Coalesce 1 after its aggregate stage: 2 jobs, " +
        "and the plan before execution still shows the range exchange") {
+    // over a four-split events scan the aggregate keeps its shuffle, so
+    // the sort's input is a materialized stage (one split would run the
+    // whole query as one stage before any stage exists)
+    def q01: DataFrame = SparkEntry.queries("q01_daily_rollup")(spark, TestSpark.splitSf)
     q01.write.format("noop").mode("overwrite").save() // warm the relation memo
     assert(rangeExchanges(q01.queryExecution.executedPlan.toString) == 1)
     var plan = ""

@@ -21,4 +21,22 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A fixture dir whose `events.parquet` is `sf`'s events in four
+    * files, so its scan reads four splits where `sf`'s reads one. */
+  lazy val splitSf: String = {
+    val dir = ops.StarJoins.scratchTemp("graft_split").toString
+    Tables.events(spark, sf).repartition(4).write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  /** `f` with the session confs `kvs` set, each restored after. */
+  def withConf[A](kvs: (String, String)*)(f: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
