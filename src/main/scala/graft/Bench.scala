@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.LongAdder
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 object Bench {
@@ -163,17 +164,27 @@ object Bench {
     // that starts the stream, i.e. inside the query's own run.
     val streaming = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     var running = ""
-    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = streaming.add(running)
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    })
     // Spark jobs per (run, query). The listener bus delivers job starts
     // after the fact, so `running` cannot key them; the query's run and
     // name ride as a local property instead, which Spark copies into
     // every job the query starts, from stream and broadcast threads too.
     val jobKey = "graft.bench.query"
+    // state-store instances per stream (the most any of its batches
+    // opened), keyed to the (run, query) that started it
+    val streamOf = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
+    val streamStores = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Integer]()
+    spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = {
+        streaming.add(running)
+        Option(spark.sparkContext.getLocalProperty(jobKey)).foreach(streamOf.put(e.runId, _))
+      }
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        streamStores.merge(e.progress.runId,
+          Int.box(e.progress.stateOperators.map(_.numStateStoreInstances).sum.toInt),
+          (a, b) => Int.box(math.max(a.intValue, b.intValue)))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    })
     val jobCounts = new java.util.concurrent.ConcurrentHashMap[String, LongAdder]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -409,9 +420,14 @@ object Bench {
     val jobsJson = perQueryJson(1)((r, name) =>
       Option(jobCounts.get(s"$r $name")).fold(0.0)(_.sum.toDouble))
     val jitJson = perQueryJson(3)((r, name) => jitSeconds((r, name)))
+    // state stores the query's streams opened: the sum over its streams
+    val storesByRun = streamOf.asScala.toSeq.groupMapReduce(_._2)(
+      kv => Option(streamStores.get(kv._1)).fold(0)(_.intValue))(_ + _)
+    val storesJson = perQueryJson(1)((r, name) =>
+      storesByRun.getOrElse(s"$r $name", 0).toDouble)
     // Full-precision, full-name report for humans and diffing.
     val fullJson = line(identity, 3,
-      s""","session_cache":$sessionCacheJson,"jobs":$jobsJson,"jit_s":$jitJson""")
+      s""","session_cache":$sessionCacheJson,"jobs":$jobsJson,"jit_s":$jitJson,"state_stores":$storesJson""")
     val out = java.nio.file.Paths.get("target/bench_full.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))

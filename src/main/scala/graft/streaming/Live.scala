@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.graftx.Bridge
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.ops.StarJoins
@@ -23,28 +24,125 @@ import graft.plans.RollupRouting.{Catalog, route}
   */
 object Live {
 
-  /** Run `f` with the state/shuffle partition count pinned low for a
-    * bounded drain. Stateful operators create one state store per
-    * shuffle partition and the count is frozen into the checkpoint — in
-    * production you size it to peak key cardinality up front; for the
-    * fixture-scale drains 8 stores beat 32 empty ones. */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
+  /** Run the stream `df` to its end (`availableNow`), handing each
+    * micro-batch to `batch`, and return the finished query.
+    *
+    * The stream runs in a child of `df`'s session, so the caller's
+    * session keeps its own conf while the drain runs. Two settings go on
+    * the child:
+    *   - the partition count. Spark turns adaptive execution off for
+    *     micro-batches, so every batch shuffles into this many tasks and
+    *     every stateful operator opens this many state stores. The drain
+    *     sizes it the way AQE coalesces a shuffle, from the source's file
+    *     bytes, clamped to [1, the session's `spark.sql.shuffle.partitions`]
+    *     ([[partitionsFor]]). An explicit `partitions` wins. A drain on a
+    *     PERSISTENT `checkpointDir` keeps the session's count: Spark
+    *     freezes it into the checkpoint and restores it on restart, so
+    *     it is the deployment's decision, made once.
+    *   - the RocksDB state store, when the plan holds a
+    *     `transformWithState` (the only operator that needs it).
+    *
+    * Without `checkpointDir` the checkpoint is RUN-SCOPED: a fresh
+    * directory, deleted when the drain ends, failed or not (such a
+    * query is drained once and never resumed). A production deployment
+    * passes a persistent location and never deletes it; that is what
+    * makes restarts exactly-once.
+    *
+    * When the drain ends its state stores are unloaded and closed
+    * (Spark would keep them, with a checkpoint-file thread pool each,
+    * until its next maintenance pass), and the streaming listener buses
+    * of its two sessions are detached from the SparkContext. The
+    * caller's streaming listeners see the query as if it ran in their
+    * session. */
+  def drain(df: DataFrame, mode: String = "append",
+            checkpointDir: Option[String] = None,
+            partitions: Option[Int] = None)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery = {
+    val spark = df.sparkSession
+    val plan = df.queryExecution.analyzed
+    val session = Bridge.cloneSession(spark)
+    partitions.orElse(if (checkpointDir.isEmpty) Some(partitionsFor(df)) else None)
+      .foreach(n => session.conf.set(ShufflePartitions, n.toString))
+    if (Bridge.needsRocksDb(plan))
+      session.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // registered last, so when it hears the end every forwarded
+    // listener has heard the whole query
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val marker = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.countDown()
+    }
+    (spark.streams.listListeners() :+ marker).foreach(session.streams.addListener)
+    def run(ckpt: String): StreamingQuery = {
+      val q = Bridge.ofRows(session, plan).writeStream.outputMode(mode)
+        .foreachBatch(batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination()
+      finally {
+        Bridge.releaseStateStores(q)
+        ended.await(10, java.util.concurrent.TimeUnit.SECONDS)
+        Bridge.detachStreamBus(Bridge.batchSession(q))
+      }
+      q
+    }
+    try checkpointDir.fold {
+      val dir = StarJoins.scratchTemp("graft_ckpt")
+      try run(dir.toString) finally graft.LocalFs.deleteTree(dir)
+    }(run)
+    finally Bridge.detachStreamBus(session)
   }
 
-  /** Run `f` with a fresh RUN-SCOPED checkpoint directory, deleted when
-    * the drain ends, failed or not (each of these queries is created,
-    * drained with availableNow, and never resumed, so nothing could
-    * resume from a kept one). A production deployment passes a
-    * PERSISTENT location instead and never deletes it — that is what
-    * makes restarts exactly-once (see [[maintainDailyRollupPerFile]]'s
-    * `checkpointDir`). */
-  private def withRunCheckpoint[A](f: String => A): A = {
-    val dir = StarJoins.scratchTemp("graft_ckpt")
-    try f(dir.toString) finally graft.LocalFs.deleteTree(dir)
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** The partition count [[drain]] gives `df`'s micro-batches: the
+    * count AQE coalesces a shuffle of the source's file bytes to.
+    * Like `CoalesceShufflePartitions`, the target size is
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, with
+    * `coalescePartitions.parallelismFirst` (Spark's default) at most an
+    * even split over `coalescePartitions.minPartitionNum` (default: the
+    * default parallelism), and never below
+    * `coalescePartitions.minPartitionSize`. The count is ceil(bytes /
+    * target), clamped to [1, `spark.sql.shuffle.partitions`]; the
+    * session's count when a source is not a file source. Rows never
+    * depend on it. */
+  def partitionsFor(df: DataFrame): Int = {
+    val spark = df.sparkSession
+    val cap = spark.conf.get(ShufflePartitions).toInt
+    Bridge.streamFileSources(df.queryExecution.analyzed).fold(cap) { sources =>
+      val aqe = "spark.sql.adaptive."
+      def size(key: String): Long =
+        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(spark.conf.get(aqe + key))
+      def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
+      val bytes = sources.map { case (path, opts) => sourceBytes(spark, path, opts) }.sum
+      val minNum =
+        if (spark.conf.get(aqe + "coalescePartitions.parallelismFirst").toBoolean)
+          spark.conf.getOption(aqe + "coalescePartitions.minPartitionNum")
+            .fold(spark.sparkContext.defaultParallelism)(_.toInt)
+        else 1
+      val target = math.max(1L, math.max(size("coalescePartitions.minPartitionSize"),
+        math.min(size("advisoryPartitionSizeInBytes"), ceilDiv(bytes, minNum))))
+      math.min(cap.toLong, math.max(1L, ceilDiv(bytes, target))).toInt
+    }
+  }
+
+  /** Bytes of the files a file source reads under `path`: hidden files
+    * (`_`/`.` prefixes) skipped, `pathGlobFilter` applied to file names. */
+  private def sourceBytes(spark: SparkSession, path: String,
+                          opts: Map[String, String]): Long = {
+    import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val keep = opts.get("pathglobfilter").map(new GlobFilter(_))
+    def visible(s: FileStatus): Boolean =
+      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
+    def size(s: FileStatus): Long =
+      if (s.isDirectory) fs.listStatus(s.getPath).filter(visible).map(size).sum
+      else if (keep.forall(_.accept(s.getPath))) s.getLen else 0L
+    Option(fs.globStatus(p)).toSeq.flatten.map(size).sum
   }
 
   /** Drain a streaming frame into a parquet RESULT LAKE via
@@ -58,52 +156,18 @@ object Live {
     * the executors; the driver never holds a result row. Each batch is
     * stamped with `__batch` so update-mode readers can keep the last
     * emission per key. The read-back pins the schema (a drain whose
-    * every batch was empty leaves no footer to infer from). */
+    * every batch was empty leaves no footer to infer from). Each state
+    * partition pays a fixed per-batch commit, snapshot and file-create
+    * cost, so [[drain]] sizes the count from the input; operators whose
+    * per-key work is CPU-bound (sessionize) pass an explicit count. */
   private def drainToParquet(df: DataFrame, mode: String,
-                             statePartitions: Int = -1): DataFrame = {
+                             partitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
-    // r20 (guide §2.2 applied to state stores): state-partition count
-    // is a runtime conf; -1 = use the conf, an explicit argument wins.
-    // Default 4: each state partition pays a fixed per-batch commit +
-    // snapshot + file-create cost, and the interleaved sweep (2/4/8/16/
-    // 32 on q52/q56/q106/q146/q148/q96) showed that below ~GB state the
-    // per-partition overhead dominates the parallelism it buys — q52
-    // 2.37 s at 4 vs 3.17 at 8 vs 8.33 at 32. A cluster deployment
-    // sizes the conf to state bytes / executor memory, not a constant;
-    // operators whose per-key work is CPU-bound (sessionize) pass a
-    // higher explicit value.
-    val stateParts =
-      if (statePartitions > 0) statePartitions
-      else spark.conf.get("spark.graft.stream.statePartitions", "4").toInt
     val outDir = StarJoins.scratchTemp("graft_sink")
       .resolve("out").toString
-    withStatePartitions(spark, stateParts) {
-      withRunCheckpoint { ckpt =>
-        val q = df.writeStream.outputMode(mode)
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            val m = if (mode == "complete") "overwrite" else "append"
-            b.withColumn("__batch", lit(id)).write.mode(m).parquet(outDir)
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // opt-in scale-rehearsal probe (SPARK_GRAFT_STATE_LOG=<file>):
-        // append one JSON line per micro-batch with the state-store row
-        // and byte totals — the number a 100 TB deployment sizes
-        // executors against (see docs/SCALING.md streaming decade).
-        // Env-gated so declared runs stay untouched.
-        sys.env.get("SPARK_GRAFT_STATE_LOG").foreach { path =>
-          val lines = q.recentProgress.toSeq.map { p =>
-            val ops = Option(p.stateOperators).map(_.toSeq).getOrElse(Nil)
-            s"""{"batch":${p.batchId},"inputRows":${p.numInputRows},"stateRows":[${ops.map(_.numRowsTotal).mkString(",")}],"stateBytes":[${ops.map(_.memoryUsedBytes).mkString(",")}]}"""
-          }
-          java.nio.file.Files.write(java.nio.file.Paths.get(path),
-            (lines.mkString("", "\n", "\n")).getBytes,
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
-        }
-      }
+    drain(df, mode, partitions = partitions) { (b, id) =>
+      val m = if (mode == "complete") "overwrite" else "append"
+      b.withColumn("__batch", lit(id)).write.mode(m).parquet(outDir)
     }
     val schema = org.apache.spark.sql.types.StructType(
       df.schema.fields :+
@@ -224,13 +288,7 @@ object Live {
 
   /** Drive the uniq-state rollup with availableNow micro-batches. */
   def maintainUniqRollup(spark: SparkSession, sfDir: String, rollupDir: String): Unit =
-    withRunCheckpoint { ckpt =>
-      val q = eventStream(spark, sfDir).writeStream
-        .foreachBatch((batch: DataFrame, _: Long) => appendUniqPartials(batch, rollupDir))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    drain(eventStream(spark, sfDir))((batch, _) => appendUniqPartials(batch, rollupDir))
 
   /** The frequent-items twin of [[appendUniqPartials]] — ClickHouse's
     * `topK()` inside an incrementally-maintained MV. Each micro-batch
@@ -262,25 +320,13 @@ object Live {
 
   /** Drive the topK-state rollup with availableNow micro-batches. */
   def maintainTopKRollup(spark: SparkSession, sfDir: String, rollupDir: String): Unit =
-    withRunCheckpoint { ckpt =>
-      val q = eventStream(spark, sfDir).writeStream
-        .foreachBatch((batch: DataFrame, _: Long) => appendTopKPartials(batch, rollupDir))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    drain(eventStream(spark, sfDir))((batch, _) => appendTopKPartials(batch, rollupDir))
 
   /** Run the incremental-maintenance pipeline end-to-end with
     * availableNow micro-batches (driven by maxFilesPerTrigger when the
     * source has multiple files). */
   def maintainDailyRollup(spark: SparkSession, sfDir: String, rollupDir: String): Unit =
-    withRunCheckpoint { ckpt =>
-      val q = eventStream(spark, sfDir).writeStream
-        .foreachBatch((batch: DataFrame, _: Long) => appendDailyPartials(batch, rollupDir))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    drain(eventStream(spark, sfDir))((batch, _) => appendDailyPartials(batch, rollupDir))
 
   /** SPEC-DRIVEN CONTINUOUS MAINTENANCE (round 12): the streaming leg
     * of the one-registration MV lifecycle. Per micro-batch, append the
@@ -367,48 +413,40 @@ object Live {
     val seenMaxUs = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val partsBaseline =
       new java.util.concurrent.atomic.AtomicInteger(partFileCount(spec.rollupPath))
-    def run(ckpt: String): Unit = {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // r20 (guide §1.2 — don't scan the delivery twice): with no
-          // lateness slack the watermark is the max GRAIN KEY of the
-          // batch (floorDiv(max ts, grain) = grain key of the max row,
-          // truncation is monotone), which the PARTIAL BLOCK already
-          // carries — so build+persist the block once and read both
-          // the coverage bound and the rows from it. A nonzero
-          // latenessUs needs the raw (untruncated) max and keeps the
-          // original raw-batch aggregate.
-          val grainKey = if (spec.grain == "hour") "hour" else "day"
-          val partials = RollupRouting.buildPartials(batch, spec).persist()
-          try {
-            val mx =
-              if (latenessUs == 0L)
-                partials.agg(
-                  max(unix_micros(col(grainKey).cast("timestamp")))).head()
-              else batch.agg(
-                max(unix_micros(col(spec.timeCol).cast("timestamp")))).head()
-            if (!mx.isNullAt(0)) {
-              partials.write.mode("append").parquet(spec.rollupPath)
-              val m = seenMaxUs.accumulateAndGet(mx.getLong(0), Math.max(_, _))
-              val wm = Math.floorDiv(m - latenessUs, grainUs) * grainUs
-              if (wm > stamped.get()) {
-                RollupRouting.stampCoverage(spec.rollupPath, wm)
-                stamped.set(wm)
-              }
-              if (partFileCount(spec.rollupPath) - partsBaseline.get >
-                    compactThreshold(batch.sparkSession, compactAboveFiles)) {
-                graft.ops.Rollups.compactRollup(batch.sparkSession, spec)
-                partsBaseline.set(partFileCount(spec.rollupPath))
-              }
-            }
-          } finally partials.unpersist()
-          ()
+    drain(stream, checkpointDir = checkpointDir) { (batch, _) =>
+      // r20 (guide §1.2 — don't scan the delivery twice): with no
+      // lateness slack the watermark is the max GRAIN KEY of the
+      // batch (floorDiv(max ts, grain) = grain key of the max row,
+      // truncation is monotone), which the PARTIAL BLOCK already
+      // carries — so build+persist the block once and read both
+      // the coverage bound and the rows from it. A nonzero
+      // latenessUs needs the raw (untruncated) max and keeps the
+      // original raw-batch aggregate.
+      val grainKey = if (spec.grain == "hour") "hour" else "day"
+      val partials = RollupRouting.buildPartials(batch, spec).persist()
+      try {
+        val mx =
+          if (latenessUs == 0L)
+            partials.agg(
+              max(unix_micros(col(grainKey).cast("timestamp")))).head()
+          else batch.agg(
+            max(unix_micros(col(spec.timeCol).cast("timestamp")))).head()
+        if (!mx.isNullAt(0)) {
+          partials.write.mode("append").parquet(spec.rollupPath)
+          val m = seenMaxUs.accumulateAndGet(mx.getLong(0), Math.max(_, _))
+          val wm = Math.floorDiv(m - latenessUs, grainUs) * grainUs
+          if (wm > stamped.get()) {
+            RollupRouting.stampCoverage(spec.rollupPath, wm)
+            stamped.set(wm)
+          }
+          if (partFileCount(spec.rollupPath) - partsBaseline.get >
+                compactThreshold(batch.sparkSession, compactAboveFiles)) {
+            graft.ops.Rollups.compactRollup(batch.sparkSession, spec)
+            partsBaseline.set(partFileCount(spec.rollupPath))
+          }
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      } finally partials.unpersist()
     }
-    checkpointDir.fold(withRunCheckpoint(run))(run)
   }
 
   /** [[maintainRollup]] for a JOIN MV (round 12): per micro-batch,
@@ -452,70 +490,62 @@ object Live {
     val seenMaxUs = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val partsBaseline =
       new java.util.concurrent.atomic.AtomicInteger(partFileCount(spec.rollupPath))
-    def run(ckpt: String): Unit = {
-      val q = factStream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // runtime key-range prune each dim the fact joins DIRECTLY:
-          // incremental deliveries are key-localized, so each batch
-          // joins a sliver of the dim, not all of it (the r10 ×100
-          // rehearsal measured per-batch full-dim cost as the
-          // dominant term; same fix as revenueSegmentPartialsOfPruned).
-          // r20 (guide §2.4/§1.2 — don't scan twice): the ranges are
-          // read from the PERSISTED fact pre-aggregation instead of a
-          // separate raw-batch min/max pass — the pre-agg keeps every
-          // fact join key as a group key, so the ranges are identical
-          // and the raw delivery is scanned exactly once per batch.
-          val factCols = batch.columns.toSet
-          var factPre: DataFrame = null
-          val partials = RollupRouting.buildJoinPartialsPruned(
-            dims + (factTable -> batch), spec,
-            onFactPre = { pre => factPre = pre.persist(); factPre },
-            pruneDim = { (t, df, pre) =>
-              val pair = spec.joinKeys.collectFirst {
-                case (a, b) if factCols.contains(a) && df.columns.contains(b) => (a, b)
-                case (a, b) if factCols.contains(b) && df.columns.contains(a) => (b, a)
-              }
-              pair.fold(df) { case (fc, dc) =>
-                // guide §1.5: the FIRST dim prune also materializes the
-                // persisted fact pre-agg — label it so profiles read
-                setDesc(batch, s"mjr:$factTable fact pre-agg + $t prune")
-                val r = pre.agg(min(col(fc)), max(col(fc))).head()
-                if (r.isNullAt(0)) df
-                else df.filter(col(dc) >= lit(r.get(0)) && col(dc) <= lit(r.get(1)))
-              }
-            })
-            .persist()
-          try {
-            setDesc(batch, s"mjr:$factTable partials build + coverage max")
-            val mx = partials.agg(
-              max(unix_micros(col(covRollup).cast("timestamp")))).head()
-            if (!mx.isNullAt(0)) {
-              setDesc(batch, s"mjr:$factTable append partial block")
-              partials.write.mode("append").parquet(spec.rollupPath)
-              val m = seenMaxUs.accumulateAndGet(mx.getLong(0), Math.max(_, _))
-              val wm = Math.floorDiv(m - latenessUs, grainUs) * grainUs
-              if (wm > stamped.get()) {
-                RollupRouting.stampCoverage(spec.rollupPath, wm)
-                stamped.set(wm)
-              }
-              if (partFileCount(spec.rollupPath) - partsBaseline.get >
-                    compactThreshold(batch.sparkSession, compactAboveFiles)) {
-                graft.ops.Rollups.compactJoinRollup(batch.sparkSession, spec)
-                partsBaseline.set(partFileCount(spec.rollupPath))
-              }
-            }
-          } finally {
-            partials.unpersist()
-            if (factPre != null) factPre.unpersist()
-            setDesc(batch, null)
+    drain(factStream, checkpointDir = checkpointDir) { (batch, _) =>
+      // runtime key-range prune each dim the fact joins DIRECTLY:
+      // incremental deliveries are key-localized, so each batch
+      // joins a sliver of the dim, not all of it (the r10 ×100
+      // rehearsal measured per-batch full-dim cost as the
+      // dominant term; same fix as revenueSegmentPartialsOfPruned).
+      // r20 (guide §2.4/§1.2 — don't scan twice): the ranges are
+      // read from the PERSISTED fact pre-aggregation instead of a
+      // separate raw-batch min/max pass — the pre-agg keeps every
+      // fact join key as a group key, so the ranges are identical
+      // and the raw delivery is scanned exactly once per batch.
+      val factCols = batch.columns.toSet
+      var factPre: DataFrame = null
+      val partials = RollupRouting.buildJoinPartialsPruned(
+        dims + (factTable -> batch), spec,
+        onFactPre = { pre => factPre = pre.persist(); factPre },
+        pruneDim = { (t, df, pre) =>
+          val pair = spec.joinKeys.collectFirst {
+            case (a, b) if factCols.contains(a) && df.columns.contains(b) => (a, b)
+            case (a, b) if factCols.contains(b) && df.columns.contains(a) => (b, a)
           }
-          ()
+          pair.fold(df) { case (fc, dc) =>
+            // guide §1.5: the FIRST dim prune also materializes the
+            // persisted fact pre-agg — label it so profiles read
+            setDesc(batch, s"mjr:$factTable fact pre-agg + $t prune")
+            val r = pre.agg(min(col(fc)), max(col(fc))).head()
+            if (r.isNullAt(0)) df
+            else df.filter(col(dc) >= lit(r.get(0)) && col(dc) <= lit(r.get(1)))
+          }
+        })
+        .persist()
+      try {
+        setDesc(batch, s"mjr:$factTable partials build + coverage max")
+        val mx = partials.agg(
+          max(unix_micros(col(covRollup).cast("timestamp")))).head()
+        if (!mx.isNullAt(0)) {
+          setDesc(batch, s"mjr:$factTable append partial block")
+          partials.write.mode("append").parquet(spec.rollupPath)
+          val m = seenMaxUs.accumulateAndGet(mx.getLong(0), Math.max(_, _))
+          val wm = Math.floorDiv(m - latenessUs, grainUs) * grainUs
+          if (wm > stamped.get()) {
+            RollupRouting.stampCoverage(spec.rollupPath, wm)
+            stamped.set(wm)
+          }
+          if (partFileCount(spec.rollupPath) - partsBaseline.get >
+                compactThreshold(batch.sparkSession, compactAboveFiles)) {
+            graft.ops.Rollups.compactJoinRollup(batch.sparkSession, spec)
+            partsBaseline.set(partFileCount(spec.rollupPath))
+          }
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      } finally {
+        partials.unpersist()
+        if (factPre != null) factPre.unpersist()
+        setDesc(batch, null)
+      }
     }
-    checkpointDir.fold(withRunCheckpoint(run))(run)
   }
 
   /** Job-description label for maintenance phases (guide §1.5) —
@@ -625,16 +655,10 @@ object Live {
     // per-batch full-dim cost)
     val o = graft.Tables.orders(spark, sfDir)
     val c = graft.Tables.customer(spark, sfDir)
-    withRunCheckpoint { ckpt =>
-      val q = fileStream(spark, sfDir, "lineitem.parquet", Some(1)).writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.ops.StarJoins.withRevenueSegmentPartialsPruned(batch, o, c) {
-            _.write.mode("append").parquet(rollupDir)
-          }
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    drain(fileStream(spark, sfDir, "lineitem.parquet", Some(1))) { (batch, _) =>
+      graft.ops.StarJoins.withRevenueSegmentPartialsPruned(batch, o, c) {
+        _.write.mode("append").parquet(rollupDir)
+      }
     }
     graft.ops.StarJoins.readRevenueSegmentRollup(spark, rollupDir)
   }
@@ -655,15 +679,8 @@ object Live {
     val rollupDir = StarJoins.scratchTemp("graft_hybrid_mv")
       .resolve("rollup").toString
     val seenUpTo = lit("2024-01-27 13:00:00").cast("timestamp")
-    withRunCheckpoint { ckpt =>
-      val q = eventStream(spark, sfDir).writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          appendDailyPartials(batch.filter(col("ts") < seenUpTo), rollupDir)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    drain(eventStream(spark, sfDir)) { (batch, _) =>
+      appendDailyPartials(batch.filter(col("ts") < seenUpTo), rollupDir)
     }
     // commit coverage at the last COMPLETE day boundary (floor-to-day
     // of the max event time the drain saw)
@@ -765,17 +782,10 @@ object Live {
   def streamingCdcSummingMv(spark: SparkSession, sfDir: String): DataFrame = {
     val rollupDir = StarJoins.scratchTemp("graft_cdc_mv")
       .resolve("rollup").toString
-    withRunCheckpoint { ckpt =>
-      val q = eventStream(spark, sfDir).writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.ops.Collapse.signedDailyPartialsOf(
-              graft.ops.Collapse.cancelPairChangelogOf(batch))
-            .write.mode("append").parquet(rollupDir)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    drain(eventStream(spark, sfDir)) { (batch, _) =>
+      graft.ops.Collapse.signedDailyPartialsOf(
+          graft.ops.Collapse.cancelPairChangelogOf(batch))
+        .write.mode("append").parquet(rollupDir)
     }
     graft.ops.Collapse.readSignedDailyRollup(spark.read.parquet(rollupDir))
   }
@@ -881,7 +891,7 @@ object Live {
     // keeps each user's max-version rows — the same reconcile-at-read
     // the reference's replacing merges do. Sessionize takes its OWN
     // partition conf (default 8 — the per-user gap-merge is CPU-bound,
-    // and 8 beat the commit-bound conf's 4 in the fixture sweep AND
+    // and 8 beat the commit-bound drains' 4 in the fixture sweep AND
     // beat 32 at the ×10 replica: 12.1/17.0 s vs 22.7/19.1 s ABAB, the
     // per-partition commit overhead still dominates there). r20:
     // conf-parameterized rather than hard-coded so a cluster sizes it
@@ -889,7 +899,7 @@ object Live {
     val sessionParts =
       spark.conf.get("spark.graft.stream.sessionizePartitions", "8").toInt
     val all = drainToParquet(updates.toDF(), "update",
-                             statePartitions = sessionParts)
+                             partitions = Some(sessionParts))
     val wv = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("start_us"))
@@ -940,33 +950,22 @@ object Live {
                          maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val updates = eventStream(spark, sfDir, maxFilesPerTrigger)
-        .select(col("user_id"), col("value")).as[(Long, Double)]
-        .groupByKey(_._1)
-        .transformWithState(new RunningTotalsProcessor,
-          TimeMode.None(), OutputMode.Update())
-      // each batch emits one RUNNING total per touched user; the read
-      // side keeps the latest emission per user (max __batch — the
-      // totals are cumulative), so a multi-batch drain reconciles to
-      // the same final row the single-batch fixture emits directly
-      val all = drainToParquet(updates.toDF("user_id", "tx_count", "total_value"),
-                               "update")
-      val wl = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-      all.withColumn("__maxb", max(col("__batch")).over(wl))
-        .filter(col("__batch") === col("__maxb"))
-        .select(col("user_id"), col("tx_count"), col("total_value"))
-        .orderBy("user_id")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val updates = eventStream(spark, sfDir, maxFilesPerTrigger)
+      .select(col("user_id"), col("value")).as[(Long, Double)]
+      .groupByKey(_._1)
+      .transformWithState(new RunningTotalsProcessor,
+        TimeMode.None(), OutputMode.Update())
+    // each batch emits one RUNNING total per touched user; the read
+    // side keeps the latest emission per user (max __batch — the
+    // totals are cumulative), so a multi-batch drain reconciles to
+    // the same final row the single-batch fixture emits directly
+    val all = drainToParquet(updates.toDF("user_id", "tx_count", "total_value"),
+                             "update")
+    val wl = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
+    all.withColumn("__maxb", max(col("__batch")).over(wl))
+      .filter(col("__batch") === col("__maxb"))
+      .select(col("user_id"), col("tx_count"), col("total_value"))
+      .orderBy("user_id")
   }
 
   // ——— streaming as-of join ———
@@ -1039,35 +1038,24 @@ object Live {
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val updates = eventStream(spark, sfDir, maxFilesPerTrigger)
-        .filter(col("event_type").isin("purchase", "signup"))
-        .select(unix_micros(col("ts")).as("ts_us"),
-                when(col("event_type") === "signup", lit(0)).otherwise(lit(1)).as("src"),
-                col("event_id"), col("user_id"))
-        .as[(Long, Int, Long, Long)]
-        .groupByKey(_._4)
-        .transformWithState(new StreamingAsOfProcessor,
-          TimeMode.None(), OutputMode.Update())
-      val all = drainToParquet(updates.toDF(), "update")
-      val wu = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-      all.withColumn("__maxv", max(col("version")).over(wu))
-        .filter(col("version") === col("__maxv"))
-        .select(col("event_id"), col("user_id"),
-                timestamp_micros(col("left_us")).as("purchase_ts"),
-                timestamp_micros(col("match_us")).as("signup_ts"),
-                (col("left_us") - col("match_us")).as("account_age_us"))
-        .orderBy("event_id")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val updates = eventStream(spark, sfDir, maxFilesPerTrigger)
+      .filter(col("event_type").isin("purchase", "signup"))
+      .select(unix_micros(col("ts")).as("ts_us"),
+              when(col("event_type") === "signup", lit(0)).otherwise(lit(1)).as("src"),
+              col("event_id"), col("user_id"))
+      .as[(Long, Int, Long, Long)]
+      .groupByKey(_._4)
+      .transformWithState(new StreamingAsOfProcessor,
+        TimeMode.None(), OutputMode.Update())
+    val all = drainToParquet(updates.toDF(), "update")
+    val wu = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
+    all.withColumn("__maxv", max(col("version")).over(wu))
+      .filter(col("version") === col("__maxv"))
+      .select(col("event_id"), col("user_id"),
+              timestamp_micros(col("left_us")).as("purchase_ts"),
+              timestamp_micros(col("match_us")).as("signup_ts"),
+              (col("left_us") - col("match_us")).as("account_age_us"))
+      .orderBy("event_id")
   }
 
   /** One FINALIZED as-of emission — no version: each left row is
@@ -1157,33 +1145,22 @@ object Live {
                          maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val updates = eventStream(spark, sfDir, maxFilesPerTrigger)
-        .filter(col("event_type").isin("purchase", "signup"))
-        .withWatermark("ts", "0 seconds")
-        .select(col("ts"), unix_micros(col("ts")).as("ts_us"),
-                when(col("event_type") === "signup", lit(0)).otherwise(lit(1)).as("src"),
-                col("event_id"), col("user_id"))
-        .as[(java.sql.Timestamp, Long, Int, Long, Long)]
-        .groupByKey(_._5)
-        .transformWithState(new StreamingAsOfFinalProcessor,
-          TimeMode.EventTime(), OutputMode.Append())
-      val all = drainToParquet(updates.toDF(), "append")
-      all.select(col("event_id"), col("user_id"),
-                 timestamp_micros(col("left_us")).as("purchase_ts"),
-                 timestamp_micros(col("match_us")).as("signup_ts"),
-                 (col("left_us") - col("match_us")).as("account_age_us"))
-        .orderBy("event_id")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val updates = eventStream(spark, sfDir, maxFilesPerTrigger)
+      .filter(col("event_type").isin("purchase", "signup"))
+      .withWatermark("ts", "0 seconds")
+      .select(col("ts"), unix_micros(col("ts")).as("ts_us"),
+              when(col("event_type") === "signup", lit(0)).otherwise(lit(1)).as("src"),
+              col("event_id"), col("user_id"))
+      .as[(java.sql.Timestamp, Long, Int, Long, Long)]
+      .groupByKey(_._5)
+      .transformWithState(new StreamingAsOfFinalProcessor,
+        TimeMode.EventTime(), OutputMode.Append())
+    val all = drainToParquet(updates.toDF(), "append")
+    all.select(col("event_id"), col("user_id"),
+               timestamp_micros(col("left_us")).as("purchase_ts"),
+               timestamp_micros(col("match_us")).as("signup_ts"),
+               (col("left_us") - col("match_us")).as("account_age_us"))
+      .orderBy("event_id")
   }
 
   /** Multi-batch variant over an arbitrary events directory (e.g. the
@@ -1203,19 +1180,9 @@ object Live {
     // a persistent checkpoint makes re-runs resume (exactly-once source
     // accounting survives restarts); the default stays run-scoped and
     // is cleaned up with the run
-    def drain(ckpt: String): Unit = {
-      val q = ev.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batches += 1
-          appendDailyPartials(batch, rollupDir)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    checkpointDir match {
-      case Some(c) => drain(c)
-      case None    => withRunCheckpoint(drain)
+    drain(ev, checkpointDir = checkpointDir) { (batch, _) =>
+      batches += 1
+      appendDailyPartials(batch, rollupDir)
     }
     batches
   }
@@ -1237,17 +1204,10 @@ object Live {
     val schema = spark.read.parquet(deliveryDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(deliveryDir)
-    withRunCheckpoint { ckpt =>
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.llm.Dedup.incrementalNearDupAgainstIndex(batch, corpusSig)
-            .withColumn("delivery", lit(id))
-            .write.mode("append").parquet(reportDir)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    drain(stream) { (batch, id) =>
+      graft.llm.Dedup.incrementalNearDupAgainstIndex(batch, corpusSig)
+        .withColumn("delivery", lit(id))
+        .write.mode("append").parquet(reportDir)
     }
   }
 
@@ -1353,16 +1313,8 @@ object Live {
                        cols: Seq[String],
                        maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val dir = StarJoins.scratchTemp("graft_profile").toString
-    withRunCheckpoint { ckpt =>
-      val q = fileStream(spark, dataDir, fileName, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          appendProfilePartials(b, cols, s"$dir/partials")
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    drain(fileStream(spark, dataDir, fileName, maxFilesPerTrigger)) { (b, _) =>
+      appendProfilePartials(b, cols, s"$dir/partials")
     }
     readProfile(spark, s"$dir/partials")
   }

@@ -49,6 +49,86 @@ object Bridge {
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** A child session of `spark`: a copy of its SQL conf, temp views
+    * and functions as they are now, over the same SparkContext. A conf
+    * set on the child never reaches the parent. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** The files a streaming plan reads, as (path, reader options) per
+    * file source, or None when some source is not a file source (its
+    * input size cannot be known before it runs). */
+  def streamFileSources(plan: LogicalPlan): Option[Seq[(String, Map[String, String])]] = {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val leaves = plan.collectLeaves().filter(_.isStreaming)
+    val files = leaves.collect {
+      case r: StreamingRelation if r.dataSource.paths.nonEmpty ||
+          r.dataSource.options.keys.exists(_.equalsIgnoreCase("path")) =>
+        val opts = r.dataSource.options.map { case (k, v) => k.toLowerCase -> v }
+        (r.dataSource.paths ++ opts.get("path")).distinct.map(_ -> opts)
+    }
+    if (files.size == leaves.size) Some(files.flatten) else None
+  }
+
+  /** Whether the plan holds a `transformWithState`, which needs the
+    * RocksDB state store. */
+  def needsRocksDb(plan: LogicalPlan): Boolean =
+    plan.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+
+  /** The state-store providers a finished query loaded: one per
+    * stateful operator, partition and store name, keyed by the query's
+    * run id and its state checkpoint root. */
+  def stateStoreIds(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : Seq[org.apache.spark.sql.execution.streaming.state.StateStoreProviderId] = {
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.execution.streaming.state.StateStoreProviderId
+    val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+    if (exec == null) Nil
+    else exec.executedPlan.collect { case w: StateStoreWriter if w.stateInfo.isDefined =>
+      val info = w.getStateInfo
+      for (p <- 0 until info.numPartitions; name <- w.stateStoreNames)
+        yield StateStoreProviderId(info, p, name)
+    }.flatten
+  }
+
+  /** Unload and close this JVM's state-store providers for the
+    * finished query `q`. Spark leaves them loaded until its maintenance
+    * task (every 60 s by default) finds the query gone; each holds a
+    * checkpoint file manager with its own thread pool until then. In
+    * local mode the driver is the executor, so this reaches every
+    * provider the query loaded. */
+  def releaseStateStores(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    import org.apache.spark.sql.execution.streaming.state.StateStore
+    stateStoreIds(q).foreach(StateStore.removeFromLoadedProvidersAndClose(_))
+  }
+
+  /** The session a query's micro-batches ran in: Spark's own child of
+    * the session that started it. */
+  def batchSession(q: org.apache.spark.sql.streaming.StreamingQuery): SparkSession =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.sparkSessionForStream
+
+  /** Detach `spark`'s streaming listener bus from the SparkContext.
+    * Spark attaches one for each session whose stream manager is used
+    * (starting a stream, or running a stateful batch, uses it) and keeps
+    * it for the context's lifetime, so each session made for one stream
+    * would otherwise leave its bus behind. */
+  def detachStreamBus(spark: SparkSession): Unit = {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val probe = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(probe)
+    val bus = spark.sparkContext.listenerBus
+    bus.findListenersByClass[StreamingQueryListenerBus]()
+      .filter(_.listeners.contains(probe)).foreach(bus.removeListener)
+  }
+
   /** Register a native expression as a temp SQL function. */
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit =

@@ -284,10 +284,23 @@ class StreamingSpec extends AnyFunSuite {
     // new file may be processed
     ev.filter($"user_id" >= 8).coalesce(1)
       .write.mode("append").parquet(lake)
-    Live.maintainDailyRollupPerFile(spark, lake, rollup, Some(ckpt))
+    // a session count that differs from the checkpoint's on restart
+    TestSpark.withConf("spark.sql.shuffle.partitions" -> "2") {
+      Live.maintainDailyRollupPerFile(spark, lake, rollup, Some(ckpt))
+    }
     val merged = Live.readDailyRollup(spark, rollup)
       .agg(sum($"tx_count")).head.getLong(0)
     assert(merged == ev.count(), "restart must not reprocess the first file")
+    // a persistent checkpoint keeps the session's partition count (the
+    // input would size to 1): Spark froze it into the first batch's
+    // offset log, and the restart ran its batch with the frozen count
+    val offsets = new java.io.File(ckpt, "offsets").listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
+    assert(offsets.length == 2)
+    offsets.foreach { f =>
+      val conf = scala.io.Source.fromFile(f).getLines().drop(1).next()
+      assert(conf.contains("\"spark.sql.shuffle.partitions\":\"4\""), s"${f.getName}: $conf")
+    }
   }
 
   test("transformWithState totals accumulate across micro-batches") {
