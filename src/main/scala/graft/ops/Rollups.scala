@@ -1333,9 +1333,9 @@ object Rollups {
       else None
     val rollup = spark.read.parquet(path)
     val schema = rollup.schema
-    // the per-member merge shapes live in ONE place
-    // ([[graft.plans.RollupRouting.mergeColumnMap]]) so a new registry
-    // member can never miss this compaction site
+    // each member defines its own merge and
+    // ([[graft.plans.RollupRouting.mergeColumnMap]]) folds them, so a
+    // new registry member can never miss this compaction site
     val merges = graft.plans.RollupRouting.mergeColumnMap(aggs)
     val unknown = schema.fieldNames.toSet -- keys.toSet -- merges.map(_._1).toSet
     require(unknown.isEmpty,

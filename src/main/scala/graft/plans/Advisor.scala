@@ -703,51 +703,14 @@ object Advisor {
     }
   }
 
-  /** Structural dedupe key — two queries demanding the same measure
-    * produce one partial column. ExprPat keys use the ORDER-SENSITIVE
-    * canon ([[ExprPat.canonOrdered]]) to match the router's equality:
-    * patterns differing only by a value-changing cast must register
-    * DISTINCT members, or the second query would silently never
-    * route. */
-  private def aggKey(m: AggMap): String = m match {
-    case SumOf(ColRef(n), _) => s"sum:col:$n"
-    case SumOf(OneMinusProduct(a, b), _) => s"sum:omp:$a:$b"
-    case SumOf(p: ExprPat, _) => s"sum:expr:${ExprPat.canonOrdered(p.expr).toString}"
-    case CountStarTo(_) => "count"
-    case CountOf(p, _) => s"countof:${patKey(p)}"
-    case MinOf(c, _) => s"min:$c"
-    case MaxOf(c, _) => s"max:$c"
-    case AvgOf(c, _, _) => s"avg:$c"
-    case HllUniqOf(p, _, k) => s"hll:${patKey(p)}:$k"
-    case KllQuantileOf(p, _, k) => s"kll:${patKey(p)}:$k"
-    case TopKOf(p, _, m) => s"topk:${patKey(p)}:$m"
-    case SetOf(p, _) => s"set:${patKey(p)}"
-    case UniqUpToOf(p, _, n) => s"upto:${patKey(p)}:$n"
-    case BitmapUniqOf(p, _) => s"bitmap:${patKey(p)}"
-    case ThetaUniqOf(p, _, k) => s"theta:${patKey(p)}:$k"
-    case ListOf(p, _) => s"list:${patKey(p)}"
-    case TopKWeightedOf(ip, wp, _, m) =>
-      s"topkw:${patKey(ip)}:${patKey(wp)}:$m"
-    case MinPatOf(p, _) => s"minpat:${patKey(p)}"
-    case MaxPatOf(p, _) => s"maxpat:${patKey(p)}"
-    case CountDistinctGrain(g) => s"cdg:$g"
-  }
   /** Human-readable label for guard/split messages: a bare column
     * reads as its name, patterns as their structural key. */
   private def patLabel(p: SrcPat): String = p match {
     case ColRef(n) => n
     case other => patKey(other)
   }
-  private def patKey(p: SrcPat): String = p match {
-    case ColRef(n) => s"col:$n"
-    case OneMinusProduct(a, b) => s"omp:$a:$b"
-    case e: ExprPat => s"expr:${ExprPat.canonOrdered(e.expr).toString}"
-  }
-  private def dedupeAggs(aggs: Seq[AggMap]): Seq[AggMap] = {
-    val seen = scala.collection.mutable.LinkedHashMap.empty[String, AggMap]
-    aggs.foreach(m => seen.getOrElseUpdate(aggKey(m), m))
-    seen.values.toSeq
-  }
+  /** Two demands for one measure share one member ([[AggMap.key]]). */
+  private def dedupeAggs(aggs: Seq[AggMap]): Seq[AggMap] = aggs.distinctBy(_.key)
 
   /** Read-inflation bound for pooling demands into one spec: a demand
     * whose merge group gains keys K reads the union-grain rollup, i.e.
@@ -1047,7 +1010,7 @@ object Advisor {
           // daily delta loop's normal state — must never share a
           // directory, or a memoized adopt would reuse the wrong files
           val shapeHash = math.abs(((grain +: keys.toSeq.sorted).mkString("_") +
-            dedupeAggs(g.flatMap(_.aggs)).map(aggKey).sorted.mkString("|"))
+            dedupeAggs(g.flatMap(_.aggs)).map(_.key).sorted.mkString("|"))
             .hashCode) % 1000000
           val slug = (if (!multi) ""
                       else "_" + (grain +: keys.toSeq.sorted).mkString("_")) +
@@ -1163,7 +1126,7 @@ object Advisor {
             // same shape-hash rule as the single path (round 15)
             val shapeHash = math.abs(((groupings ++ grains).toSeq.sorted.mkString("_") +
               timeGroupings.map(_._2).mkString("_") +
-              dedupeAggs(g.flatMap(_.aggs)).map(aggKey).sorted.mkString("|"))
+              dedupeAggs(g.flatMap(_.aggs)).map(_.key).sorted.mkString("|"))
               .hashCode) % 1000000
             val slug =
               (if (!multi) ""
@@ -1308,14 +1271,12 @@ object Advisor {
                 spark.read.parquet((t \ "path").extract[String])
                   .queryExecution.analyzed
             }.toMap
-            def pairs(v: org.json4s.JValue): Set[(String, String)] =
-              v.extract[List[List[String]]].map { case List(a, b) => (a, b) }.toSet
             scala.Right(JoinDemand(tables,
-              joinKeys = pairs(j \ "joinKeys"),
+              joinKeys = RollupRouting.pairsFromJson(j \ "joinKeys", path, "joinKeys"),
               groupings = (j \ "groupings").extract[List[String]].toSet,
               grainKeys = (j \ "grainKeys").extract[List[String]].toSet,
               aggs = (j \ "aggs").children.map(a => RollupRouting.aggFromJson(spark, a)),
-              timeKeys = pairs(j \ "timeKeys")))
+              timeKeys = RollupRouting.pairsFromJson(j \ "timeKeys", path, "timeKeys")))
           case k => scala.Left(s"capture: unknown demand kind $k")
         }
       (d, freq)
@@ -1344,7 +1305,7 @@ object Advisor {
       case Some((_, c)) => spec.grain != "all" && spec.timeCol == c
       case None => true
     }) &&
-    d.aggs.forall(a => spec.aggs.exists(b => aggKey(a) == aggKey(b)))
+    d.aggs.forall(a => spec.aggs.exists(_.key == a.key))
 
   /** [[servesSingle]] for the join path: same core (tables + join
     * keys), groupings/grains preserved, hour demands need the hourly
@@ -1355,7 +1316,7 @@ object Advisor {
     (d.grainKeys -- spec.grainCols.keySet -- spec.groupings.keySet).isEmpty &&
     d.timeKeys.forall { case (g, c) => spec.timeGroupings.exists {
       case (tg, _) => tg.col == c && (tg.grain == g || tg.grain == "hour") } } &&
-    d.aggs.forall(a => spec.aggs.exists(b => aggKey(a) == aggKey(b)))
+    d.aggs.forall(a => spec.aggs.exists(_.key == a.key))
 
   /** Advise OFFLINE from a [[captureWorkload]] file: reconstruct each
     * demand (the source scan re-opens from its recorded path — the

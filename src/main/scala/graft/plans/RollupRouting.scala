@@ -1,15 +1,16 @@
 package graft.plans
 
 import java.util.concurrent.atomic.AtomicReference
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, JoinHint, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{DateType, DecimalType, IntegerType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DateType, DecimalType, IntegerType, LongType, TimestampNTZType, TimestampType}
 
 /** Transparent materialized-rollup routing (SURVEY §4 / §7.3 stretch).
   *
@@ -583,16 +584,192 @@ object RollupRouting {
       }
   }
 
-  /** How one aggregate over the raw join rewrites onto the rollup. */
-  sealed trait AggMap
+  // ——— registry members: each defines its pieces once ———
+
+  /** Where a member's build finds its source measures: a pattern's
+    * expression over the build frame ([[buildPartials]]), or over a
+    * raw scan's attributes for the hybrid tail, where a missing column
+    * gives None. */
+  type Source = SrcPat => Option[Expression]
+
+  /** One rollup column a member writes. `build` is the one aggregate
+    * that computes it from the member's source measures. `merge`
+    * combines two partial rows of one group (build-side coarsening,
+    * compaction); None marks a rebuild-only column, which has no
+    * hybrid tail either, since a tail's partials re-merge with the
+    * rollup's under the final aggregate. */
+  final class Partial(val name: String, val build: Source => Option[Expression],
+                      val merge: Option[Column => Column])
+
+  private def mergeable(name: String, merge: Column => Column)
+                       (build: Source => Option[Expression]): Partial =
+    new Partial(name, build, Some(merge))
+  /** `f` over one source measure, as an aggregate expression. */
+  private def over(pat: SrcPat)(f: Expression => AggregateFunction)
+      : Source => Option[Expression] =
+    src => src(pat).map(f(_).toAggregateExpression())
+  private val Dec38_6 = DecimalType(38, 6)
+
+  /** One JSON field of a member: a measure pattern, a plain value, or
+    * the name of a rollup column the member writes ([[Out]] fields
+    * stay out of the dedupe key). */
+  sealed trait Field
+  final case class Pat(p: SrcPat) extends Field
+  final case class Str(s: String) extends Field
+  final case class Num(i: Int) extends Field
+  final case class Strs(ss: Seq[String]) extends Field
+  final case class Out(name: String) extends Field
+
+  /** A member's JSON fields, read back by name. */
+  final class Fields(spark: SparkSession, j: org.json4s.JValue) {
+    private implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    def str(n: String): String = (j \ n).extract[String]
+    def int(n: String): Int = (j \ n).extract[Int]
+    def strs(n: String): Seq[String] = (j \ n).extract[List[String]]
+    def pat(n: String): SrcPat = patFromJson(spark, j \ n)
+    /** r15 widened the sketch/set members to SrcPat sources (the -If
+      * combinator family); a pre-r15 catalog's bare "col" field loads
+      * as the degenerate ColRef. */
+    def patOrCol: SrcPat = (j \ "pat") match {
+      case org.json4s.JNothing => ColRef(str("col"))
+      case v => patFromJson(spark, v)
+    }
+  }
+
+  /** A member kind's JSON `kind`, its dedupe-key tag, and how its
+    * fields load back ([[aggFromJson]]). Every member's companion is
+    * one; [[codecs]] lists them. */
+  abstract class Codec(val kind: String, val tag: String) {
+    def decode(f: Fields): AggMap
+  }
+
+  /** What a member's read rewrite needs from the path that routes one
+    * query aggregate ([[RuleImpl]]'s `routeAggregates`):
+    *  - `resolve` maps a source expression through the Projects below
+    *    the query's aggregate;
+    *  - `attr` finds a rollup column by name;
+    *  - `inLattice` marks a grouping-set rewrite;
+    *  - `grainCount(g)` is the path's own [[CountDistinctGrain]] rule:
+    *    the expression whose COUNT over rollup rows equals
+    *    COUNT(DISTINCT g), or None where the spec's shape does not
+    *    make the rollup's rows one per distinct g;
+    *  - `aggs` is the whole spec (the avgIf pairing reads a sibling);
+    *  - `substitution` is the estimator-substitution switch;
+    *  - `tz` is the session time zone.
+    * A re-aggregated state gets a fresh resultId wherever a scalar
+    * wraps it ([[under]]): two AggregateExpressions sharing one id
+    * would collide in the aggregate buffer. */
+  final case class Read(resolve: Expression => Expression,
+                        attr: String => Option[Attribute],
+                        inLattice: Boolean,
+                        grainCount: String => Option[Expression],
+                        aggs: Seq[AggMap],
+                        substitution: Boolean,
+                        tz: String) {
+    def plain(ae: AggregateExpression): Boolean = !ae.isDistinct && ae.filter.isEmpty
+    def matches(p: SrcPat, se: Expression): Boolean = p.matchesOrdered(resolve(se))
+    def isBareRef(se: Expression, name: String): Boolean = resolve(se) match {
+      case a: AttributeReference => a.name == name
+      case _ => false
+    }
+    /** `ae` answered by `f` over rollup column `partial`, keeping its
+      * result id (the aggregate is the output itself). */
+    def onto(ae: AggregateExpression, partial: String)
+            (f: Attribute => AggregateFunction): Option[AggregateExpression] =
+      attr(partial).map(p => ae.copy(aggregateFunction = f(p), isDistinct = false))
+    /** [[onto]] under a fresh result id, for a state a scalar wraps. */
+    def under(ae: AggregateExpression, partial: String)
+             (f: Attribute => AggregateFunction): Option[AggregateExpression] =
+      onto(ae, partial)(f).map(_.copy(resultId = NamedExpression.newExprId))
+    /** Average's own decimal evaluate tree over a sum partial and a
+      * non-null-count partial: identical exact sum type (38,6),
+      * identical count, the identical single HALF_UP division to
+      * (38,10). */
+    def exactAvg(ae: AggregateExpression, mode: EvalMode.Value,
+                 sp: String, cp: String): Option[Expression] =
+      for (s <- under(ae, sp)(Sum(_)); c <- under(ae, cp)(Sum(_)))
+        yield DecimalDivideWithOverflowCheck(s, Cast(c, DecimalType(20, 0)),
+          DecimalType(38, 10), null, mode != EvalMode.ANSI)
+  }
+
+  /** How one aggregate over the raw source rewrites onto the rollup —
+    * every piece of one member, defined on the member. */
+  sealed trait AggMap extends scala.Product with Serializable {
+    /** The rollup columns the member writes, in build order. */
+    def partials: Seq[Partial]
+    /** Source columns the build reads (a join build's fact is the
+      * table that owns them). */
+    def refs: Set[String]
+    /** The query aggregate `ae` re-aggregated over the member's rollup
+      * column(s), when the member answers it. */
+    def read(ae: AggregateExpression, r: Read): Option[Expression]
+    /** A whole query expression above the aggregates the member answers
+      * at once (the capped distinct count); None for most members. */
+    def readWhole(e: Expression, r: Read): Option[Expression] = None
+    def codec: Codec
+    def fields: Seq[(String, Field)]
+    /** Structural dedupe key: two demands for the same measure key
+      * alike and share one partial column. Patterns key by
+      * [[patKey]]'s ORDER-SENSITIVE canon, the router's own equality,
+      * so patterns differing only by a value-changing cast stay
+      * distinct members (else the second query would never route). */
+    final def key: String = (codec.tag +: fields.collect {
+      case (_, Pat(p)) => patKey(p)
+      case (_, Str(s)) => s
+      case (_, Num(i)) => i.toString
+      case (_, Strs(ss)) => ss.mkString(",")
+    }).mkString(":")
+  }
+
   /** `SUM(expr-with-casts)` → `SUM(partial)` — lossless because the
     * partial is the exact DECIMAL partial of the same expression
     * ([[graft.ops.Fns.dsumPartial]]); the query's own outer casts are
     * preserved above the rewritten Sum. */
-  case class SumOf(pat: SrcPat, partial: String) extends AggMap
+  case class SumOf(pat: SrcPat, partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, F.sum)(over(pat)(e => Sum(Cast(e, Dec38_6)))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      // the Sum's child must be the EXACT dsum shape the partial was
+      // built from — `cast(expr as decimal(38,6))` — not any cast
+      // chain: a bare double sum routed onto decimal partials would
+      // change the result type and its rounding under a preserved
+      // ExprId (round 11)
+      case Sum(se, _) if r.plain(ae) && isExactPartialCast(r.resolve(se), pat.matchesOrdered) =>
+        r.onto(ae, partial)(Sum(_))
+      // avgIf (round 14): Average over a PATTERN measure pairs this
+      // sum with the CountOf counting the SAME pattern's non-null
+      // rows — Average's numerator and denominator, from two partials
+      case Average(se, mode)
+          if r.plain(ae) && isExactPartialCast(r.resolve(se), pat.matchesOrdered) =>
+        r.aggs.collectFirst { case CountOf(p, cp) if samePattern(p, pat) => cp }
+          .flatMap(r.exactAvg(ae, mode, partial, _))
+      case _ => None
+    }
+    def codec = SumOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial))
+  }
+  object SumOf extends Codec("sum", "sum") {
+    def decode(f: Fields): AggMap = SumOf(f.pat("pat"), f.str("partial"))
+  }
   /** `COUNT(*)` / `COUNT(lit)` → `SUM(partial)` of the per-group row
-    * count. */
-  case class CountStarTo(partial: String) extends AggMap
+    * count. COUNT is non-nullable and 0 on empty input; SUM of the
+    * partial is nullable and null on empty — a coalesce restores the
+    * exact contract (schema AND the empty-group value). */
+  case class CountStarTo(partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, F.sum)(
+      _ => Some(Count(Seq(Literal(1))).toAggregateExpression())))
+    def refs = Set.empty[String]
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case Count(children) if r.plain(ae) && children.forall(_.isInstanceOf[Literal]) =>
+        r.onto(ae, partial)(Sum(_)).map(s => Coalesce(Seq(s, Literal(0L))))
+      case _ => None
+    }
+    def codec = CountStarTo
+    def fields = Seq("partial" -> Out(partial))
+  }
+  object CountStarTo extends Codec("count", "count") {
+    def decode(f: Fields): AggMap = CountStarTo(f.str("partial"))
+  }
   /** `COUNT(expr)` — the NULL-SKIPPING count of any pattern measure —
     * → `SUM(partial)` of the per-group non-null count (round 14).
     * Counts add across any regrouping, so the member is fully
@@ -602,18 +779,74 @@ object RollupRouting {
     * conditional count routes (its non-match branch is NULL, exactly
     * the null-skipping this member stores). Bare `count(col)` over a
     * nullable column is the degenerate ColRef form. */
-  case class CountOf(pat: SrcPat, partial: String) extends AggMap
+  case class CountOf(pat: SrcPat, partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, F.sum)(over(pat)(e => Count(Seq(e)))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case Count(Seq(se)) if r.plain(ae) && r.matches(pat, se) =>
+        r.onto(ae, partial)(Sum(_)).map(s => Coalesce(Seq(s, Literal(0L))))
+      case _ => None
+    }
+    def codec = CountOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial))
+  }
+  object CountOf extends Codec("countOf", "countof") {
+    def decode(f: Fields): AggMap = CountOf(f.pat("pat"), f.str("partial"))
+  }
   /** `COUNT(DISTINCT grainCol)` → `COUNT(*)` over the rollup — valid
     * exactly because `grainCol` IS the rollup's grain (one rollup row
-    * per distinct value). */
-  case class CountDistinctGrain(grainCol: String) extends AggMap
+    * per distinct value), so the member writes no column. The read
+    * uses the path's own grain rule (`grainCount`), and NEVER inside a
+    * grouping-set lattice: a subtotal group holds more rollup rows
+    * than distinct grain values (the SetOf and BitmapUniqOf states
+    * ARE subtotal-safe — set union). */
+  case class CountDistinctGrain(grainCol: String) extends AggMap {
+    def partials = Nil
+    def refs = Set.empty[String]
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case Count(Seq(se))
+          if !r.inLattice && ae.isDistinct && ae.filter.isEmpty && r.isBareRef(se, grainCol) =>
+        r.grainCount(grainCol).map(c =>
+          ae.copy(aggregateFunction = Count(Seq(c)), isDistinct = false))
+      case _ => None
+    }
+    def codec = CountDistinctGrain
+    def fields = Seq("grainCol" -> Str(grainCol))
+  }
+  object CountDistinctGrain extends Codec("countDistinctGrain", "cdg") {
+    def decode(f: Fields): AggMap = CountDistinctGrain(f.str("grainCol"))
+  }
   /** `MIN(col)` → `MIN(partial)`. Routes only a BARE column reference
     * (a cast in between could reorder or change the output type under
     * a preserved ExprId — round-11 tightening; SUM tolerates the dsum
     * cast because the decimal partial subsumes it exactly). */
-  case class MinOf(col: String, partial: String) extends AggMap
+  case class MinOf(col: String, partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, F.min)(over(ColRef(col))(Min(_))))
+    def refs = Set(col)
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case Min(se) if r.plain(ae) && r.isBareRef(se, col) => r.onto(ae, partial)(Min(_))
+      case _ => None
+    }
+    def codec = MinOf
+    def fields = Seq("col" -> Str(col), "partial" -> Out(partial))
+  }
+  object MinOf extends Codec("min", "min") {
+    def decode(f: Fields): AggMap = MinOf(f.str("col"), f.str("partial"))
+  }
   /** `MAX(col)` → `MAX(partial)`; same bare-reference rule. */
-  case class MaxOf(col: String, partial: String) extends AggMap
+  case class MaxOf(col: String, partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, F.max)(over(ColRef(col))(Max(_))))
+    def refs = Set(col)
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case Max(se) if r.plain(ae) && r.isBareRef(se, col) => r.onto(ae, partial)(Max(_))
+      case _ => None
+    }
+    def codec = MaxOf
+    def fields = Seq("col" -> Str(col), "partial" -> Out(partial))
+  }
+  object MaxOf extends Codec("max", "max") {
+    def decode(f: Fields): AggMap = MaxOf(f.str("col"), f.str("partial"))
+  }
   /** `AVG(cast(col as decimal(38,6)))` → the EXACT decimal average
     * from partials (round 12, SURVEY A6's "avg must be kept as
     * sum+count" made transparent). AVG is not generally routable —
@@ -628,8 +861,29 @@ object RollupRouting {
     * routed≡live compare). CONTRACT: `cntPartial` must count exactly
     * the NON-NULL `col` rows per group — `count(col)`, not
     * `count(*)` — or a null-bearing source averages wrong; the
-    * default block's `vn_partial` is built that way. */
-  case class AvgOf(col: String, sumPartial: String, cntPartial: String) extends AggMap
+    * default block's `vn_partial` is built that way. A bare double
+    * avg stays live (not bit-reproducible from decimal partials). */
+  case class AvgOf(col: String, sumPartial: String, cntPartial: String) extends AggMap {
+    def partials = Seq(
+      mergeable(sumPartial, F.sum)(over(ColRef(col))(e => Sum(Cast(e, Dec38_6)))),
+      mergeable(cntPartial, F.sum)(over(ColRef(col))(e => Count(Seq(e)))))
+    def refs = Set(col)
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case Average(se, mode) if r.plain(ae) && isExactPartialCast(r.resolve(se), {
+             case a: AttributeReference => a.name == col
+             case _ => false
+           }) =>
+        r.exactAvg(ae, mode, sumPartial, cntPartial)
+      case _ => None
+    }
+    def codec = AvgOf
+    def fields =
+      Seq("col" -> Str(col), "sumPartial" -> Out(sumPartial), "cntPartial" -> Out(cntPartial))
+  }
+  object AvgOf extends Codec("avg", "avg") {
+    def decode(f: Fields): AggMap =
+      AvgOf(f.str("col"), f.str("sumPartial"), f.str("cntPartial"))
+  }
   /** `hll_sketch_agg(col, lgK)` (usually under `hll_sketch_estimate`)
     * → `hll_union_agg(partial)` when the rollup stores the per-group
     * Datasketches-HLL SKETCH STATE `hll_sketch_agg(col, lgK)` as a
@@ -652,8 +906,32 @@ object RollupRouting {
     * approx function's own accuracy contract, which also unlocks
     * CUBE/ROLLUP distinct-count dashboards (states union across any
     * subtotal regrouping, where exact COUNT(DISTINCT) never can). */
-  case class HllUniqOf(pat: SrcPat, partial: String, lgK: Int = 12) extends AggMap
-  object HllUniqOf {
+  case class HllUniqOf(pat: SrcPat, partial: String, lgK: Int = 12) extends AggMap {
+    def partials =
+      Seq(mergeable(partial, F.hll_union_agg)(over(pat)(HllSketchAgg(_, Literal(lgK)))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      // both node types are BinaryType, so the preserved ExprId keeps
+      // its type
+      case hs: HllSketchAgg if r.plain(ae) && r.matches(pat, hs.left) && (hs.right match {
+             case Literal(k: Int, _) => k == lgK
+             case _ => false
+           }) =>
+        r.onto(ae, partial)(HllUnionAgg(_, Literal(false)))
+      // approx_count_distinct (HLL++) onto the SAME state (round 13):
+      // estimator substitution, routed only where the registered
+      // sketch's rsd is at or under the query's own tolerance
+      case h: HyperLogLogPlusPlus
+          if r.plain(ae) && r.matches(pat, h.child) &&
+             hllRsd(lgK) <= h.relativeSD && r.substitution =>
+        r.under(ae, partial)(HllUnionAgg(_, Literal(false))).map(HllSketchEstimate(_))
+      case _ => None
+    }
+    def codec = HllUniqOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial), "lgK" -> Num(lgK))
+  }
+  object HllUniqOf extends Codec("hllUniq", "hll") {
+    def decode(f: Fields): AggMap = HllUniqOf(f.patOrCol, f.str("partial"), f.int("lgK"))
     /** Bare-column registration shorthand (the pre-r15 surface). */
     def apply(col: String, partial: String): HllUniqOf =
       HllUniqOf(ColRef(col), partial)
@@ -690,8 +968,42 @@ object RollupRouting {
     * form; default accuracy 10000 is ~100× tighter than k = 200 and
     * correctly stays live; `spark.graft.routing.estimatorSubstitution
     * = false` disables, same as the HLL++ rule). */
-  case class KllQuantileOf(pat: SrcPat, partial: String, k: Int = 200) extends AggMap
-  object KllQuantileOf {
+  case class KllQuantileOf(pat: SrcPat, partial: String, k: Int = 200) extends AggMap {
+    def partials = Seq(mergeable(partial, graft.expr.Kll.merge(_, k))(
+      over(pat)(graft.expr.KllDoublesAgg(_, k))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case ka: graft.expr.KllDoublesAgg if r.plain(ae) && r.matches(pat, ka.child) && ka.k == k =>
+        r.onto(ae, partial)(graft.expr.KllMergeAgg(_, k))
+      // percentile_approx (GK) under RANK dominance: scalar double
+      // form only (the substituted estimate must keep the output type)
+      case pa: ApproximatePercentile
+          if r.plain(ae) &&
+             pa.dataType == org.apache.spark.sql.types.DoubleType &&
+             r.matches(pat, pa.child) &&
+             pa.percentageExpression.foldable &&
+             pa.accuracyExpression.foldable &&
+             r.substitution && {
+               val acc = pa.accuracyExpression.eval() match {
+                 case i: Int => i.toDouble
+                 case l: Long => l.toDouble
+                 case _ => Double.MaxValue
+               }
+               kllRankError(k) <= 1.0 / acc
+             } =>
+        pa.percentageExpression.eval() match {
+          case d: Double =>
+            r.under(ae, partial)(graft.expr.KllMergeAgg(_, k))
+              .map(graft.expr.KllQuantileEst(_, d))
+          case _ => None // array percentages stay live
+        }
+      case _ => None
+    }
+    def codec = KllQuantileOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial), "k" -> Num(k))
+  }
+  object KllQuantileOf extends Codec("kllQuantile", "kll") {
+    def decode(f: Fields): AggMap = KllQuantileOf(f.patOrCol, f.str("partial"), f.int("k"))
     /** Bare-column registration shorthand (the pre-r15 surface). */
     def apply(col: String, partial: String): KllQuantileOf =
       KllQuantileOf(ColRef(col), partial)
@@ -719,8 +1031,29 @@ object RollupRouting {
     * item-type equality between the estimate over the partial and the
     * query's own output (a widening the tree match tolerates must not
     * change the routed type). */
-  case class TopKOf(pat: SrcPat, partial: String, maxItems: Int = 10000) extends AggMap
-  object TopKOf {
+  case class TopKOf(pat: SrcPat, partial: String, maxItems: Int = 10000) extends AggMap {
+    def partials = Seq(mergeable(partial,
+        F.call_function("approx_top_k_combine", _, F.lit(maxItems)))(
+      over(pat)(ApproxTopKAccumulate(_, Literal(maxItems)))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case t: ApproxTopK if r.plain(ae) && r.matches(pat, t.expr) && t.k.foldable &&
+             (t.maxItemsTracked match {
+               case Literal(i: Int, _) => i == maxItems
+               case _ => false
+             }) =>
+        r.under(ae, partial)(ApproxTopKCombine(_, Literal(maxItems)))
+          .map(ApproxTopKEstimate(_, t.k))
+          .filter(est => try est.dataType == ae.dataType
+                         catch { case scala.util.control.NonFatal(_) => false })
+      case _ => None
+    }
+    def codec = TopKOf
+    def fields =
+      Seq("pat" -> Pat(pat), "partial" -> Out(partial), "maxItems" -> Num(maxItems))
+  }
+  object TopKOf extends Codec("topK", "topk") {
+    def decode(f: Fields): AggMap = TopKOf(f.patOrCol, f.str("partial"), f.int("maxItems"))
     /** Bare-column registration shorthand (the pre-r15 surface). */
     def apply(col: String, partial: String): TopKOf =
       TopKOf(ColRef(col), partial)
@@ -746,8 +1079,33 @@ object RollupRouting {
     * THEN col END)`; collect_set skips NULLs, so the state is the
     * conditional set exactly), with an element-type guard on the
     * routed array. */
-  case class SetOf(pat: SrcPat, partial: String) extends AggMap
-  object SetOf {
+  case class SetOf(pat: SrcPat, partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, c => F.array_distinct(F.flatten(F.collect_list(c))))(
+      over(pat)(CollectSet(_))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      // uniqExact / uniqExactIf (round 15): the EXACT COUNT(DISTINCT
+      // expr) from the distinct-set state — count-distinct skips NULLs
+      // exactly like the collect_set that built the state
+      case Count(Seq(se)) if ae.isDistinct && ae.filter.isEmpty && r.matches(pat, se) =>
+        r.under(ae, partial)(CollectList(_))
+          .map(m => Cast(Size(ArrayDistinct(Flatten(m)), false), LongType))
+      // the union of per-group set partials IS the single-pass set; the
+      // routed array's element type is the partial's, so it must equal
+      // the query's (r15 pattern sources, setIf)
+      case cs: CollectSet if r.plain(ae) && r.matches(pat, cs.child) &&
+             r.attr(partial).exists(_.dataType match {
+               case ArrayType(et, _) => et == cs.child.dataType
+               case _ => false
+             }) =>
+        r.under(ae, partial)(CollectList(_)).map(m => ArrayDistinct(Flatten(m)))
+      case _ => None
+    }
+    def codec = SetOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial))
+  }
+  object SetOf extends Codec("setUniq", "set") {
+    def decode(f: Fields): AggMap = SetOf(f.patOrCol, f.str("partial"))
     /** Bare-column registration shorthand (the pre-r15 surface). */
     def apply(col: String, partial: String): SetOf = SetOf(ColRef(col), partial)
   }
@@ -763,8 +1121,32 @@ object RollupRouting {
     * (a different cap is a different state). The whole-expression
     * `least(...)` shape is matched at the output level (the distinct
     * aggregate alone is NOT mergeable — only the capped form is). */
-  case class UniqUpToOf(pat: SrcPat, partial: String, n: Int) extends AggMap
-  object UniqUpToOf {
+  case class UniqUpToOf(pat: SrcPat, partial: String, n: Int) extends AggMap {
+    def partials = Seq(mergeable(partial,
+        c => F.slice(F.array_distinct(F.flatten(F.collect_list(c))), 1, n + 1))(
+      src => over(pat)(CollectSet(_))(src).map(Slice(_, Literal(1), Literal(n + 1)))))
+    def refs = pat.refs
+    /** The distinct aggregate alone is not mergeable; see [[readWhole]]. */
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = None
+    /** The whole `least(count(DISTINCT col), n+1)` output maps onto the
+      * capped set, where the limit literal is visible. */
+    override def readWhole(e: Expression, r: Read): Option[Expression] = e match {
+      case Least(Seq(ae: AggregateExpression, limE))
+          if limE.foldable && limE.dataType == LongType &&
+             limE.eval().asInstanceOf[Long] == n + 1 => (ae.aggregateFunction match {
+        case Count(Seq(se)) if ae.isDistinct && ae.filter.isEmpty && r.matches(pat, se) =>
+          r.under(ae, partial)(CollectList(_)).map(m => Least(Seq(
+            Cast(Size(ArrayDistinct(Flatten(m)), false), LongType),
+            Literal((n + 1).toLong))))
+        case _ => None
+      })
+      case _ => None
+    }
+    def codec = UniqUpToOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial), "n" -> Num(n))
+  }
+  object UniqUpToOf extends Codec("uniqUpTo", "upto") {
+    def decode(f: Fields): AggMap = UniqUpToOf(f.patOrCol, f.str("partial"), f.int("n"))
     /** Bare-column registration shorthand (the pre-r15 surface). */
     def apply(col: String, partial: String, n: Int): UniqUpToOf =
       UniqUpToOf(ColRef(col), partial, n)
@@ -794,8 +1176,29 @@ object RollupRouting {
     * Non-integral sources are refused at build time
     * ([[graft.expr.Bitmap.integralCheck]]): hashing first would trade
     * exactness for collision risk. */
-  case class BitmapUniqOf(pat: SrcPat, partial: String) extends AggMap
-  object BitmapUniqOf {
+  case class BitmapUniqOf(pat: SrcPat, partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, graft.expr.Bmp.merge)(over(pat)(graft.expr.BitmapAgg(_))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case Count(Seq(se)) if ae.isDistinct && ae.filter.isEmpty && r.matches(pat, se) =>
+        r.under(ae, partial)(graft.expr.BitmapMergeAgg(_)).map(graft.expr.BitmapCardinality(_))
+      // the explicit state read `graft_bitmap_agg(col)` re-aggregates as
+      // the OR-union of the stored states — bit-equal (canonical
+      // serialized form of the identical exact set)
+      case ba: graft.expr.BitmapAgg if r.plain(ae) && r.matches(pat, ba.child) =>
+        r.onto(ae, partial)(graft.expr.BitmapMergeAgg(_))
+      // approx_count_distinct onto the EXACT state: a zero-error answer
+      // dominates ANY requested tolerance (values remain plan-dependent
+      // — the same switch as the HLL member)
+      case h: HyperLogLogPlusPlus if r.plain(ae) && r.matches(pat, h.child) && r.substitution =>
+        r.under(ae, partial)(graft.expr.BitmapMergeAgg(_)).map(graft.expr.BitmapCardinality(_))
+      case _ => None
+    }
+    def codec = BitmapUniqOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial))
+  }
+  object BitmapUniqOf extends Codec("bitmapUniq", "bitmap") {
+    def decode(f: Fields): AggMap = BitmapUniqOf(f.patOrCol, f.str("partial"))
     def apply(col: String, partial: String): BitmapUniqOf =
       BitmapUniqOf(ColRef(col), partial)
   }
@@ -815,8 +1218,20 @@ object RollupRouting {
     * here (theta is exact only below nominal entries — that claim
     * belongs to the set/bitmap members); only the explicit theta
     * vocabulary routes. */
-  case class ThetaUniqOf(pat: SrcPat, partial: String, lgK: Int = 12) extends AggMap
-  object ThetaUniqOf {
+  case class ThetaUniqOf(pat: SrcPat, partial: String, lgK: Int = 12) extends AggMap {
+    def partials = Seq(mergeable(partial, graft.expr.Tht.union(_, lgK))(
+      over(pat)(graft.expr.ThetaAgg(_, lgK))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case ta: graft.expr.ThetaAgg if r.plain(ae) && r.matches(pat, ta.child) && ta.lgK == lgK =>
+        r.onto(ae, partial)(graft.expr.ThetaUnionAgg(_, lgK))
+      case _ => None
+    }
+    def codec = ThetaUniqOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial), "lgK" -> Num(lgK))
+  }
+  object ThetaUniqOf extends Codec("thetaUniq", "theta") {
+    def decode(f: Fields): AggMap = ThetaUniqOf(f.patOrCol, f.str("partial"), f.int("lgK"))
     def apply(col: String, partial: String): ThetaUniqOf =
       ThetaUniqOf(ColRef(col), partial)
     def apply(col: String, partial: String, lgK: Int): ThetaUniqOf =
@@ -844,8 +1259,34 @@ object RollupRouting {
     * step))`, where the guard's NULLs bound the state to qualifying
     * events); a bare-column collect_list stays register-only, like
     * ClickHouse's groupArray MVs. */
-  case class ListOf(pat: SrcPat, partial: String) extends AggMap
-  object ListOf {
+  case class ListOf(pat: SrcPat, partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, c => F.flatten(F.collect_list(c)))(
+      over(pat)(CollectList(_))))
+    def refs = pat.refs
+    /** The parquet roundtrip relaxes struct-field nullability inside
+      * the stored element type, so nullability must not block the
+      * rewrite; a rollup built from the RAW scan may store the
+      * pre-loader NTZ label where the query reads TimestampType —
+      * value-identical under the pinned-UTC session, aligned by an
+      * explicit element cast (round 16, [[relabelFlatten]]). */
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case cl: CollectList if r.plain(ae) && r.matches(pat, cl.child) =>
+        val q = cl.child.dataType
+        for {
+          stored <- r.attr(partial).map(_.dataType) if (stored match {
+            case ArrayType(et, _) =>
+              Bridge.sameTypeIgnoreNullability(et, q) || relabelOnly(et, q, r.tz)
+            case _ => false
+          })
+          m <- r.under(ae, partial)(CollectList(_))
+        } yield relabelFlatten(m, stored, q, r.tz)
+      case _ => None
+    }
+    def codec = ListOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial))
+  }
+  object ListOf extends Codec("groupArray", "list") {
+    def decode(f: Fields): AggMap = ListOf(f.patOrCol, f.str("partial"))
     def apply(col: String, partial: String): ListOf = ListOf(ColRef(col), partial)
   }
   /** `graft_topk_weighted_agg(item, weight[, maxMapSize])` (usually
@@ -873,8 +1314,27 @@ object RollupRouting {
     * registered maxMapSize must equal the query's (a different
     * capacity is a different sketch). */
   case class TopKWeightedOf(itemPat: SrcPat, weightPat: SrcPat,
-                            partial: String, maxMapSize: Int = 1024) extends AggMap
-  object TopKWeightedOf {
+                            partial: String, maxMapSize: Int = 1024) extends AggMap {
+    def partials = Seq(mergeable(partial, graft.expr.TkW.merge(_, maxMapSize))(src =>
+      for (i <- src(itemPat); w <- src(weightPat))
+        yield graft.expr.TopKWeightedAgg(i, w, maxMapSize).toAggregateExpression()))
+    def refs = itemPat.refs ++ weightPat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      // the `graft_topk_weighted(st, k)` estimate scalar above survives
+      // the rewrite untouched
+      case tk: graft.expr.TopKWeightedAgg
+          if r.plain(ae) && r.matches(itemPat, tk.left) && r.matches(weightPat, tk.right) &&
+             tk.maxMapSize == maxMapSize =>
+        r.onto(ae, partial)(graft.expr.TopKWeightedMergeAgg(_, maxMapSize))
+      case _ => None
+    }
+    def codec = TopKWeightedOf
+    def fields = Seq("item" -> Pat(itemPat), "weight" -> Pat(weightPat),
+      "partial" -> Out(partial), "maxMapSize" -> Num(maxMapSize))
+  }
+  object TopKWeightedOf extends Codec("topKWeighted", "topkw") {
+    def decode(f: Fields): AggMap = TopKWeightedOf(f.pat("item"), f.pat("weight"),
+      f.str("partial"), f.int("maxMapSize"))
     def apply(item: String, weight: String, partial: String): TopKWeightedOf =
       TopKWeightedOf(ColRef(item), ColRef(weight), partial)
   }
@@ -890,8 +1350,36 @@ object RollupRouting {
     * value-changing cast orders rows differently and must stay live)
     * PLUS a result-type equality guard (a differently-typed struct
     * must not rewrite under a preserved ExprId). */
-  case class MinPatOf(pat: SrcPat, partial: String) extends AggMap
-  case class MaxPatOf(pat: SrcPat, partial: String) extends AggMap
+  case class MinPatOf(pat: SrcPat, partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, F.min)(over(pat)(Min(_))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case Min(se) if r.plain(ae) && r.matches(pat, se) &&
+                      r.attr(partial).exists(_.dataType == se.dataType) =>
+        r.onto(ae, partial)(Min(_))
+      case _ => None
+    }
+    def codec = MinPatOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial))
+  }
+  object MinPatOf extends Codec("minPat", "minpat") {
+    def decode(f: Fields): AggMap = MinPatOf(f.pat("pat"), f.str("partial"))
+  }
+  case class MaxPatOf(pat: SrcPat, partial: String) extends AggMap {
+    def partials = Seq(mergeable(partial, F.max)(over(pat)(Max(_))))
+    def refs = pat.refs
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = ae.aggregateFunction match {
+      case Max(se) if r.plain(ae) && r.matches(pat, se) &&
+                      r.attr(partial).exists(_.dataType == se.dataType) =>
+        r.onto(ae, partial)(Max(_))
+      case _ => None
+    }
+    def codec = MaxPatOf
+    def fields = Seq("pat" -> Pat(pat), "partial" -> Out(partial))
+  }
+  object MaxPatOf extends Codec("maxPat", "maxpat") {
+    def decode(f: Fields): AggMap = MaxPatOf(f.pat("pat"), f.str("partial"))
+  }
   /** ClickHouse's `deltaSumTimestamp` state (round 19 — the r18
     * verdict's #2): per group, the ORDER-AWARE positive-delta partial
     * `struct(first, last, dsum)` of the measure's series sorted by
@@ -917,7 +1405,27 @@ object RollupRouting {
     * through out-of-order merges), so [[mergeColumnMap]] refuses
     * compaction for specs carrying it. */
   case class DeltaSumOf(pat: SrcPat, orderCols: Seq[String],
-                        partial: String) extends AggMap
+                        partial: String) extends AggMap {
+    def partials = Seq(seriesState(partial, pat, orderCols) { seq =>
+      val zero = F.struct(F.lit(null).cast("long").as("first"),
+        F.lit(null).cast("long").as("last"), F.lit(0L).as("dsum"))
+      F.aggregate(seq, zero, (acc, x) => F.struct(
+        F.coalesce(acc.getField("first"), x.getField("__m")).as("first"),
+        x.getField("__m").as("last"),
+        (acc.getField("dsum") + F.coalesce(
+          F.when(x.getField("__m") > acc.getField("last"),
+            x.getField("__m") - acc.getField("last")), F.lit(0L))).as("dsum")))
+    })
+    def refs = pat.refs ++ orderCols
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = None
+    def codec = DeltaSumOf
+    def fields =
+      Seq("pat" -> Pat(pat), "orderCols" -> Strs(orderCols), "partial" -> Out(partial))
+  }
+  object DeltaSumOf extends Codec("deltaSum", "deltasum") {
+    def decode(f: Fields): AggMap =
+      DeltaSumOf(f.pat("pat"), f.strs("orderCols"), f.str("partial"))
+  }
   /** The MAX-PREFIX-SUM monoid (round 19) — the mergeable state behind
     * sweep-line PEAKS (`maxIntersections`): per group, over the
     * measure's series sorted by `orderCols`, the struct
@@ -932,7 +1440,55 @@ object RollupRouting {
     * Aggregate) and REBUILD-ONLY (same-group partial rows have no
     * defined merge). */
   case class MaxPrefixOf(pat: SrcPat, orderCols: Seq[String],
-                         partial: String) extends AggMap
+                         partial: String) extends AggMap {
+    // at_us is the EARLIEST point achieving the max prefix (strict >
+    // keeps the first)
+    def partials = Seq(seriesState(partial, pat, orderCols) { seq =>
+      val zero = F.struct(F.lit(0L).as("tot"),
+        F.lit(Long.MinValue).as("maxp"), F.lit(0L).as("at_us"))
+      F.aggregate(seq, zero, (acc, x) => {
+        val newTot = acc.getField("tot") + x.getField("__m")
+        val isNew = newTot > acc.getField("maxp")
+        F.struct(newTot.as("tot"),
+          F.when(isNew, newTot).otherwise(acc.getField("maxp")).as("maxp"),
+          F.when(isNew, F.unix_micros(x.getField(orderCols.head)))
+            .otherwise(acc.getField("at_us")).as("at_us"))
+      })
+    })
+    def refs = pat.refs ++ orderCols
+    def read(ae: AggregateExpression, r: Read): Option[Expression] = None
+    def codec = MaxPrefixOf
+    def fields =
+      Seq("pat" -> Pat(pat), "orderCols" -> Strs(orderCols), "partial" -> Out(partial))
+  }
+  object MaxPrefixOf extends Codec("maxPrefix", "maxprefix") {
+    def decode(f: Fields): AggMap =
+      MaxPrefixOf(f.pat("pat"), f.strs("orderCols"), f.str("partial"))
+  }
+
+  /** The build of a REBUILD-ONLY series state ([[DeltaSumOf]],
+    * [[MaxPrefixOf]]): ONE sorted in-group pass collects (orderCols...,
+    * measure) — orderCols must totally order the group's rows — and
+    * `fold` reduces it in a single aggregate(). The collect is
+    * build-time-only and bounded by the group's own rows, never carried
+    * into any read; the measure field is aliased __m so it can never
+    * collide with an orderCols name inside the collected struct. No
+    * merge: two partial rows of one group may interleave in series
+    * order. */
+  private def seriesState(name: String, pat: SrcPat, orderCols: Seq[String])
+                         (fold: Column => Column): Partial =
+    new Partial(name, src => {
+      val ord = orderCols.map(c => src(ColRef(c)))
+      for (m <- src(pat) if ord.forall(_.isDefined))
+        yield Bridge.expressionEager(fold(F.sort_array(F.collect_list(F.struct(
+          ord.flatten.map(Bridge.column) :+ Bridge.column(m).cast("long").as("__m"): _*)))))
+    }, merge = None)
+
+  /** Every member kind, by JSON kind ([[aggFromJson]]). */
+  private val codecs: Map[String, Codec] = Seq[Codec](SumOf, CountStarTo, CountOf,
+    CountDistinctGrain, MinOf, MaxOf, AvgOf, HllUniqOf, KllQuantileOf, TopKOf, SetOf,
+    UniqUpToOf, BitmapUniqOf, ThetaUniqOf, ListOf, TopKWeightedOf, MinPatOf, MaxPatOf,
+    DeltaSumOf, MaxPrefixOf).map(c => c.kind -> c).toMap
 
   /** A pattern's expression form, for cross-member comparison (the
     * avgIf pairing, round 14). */
@@ -944,33 +1500,126 @@ object RollupRouting {
         org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq(b))))
     case ExprPat(e) => e
   }
+  /** A pattern's structural key: ORDER-SENSITIVE canon
+    * ([[ExprPat.canonOrdered]]) for expressions, the router's equality. */
+  private[plans] def patKey(p: SrcPat): String = p match {
+    case ColRef(n) => s"col:$n"
+    case OneMinusProduct(a, b) => s"omp:$a:$b"
+    case e: ExprPat => s"expr:${ExprPat.canonOrdered(e.expr).toString}"
+  }
   /** Two patterns denote the same measure (value-preserving canon). */
   private[plans] def samePattern(a: SrcPat, b: SrcPat): Boolean =
     ExprPat.canonOrdered(patExpr(a)) == ExprPat.canonOrdered(patExpr(b))
 
-  /** The rollup column an AggMap writes — used to recognize the
-    * rule's own hybrid-tail partial block (fixed-point guard). */
-  private def partialName(m: AggMap): Option[String] = m match {
-    case SumOf(_, p) => Some(p)
-    case CountStarTo(p) => Some(p)
-    case CountOf(_, p) => Some(p)
-    case MinOf(_, p) => Some(p)
-    case MaxOf(_, p) => Some(p)
-    case AvgOf(_, _, p) => Some(p)
-    case HllUniqOf(_, p, _) => Some(p)
-    case KllQuantileOf(_, p, _) => Some(p)
-    case TopKOf(_, p, _) => Some(p)
-    case SetOf(_, p) => Some(p)
-    case UniqUpToOf(_, p, _) => Some(p)
-    case BitmapUniqOf(_, p) => Some(p)
-    case ThetaUniqOf(_, p, _) => Some(p)
-    case ListOf(_, p) => Some(p)
-    case TopKWeightedOf(_, _, p, _) => Some(p)
-    case MinPatOf(_, p) => Some(p)
-    case MaxPatOf(_, p) => Some(p)
-    case DeltaSumOf(_, _, p) => Some(p)
-    case MaxPrefixOf(_, _, p) => Some(p)
-    case CountDistinctGrain(_) => None
+  /** The exact shape every decimal partial is built from
+    * ([[graft.ops.Fns.dsumPartial]]): `cast(<source expr> as
+    * decimal(38,6))` with `inner` matching the source expression.
+    * Routing a SUM requires this exact cast — the partial column IS
+    * `sum(cast(expr as decimal(38,6)))` per group, so only that
+    * aggregate re-aggregates bit-identically (a bare double sum has
+    * different type and rounding; a different-precision cast is a
+    * different number). */
+  private[plans] def isExactPartialCast(e: Expression,
+                                        inner: Expression => Boolean): Boolean = e match {
+    case Cast(x, dt: org.apache.spark.sql.types.DecimalType, _, _) =>
+      dt.precision == 38 && dt.scale == 6 && inner(x)
+    // the optimizer pushes the exact cast INTO conditional branches
+    // (`sum(cast(CASE … END as dec))` → `sum(CASE … cast(v) …
+    // END)`, PushFoldableIntoBranches/SimplifyCasts) — value-equal
+    // because a cast distributes over branches and NULL stays NULL,
+    // so unwrap each branch's dec(38,6) cast and match the CASE the
+    // measure registered (round 14, the -If members' spelling)
+    case cw @ CaseWhen(branches, elseV)
+        if branches.nonEmpty && branches.forall {
+             case (_, Cast(_, dt: org.apache.spark.sql.types.DecimalType, _, _)) =>
+               dt.precision == 38 && dt.scale == 6
+             case _ => false
+           } && elseV.forall {
+             case Cast(_, dt: org.apache.spark.sql.types.DecimalType, _, _) =>
+               dt.precision == 38 && dt.scale == 6
+             case Literal(null, _) => true
+             case _ => false
+           } =>
+      def unwrap(x: Expression): Expression = x match {
+        case Cast(c, _, _, _) => c
+        case Literal(null, _) => Literal(null, org.apache.spark.sql.types.NullType)
+        case other => other
+      }
+      inner(CaseWhen(branches.map { case (c, v) => (c, unwrap(v)) },
+                     elseV.map(unwrap)))
+    case _ => false
+  }
+
+  /** True when two types differ only by the loader-contract
+    * timestamp relabel (TimestampNTZ vs Timestamp) at any nesting —
+    * a cast between them changes no value under the pinned-UTC
+    * session (round 14). */
+  private[plans] def relabelOnly(from: org.apache.spark.sql.types.DataType,
+                                 to: org.apache.spark.sql.types.DataType,
+                                 tz: String): Boolean = {
+    import org.apache.spark.sql.types._
+    (from, to) match {
+      case (f, t) if f == t => true
+      // the NTZ<->TZ relabel is value-preserving ONLY under the
+      // pinned-UTC session (the loader contract); a non-UTC session
+      // would silently SHIFT stored timestamps, so the rewrite
+      // degrades to no-route there instead (round 17, review
+      // finding). UTC is recognized by ZONE RULES, not string
+      // equality — "Etc/UTC"/"GMT"/"+00:00" are all the same fixed
+      // zero offset and must not silently disable routing.
+      case (TimestampNTZType, TimestampType) =>
+        scala.util.Try(java.time.ZoneId.of(tz).normalized() == java.time.ZoneOffset.UTC)
+          .getOrElse(false)
+      case (f: StructType, t: StructType) =>
+        f.length == t.length && f.fields.zip(t.fields).forall { case (a, b) =>
+          a.name == b.name && relabelOnly(a.dataType, b.dataType, tz) }
+      case (f: ArrayType, t: ArrayType) =>
+        relabelOnly(f.elementType, t.elementType, tz)
+      case _ => false
+    }
+  }
+
+  /** `src`'s structure and NULLABILITY with `like`'s timestamp
+    * LABELS (TimestampNTZ vs Timestamp) at every nesting — the cast
+    * target that aligns a raw-scan-built rollup's stored time label
+    * with the loader-relabeled query side without touching the
+    * nullability flags a Cast cannot change (round 16). */
+  private def withTimeLabelsOf(src: org.apache.spark.sql.types.DataType,
+                               like: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    (src, like) match {
+      case (TimestampNTZType, TimestampType) => TimestampType
+      case (TimestampType, TimestampNTZType) => TimestampNTZType
+      case (f: StructType, t: StructType) if f.length == t.length =>
+        StructType(f.fields.zip(t.fields).map { case (a, b) =>
+          a.copy(dataType = withTimeLabelsOf(a.dataType, b.dataType)) })
+      case (f: ArrayType, t: ArrayType) =>
+        f.copy(elementType = withTimeLabelsOf(f.elementType, t.elementType))
+      case _ => src
+    }
+  }
+
+  /** Flatten of merged list states, with the element type's time
+    * labels aligned to the query's own element type when the stored
+    * states carry the pre-loader NTZ label (an advised rollup built
+    * from the raw scan). The relabel cast changes NO value under
+    * the pinned-UTC session — the loader-contract invariant — and
+    * the cast target keeps the stored nullability flags, so the
+    * routed output differs from the live one only where the
+    * existing sameTypeIgnoreNullability contract already allows. */
+  private def relabelFlatten(merged: Expression,
+                             storedType: org.apache.spark.sql.types.DataType,
+                             queryElem: org.apache.spark.sql.types.DataType,
+                             tz: String): Expression = {
+    import org.apache.spark.sql.types._
+    val flat = Flatten(merged)
+    storedType match {
+      case ArrayType(et, cn)
+          if !Bridge.sameTypeIgnoreNullability(et, queryElem) =>
+        Cast(flat, ArrayType(withTimeLabelsOf(et, queryElem), cn), Some(tz))
+      case _ => flat
+    }
   }
 
   /** A registered JOIN-DERIVED rollup: `tables` + `joinKeys` pin the
@@ -1194,19 +1843,6 @@ object RollupRouting {
       timeGroupings = Seq(TimeGrainPat("day", "ts") -> "ts_day"))
   }
 
-  /** The BUILD side of the registry (round 12): derive a spec's
-    * partial block from the same `aggs` that drive query rewriting —
-    * registration is the single source of truth, the CREATE
-    * MATERIALIZED VIEW equivalence (the reference declares each MV
-    * once and its engine both maintains and serves it,
-    * `usdc-transfers/sql/analytics.sql:9-94`). The block groups by
-    * the grain key + key columns and emits one mergeable partial per
-    * AggMap: the exact decimal(38,6) sum for SumOf (the only shape
-    * the router re-aggregates), row count, min/max, and AvgOf's
-    * non-null count (plus its sum if no SumOf already writes it).
-    * `CountDistinctGrain` needs no column — the rollup's grain IS the
-    * distinct set. Equivalence with the hand-written builders and an
-    * end-to-end build→register→route→hash-match are spec-pinned. */
   /** The user-facing Column for a measure pattern (build side). */
   private[plans] def srcColumn(pat: SrcPat): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
@@ -1218,90 +1854,28 @@ object RollupRouting {
     }
   }
 
-  /** The mergeable partial column per AggMap, keyed by its rollup
-    * column name (a LinkedHashMap so spec order is output order; an
-    * AvgOf whose sum partial another AggMap already writes reuses
-    * it). */
-  private def partialColumns(aggs: Seq[AggMap])
-      : scala.collection.mutable.LinkedHashMap[String, org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions._
-    val partials =
-      scala.collection.mutable.LinkedHashMap.empty[String, org.apache.spark.sql.Column]
-    aggs.foreach {
-      case SumOf(pat, p) =>
-        partials.getOrElseUpdate(p, sum(srcColumn(pat).cast("decimal(38,6)")).as(p))
-      case CountStarTo(p) =>
-        partials.getOrElseUpdate(p, count(lit(1)).as(p))
-      case CountOf(pat, p) =>
-        partials.getOrElseUpdate(p, count(srcColumn(pat)).as(p))
-      case MinOf(c, p) => partials.getOrElseUpdate(p, min(col(c)).as(p))
-      case MaxOf(c, p) => partials.getOrElseUpdate(p, max(col(c)).as(p))
-      case AvgOf(c, sp, cp) =>
-        partials.getOrElseUpdate(sp, sum(col(c).cast("decimal(38,6)")).as(sp))
-        partials.getOrElseUpdate(cp, count(col(c)).as(cp))
-      case HllUniqOf(pt, p, lgK) =>
-        partials.getOrElseUpdate(p, hll_sketch_agg(srcColumn(pt), lgK).as(p))
-      case KllQuantileOf(pt, p, k) =>
-        partials.getOrElseUpdate(p, graft.expr.Kll.agg(srcColumn(pt), k).as(p))
-      case TopKOf(pt, p, m) =>
-        partials.getOrElseUpdate(p,
-          call_function("approx_top_k_accumulate", srcColumn(pt), lit(m)).as(p))
-      case SetOf(pt, p) =>
-        partials.getOrElseUpdate(p, collect_set(srcColumn(pt)).as(p))
-      case UniqUpToOf(pt, p, n) =>
-        partials.getOrElseUpdate(p, slice(collect_set(srcColumn(pt)), 1, n + 1).as(p))
-      case BitmapUniqOf(pt, p) =>
-        partials.getOrElseUpdate(p, graft.expr.Bmp.agg(srcColumn(pt)).as(p))
-      case ThetaUniqOf(pt, p, k) =>
-        partials.getOrElseUpdate(p, graft.expr.Tht.agg(srcColumn(pt), k).as(p))
-      case ListOf(pt, p) =>
-        partials.getOrElseUpdate(p, collect_list(srcColumn(pt)).as(p))
-      case TopKWeightedOf(ip, wp, p, m) =>
-        partials.getOrElseUpdate(p,
-          graft.expr.TkW.agg(srcColumn(ip), srcColumn(wp), m).as(p))
-      case MinPatOf(pat, p) => partials.getOrElseUpdate(p, min(srcColumn(pat)).as(p))
-      case MaxPatOf(pat, p) => partials.getOrElseUpdate(p, max(srcColumn(pat)).as(p))
-      case DeltaSumOf(pat, ord, p) =>
-        // ONE sorted in-group pass: collect (orderCols..., measure),
-        // sort lexicographically (orderCols must totally order the
-        // group's rows), fold first/last/dsum in a single aggregate()
-        // — the collect is build-time-only and bounded by the group's
-        // own rows, never carried into any read
-        // the measure field is aliased __m so it can never collide
-        // with an orderCols name inside the collected struct
-        val seq = sort_array(collect_list(
-          struct(ord.map(col) :+ srcColumn(pat).cast("long").as("__m"): _*)))
-        val zero = struct(
-          lit(null).cast("long").as("first"), lit(null).cast("long").as("last"),
-          lit(0L).as("dsum"))
-        partials.getOrElseUpdate(p, aggregate(seq, zero, (acc, x) => struct(
-          coalesce(acc.getField("first"), x.getField("__m")).as("first"),
-          x.getField("__m").as("last"),
-          (acc.getField("dsum") + coalesce(
-            when(x.getField("__m") > acc.getField("last"),
-              x.getField("__m") - acc.getField("last")), lit(0L))).as("dsum")))
-          .as(p))
-      case MaxPrefixOf(pat, ord, p) =>
-        // same build shape as DeltaSumOf: one sorted in-group pass;
-        // the fold keeps (tot, maxp, at_us) — at_us is the EARLIEST
-        // point achieving the max prefix (strict > keeps the first)
-        val seq = sort_array(collect_list(
-          struct(ord.map(col) :+ srcColumn(pat).cast("long").as("__m"): _*)))
-        val zero = struct(lit(0L).as("tot"),
-          lit(Long.MinValue).as("maxp"), lit(0L).as("at_us"))
-        partials.getOrElseUpdate(p, aggregate(seq, zero, (acc, x) => {
-          val newTot = acc.getField("tot") + x.getField("__m")
-          val isNew = newTot > acc.getField("maxp")
-          struct(newTot.as("tot"),
-            when(isNew, newTot).otherwise(acc.getField("maxp")).as("maxp"),
-            when(isNew, unix_micros(x.getField(ord.head)))
-              .otherwise(acc.getField("at_us")).as("at_us"))
-        }).as(p))
-      case CountDistinctGrain(_) => ()
+  /** The mergeable partial column per rollup column name, in spec
+    * order: each member's build aggregates over the build frame's
+    * columns ([[srcColumn]]). A column two members write (an AvgOf
+    * whose sum partial a SumOf already writes) is built once, by the
+    * first. */
+  private def partialColumns(aggs: Seq[AggMap]): Seq[(String, Column)] = {
+    val src: Source = p => Some(Bridge.expressionEager(srcColumn(p)))
+    aggs.flatMap(_.partials).distinctBy(_.name).map { p =>
+      p.name -> Bridge.column(p.build(src).get).as(p.name)
     }
-    partials
   }
 
+  /** The BUILD side of the registry (round 12): derive a spec's
+    * partial block from the same `aggs` that drive query rewriting —
+    * registration is the single source of truth, the CREATE
+    * MATERIALIZED VIEW equivalence (the reference declares each MV
+    * once and its engine both maintains and serves it,
+    * `usdc-transfers/sql/analytics.sql:9-94`). The block groups by
+    * the grain key + key columns and emits each member's partial
+    * columns ([[AggMap.partials]]). Equivalence with the hand-written
+    * builders and an end-to-end build→register→route→hash-match are
+    * spec-pinned. */
   def buildPartials(src: org.apache.spark.sql.DataFrame, spec: Spec)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
@@ -1319,7 +1893,7 @@ object RollupRouting {
       }
     val partials = partialColumns(spec.aggs)
     require(partials.nonEmpty, s"spec for ${spec.rollupPath} declares no partials")
-    val aggCols = partials.values.toSeq
+    val aggCols = partials.map(_._2)
     src.groupBy(keys: _*).agg(aggCols.head, aggCols.tail: _*)
   }
 
@@ -1404,27 +1978,7 @@ object RollupRouting {
       require(os.size == 1, s"column $c must belong to exactly one table, found $os")
       os.head
     }
-    val measureRefs = spec.aggs.flatMap {
-      case SumOf(pat, _) => pat.refs
-      case CountOf(pat, _) => pat.refs
-      case MinOf(c, _) => Seq(c)
-      case MaxOf(c, _) => Seq(c)
-      case AvgOf(c, _, _) => Seq(c)
-      case HllUniqOf(pt, _, _) => pt.refs.toSeq
-      case KllQuantileOf(pt, _, _) => pt.refs.toSeq
-      case TopKOf(pt, _, _) => pt.refs.toSeq
-      case SetOf(pt, _) => pt.refs.toSeq
-      case UniqUpToOf(pt, _, _) => pt.refs.toSeq
-      case BitmapUniqOf(pt, _) => pt.refs.toSeq
-      case ThetaUniqOf(pt, _, _) => pt.refs.toSeq
-      case ListOf(pt, _) => pt.refs.toSeq
-      case TopKWeightedOf(ip, wp, _, _) => (ip.refs ++ wp.refs).toSeq
-      case MinPatOf(pat, _) => pat.refs.toSeq
-      case MaxPatOf(pat, _) => pat.refs.toSeq
-      case DeltaSumOf(pat, ord, _) => pat.refs.toSeq ++ ord
-      case MaxPrefixOf(pat, ord, _) => pat.refs.toSeq ++ ord
-      case _ => Nil
-    }.toSet
+    val measureRefs = spec.aggs.flatMap(_.refs).toSet
     require(measureRefs.nonEmpty, "join spec declares no measure to locate the fact")
     val factOwners = measureRefs.map(owner)
     require(factOwners.size == 1,
@@ -1434,7 +1988,7 @@ object RollupRouting {
     val factKeys = allKeyCols.filter(tables(fact).columns.contains).distinct
     require(factKeys.nonEmpty, s"fact $fact carries no join-key column")
     val partials = partialColumns(spec.aggs)
-    val aggCols = partials.values.toSeq
+    val aggCols = partials.map(_._2)
     // a registered time truncation is one more group key: computed on
     // the FACT side it joins the pre-aggregation keys (the rollup
     // grain gains the grain bucket); on a DIM side it is computed
@@ -1450,7 +2004,7 @@ object RollupRouting {
       .agg(aggCols.head, aggCols.tail: _*))
     var acc = factPre
     var joined = Set(fact)
-    var have: Set[String] = factKeys.toSet ++ partials.keySet
+    var have: Set[String] = factKeys.toSet ++ partials.map(_._1)
     val outSrc = spec.grainCols.keySet ++ spec.groupings.keySet
     val pruneKeep = outSrc ++ dimTimes.map(_._1.col)
     while (joined != spec.tables) {
@@ -1473,7 +2027,7 @@ object RollupRouting {
     val outCols = spec.grainCols.toSeq.map { case (s, r) => col(s).as(r) } ++
       spec.groupings.toSeq.map { case (s, r) => col(s).as(r) } ++
       spec.timeGroupings.map { case (_, rc) => col(rc) } ++
-      partials.keys.toSeq.map(col)
+      partials.map(p => col(p._1))
     // When the declared grain (grainCols + groupings) is COARSER than
     // the fact's pre-aggregation keys — a spec that keeps no per-grain
     // column, e.g. a segment-only aggregate table — merge the partials
@@ -1512,70 +2066,26 @@ object RollupRouting {
     }
   }
 
-  /** The partial-MERGE aggregate per AggMap — how two partial rows of
-    * the same group combine (build-side coarsening and any compaction
-    * share it): exact decimal sums and counts add, min/max fold,
-    * avg's sum+count add. Output names and types equal the build
+  /** The partial-MERGE aggregate per rollup column — how two partial
+    * rows of the same group combine (build-side coarsening and any
+    * compaction share it). Output names and types equal the build
     * partials', so merged rollups route identically. */
-  private def mergeColumns(aggs: Seq[AggMap]): Seq[org.apache.spark.sql.Column] =
+  private def mergeColumns(aggs: Seq[AggMap]): Seq[Column] =
     mergeColumnMap(aggs).map(_._2)
 
-  /** [[mergeColumns]] with the target partial names — the ONE place
-    * the per-member merge shapes live; any compaction or coarsening
-    * (incl. [[graft.ops.Rollups.compactRollup]]) must come through
-    * here so a new member can never miss a merge site. */
-  private[graft] def mergeColumnMap(aggs: Seq[AggMap])
-      : Seq[(String, org.apache.spark.sql.Column)] = {
-    import org.apache.spark.sql.functions._
-    val merges =
-      scala.collection.mutable.LinkedHashMap.empty[String, org.apache.spark.sql.Column]
-    aggs.foreach {
-      case SumOf(_, p) => merges.getOrElseUpdate(p, sum(col(p)).as(p))
-      case CountStarTo(p) => merges.getOrElseUpdate(p, sum(col(p)).as(p))
-      case CountOf(_, p) => merges.getOrElseUpdate(p, sum(col(p)).as(p))
-      case MinOf(_, p) => merges.getOrElseUpdate(p, min(col(p)).as(p))
-      case MaxOf(_, p) => merges.getOrElseUpdate(p, max(col(p)).as(p))
-      case AvgOf(_, sp, cp) =>
-        merges.getOrElseUpdate(sp, sum(col(sp)).as(sp))
-        merges.getOrElseUpdate(cp, sum(col(cp)).as(cp))
-      case HllUniqOf(_, p, _) => merges.getOrElseUpdate(p, hll_union_agg(col(p)).as(p))
-      case KllQuantileOf(_, p, k) =>
-        merges.getOrElseUpdate(p, graft.expr.Kll.merge(col(p), k).as(p))
-      case TopKOf(_, p, m) =>
-        merges.getOrElseUpdate(p, expr(s"approx_top_k_combine(`$p`, $m)").as(p))
-      case SetOf(_, p) =>
-        merges.getOrElseUpdate(p, array_distinct(flatten(collect_list(col(p)))).as(p))
-      case UniqUpToOf(_, p, n) =>
-        merges.getOrElseUpdate(p,
-          slice(array_distinct(flatten(collect_list(col(p)))), 1, n + 1).as(p))
-      case BitmapUniqOf(_, p) =>
-        merges.getOrElseUpdate(p, graft.expr.Bmp.merge(col(p)).as(p))
-      case ThetaUniqOf(_, p, k) =>
-        merges.getOrElseUpdate(p, graft.expr.Tht.union(col(p), k).as(p))
-      case ListOf(_, p) =>
-        merges.getOrElseUpdate(p, flatten(collect_list(col(p))).as(p))
-      case TopKWeightedOf(_, _, p, m) =>
-        merges.getOrElseUpdate(p, graft.expr.TkW.merge(col(p), m).as(p))
-      case MinPatOf(_, p) => merges.getOrElseUpdate(p, min(col(p)).as(p))
-      case MaxPatOf(_, p) => merges.getOrElseUpdate(p, max(col(p)).as(p))
-      case d: DeltaSumOf =>
-        // REBUILD-ONLY (see the member's scaladoc): two partial rows
-        // of one group have no well-defined merge — their underlying
-        // rows may interleave in series order, and a wrong merge
-        // would silently under/over-count deltas. Refuse loudly.
+  /** [[mergeColumns]] with the target partial names: each member
+    * column's own merge ([[Partial.merge]]), so any compaction or
+    * coarsening (incl. [[graft.ops.Rollups.compactRollup]]) merges a
+    * new member too. A rebuild-only column refuses loudly: a wrong
+    * merge would silently under/over-count. */
+  private[graft] def mergeColumnMap(aggs: Seq[AggMap]): Seq[(String, Column)] =
+    aggs.flatMap(m => m.partials.map { p =>
+      p.name -> p.merge.map(_(F.col(p.name)).as(p.name)).getOrElse(
         throw new IllegalArgumentException(
-          s"DeltaSumOf(${d.partial}) is rebuild-only: same-group partial " +
+          s"${m.productPrefix}(${p.name}) is rebuild-only: same-group partial " +
             "rows cannot merge (series order is lost across parts) — " +
-            "maintain via writeRollupUpTo's scratch-build + swap")
-      case m: MaxPrefixOf =>
-        throw new IllegalArgumentException(
-          s"MaxPrefixOf(${m.partial}) is rebuild-only: same-group partial " +
-            "rows cannot merge (series order is lost across parts) — " +
-            "maintain via writeRollupUpTo's scratch-build + swap")
-      case CountDistinctGrain(_) => ()
-    }
-    merges.toSeq
-  }
+            "maintain via writeRollupUpTo's scratch-build + swap"))
+    }).distinctBy(_._1)
 
   /** The MVs one routing pass may answer from; a session's registry
     * is one too. */
@@ -1676,47 +2186,14 @@ object RollupRouting {
   }
 
   private[plans] def aggJson(m: AggMap): org.json4s.JValue = {
-    import org.json4s.JsonDSL._
-    m match {
-      case SumOf(pat, p) => ("kind" -> "sum") ~ ("pat" -> patJson(pat)) ~ ("partial" -> p)
-      case CountStarTo(p) => ("kind" -> "count") ~ ("partial" -> p)
-      case CountOf(pat, p) =>
-        ("kind" -> "countOf") ~ ("pat" -> patJson(pat)) ~ ("partial" -> p)
-      case MinOf(c, p) => ("kind" -> "min") ~ ("col" -> c) ~ ("partial" -> p)
-      case MaxOf(c, p) => ("kind" -> "max") ~ ("col" -> c) ~ ("partial" -> p)
-      case AvgOf(c, sp, cp) =>
-        ("kind" -> "avg") ~ ("col" -> c) ~ ("sumPartial" -> sp) ~ ("cntPartial" -> cp)
-      case HllUniqOf(pt, p, k) =>
-        ("kind" -> "hllUniq") ~ ("pat" -> patJson(pt)) ~ ("partial" -> p) ~ ("lgK" -> k)
-      case KllQuantileOf(pt, p, k) =>
-        ("kind" -> "kllQuantile") ~ ("pat" -> patJson(pt)) ~ ("partial" -> p) ~ ("k" -> k)
-      case TopKOf(pt, p, m) =>
-        ("kind" -> "topK") ~ ("pat" -> patJson(pt)) ~ ("partial" -> p) ~ ("maxItems" -> m)
-      case SetOf(pt, p) =>
-        ("kind" -> "setUniq") ~ ("pat" -> patJson(pt)) ~ ("partial" -> p)
-      case UniqUpToOf(pt, p, n) =>
-        ("kind" -> "uniqUpTo") ~ ("pat" -> patJson(pt)) ~ ("partial" -> p) ~ ("n" -> n)
-      case BitmapUniqOf(pt, p) =>
-        ("kind" -> "bitmapUniq") ~ ("pat" -> patJson(pt)) ~ ("partial" -> p)
-      case ThetaUniqOf(pt, p, k) =>
-        ("kind" -> "thetaUniq") ~ ("pat" -> patJson(pt)) ~ ("partial" -> p) ~ ("lgK" -> k)
-      case ListOf(pt, p) =>
-        ("kind" -> "groupArray") ~ ("pat" -> patJson(pt)) ~ ("partial" -> p)
-      case TopKWeightedOf(ip, wp, p, m) =>
-        ("kind" -> "topKWeighted") ~ ("item" -> patJson(ip)) ~
-          ("weight" -> patJson(wp)) ~ ("partial" -> p) ~ ("maxMapSize" -> m)
-      case MinPatOf(pat, p) =>
-        ("kind" -> "minPat") ~ ("pat" -> patJson(pat)) ~ ("partial" -> p)
-      case MaxPatOf(pat, p) =>
-        ("kind" -> "maxPat") ~ ("pat" -> patJson(pat)) ~ ("partial" -> p)
-      case DeltaSumOf(pat, ord, p) =>
-        ("kind" -> "deltaSum") ~ ("pat" -> patJson(pat)) ~
-          ("orderCols" -> ord.toList) ~ ("partial" -> p)
-      case MaxPrefixOf(pat, ord, p) =>
-        ("kind" -> "maxPrefix") ~ ("pat" -> patJson(pat)) ~
-          ("orderCols" -> ord.toList) ~ ("partial" -> p)
-      case CountDistinctGrain(g) => ("kind" -> "countDistinctGrain") ~ ("grainCol" -> g)
-    }
+    import org.json4s._
+    JObject(("kind" -> JString(m.codec.kind)) :: m.fields.toList.map {
+      case (n, Pat(p)) => n -> patJson(p)
+      case (n, Str(v)) => n -> JString(v)
+      case (n, Num(i)) => n -> JInt(i)
+      case (n, Strs(vs)) => n -> JArray(vs.toList.map(JString(_)))
+      case (n, Out(v)) => n -> JString(v)
+    })
   }
 
   /** Persist BOTH registries as one JSON document. */
@@ -1769,55 +2246,24 @@ object RollupRouting {
     }
   }
 
+  /** A JSON list of `[a, b]` string pairs (join keys, time keys); an
+    * entry that is not one is an error naming the file and the entry. */
+  private[plans] def pairsFromJson(j: org.json4s.JValue, path: String,
+                                   field: String): Set[(String, String)] = {
+    import org.json4s._
+    j.children.map {
+      case JArray(List(JString(a), JString(b))) => (a, b)
+      case e => throw new IllegalArgumentException(
+        s"$path: $field entry ${jackson.JsonMethods.compact(e)} is not a [a, b] pair")
+    }.toSet
+  }
+
   private[plans] def aggFromJson(spark: SparkSession,
                                  j: org.json4s.JValue): AggMap = {
-    import org.json4s._
-    implicit val fmts: Formats = DefaultFormats
-    def pat(v: JValue): SrcPat = patFromJson(spark, v)
-    // r15 widened the sketch/set members to SrcPat sources (the -If
-    // combinator family); a pre-r15 catalog's bare "col" field loads
-    // as the degenerate ColRef
-    def patOrLegacyCol(j: JValue): SrcPat = (j \ "pat") match {
-      case JNothing => ColRef((j \ "col").extract[String])
-      case v => pat(v)
-    }
-    (j \ "kind").extract[String] match {
-      case "sum" => SumOf(pat(j \ "pat"), (j \ "partial").extract[String])
-      case "count" => CountStarTo((j \ "partial").extract[String])
-      case "countOf" => CountOf(pat(j \ "pat"), (j \ "partial").extract[String])
-      case "min" => MinOf((j \ "col").extract[String], (j \ "partial").extract[String])
-      case "max" => MaxOf((j \ "col").extract[String], (j \ "partial").extract[String])
-      case "avg" => AvgOf((j \ "col").extract[String],
-        (j \ "sumPartial").extract[String], (j \ "cntPartial").extract[String])
-      case "hllUniq" =>
-        HllUniqOf(patOrLegacyCol(j),
-          (j \ "partial").extract[String], (j \ "lgK").extract[Int])
-      case "kllQuantile" => KllQuantileOf(patOrLegacyCol(j),
-        (j \ "partial").extract[String], (j \ "k").extract[Int])
-      case "topK" => TopKOf(patOrLegacyCol(j),
-        (j \ "partial").extract[String], (j \ "maxItems").extract[Int])
-      case "setUniq" => SetOf(patOrLegacyCol(j),
-        (j \ "partial").extract[String])
-      case "uniqUpTo" => UniqUpToOf(patOrLegacyCol(j),
-        (j \ "partial").extract[String], (j \ "n").extract[Int])
-      case "bitmapUniq" => BitmapUniqOf(patOrLegacyCol(j),
-        (j \ "partial").extract[String])
-      case "thetaUniq" => ThetaUniqOf(patOrLegacyCol(j),
-        (j \ "partial").extract[String], (j \ "lgK").extract[Int])
-      case "groupArray" => ListOf(patOrLegacyCol(j),
-        (j \ "partial").extract[String])
-      case "topKWeighted" => TopKWeightedOf(pat(j \ "item"), pat(j \ "weight"),
-        (j \ "partial").extract[String], (j \ "maxMapSize").extract[Int])
-      case "minPat" => MinPatOf(pat(j \ "pat"), (j \ "partial").extract[String])
-      case "maxPat" => MaxPatOf(pat(j \ "pat"), (j \ "partial").extract[String])
-      case "deltaSum" => DeltaSumOf(pat(j \ "pat"),
-        (j \ "orderCols").extract[List[String]], (j \ "partial").extract[String])
-      case "maxPrefix" => MaxPrefixOf(pat(j \ "pat"),
-        (j \ "orderCols").extract[List[String]], (j \ "partial").extract[String])
-      case "countDistinctGrain" =>
-        CountDistinctGrain((j \ "grainCol").extract[String])
-      case k => throw new IllegalArgumentException(s"unknown agg kind $k")
-    }
+    val fields = new Fields(spark, j)
+    val kind = fields.str("kind")
+    codecs.getOrElse(kind, throw new IllegalArgumentException(s"unknown agg kind $kind"))
+      .decode(fields)
   }
 
   /** Load a [[saveRegistry]] document and register everything in it
@@ -1840,8 +2286,7 @@ object RollupRouting {
     val joins = (doc \ "joins").children.map { j =>
       JoinSpec((j \ "rollupPath").extract[String],
         (j \ "tables").extract[List[String]].toSet,
-        (j \ "joinKeys").extract[List[List[String]]]
-          .map { case List(a, b) => (a, b) }.toSet,
+        pairsFromJson(j \ "joinKeys", path, "joinKeys"),
         (j \ "groupings").extract[Map[String, String]],
         (j \ "aggs").children.map(agg),
         (j \ "grainCols").extract[Map[String, String]],
@@ -1864,45 +2309,6 @@ object RollupRouting {
       extends Rule[LogicalPlan] with PredicateHelper {
     def this(spark: SparkSession, catalog: Catalog) = this(spark, () => catalog)
     def this(spark: SparkSession) = this(spark, registry(spark).get _)
-
-    /** The exact shape every decimal partial is built from
-      * ([[graft.ops.Fns.dsumPartial]]): `cast(<source expr> as
-      * decimal(38,6))` with `inner` matching the source expression.
-      * Routing a SUM requires this exact cast — the partial column IS
-      * `sum(cast(expr as decimal(38,6)))` per group, so only that
-      * aggregate re-aggregates bit-identically (a bare double sum has
-      * different type and rounding; a different-precision cast is a
-      * different number). */
-    private def isExactPartialCast(e: Expression,
-                                   inner: Expression => Boolean): Boolean = e match {
-      case Cast(x, dt: org.apache.spark.sql.types.DecimalType, _, _) =>
-        dt.precision == 38 && dt.scale == 6 && inner(x)
-      // the optimizer pushes the exact cast INTO conditional branches
-      // (`sum(cast(CASE … END as dec))` → `sum(CASE … cast(v) …
-      // END)`, PushFoldableIntoBranches/SimplifyCasts) — value-equal
-      // because a cast distributes over branches and NULL stays NULL,
-      // so unwrap each branch's dec(38,6) cast and match the CASE the
-      // measure registered (round 14, the -If members' spelling)
-      case cw @ CaseWhen(branches, elseV)
-          if branches.nonEmpty && branches.forall {
-               case (_, Cast(_, dt: org.apache.spark.sql.types.DecimalType, _, _)) =>
-                 dt.precision == 38 && dt.scale == 6
-               case _ => false
-             } && elseV.forall {
-               case Cast(_, dt: org.apache.spark.sql.types.DecimalType, _, _) =>
-                 dt.precision == 38 && dt.scale == 6
-               case Literal(null, _) => true
-               case _ => false
-             } =>
-        def unwrap(x: Expression): Expression = x match {
-          case Cast(c, _, _, _) => c
-          case Literal(null, _) => Literal(null, org.apache.spark.sql.types.NullType)
-          case other => other
-        }
-        inner(CaseWhen(branches.map { case (c, v) => (c, unwrap(v)) },
-                       elseV.map(unwrap)))
-      case _ => false
-    }
 
     /** Substitute attributes through the Project chain below the
       * aggregate: by the time optimizer rules run, grouping expressions
@@ -2002,8 +2408,8 @@ object RollupRouting {
       // covered spec whose tail groups only by preserved groupings
       // would be re-routed on the next fixed-point pass, growing a
       // union level per iteration
-      val partials = (cat.specs.flatMap(_.aggs.flatMap(partialName)) ++
-        cat.joinSpecs.flatMap(_.aggs.flatMap(partialName))).toSet
+      val partials = (cat.specs.flatMap(_.aggs) ++ cat.joinSpecs.flatMap(_.aggs))
+        .flatMap(_.partials.map(_.name)).toSet
       aggExprs.exists(ne => partials.contains(ne.name))
     }
 
@@ -2196,372 +2602,31 @@ object RollupRouting {
       * onto that member's rollup column(s) — the registry's read side,
       * shared by [[rewrite]] and [[rewriteJoin]] (the reference declares
       * each MV once, `usdc-transfers/sql/analytics.sql:9-94`). The first
-      * member in `aggs` order that maps an aggregate wins; an aggregate
-      * no member maps stays as it is, and the caller's reference check
-      * then keeps the query live.
-      *  - `resolve` maps a source expression through the Projects below
-      *    the query's aggregate ([[resolveThroughProjects]]);
-      *  - `attr` finds a rollup column by name;
-      *  - `inLattice` marks a grouping-set rewrite ([[rewriteExpand]]);
-      *  - `grainCount(g)` is the path's own [[CountDistinctGrain]] rule:
-      *    the expression whose COUNT over rollup rows equals
-      *    COUNT(DISTINCT g), or None where the spec's shape does not
-      *    make the rollup's rows one per distinct g.
-      * Every member needs a non-distinct, unfiltered aggregate unless
-      * its case says otherwise; a re-aggregated state gets a fresh
-      * resultId wherever a scalar wraps it (two AggregateExpressions
-      * sharing one id would collide in the aggregate buffer). */
+      * member in `aggs` order that maps an aggregate wins
+      * ([[AggMap.read]], [[AggMap.readWhole]]); an aggregate no member
+      * maps stays as it is, and the caller's reference check then keeps
+      * the query live. [[Read]] documents the other arguments. */
     private def routeAggregates(ne: NamedExpression, aggs: Seq[AggMap],
                                 resolve: Expression => Expression,
                                 attr: String => Option[Attribute],
                                 inLattice: Boolean,
                                 grainCount: String => Option[Expression]): NamedExpression = {
-      def isBareRef(se: Expression, name: String): Boolean = resolve(se) match {
-        case a: AttributeReference => a.name == name
-        case _ => false
-      }
-      // Average's own decimal evaluate tree over a sum partial and a
-      // non-null-count partial: identical exact sum type (38,6),
-      // identical count, the identical single HALF_UP division to (38,10)
-      def exactAvg(ae: AggregateExpression, mode: EvalMode.Value,
-                   sp: String, cp: String): Option[Expression] =
-        for (s <- attr(sp); c <- attr(cp)) yield {
-          val sumAE = ae.copy(aggregateFunction = Sum(s),
-                              resultId = NamedExpression.newExprId)
-          val cntAE = ae.copy(aggregateFunction = Sum(c),
-                              resultId = NamedExpression.newExprId)
-          DecimalDivideWithOverflowCheck(
-            sumAE, Cast(cntAE, DecimalType(20, 0)),
-            DecimalType(38, 10), null,
-            mode != EvalMode.ANSI)
-        }
-      def mapAgg(ae: AggregateExpression): Option[Expression] = {
-        val plain = !ae.isDistinct && ae.filter.isEmpty
-        aggs.view.flatMap { m =>
-          (m, ae.aggregateFunction) match {
-            // the Sum's child must be the EXACT dsum shape the partial
-            // was built from — `cast(expr as decimal(38,6))` — not any
-            // cast chain: a bare double sum routed onto decimal
-            // partials would change the result type and its rounding
-            // under a preserved ExprId (round 11)
-            case (SumOf(pat, partial), Sum(se, _))
-                if plain && isExactPartialCast(resolve(se), pat.matchesOrdered) =>
-              attr(partial).map(p => ae.copy(aggregateFunction = Sum(p)))
-            // COUNT is non-nullable and 0 on empty input; SUM of the
-            // partial is nullable and null on empty — coalesce restores
-            // the exact contract (schema AND the empty-group value)
-            case (CountStarTo(partial), Count(children))
-                if plain && children.forall(_.isInstanceOf[Literal]) =>
-              attr(partial).map(p => Coalesce(Seq(
-                ae.copy(aggregateFunction = Sum(p)), Literal(0L))))
-            // null-skipping COUNT(expr) — the countIf member (round 14):
-            // non-null counts add, with the same 0-on-empty coalesce
-            case (CountOf(pat, partial), Count(Seq(se)))
-                if plain && pat.matchesOrdered(resolve(se)) =>
-              attr(partial).map(p => Coalesce(Seq(
-                ae.copy(aggregateFunction = Sum(p)), Literal(0L))))
-            // MIN/MAX only for a bare column reference: a cast in between
-            // could reorder or change the output type under a preserved
-            // ExprId
-            case (MinOf(cn, partial), Min(se)) if plain && isBareRef(se, cn) =>
-              attr(partial).map(p => ae.copy(aggregateFunction = Min(p)))
-            case (MaxOf(cn, partial), Max(se)) if plain && isBareRef(se, cn) =>
-              attr(partial).map(p => ae.copy(aggregateFunction = Max(p)))
-            // PATTERN extrema (round 13, the argMax/argMin shape):
-            // ORDER-SENSITIVE measure match (casts retained unless
-            // order-embedding — round 14) + RESULT-TYPE equality
-            case (MinPatOf(pt, partial), Min(se))
-                if plain && pt.matchesOrdered(resolve(se)) =>
-              attr(partial).filter(_.dataType == se.dataType)
-                .map(p => ae.copy(aggregateFunction = Min(p)))
-            case (MaxPatOf(pt, partial), Max(se))
-                if plain && pt.matchesOrdered(resolve(se)) =>
-              attr(partial).filter(_.dataType == se.dataType)
-                .map(p => ae.copy(aggregateFunction = Max(p)))
-            // COUNT(DISTINCT grain) → COUNT over rollup ROWS (round 12,
-            // the reference's uniq() dashboard shape), where the path's
-            // rule says rollup rows per group = distinct grain values.
-            // NEVER inside a grouping-set lattice: a subtotal group holds
-            // more rollup rows than distinct grain values (the SetOf and
-            // BitmapUniqOf mappings below ARE subtotal-safe — set union)
-            case (CountDistinctGrain(g), Count(Seq(se)))
-                if !inLattice && ae.isDistinct && ae.filter.isEmpty && isBareRef(se, g) =>
-              grainCount(g).map(c =>
-                ae.copy(aggregateFunction = Count(Seq(c)), isDistinct = false))
-            // uniqExact / uniqExactIf (round 15): the EXACT
-            // COUNT(DISTINCT expr) from the distinct-set state —
-            // count-distinct skips NULLs exactly like the collect_set
-            // that built the state
-            case (SetOf(pt, partial), Count(Seq(se)))
-                if ae.isDistinct && ae.filter.isEmpty && pt.matchesOrdered(resolve(se)) =>
-              attr(partial).map { p =>
-                val merged = ae.copy(aggregateFunction = CollectList(p),
-                  isDistinct = false,
-                  resultId = NamedExpression.newExprId)
-                Cast(Size(ArrayDistinct(Flatten(merged)), false), LongType)
-              }
-            // DISTINCT-SET via array state (round 13, groupUniqArrayMerge):
-            // the union of per-group set partials IS the single-pass set
-            // (order unspecified on both plans, collect_set's contract).
-            // The routed array's element type is the partial's, so it
-            // must equal the query's (r15 pattern sources, setIf).
-            case (SetOf(pt, partial), cs: CollectSet)
-                if plain && pt.matchesOrdered(resolve(cs.child)) =>
-              attr(partial).collect {
-                case p if (p.dataType match {
-                      case org.apache.spark.sql.types.ArrayType(et, _) =>
-                        et == cs.child.dataType
-                      case _ => false
-                    }) =>
-                  val merged = ae.copy(
-                    aggregateFunction = CollectList(p),
-                    resultId = NamedExpression.newExprId)
-                  ArrayDistinct(Flatten(merged))
-              }
-            // uniqExact from BITMAP states (round 15): the same exact
-            // COUNT(DISTINCT expr) by OR-union of compressed bitmaps —
-            // the scale member for integral keys
-            case (BitmapUniqOf(pt, partial), Count(Seq(se)))
-                if ae.isDistinct && ae.filter.isEmpty && pt.matchesOrdered(resolve(se)) =>
-              attr(partial).map { p =>
-                val merged = ae.copy(
-                  aggregateFunction = graft.expr.BitmapMergeAgg(p),
-                  isDistinct = false,
-                  resultId = NamedExpression.newExprId)
-                graft.expr.BitmapCardinality(merged)
-              }
-            // the explicit state read `graft_bitmap_agg(col)` re-aggregates
-            // as the OR-union of the stored states — bit-equal
-            // (canonical serialized form of the identical exact set)
-            case (BitmapUniqOf(pt, partial), ba: graft.expr.BitmapAgg)
-                if plain && pt.matchesOrdered(resolve(ba.child)) =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.BitmapMergeAgg(p)))
-            // approx_count_distinct onto the EXACT bitmap state: a
-            // zero-error answer dominates ANY requested tolerance
-            // (values remain plan-dependent — same knob as HLL below)
-            case (BitmapUniqOf(pt, partial), h: HyperLogLogPlusPlus)
-                if plain && pt.matchesOrdered(resolve(h.child)) &&
-                   estimatorSubstitutionEnabled =>
-              attr(partial).map { p =>
-                val merged = ae.copy(
-                  aggregateFunction = graft.expr.BitmapMergeAgg(p),
-                  resultId = NamedExpression.newExprId)
-                graft.expr.BitmapCardinality(merged)
-              }
-            // the theta member (round 15): the explicit state read
-            // re-aggregates as union at the REGISTERED lgK — states are
-            // value-set deterministic, so routed ≡ live bit-equal
-            case (ThetaUniqOf(pt, partial, k), ta: graft.expr.ThetaAgg)
-                if plain && pt.matchesOrdered(resolve(ta.child)) && ta.lgK == k =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.ThetaUnionAgg(p, k)))
-            // the LIST member (round 15, groupArrayMerge): collect_list
-            // re-aggregates as flatten of per-grain list states —
-            // multiset-exact, order unspecified on both plans. The
-            // parquet roundtrip relaxes struct-field nullability inside
-            // the stored element type, so nullability must not block the
-            // rewrite; a rollup built from the RAW scan may store the
-            // pre-loader NTZ label where the query reads TimestampType —
-            // value-identical under the pinned-UTC session, aligned by
-            // an explicit element cast (round 16, [[relabelFlatten]])
-            case (ListOf(pt, partial), cl: CollectList)
-                if plain && pt.matchesOrdered(resolve(cl.child)) =>
-              attr(partial).collect {
-                case p if (p.dataType match {
-                      case org.apache.spark.sql.types.ArrayType(et, _) =>
-                        org.apache.spark.sql.graftx.Bridge.sameTypeIgnoreNullability(et, cl.child.dataType) ||
-                          relabelOnly(et, cl.child.dataType)
-                      case _ => false
-                    }) =>
-                  val merged = ae.copy(
-                    aggregateFunction = CollectList(p),
-                    resultId = NamedExpression.newExprId)
-                  relabelFlatten(merged, p.dataType, cl.child.dataType)
-              }
-            // AVG routes only in its dsum-shaped exact form —
-            // avg(cast(col as decimal(38,6))); a bare double avg stays
-            // live (not bit-reproducible from decimal partials)
-            case (AvgOf(cn, sp, cp), Average(se, mode))
-                if plain && isExactPartialCast(resolve(se), {
-                     case a: AttributeReference => a.name == cn
-                     case _ => false
-                   }) =>
-              exactAvg(ae, mode, sp, cp)
-            // avgIf (round 14): Average over a PATTERN measure pairs the
-            // registered SumOf with the CountOf counting the SAME
-            // pattern's non-null rows — Average's numerator and
-            // denominator, from two partial columns
-            case (SumOf(pat, sp), Average(se, mode))
-                if plain && isExactPartialCast(resolve(se), pat.matchesOrdered) =>
-              aggs.collectFirst {
-                case CountOf(patC, cp) if samePattern(patC, pat) => cp
-              }.flatMap(cp => exactAvg(ae, mode, sp, cp))
-            // APPROX-DISTINCT via sketch state (round 12, uniqState/
-            // uniqMerge): an HLL state is a set-function of its inputs,
-            // so the union of per-group partials IS the single-pass
-            // sketch. Only the registered lgK routes; both node types
-            // are BinaryType, so the preserved ExprId keeps its type.
-            case (HllUniqOf(pt, partial, lgK), hs: HllSketchAgg)
-                if plain && pt.matchesOrdered(resolve(hs.left)) && (hs.right match {
-                     case Literal(k: Int, _) => k == lgK
-                     case _ => false
-                   }) =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = HllUnionAgg(p, Literal(false))))
-            // approx_count_distinct (HLL++) onto the SAME state (round
-            // 13): estimator substitution, routed only where the
-            // registered sketch's rsd 1.04/√2^lgK is at or under the
-            // query's own tolerance. States union across ANY regrouping,
-            // so CUBE/ROLLUP lattices route too.
-            case (HllUniqOf(pt, partial, lgK), h: HyperLogLogPlusPlus)
-                if plain && pt.matchesOrdered(resolve(h.child)) &&
-                   hllRsd(lgK) <= h.relativeSD && estimatorSubstitutionEnabled =>
-              attr(partial).map { p =>
-                val union = ae.copy(
-                  aggregateFunction = HllUnionAgg(p, Literal(false)),
-                  resultId = NamedExpression.newExprId)
-                HllSketchEstimate(union)
-              }
-            // QUANTILE via KLL state (round 12, quantileState/Merge):
-            // the registered k must match
-            case (KllQuantileOf(pt, partial, k), ka: graft.expr.KllDoublesAgg)
-                if plain && pt.matchesOrdered(resolve(ka.child)) && ka.k == k =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.KllMergeAgg(p, k)))
-            // percentile_approx (GK) onto the KLL state under RANK
-            // dominance (round 15): GK promises rank error ≤ 1/accuracy,
-            // so the state's published error must fit inside the query's
-            // own tolerance; scalar double form only (the substituted
-            // estimate must keep the output type)
-            case (KllQuantileOf(pt, partial, k), pa: ApproximatePercentile)
-                if plain &&
-                   pa.dataType == org.apache.spark.sql.types.DoubleType &&
-                   pt.matchesOrdered(resolve(pa.child)) &&
-                   pa.percentageExpression.foldable &&
-                   pa.accuracyExpression.foldable &&
-                   estimatorSubstitutionEnabled && {
-                     val acc = pa.accuracyExpression.eval() match {
-                       case i: Int => i.toDouble
-                       case l: Long => l.toDouble
-                       case _ => Double.MaxValue
-                     }
-                     kllRankError(k) <= 1.0 / acc
-                   } =>
-              attr(partial).flatMap { p =>
-                pa.percentageExpression.eval() match {
-                  case d: Double =>
-                    val merged = ae.copy(
-                      aggregateFunction = graft.expr.KllMergeAgg(p, k),
-                      resultId = NamedExpression.newExprId)
-                    Some(graft.expr.KllQuantileEst(merged, d))
-                  case _ => None // array percentages stay live
-                }
-              }
-            // TOP-K via frequent-items state (round 12, topKState/Merge):
-            // the query's own k is free; the registered CAPACITY must
-            // match. The estimate's item type is the SKETCH's, so the
-            // rewrite also requires item-type equality (r15: a widening
-            // the tree match tolerates must not change the output type).
-            case (TopKOf(pt, partial, m), t: ApproxTopK)
-                if plain && pt.matchesOrdered(resolve(t.expr)) && t.k.foldable &&
-                   (t.maxItemsTracked match {
-                     case Literal(i: Int, _) => i == m
-                     case _ => false
-                   }) =>
-              attr(partial).flatMap { p =>
-                val combined = ae.copy(
-                  aggregateFunction = ApproxTopKCombine(p, Literal(m)),
-                  resultId = NamedExpression.newExprId)
-                val est = ApproxTopKEstimate(combined, t.k)
-                val same = try est.dataType == ae.dataType
-                  catch { case scala.util.control.NonFatal(_) => false }
-                if (same) Some(est) else None
-              }
-            // WEIGHTED TOP-K (round 16, topKWeightedState/Merge): the
-            // state read re-aggregates as the weight-map sum-merge —
-            // item AND weight patterns must match and the capacity must
-            // equal the query's; the `graft_topk_weighted(st, k)`
-            // estimate scalar above survives the rewrite untouched
-            case (TopKWeightedOf(ip, wp, partial, m), tk: graft.expr.TopKWeightedAgg)
-                if plain && ip.matchesOrdered(resolve(tk.left)) &&
-                   wp.matchesOrdered(resolve(tk.right)) && tk.maxMapSize == m =>
-              attr(partial).map(p =>
-                ae.copy(aggregateFunction = graft.expr.TopKWeightedMergeAgg(p, m)))
-            case _ => None
-          }
-        }.headOption
-      }
-      // uniqUpTo (round 13): the whole `least(count(DISTINCT col), n+1)`
-      // OUTPUT maps onto the capped-set partial — the distinct
-      // aggregate alone is not mergeable; only the capped form is
-      // (see [[UniqUpToOf]]), so the match lives at the expression
-      // level where the limit literal is visible
-      def mapUpTo(l: Least): Option[Expression] = l.children match {
-        case Seq(ae: AggregateExpression, limE)
-            if limE.foldable && limE.dataType == LongType =>
-          val lim = limE.eval().asInstanceOf[Long]
-          (ae.aggregateFunction, ae.isDistinct, ae.filter) match {
-            case (Count(Seq(se)), true, None) =>
-              aggs.view.flatMap {
-                case UniqUpToOf(pt, partial, n)
-                    if lim == n + 1 && pt.matchesOrdered(resolve(se)) =>
-                  attr(partial).map { p =>
-                    val merged = ae.copy(aggregateFunction = CollectList(p),
-                      isDistinct = false,
-                      resultId = NamedExpression.newExprId)
-                    Least(Seq(
-                      Cast(Size(ArrayDistinct(Flatten(merged)), false), LongType),
-                      Literal((n + 1).toLong)))
-                  }
-                case _ => None
-              }.headOption
-            case _ => None
-          }
-        case _ => None
-      }
+      val r = Read(resolve, attr, inLattice, grainCount, aggs,
+        estimatorSubstitutionEnabled, spark.sessionState.conf.sessionLocalTimeZone)
       ne.transformUp {
-        case l: Least => mapUpTo(l).getOrElse(l)
-        case ae: AggregateExpression => mapAgg(ae).getOrElse(ae)
+        case ae: AggregateExpression => aggs.view.flatMap(_.read(ae, r)).headOption.getOrElse(ae)
+        case e => aggs.view.flatMap(_.readWhole(e, r)).headOption.getOrElse(e)
       }.asInstanceOf[NamedExpression]
     }
 
-    /** The hybrid tail's own partial for rollup column `n`, if member
-      * `m` writes it: the aggregate [[partialColumns]] builds, over the
-      * raw scan's attributes (`attrOf`). None when `m` writes another
-      * column or a source column is missing. */
-    private def tailPartial(m: AggMap, n: String,
-                            attrOf: String => Option[Attribute]): Option[Expression] = {
-      def of(pat: SrcPat)(f: Expression => AggregateFunction): Option[Expression] =
-        pat.rebuild(attrOf).map(e => f(e).toAggregateExpression())
-      m match {
-        case SumOf(pat, p) if p == n => of(pat)(e => Sum(Cast(e, DecimalType(38, 6))))
-        case CountStarTo(p) if p == n => Some(Count(Seq(Literal(1))).toAggregateExpression())
-        case CountOf(pat, p) if p == n => of(pat)(e => Count(Seq(e)))
-        case MinOf(cn, p) if p == n => of(ColRef(cn))(Min(_))
-        case MaxOf(cn, p) if p == n => of(ColRef(cn))(Max(_))
-        case AvgOf(cn, _, p) if p == n => of(ColRef(cn))(e => Count(Seq(e)))
-        // avg's sum partial, when no SumOf writes the same column (the
-        // builder reuses it)
-        case AvgOf(cn, sp, _) if sp == n =>
-          of(ColRef(cn))(e => Sum(Cast(e, DecimalType(38, 6))))
-        case HllUniqOf(pt, p, lgK) if p == n => of(pt)(e => HllSketchAgg(e, Literal(lgK)))
-        case KllQuantileOf(pt, p, k) if p == n => of(pt)(graft.expr.KllDoublesAgg(_, k))
-        case TopKOf(pt, p, cap) if p == n => of(pt)(ApproxTopKAccumulate(_, Literal(cap)))
-        case SetOf(pt, p) if p == n => of(pt)(CollectSet(_))
-        case UniqUpToOf(pt, p, lim) if p == n => // the tail's capped set
-          of(pt)(CollectSet(_)).map(Slice(_, Literal(1), Literal(lim + 1)))
-        case BitmapUniqOf(pt, p) if p == n => of(pt)(graft.expr.BitmapAgg(_))
-        case ThetaUniqOf(pt, p, k) if p == n => of(pt)(graft.expr.ThetaAgg(_, k))
-        case ListOf(pt, p) if p == n => of(pt)(CollectList(_))
-        case TopKWeightedOf(ip, wp, p, cap) if p == n =>
-          for (ie <- ip.rebuild(attrOf); we <- wp.rebuild(attrOf))
-            yield graft.expr.TopKWeightedAgg(ie, we, cap).toAggregateExpression()
-        case MinPatOf(pt, p) if p == n => of(pt)(Min(_))
-        case MaxPatOf(pt, p) if p == n => of(pt)(Max(_))
-        case _ => None
-      }
-    }
+    /** The hybrid tail's own partial for rollup column `n`: the build
+      * aggregate of the first member that writes it, over the raw
+      * scan's attributes (`attrOf`). None for a rebuild-only column or
+      * a missing source column. */
+    private def tailPartial(aggs: Seq[AggMap], n: String,
+                            attrOf: String => Option[Attribute]): Option[Expression] =
+      aggs.view.flatMap(_.partials).filter(p => p.name == n && p.merge.isDefined)
+        .flatMap(_.build(_.rebuild(attrOf))).headOption
 
     /** A whole-grain bound on the RAW time column, rewritten onto the
       * rollup's truncated time key — or None for any other shape. A
@@ -2921,8 +2986,7 @@ object RollupRouting {
           Alias(attrOf(srcOfRollupCol(n)).getOrElse(return None), n)()
         case n if timeOfRollupCol.contains(n) =>
           Alias(rebuildTime(timeOfRollupCol(n)).getOrElse(return None), n)()
-        case n => spec.aggs.view.flatMap(tailPartial(_, n, attrOf)).headOption
-          .map(Alias(_, n)())
+        case n => tailPartial(spec.aggs, n, attrOf).map(Alias(_, n)())
           .getOrElse(return None) // a column the tail can't rebuild
       }
       alignTailTypes(aggExprs, rollup.output)
@@ -3559,80 +3623,6 @@ object RollupRouting {
       spark.sessionState.conf.getConfString(
         "spark.graft.routing.estimatorSubstitution", "true") != "false"
 
-    /** True when two types differ only by the loader-contract
-      * timestamp relabel (TimestampNTZ vs Timestamp) at any nesting —
-      * a cast between them changes no value under the pinned-UTC
-      * session (round 14). */
-    private def relabelOnly(from: org.apache.spark.sql.types.DataType,
-                            to: org.apache.spark.sql.types.DataType): Boolean = {
-      import org.apache.spark.sql.types._
-      (from, to) match {
-        case (f, t) if f == t => true
-        // the NTZ<->TZ relabel is value-preserving ONLY under the
-        // pinned-UTC session (the loader contract); a non-UTC session
-        // would silently SHIFT stored timestamps, so the rewrite
-        // degrades to no-route there instead (round 17, review
-        // finding). UTC is recognized by ZONE RULES, not string
-        // equality — "Etc/UTC"/"GMT"/"+00:00" are all the same fixed
-        // zero offset and must not silently disable routing.
-        case (TimestampNTZType, TimestampType) =>
-          scala.util.Try(java.time.ZoneId
-            .of(spark.sessionState.conf.sessionLocalTimeZone)
-            .normalized() == java.time.ZoneOffset.UTC).getOrElse(false)
-        case (f: StructType, t: StructType) =>
-          f.length == t.length && f.fields.zip(t.fields).forall { case (a, b) =>
-            a.name == b.name && relabelOnly(a.dataType, b.dataType) }
-        case (f: ArrayType, t: ArrayType) =>
-          relabelOnly(f.elementType, t.elementType)
-        case _ => false
-      }
-    }
-
-    /** `src`'s structure and NULLABILITY with `like`'s timestamp
-      * LABELS (TimestampNTZ vs Timestamp) at every nesting — the cast
-      * target that aligns a raw-scan-built rollup's stored time label
-      * with the loader-relabeled query side without touching the
-      * nullability flags a Cast cannot change (round 16). */
-    private def withTimeLabelsOf(src: org.apache.spark.sql.types.DataType,
-                                 like: org.apache.spark.sql.types.DataType)
-        : org.apache.spark.sql.types.DataType = {
-      import org.apache.spark.sql.types._
-      (src, like) match {
-        case (TimestampNTZType, TimestampType) => TimestampType
-        case (TimestampType, TimestampNTZType) => TimestampNTZType
-        case (f: StructType, t: StructType) if f.length == t.length =>
-          StructType(f.fields.zip(t.fields).map { case (a, b) =>
-            a.copy(dataType = withTimeLabelsOf(a.dataType, b.dataType)) })
-        case (f: ArrayType, t: ArrayType) =>
-          f.copy(elementType = withTimeLabelsOf(f.elementType, t.elementType))
-        case _ => src
-      }
-    }
-
-    /** Flatten of merged list states, with the element type's time
-      * labels aligned to the query's own element type when the stored
-      * states carry the pre-loader NTZ label (an advised rollup built
-      * from the raw scan). The relabel cast changes NO value under
-      * the pinned-UTC session — the loader-contract invariant — and
-      * the cast target keeps the stored nullability flags, so the
-      * routed output differs from the live one only where the
-      * existing sameTypeIgnoreNullability contract already allows. */
-    private def relabelFlatten(merged: Expression,
-                               storedType: org.apache.spark.sql.types.DataType,
-                               queryElem: org.apache.spark.sql.types.DataType)
-        : Expression = {
-      import org.apache.spark.sql.types._
-      val flat = Flatten(merged)
-      storedType match {
-        case ArrayType(et, cn)
-            if !org.apache.spark.sql.graftx.Bridge
-              .sameTypeIgnoreNullability(et, queryElem) =>
-          Cast(flat, ArrayType(withTimeLabelsOf(et, queryElem), cn),
-            Some(spark.sessionState.conf.sessionLocalTimeZone))
-        case _ => flat
-      }
-    }
-
     /** Align a hybrid tail's output types with the rollup block it
       * unions against. The tail rebuilds measures from the RAW scan,
       * below the loader's normalization project, so a measure that
@@ -3648,7 +3638,7 @@ object RollupRouting {
       val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
       Some(aggExprs.zip(rollupOut).map { case (ne, target) =>
         if (ne.dataType == target.dataType) ne
-        else if (relabelOnly(ne.dataType, target.dataType)) ne match {
+        else if (relabelOnly(ne.dataType, target.dataType, tz.get)) ne match {
           case Alias(c, n) => Alias(Cast(c, target.dataType, tz), n)()
           case _ => return None
         }
@@ -3752,8 +3742,7 @@ object RollupRouting {
       val aggExprs: Seq[NamedExpression] = rollup.output.map(_.name).map {
         case n if n == timeKeyName => Alias(grainKey, n)()
         case n if keyLookup.contains(n) => Alias(keyLookup(n), n)()
-        case n => spec.aggs.view.flatMap(tailPartial(_, n, scanAttr)).headOption
-          .map(Alias(_, n)())
+        case n => tailPartial(spec.aggs, n, scanAttr).map(Alias(_, n)())
           .getOrElse(return None) // a column the tail can't rebuild
       }
       val tailGroupings: Seq[Expression] =
