@@ -41,14 +41,12 @@ object SteadyStateBench {
   /** Drain every file in `deliveryDir` as ONE availableNow micro-batch
     * through the join maintainer. */
   private def drain(spark: SparkSession, deliveryDir: String, factTable: String,
-                    dims: Map[String, DataFrame], spec: JoinSpec,
-                    grainUs: Long): Double = {
+                    dims: Map[String, DataFrame], spec: JoinSpec): Double = {
     val schema = spark.read.parquet(deliveryDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "100000").parquet(deliveryDir)
     timed {
-      graft.streaming.Live.maintainJoinRollup(
-        stream, factTable, dims, spec, grainUs = grainUs)
+      graft.streaming.Live.maintainJoinRollup(stream, factTable, dims, spec)
     }._2
   }
 
@@ -65,21 +63,21 @@ object SteadyStateBench {
     Tables.lineitem(spark, small).coalesce(2).write.parquet(liDelivery)
 
     case class Target(name: String, factTable: String, deliveryDir: String,
-                      mkSpec: String => JoinSpec, grainUs: Long,
+                      mkSpec: String => JoinSpec,
                       fact: DataFrame, dims: Map[String, DataFrame])
     val orders = Tables.orders(spark, big)
     val customer = Tables.customer(spark, big)
     val events = Tables.events(spark, big)
     val targets = Seq(
       Target("q171_revseg", "lineitem", liDelivery,
-        JoinSpec.revenueSegmentDated _, 86400000000L,
+        JoinSpec.revenueSegmentDated _,
         Tables.lineitem(spark, big),
         Map("orders" -> orders, "customer" -> customer)),
       Target("q183_evseg_hourly", "events", evDelivery,
-        JoinSpec.eventsSegmentHourly _, 3600000000L,
+        JoinSpec.eventsSegmentHourly _,
         events, Map("customer" -> customer)),
       Target("q197_uniqseg", "events", evDelivery,
-        JoinSpec.uniqSegmentDaily _, 86400000000L,
+        JoinSpec.uniqSegmentDaily _,
         events, Map("customer" -> customer)))
 
     // the SINGLE-TABLE maintainer's steady state (the q168-class
@@ -118,12 +116,10 @@ object SteadyStateBench {
           .write.parquet(builtDir)
       }
       // steady state: ONE batch-sized delivery against the built state
-      val steadySec = drain(spark, t.deliveryDir, t.factTable, t.dims,
-                            spec, t.grainUs)
+      val steadySec = drain(spark, t.deliveryDir, t.factTable, t.dims, spec)
       // control: the SAME delivery against an empty state
       val emptySpec = t.mkSpec(work.resolve(s"${t.name}_empty").toString)
-      val emptySec = drain(spark, t.deliveryDir, t.factTable, t.dims,
-                           emptySpec, t.grainUs)
+      val emptySec = drain(spark, t.deliveryDir, t.factTable, t.dims, emptySpec)
       println(s"""{"target":"${t.name}","build_sec":${f"$buildSec%.2f"},""" +
         s""""steady_sec":${f"$steadySec%.2f"},"empty_sec":${f"$emptySec%.2f"}}""")
       (t.name, buildSec, steadySec, emptySec)

@@ -43,10 +43,11 @@ object Rollups {
 
   /** The daily rollup's PARTIAL-STATE block (day × user grain): the
     * exact DECIMAL value partial, the row count, and the min/max
-    * partials. The streaming insert-maintenance sink
-    * ([[graft.streaming.Live.appendDailyPartials]]) builds with it,
-    * and it is the pinned reference for the daily spec's own build
-    * ([[dailyMV]]); both re-aggregate losslessly by construction. */
+    * partials. The hand-written reference a spec pins equal to the
+    * daily spec's own build ([[graft.plans.RollupRouting.buildPartials]]
+    * over a bare `Spec`), which both [[dailyMV]] and the streaming
+    * maintainer ([[graft.streaming.Live.maintainRollup]]) write; both
+    * re-aggregate losslessly by construction. */
   def dailyPartialsOf(events: DataFrame): DataFrame =
     events
       .groupBy(to_date(col("ts")).as("day"), col("user_id"))
@@ -1431,7 +1432,7 @@ object Rollups {
     * pushed into the fact scan (partition-pruned in a date-partitioned
     * lake), versus a full MV rebuild. Append-only summing MVs don't
     * need this (signed/partial blocks merge at read —
-    * [[graft.streaming.Live.appendDailyPartials]]); refresh is for
+    * [[graft.streaming.Live.maintainRollup]]); refresh is for
     * CORRECTIONS: reprocessed upstream data, backfills, GDPR erasure,
     * where the day must be recomputed, not appended to. */
   def refreshStaleDays(spark: SparkSession, updatedBase: DataFrame,
@@ -1708,7 +1709,7 @@ object Rollups {
     * `approx_top_k` family carries a MERGEABLE sketch state
     * (accumulate → combine → estimate), so partial sketches roll up
     * across partitions, days, or incremental-MV batches exactly like
-    * the HLL uniq states in `Live.appendUniqPartials` — constant-size
+    * the HLL uniq states of [[uniqSketchSpec]] — constant-size
     * state per group at any fact cardinality. Un-oracled (DuckDB has no
     * twin); the spec asserts exactness vs q08 at test cardinalities and
     * that the merge path equals the one-shot path. */

@@ -116,28 +116,15 @@ object StarJoins {
     * per order instead of one per line; dims attach by broadcast.
     * Partials are additive — batches append like the daily rollup's
     * partial blocks, no read-modify-write ([[graft.streaming.Live
-    * .appendDailyPartials]] economy; additivity proven in
+    * .maintainJoinRollup]] economy; additivity proven in
     * RollupRoutingSpec). Caveat: appends must respect the orderkey
     * grain (all lines of an order in one batch — the natural delivery
     * unit), else COUNT(*)-as-n_orders double-counts a split order. */
   def revenueSegmentPartialsOf(li: DataFrame, o: DataFrame, c: DataFrame): DataFrame =
-    revenueSegmentAttach(revenueSegmentFactPre(li), o, c)
-
-  /** The fact half of [[revenueSegmentPartialsOf]]: lineitem
-    * pre-aggregated per orderkey (decimal revenue partial + line
-    * count) before any join — order-grain-sized, so the streaming
-    * maintainer persists it and probes its key range cheaply. */
-  private[graft] def revenueSegmentFactPre(li: DataFrame): DataFrame =
     li.groupBy(col("l_orderkey"))
       .agg(dsumPartial(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
              .as("rev_partial"),
            count(lit(1)).as("n_lines_partial"))
-
-  /** The dim half of [[revenueSegmentPartialsOf]]: attach orders +
-    * customer to the pre-aggregated fact. */
-  private[graft] def revenueSegmentAttach(pre: DataFrame, o: DataFrame,
-                                          c: DataFrame): DataFrame =
-    pre
       .join(o.select(col("o_orderkey"), col("o_custkey")),
             col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(c.select(col("c_custkey"), col("c_mktsegment"))),
@@ -167,24 +154,6 @@ object StarJoins {
       if (mm.isNullAt(0)) o // empty batch: nothing to prune against
       else o.filter(col("o_orderkey").between(mm.getLong(0), mm.getLong(1)))
     revenueSegmentPartialsOf(batch, oPruned, c)
-  }
-
-  /** [[revenueSegmentPartialsOfPruned]] with the range probe moved onto
-    * a PERSISTED fact pre-aggregation (r20, guide §1.2/§2.4 — scan the
-    * delivery once, not twice): the pre-agg keeps l_orderkey as its
-    * group key, so min/max over it equal the raw batch's, and the raw
-    * rows are read exactly once per micro-batch. `use` runs with the
-    * persisted block in scope; the cache is dropped on exit. */
-  private[graft] def withRevenueSegmentPartialsPruned[A](
-      batch: DataFrame, o: DataFrame, c: DataFrame)(use: DataFrame => A): A = {
-    val pre = revenueSegmentFactPre(batch).persist()
-    try {
-      val mm = pre.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head
-      val oPruned =
-        if (mm.isNullAt(0)) o // empty batch: nothing to prune against
-        else o.filter(col("o_orderkey").between(mm.getLong(0), mm.getLong(1)))
-      use(revenueSegmentAttach(pre, oPruned, c))
-    } finally pre.unpersist()
   }
 
   /** Dashboard read over the persisted rollup: NO join, no lineitem

@@ -1503,9 +1503,9 @@ object Advisor {
       * (append partial blocks per micro-batch, advance the coverage
       * sidecar monotonically). Pass a persistent `checkpointDir` for
       * exactly-once across restarts. */
-    def maintain(stream: DataFrame, spec: Spec, latenessUs: Long = 0L,
+    def maintain(stream: DataFrame, spec: Spec,
                  checkpointDir: Option[String] = None): Unit =
-      graft.streaming.Live.maintainRollup(stream, spec, latenessUs, checkpointDir)
+      graft.streaming.Live.maintainRollup(stream, spec, checkpointDir)
 
     /** The JOIN-MV twin: per micro-batch the spec's own build over
       * (batch-as-fact ⋈ runtime-pruned dims), appended with the same
@@ -1513,10 +1513,9 @@ object Advisor {
       * requires `spec.coverage`). */
     def maintainJoin(factStream: DataFrame, factTable: String,
                      dims: Map[String, DataFrame], spec: JoinSpec,
-                     latenessUs: Long = 0L, grainUs: Long = 86400000000L,
                      checkpointDir: Option[String] = None): Unit =
       graft.streaming.Live.maintainJoinRollup(
-        factStream, factTable, dims, spec, latenessUs, grainUs, checkpointDir)
+        factStream, factTable, dims, spec, checkpointDir)
 
     /** RETIRE one adopted registration (round 14): drop it from the
       * live registry AND re-persist the catalog, so a restart stays

@@ -80,7 +80,7 @@ import org.apache.spark.sql.types.{ArrayType, DateType, DecimalType, IntegerType
 object RollupRouting {
 
   /** A registered single-table rollup (built by [[materialize]], or
-    * appended by [[graft.streaming.Live.appendDailyPartials]]). `grain` names the
+    * appended by [[graft.streaming.Live.maintainRollup]]). `grain` names the
     * rollup's time grain — `"day"` (a `day: DATE` key) or `"hour"`
     * (an `hour: TIMESTAMP` key, `date_trunc('hour', ts)`). A rollup
     * answers queries AT its grain or COARSER (a day-grain query

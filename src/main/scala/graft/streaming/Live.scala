@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.ops.StarJoins
 import graft.ops.Fns._
-import graft.plans.RollupRouting.{Catalog, route}
+import graft.plans.RollupRouting
+import graft.plans.RollupRouting.{Catalog, JoinSpec, Spec, TimeGrainPat, route}
 
 /** Structured-Streaming variants of the ingest/rollup pipeline
   * (SURVEY §2.8 T1–T6).
@@ -19,8 +20,9 @@ import graft.plans.RollupRouting.{Catalog, route}
   * `sql/analytics.sql`). Spark-first mapping: `readStream` file source →
   * the same declarative aggregation → either a complete-mode sink (small
   * keyspace) or SummingMergeTree-style *partial-state appends* via
-  * `foreachBatch` ([[appendDailyPartials]]), re-aggregated at read
-  * ([[readDailyRollup]]) — the A6 partial→final invariant.
+  * `foreachBatch` ([[maintainRollup]], [[maintainJoinRollup]]),
+  * re-aggregated at read ([[readDailyRollup]]) — the A6 partial→final
+  * invariant.
   */
 object Live {
 
@@ -205,17 +207,18 @@ object Live {
 
   /** T1+T2+T5: the daily rollup maintained END-TO-END through the MV
     * pipeline — micro-batched ingest appends one partial-state block
-    * per batch ([[appendDailyPartials]], the SummingMergeTree insert-
-    * trigger economy) and the query merges partials at read
-    * ([[readDailyRollup]], the A6 invariant). No result row ever
-    * touches the driver: partials stream from executors to the rollup
-    * lake, and the read side is an ordinary distributed aggregation.
-    * Must equal the batch rollup bit-for-bit (partial decimal sums
-    * re-aggregate losslessly), so it shares q01's oracle. */
+    * per batch ([[maintainRollup]] over the bare daily spec, the
+    * SummingMergeTree insert-trigger economy) and the query merges
+    * partials at read ([[readDailyRollup]], the A6 invariant). No
+    * result row ever touches the driver: partials stream from
+    * executors to the rollup lake, and the read side is an ordinary
+    * distributed aggregation. Must equal the batch rollup bit-for-bit
+    * (partial decimal sums re-aggregate losslessly), so it shares
+    * q01's oracle. */
   def streamingDaily(spark: SparkSession, sfDir: String): DataFrame = {
     val rollupDir = StarJoins.scratchTemp("graft_daily_mv")
       .resolve("rollup").toString
-    maintainDailyRollup(spark, sfDir, rollupDir)
+    maintainRollup(eventStream(spark, sfDir), Spec("events.parquet", rollupDir))
     readDailyRollup(spark, rollupDir)
   }
 
@@ -234,25 +237,6 @@ object Live {
       .select(col("day"), col("n")).orderBy("day")
   }
 
-  /** T5 write side: per micro-batch, append *partial* aggregate states
-    * to the rollup store — exactly SummingMergeTree's insert-trigger
-    * economy (`sql/analytics.sql:10`): the sink receives one small
-    * pre-aggregated block per batch, never raw rows. */
-  def appendDailyPartials(batch: DataFrame, rollupDir: String): Unit = {
-    // refuse to append the v2 (mn/mx) partial schema into a pre-upgrade
-    // rollup: mixed footers would make a routed MIN/MAX silently cover
-    // only post-upgrade batches (old rows read the columns as NULL).
-    // Schema upgrades require a rollup rebuild — fail loud, not wrong.
-    val dir = new java.io.File(rollupDir)
-    if (dir.exists()) {
-      val existing = batch.sparkSession.read.parquet(rollupDir).schema.fieldNames
-      require(existing.contains("mn_partial"),
-        s"$rollupDir holds pre-mn/mx partials; rebuild the rollup before appending")
-    }
-    graft.ops.Rollups.dailyPartialsOf(batch)
-      .write.mode("append").parquet(rollupDir)
-  }
-
   /** T5 read side / A6: merge partial states at query time — the
     * explicit final GROUP BY the reference's users write
     * (`README.md:66-71`). Lossless for sum/count by construction. */
@@ -263,85 +247,24 @@ object Live {
            sum(col("c_partial")).as("tx_count"))
       .orderBy("day", "user_id")
 
-  /** A3+T5 with true mergeable state — the AggregatingMergeTree analog:
-    * the reference's `uniq(from_address)` inside an incrementally-
-    * maintained MV (`sql/analytics.sql:34-35`) requires the rollup to
-    * store a *mergeable* distinct-count state, not a number. Spark's
-    * Datasketches HLL functions provide exactly that: partials store
-    * `hll_sketch_agg` binaries; readers `hll_union_agg` then estimate.
-    * Appends stay small (one sketch per day per batch) and the merge is
-    * associative — the same partial→final invariant as sum/count. */
-  def appendUniqPartials(batch: DataFrame, rollupDir: String): Unit =
-    batch
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(expr("hll_sketch_agg(user_id)").as("uniq_state"),
-           count(lit(1)).as("c_partial"))
-      .write.mode("append").parquet(rollupDir)
-
-  /** Merge the per-batch sketches to per-day distinct estimates. */
-  def readUniqRollup(spark: SparkSession, rollupDir: String): DataFrame =
-    spark.read.parquet(rollupDir)
-      .groupBy(col("day"))
-      .agg(expr("hll_sketch_estimate(hll_union_agg(uniq_state))").as("uniq_users"),
-           sum(col("c_partial")).as("tx_count"))
-      .orderBy("day")
-
-  /** Drive the uniq-state rollup with availableNow micro-batches. */
-  def maintainUniqRollup(spark: SparkSession, sfDir: String, rollupDir: String): Unit =
-    drain(eventStream(spark, sfDir))((batch, _) => appendUniqPartials(batch, rollupDir))
-
-  /** The frequent-items twin of [[appendUniqPartials]] — ClickHouse's
-    * `topK()` inside an incrementally-maintained MV. Each micro-batch
-    * appends one `approx_top_k_accumulate` sketch per day; readers
-    * `approx_top_k_combine` then estimate. Same partial→final algebra
-    * as the HLL states: constant-size appends at any fact volume. */
-  def appendTopKPartials(batch: DataFrame, rollupDir: String): Unit =
-    batch
-      .groupBy(to_date(col("ts")).as("day"))
-      // NB the argument is maxItemsTracked (sketch CAPACITY), not k —
-      // size it well above the per-group key cardinality or the
-      // space-saving sketch overestimates and drops items
-      .agg(expr("approx_top_k_accumulate(user_id, 1024)").as("topk_state"),
-           count(lit(1)).as("c_partial"))
-      .write.mode("append").parquet(rollupDir)
-
-  /** Merge per-batch sketches to per-day top-k (rank, user, est count). */
-  def readTopKRollup(spark: SparkSession, rollupDir: String): DataFrame =
-    spark.read.parquet(rollupDir)
-      .groupBy(col("day"))
-      .agg(expr("approx_top_k_estimate(approx_top_k_combine(topk_state), 10)").as("tk"),
-           sum(col("c_partial")).as("tx_count"))
-      .select(col("day"), posexplode(col("tk")).as(Seq("rank0", "e")),
-              col("tx_count"))
-      .select(col("day"), (col("rank0") + 1).cast("int").as("rank"),
-              col("e.item").as("user_id"), col("e.count").as("est_count"),
-              col("tx_count"))
-      .orderBy("day", "rank")
-
-  /** Drive the topK-state rollup with availableNow micro-batches. */
-  def maintainTopKRollup(spark: SparkSession, sfDir: String, rollupDir: String): Unit =
-    drain(eventStream(spark, sfDir))((batch, _) => appendTopKPartials(batch, rollupDir))
-
-  /** Run the incremental-maintenance pipeline end-to-end with
-    * availableNow micro-batches (driven by maxFilesPerTrigger when the
-    * source has multiple files). */
-  def maintainDailyRollup(spark: SparkSession, sfDir: String, rollupDir: String): Unit =
-    drain(eventStream(spark, sfDir))((batch, _) => appendDailyPartials(batch, rollupDir))
+  private def partFileCount(dir: String): Int =
+    Option(new java.io.File(dir).listFiles())
+      .map(_.count(f => f.isFile && f.getName.startsWith("part-"))).getOrElse(0)
 
   /** SPEC-DRIVEN CONTINUOUS MAINTENANCE (round 12): the streaming leg
-    * of the one-registration MV lifecycle. Per micro-batch, append the
+    * of the one-registration MV lifecycle. Per micro-batch, build the
     * spec's OWN partial block
     * ([[graft.plans.RollupRouting.buildPartials]] — the same `aggs`
-    * that drive query rewriting) and ADVANCE the coverage sidecar to
-    * the last complete grain boundary of the event time seen so far
-    * (minus `latenessUs` slack for out-of-order sources). The advance
-    * is MONOTONE and stamped atomically, so at every instant of the
-    * drain the hybrid router serves complete grains from the rollup
-    * and the ragged edge from the raw tail; a crash leaves the sidecar
-    * behind the appended partials, which is the SAFE side (the
-    * commit-point filter hides uncommitted partials). Rows later than
-    * `latenessUs` still land in the rollup below the watermark —
-    * partials merge additively, so they are served once appended; the
+    * that drive query rewriting) and [[committer commit]] it: append
+    * it and ADVANCE the coverage sidecar to the last complete grain
+    * boundary of the event time seen so far. The advance is MONOTONE
+    * and stamped atomically, so at every instant of the drain the
+    * hybrid router serves complete grains from the rollup and the
+    * ragged edge from the raw tail; a crash leaves the sidecar behind
+    * the appended partials, which is the SAFE side (the commit-point
+    * filter hides uncommitted partials). A row that arrives after its
+    * grain was stamped still lands in the rollup below the watermark —
+    * partials merge additively, so it is served once appended; the
     * append lag is ordinary MV freshness, not an error.
     *
     * Pass a PERSISTENT `checkpointDir` for a production deployment:
@@ -357,40 +280,22 @@ object Live {
     * UPTIME — each append then pays a directory listing against the
     * accumulated parts (the r13 steady-state audit measured 1–2.5 s
     * per trigger against built ×100 states), and every routed read
-    * re-merges months of per-batch blocks. When the part-file count
-    * exceeds `compactAboveFiles`, the maintainer triggers
+    * re-merges months of per-batch blocks. When more than
+    * `compactAboveFiles` part files have accumulated since the last
+    * compaction (or the drain start), the maintainer triggers
     * [[graft.ops.Rollups.compactRollup]] INLINE in the batch — the
     * maintainer IS the single writer, so compacting inside its own
     * foreachBatch is the one place the single-writer contract is free
     * (readers need no quiescing: the swap is the same
     * scratch-build + sidecar + atomic-move protocol every committed
     * write uses, and the coverage watermark travels with the data).
-    * The threshold counts files ACCUMULATED since the last compaction
-    * (or the drain start), not the directory's absolute size — a
-    * large merged state whose compacted form legitimately spans many
-    * files must not re-compact on every trigger.
-    * `compactAboveFiles < 0` (the default) reads the session conf
-    * `spark.graft.maintain.compactAboveFiles` (default 64); `0`
-    * disables. */
-  /** The maintainers' compaction trigger (round 15): an explicit
-    * argument wins; otherwise the session conf; `0` disables (the
-    * returned Int.MaxValue makes the count test vacuously false). */
-  private def compactThreshold(spark: SparkSession, explicit: Int): Int = {
-    val t = if (explicit >= 0) explicit
-            else spark.conf.get(MaintainCompactConf, "64").toInt
-    if (t == 0) Int.MaxValue else t
-  }
-  val MaintainCompactConf = "spark.graft.maintain.compactAboveFiles"
-
-  private def partFileCount(dir: String): Int =
-    Option(new java.io.File(dir).listFiles())
-      .map(_.count(f => f.isFile && f.getName.startsWith("part-"))).getOrElse(0)
-
-  def maintainRollup(stream: DataFrame, spec: graft.plans.RollupRouting.Spec,
-                     latenessUs: Long = 0L,
+    * Counting files since the last compaction, not the directory's
+    * absolute size, keeps a large merged state whose compacted form
+    * legitimately spans many files from re-compacting on every
+    * trigger. `0` disables. */
+  def maintainRollup(stream: DataFrame, spec: Spec,
                      checkpointDir: Option[String] = None,
-                     compactAboveFiles: Int = -1): Unit = {
-    import graft.plans.RollupRouting
+                     compactAboveFiles: Int = 64): Unit = {
     // a GRAINLESS rollup stores no time key, so the router has no
     // commit-point filter to hide partials appended before the sidecar
     // advances — append-then-stamp would double-count the gap against
@@ -401,76 +306,36 @@ object Live {
     require(spec.grain != "all",
       s"grainless spec ${spec.rollupPath} cannot be append-maintained: " +
         "no time key means no commit-point filter; rebuild and re-stamp instead")
-    val grainUs = if (spec.grain == "hour") 3600000000L else 86400000000L
-    // seed monotonicity from a prior run's committed watermark
-    val sidecar = new java.io.File(spec.rollupPath, RollupRouting.CoverageSidecar)
-    val stamped = new java.util.concurrent.atomic.AtomicLong(
-      if (sidecar.exists())
-        scala.util.Try(new String(
-          java.nio.file.Files.readAllBytes(sidecar.toPath)).trim.toLong)
-          .getOrElse(Long.MinValue)
-      else Long.MinValue)
-    val seenMaxUs = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val partsBaseline =
-      new java.util.concurrent.atomic.AtomicInteger(partFileCount(spec.rollupPath))
+    // the grain key column is named after the grain ("day" / "hour")
+    val commit = committer(spec.rollupPath, spec.grain,
+      TimeGrainPat(spec.grain, spec.timeCol).micros,
+      s"mr:${spec.sourceSuffix.stripSuffix(".parquet")}", compactAboveFiles)(
+      graft.ops.Rollups.compactRollup(_, spec))
     drain(stream, checkpointDir = checkpointDir) { (batch, _) =>
-      // r20 (guide §1.2 — don't scan the delivery twice): with no
-      // lateness slack the watermark is the max GRAIN KEY of the
-      // batch (floorDiv(max ts, grain) = grain key of the max row,
-      // truncation is monotone), which the PARTIAL BLOCK already
-      // carries — so build+persist the block once and read both
-      // the coverage bound and the rows from it. A nonzero
-      // latenessUs needs the raw (untruncated) max and keeps the
-      // original raw-batch aggregate.
-      val grainKey = if (spec.grain == "hour") "hour" else "day"
-      val partials = RollupRouting.buildPartials(batch, spec).persist()
-      try {
-        val mx =
-          if (latenessUs == 0L)
-            partials.agg(
-              max(unix_micros(col(grainKey).cast("timestamp")))).head()
-          else batch.agg(
-            max(unix_micros(col(spec.timeCol).cast("timestamp")))).head()
-        if (!mx.isNullAt(0)) {
-          partials.write.mode("append").parquet(spec.rollupPath)
-          val m = seenMaxUs.accumulateAndGet(mx.getLong(0), Math.max(_, _))
-          val wm = Math.floorDiv(m - latenessUs, grainUs) * grainUs
-          if (wm > stamped.get()) {
-            RollupRouting.stampCoverage(spec.rollupPath, wm)
-            stamped.set(wm)
-          }
-          if (partFileCount(spec.rollupPath) - partsBaseline.get >
-                compactThreshold(batch.sparkSession, compactAboveFiles)) {
-            graft.ops.Rollups.compactRollup(batch.sparkSession, spec)
-            partsBaseline.set(partFileCount(spec.rollupPath))
-          }
-        }
-      } finally partials.unpersist()
+      commit(RollupRouting.buildPartials(batch, spec))
     }
   }
 
   /** [[maintainRollup]] for a JOIN MV (round 12): per micro-batch,
     * run the spec's own build over (batch-as-fact ⋈ dims)
-    * ([[graft.plans.RollupRouting.buildJoinPartials]] — fact
-    * pre-aggregated per join key before any join, dims pruned), append
-    * the partial block, and advance the coverage sidecar monotonically
-    * to the last complete grain boundary of the spec's COVERAGE column
-    * seen so far (minus `latenessUs` slack). The same contracts as the
-    * single-table maintainer: deliveries roughly coverage-ordered
-    * within the slack, a crash leaves the sidecar behind the appended
-    * partials (the commit-point filter hides them — the safe side),
-    * and dims are treated as slowly-changing (each batch joins the
-    * current dims, the MV-trigger semantic the reference's engine
-    * gives its MVs). Requires `spec.coverage` — without it the rollup
-    * has no commit point and a stale rollup can never answer. */
+    * ([[graft.plans.RollupRouting.buildJoinPartialsPruned]] — fact
+    * pre-aggregated per join key before any join, dims pruned to the
+    * batch's key range) and commit the partial block with the same
+    * step, advancing the coverage sidecar monotonically to the last
+    * complete grain boundary of the spec's COVERAGE column seen so
+    * far. The grain is the width of the `timeGroupings` truncation
+    * the coverage column names, else a day (a preserved date key).
+    * The same contracts as the single-table maintainer: a crash
+    * leaves the sidecar behind the appended partials (the
+    * commit-point filter hides them — the safe side), and dims are
+    * treated as slowly-changing (each batch joins the current dims,
+    * the MV-trigger semantic the reference's engine gives its MVs).
+    * Requires `spec.coverage` — without it the rollup has no commit
+    * point and a stale rollup can never answer. */
   def maintainJoinRollup(factStream: DataFrame, factTable: String,
-                         dims: Map[String, DataFrame],
-                         spec: graft.plans.RollupRouting.JoinSpec,
-                         latenessUs: Long = 0L,
-                         grainUs: Long = 86400000000L,
+                         dims: Map[String, DataFrame], spec: JoinSpec,
                          checkpointDir: Option[String] = None,
-                         compactAboveFiles: Int = -1): Unit = {
-    import graft.plans.RollupRouting
+                         compactAboveFiles: Int = 64): Unit = {
     val covSrc = spec.coverage.getOrElse(throw new IllegalArgumentException(
       "maintainJoinRollup needs a coverage column on the spec"))
     // a preserved key, or a registered time truncation's rollup column
@@ -480,30 +345,24 @@ object Live {
       .getOrElse(throw new IllegalArgumentException(
         s"coverage column $covSrc must be a preserved grainCols/groupings key " +
           "or a registered timeGroupings rollup column"))
-    val sidecar = new java.io.File(spec.rollupPath, RollupRouting.CoverageSidecar)
-    val stamped = new java.util.concurrent.atomic.AtomicLong(
-      if (sidecar.exists())
-        scala.util.Try(new String(
-          java.nio.file.Files.readAllBytes(sidecar.toPath)).trim.toLong)
-          .getOrElse(Long.MinValue)
-      else Long.MinValue)
-    val seenMaxUs = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val partsBaseline =
-      new java.util.concurrent.atomic.AtomicInteger(partFileCount(spec.rollupPath))
+    val grainMicros = spec.timeGroupings
+      .collectFirst { case (p, rc) if rc == covSrc => p.micros }
+      .getOrElse(86400000000L)
+    val commit = committer(spec.rollupPath, covRollup, grainMicros, s"mjr:$factTable",
+      compactAboveFiles)(graft.ops.Rollups.compactJoinRollup(_, spec))
     drain(factStream, checkpointDir = checkpointDir) { (batch, _) =>
       // runtime key-range prune each dim the fact joins DIRECTLY:
       // incremental deliveries are key-localized, so each batch
       // joins a sliver of the dim, not all of it (the r10 ×100
       // rehearsal measured per-batch full-dim cost as the
       // dominant term; same fix as revenueSegmentPartialsOfPruned).
-      // r20 (guide §2.4/§1.2 — don't scan twice): the ranges are
-      // read from the PERSISTED fact pre-aggregation instead of a
-      // separate raw-batch min/max pass — the pre-agg keeps every
-      // fact join key as a group key, so the ranges are identical
-      // and the raw delivery is scanned exactly once per batch.
+      // The ranges are read from the PERSISTED fact pre-aggregation,
+      // not a separate raw-batch min/max pass — the pre-agg keeps
+      // every fact join key as a group key, so the ranges are
+      // identical and the raw delivery is scanned once per batch.
       val factCols = batch.columns.toSet
       var factPre: DataFrame = null
-      val partials = RollupRouting.buildJoinPartialsPruned(
+      try commit(RollupRouting.buildJoinPartialsPruned(
         dims + (factTable -> batch), spec,
         onFactPre = { pre => factPre = pre.persist(); factPre },
         pruneDim = { (t, df, pre) =>
@@ -512,39 +371,84 @@ object Live {
             case (a, b) if factCols.contains(b) && df.columns.contains(a) => (b, a)
           }
           pair.fold(df) { case (fc, dc) =>
-            // guide §1.5: the FIRST dim prune also materializes the
-            // persisted fact pre-agg — label it so profiles read
+            // the FIRST dim prune also materializes the persisted
+            // fact pre-agg — label it so profiles read
             setDesc(batch, s"mjr:$factTable fact pre-agg + $t prune")
             val r = pre.agg(min(col(fc)), max(col(fc))).head()
             if (r.isNullAt(0)) df
             else df.filter(col(dc) >= lit(r.get(0)) && col(dc) <= lit(r.get(1)))
           }
-        })
-        .persist()
+        }))
+      finally if (factPre != null) factPre.unpersist()
+    }
+  }
+
+  /** The commit step both maintainers run, made once per drain: each
+    * call appends one micro-batch's partial `block` to `rollupPath`
+    * (one action, labelled `<label> append partial block`), then
+    *   - takes the block's max `coverageCol` instant from the append
+    *     itself through a fresh `Observation`, so the block is neither
+    *     persisted nor aggregated a second time;
+    *   - advances the coverage sidecar to the start of that instant's
+    *     `grainMicros` grain — the last COMPLETE grain — monotonically,
+    *     seeded from the committed sidecar, so a restart never
+    *     regresses it;
+    *   - compacts with `compact` once more than `compactAboveFiles`
+    *     part files have accumulated since the drain start or the last
+    *     compaction (`0` never compacts).
+    * A block with no coverage value (an empty batch) moves nothing: a
+    * rollup dir its append created is deleted again, because the
+    * router reads a dir without a sidecar as a COMPLETE rollup.
+    * Before the first append of a drain, an existing rollup whose
+    * footer lacks a column the block writes is refused: its files
+    * would read that column as NULL, so a routed aggregate over it
+    * would silently cover only the new blocks. A changed partial
+    * schema needs a rebuild. */
+  private def committer(rollupPath: String, coverageCol: String, grainMicros: Long,
+                        label: String, compactAboveFiles: Int)(
+      compact: SparkSession => Unit): DataFrame => Unit = {
+    val sidecar = new java.io.File(rollupPath, RollupRouting.CoverageSidecar)
+    var stamped =
+      if (sidecar.exists())
+        scala.util.Try(new String(
+          java.nio.file.Files.readAllBytes(sidecar.toPath)).trim.toLong)
+          .getOrElse(Long.MinValue)
+      else Long.MinValue
+    var partsBaseline = partFileCount(rollupPath)
+    var footerChecked = false
+    block => {
+      val spark = block.sparkSession
+      setDesc(block, s"$label append partial block")
       try {
-        setDesc(batch, s"mjr:$factTable partials build + coverage max")
-        val mx = partials.agg(
-          max(unix_micros(col(covRollup).cast("timestamp")))).head()
-        if (!mx.isNullAt(0)) {
-          setDesc(batch, s"mjr:$factTable append partial block")
-          partials.write.mode("append").parquet(spec.rollupPath)
-          val m = seenMaxUs.accumulateAndGet(mx.getLong(0), Math.max(_, _))
-          val wm = Math.floorDiv(m - latenessUs, grainUs) * grainUs
-          if (wm > stamped.get()) {
-            RollupRouting.stampCoverage(spec.rollupPath, wm)
-            stamped.set(wm)
-          }
-          if (partFileCount(spec.rollupPath) - partsBaseline.get >
-                compactThreshold(batch.sparkSession, compactAboveFiles)) {
-            graft.ops.Rollups.compactJoinRollup(batch.sparkSession, spec)
-            partsBaseline.set(partFileCount(spec.rollupPath))
-          }
+        if (!footerChecked && partFileCount(rollupPath) > 0) {
+          val existing = spark.read.parquet(rollupPath).schema.fieldNames.toSet
+          val missing = block.columns.filterNot(existing)
+          require(missing.isEmpty,
+            s"$rollupPath lacks the spec's partial columns ${missing.mkString(", ")}; " +
+              "rebuild the rollup before appending")
         }
-      } finally {
-        partials.unpersist()
-        if (factPre != null) factPre.unpersist()
-        setDesc(batch, null)
-      }
+        footerChecked = true
+        val created = !new java.io.File(rollupPath).exists()
+        val seen = org.apache.spark.sql.Observation()
+        block.observe(seen, max(unix_micros(col(coverageCol).cast("timestamp"))).as("mx"))
+          .write.mode("append").parquet(rollupPath)
+        seen.get("mx") match {
+          case mx: Long =>
+            val wm = Math.floorDiv(mx, grainMicros) * grainMicros
+            if (wm > stamped) {
+              RollupRouting.stampCoverage(rollupPath, wm)
+              stamped = wm
+            }
+            if (compactAboveFiles > 0 &&
+                  partFileCount(rollupPath) - partsBaseline > compactAboveFiles) {
+              setDesc(block, s"$label compact")
+              compact(spark)
+              partsBaseline = partFileCount(rollupPath)
+            }
+          case _ =>
+            if (created) graft.LocalFs.deleteTree(java.nio.file.Paths.get(rollupPath))
+        }
+      } finally setDesc(block, null)
     }
   }
 
@@ -564,10 +468,9 @@ object Live {
     * proves the tail rebuilt the join for exactly the uncovered
     * orders — the rollup alone cannot see them. */
   def streamingRevenueSegmentHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
     val rollupDir = StarJoins.scratchTemp("graft_revseg_hy")
       .resolve("revseg_rollup").toString
-    val spec = RollupRouting.JoinSpec.revenueSegmentDated(rollupDir)
+    val spec = JoinSpec.revenueSegmentDated(rollupDir)
     val cut = lit("1997-01-01 00:00:00").cast("timestamp")
     val o = graft.Tables.orders(spark, sfDir)
       .filter(col("o_orderdate").cast("timestamp") < cut)
@@ -593,14 +496,13 @@ object Live {
     * tail — the rollup's commit-point filter hides its own
     * appended-but-uncovered partials. */
   def streamingEventsSegmentHourlyHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
     val rollupDir = StarJoins.scratchTemp("graft_evseg_hy")
       .resolve("ev_hourly_rollup").toString
-    val spec = RollupRouting.JoinSpec.eventsSegmentHourly(rollupDir)
+    val spec = JoinSpec.eventsSegmentHourly(rollupDir)
     val c = graft.Tables.customer(spark, sfDir)
     maintainJoinRollup(
       fileStream(spark, sfDir, "events.parquet", Some(1)), "events",
-      Map("customer" -> c), spec, grainUs = 3600000000L)
+      Map("customer" -> c), spec)
     graft.ops.Rollups.compactJoinRollup(spark, spec)
     route(spark, Catalog(joinSpecs = Seq(spec))) {
       graft.ops.StarJoins.eventsSegmentDaily(spark, sfDir)
@@ -619,10 +521,9 @@ object Live {
     * single-pass answer (sketch union is exactly mergeable across
     * both the batch boundary and the coverage boundary). */
   def streamingUniqSegmentHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.plans.RollupRouting
     val rollupDir = StarJoins.scratchTemp("graft_uniqseg_hy")
       .resolve("uniqseg_rollup").toString
-    val spec = RollupRouting.JoinSpec.uniqSegmentDaily(rollupDir)
+    val spec = JoinSpec.uniqSegmentDaily(rollupDir)
     val c = graft.Tables.customer(spark, sfDir)
     maintainJoinRollup(
       fileStream(spark, sfDir, "events.parquet", Some(1)), "events",
@@ -635,59 +536,48 @@ object Live {
 
   /** T5 applied to the JOIN-derived MV (q145, shares q16's oracle):
     * incremental insert-maintenance of the revenue-segment rollup —
-    * stream lineitem deliveries, and per micro-batch run the MV
-    * insert-trigger: pre-aggregate the batch per orderkey, attach the
-    * orders/customer dims (broadcast), and APPEND one small block of
-    * (orderkey, segment) decimal partials
-    * ([[graft.ops.StarJoins.revenueSegmentPartialsOf]]) — the sink
-    * never sees raw lines, and no rollup row is ever rewritten. The
-    * dashboard read re-aggregates the accumulated rollup join-free.
+    * stream lineitem deliveries through [[maintainJoinRollup]] over
+    * the dated revenue spec: per micro-batch the MV insert-trigger
+    * pre-aggregates the batch per orderkey, attaches the key-range
+    * pruned orders and the customer dim, and APPENDS one small block
+    * of (orderkey, date, segment) decimal partials — the sink never
+    * sees raw lines, and no rollup row is ever rewritten. The
+    * dashboard read re-aggregates the accumulated rollup join-free
+    * ([[graft.ops.StarJoins.readRevenueSegmentRollup]], the explicit
+    * merge the reference's users write; its hybrid twin is q171).
     * Deliveries must be order-atomic (all lines of an order in one
     * delivery — the natural shipment unit); the partials doc and
     * RollupRoutingSpec cover the grain caveat. */
   def streamingRevenueSegment(spark: SparkSession, sfDir: String): DataFrame = {
     val rollupDir = StarJoins.scratchTemp("graft_revseg_mv")
       .resolve("rollup").toString
-    // per batch, the dim side is RUNTIME KEY-RANGE PRUNED from the
-    // batch's own min/max orderkey before the join — incremental
-    // batches are key-localized, so each joins against a sliver of
-    // orders, not all of it (the r10 ×100 rehearsal's 17× was that
-    // per-batch full-dim cost)
-    val o = graft.Tables.orders(spark, sfDir)
-    val c = graft.Tables.customer(spark, sfDir)
-    drain(fileStream(spark, sfDir, "lineitem.parquet", Some(1))) { (batch, _) =>
-      graft.ops.StarJoins.withRevenueSegmentPartialsPruned(batch, o, c) {
-        _.write.mode("append").parquet(rollupDir)
-      }
-    }
+    maintainJoinRollup(
+      fileStream(spark, sfDir, "lineitem.parquet", Some(1)), "lineitem",
+      Map("orders" -> graft.Tables.orders(spark, sfDir),
+          "customer" -> graft.Tables.customer(spark, sfDir)),
+      JoinSpec.revenueSegmentDated(rollupDir))
     graft.ops.StarJoins.readRevenueSegmentRollup(spark, rollupDir)
   }
 
   /** T5 + hybrid composed (q164, shares q01's oracle): CONTINUOUS MV
     * maintenance with a RAGGED-EDGE-safe read. A streaming-maintained
     * rollup always ends in a partial last day — the drain stopped
-    * mid-day — and serving it straight would undercount that day. The
-    * maintenance instead stamps the coverage-watermark sidecar at the
-    * last COMPLETE day boundary, so the hybrid router serves complete
-    * days from the rollup and the ragged final day (plus anything
-    * later) from the raw tail: the UNCHANGED raw daily query is exact
-    * at every drain point. Here the mid-day stop is simulated by
-    * bounding what the drain has "seen" (ts < Jan 27 13:00); the hash
-    * match against the full recompute proves the ragged day was
-    * answered by the tail — the rollup alone cannot produce it. */
+    * mid-day — and serving it straight would undercount that day.
+    * [[maintainRollup]] instead stamps the coverage-watermark sidecar
+    * at the last COMPLETE day boundary of what it saw, so the hybrid
+    * router serves complete days from the rollup and the ragged final
+    * day (plus anything later) from the raw tail: the UNCHANGED raw
+    * daily query is exact at every drain point. Here the mid-day stop
+    * is simulated by bounding what the drain has "seen" (ts < Jan 27
+    * 13:00); the hash match against the full recompute proves the
+    * ragged day was answered by the tail — the rollup alone cannot
+    * produce it. */
   def streamingHybridDaily(spark: SparkSession, sfDir: String): DataFrame = {
-    val rollupDir = StarJoins.scratchTemp("graft_hybrid_mv")
-      .resolve("rollup").toString
+    val spec = Spec("events.parquet",
+      StarJoins.scratchTemp("graft_hybrid_mv").resolve("rollup").toString)
     val seenUpTo = lit("2024-01-27 13:00:00").cast("timestamp")
-    drain(eventStream(spark, sfDir)) { (batch, _) =>
-      appendDailyPartials(batch.filter(col("ts") < seenUpTo), rollupDir)
-    }
-    // commit coverage at the last COMPLETE day boundary (floor-to-day
-    // of the max event time the drain saw)
-    val wmUs = java.time.Instant.parse("2024-01-27T00:00:00Z").toEpochMilli * 1000L
-    graft.plans.RollupRouting.stampCoverage(rollupDir, wmUs)
-    route(spark, Catalog(
-        Seq(graft.plans.RollupRouting.Spec("events.parquet", rollupDir)))) {
+    maintainRollup(eventStream(spark, sfDir).filter(col("ts") < seenUpTo), spec)
+    route(spark, Catalog(Seq(spec))) {
       graft.Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"), col("user_id"))
         .agg(graft.ops.Fns.dsum(col("value")).as("total_value"),
@@ -1161,30 +1051,6 @@ object Live {
                timestamp_micros(col("match_us")).as("signup_ts"),
                (col("left_us") - col("match_us")).as("account_age_us"))
       .orderBy("event_id")
-  }
-
-  /** Multi-batch variant over an arbitrary events directory (e.g. the
-    * month-partitioned lake): one file per trigger, so each partition
-    * arrives as its own micro-batch and the rollup accumulates partial
-    * states across several appends — the closest Spark shape to the
-    * reference's per-insert-block MV triggers (`sql/analytics.sql`,
-    * one partial-state block per replicated insert). */
-  def maintainDailyRollupPerFile(spark: SparkSession, eventsDir: String,
-                                 rollupDir: String,
-                                 checkpointDir: Option[String] = None): Int = {
-    val rawSchema = spark.read.parquet(eventsDir).schema
-    val raw = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1").parquet(eventsDir)
-    val ev = Tables.normalizeTs(raw)
-    var batches = 0
-    // a persistent checkpoint makes re-runs resume (exactly-once source
-    // accounting survives restarts); the default stays run-scoped and
-    // is cleaned up with the run
-    drain(ev, checkpointDir = checkpointDir) { (batch, _) =>
-      batches += 1
-      appendDailyPartials(batch, rollupDir)
-    }
-    batches
   }
 
   /** STREAMING near-dup admission — the persisted-index probe

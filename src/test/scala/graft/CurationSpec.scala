@@ -253,10 +253,15 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("streamed topK sketch partials merge to the batch per-day top users") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_topk").toString
-    graft.streaming.Live.maintainTopKRollup(spark, sf, s"$dir/rollup")
-    val merged = graft.streaming.Live.readTopKRollup(spark, s"$dir/rollup")
-      .select($"day".cast("string"), $"user_id", $"est_count")
+    val dir = ops.StarJoins.scratchTemp("graft_topk").toString
+    graft.streaming.Live.maintainRollup(
+      Tables.normalizeTs(TestSpark.fileStream(sf, "events.parquet")),
+      ops.Rollups.topKSketchSpec(s"$dir/rollup"))
+    val merged = spark.read.parquet(s"$dir/rollup")
+      .groupBy($"day")
+      .agg(expr("approx_top_k_estimate(approx_top_k_combine(top_users_state), 10)").as("tk"))
+      .select($"day".cast("string").as("day"), explode($"tk").as("e"))
+      .select($"day", $"e.item".as("user_id"), $"e.count".as("est_count"))
       .as[(String, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(t => t._2 -> t._3).toMap).toMap
     // exact at fixture cardinality: per-day counts from the batch path
@@ -299,7 +304,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("published corpus lake prunes on split and matches the stats query") {
-    val out = java.nio.file.Files.createTempDirectory("graft_pub").toString
+    val out = ops.StarJoins.scratchTemp("graft_pub").toString
     llm.Curate.publish(spark, sf, out)
     val lake = spark.read.parquet(out)
     // readback totals match the oracled stats query exactly

@@ -12,6 +12,7 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Live
+import graft.TestSpark.fileStream
 
 /** `Live.drain`: a stream's micro-batches get as many partitions as its
   * input needs, the caller's session keeps its own conf, and a finished
@@ -25,10 +26,6 @@ class DrainSpec extends AnyFunSuite {
   val Advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
   val Provider = "spark.sql.streaming.stateStore.providerClass"
   val Coalesce = "spark.sql.adaptive.coalescePartitions"
-
-  def fileStream(dir: String, file: String): DataFrame =
-    spark.readStream.schema(spark.read.parquet(s"$dir/$file").schema)
-      .option("pathGlobFilter", file).parquet(dir)
 
   /** q56's stream: per-user running totals under `transformWithState`. */
   def totals(dir: String): DataFrame = {

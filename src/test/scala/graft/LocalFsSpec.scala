@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path => NioPath}
 import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The session's local file system keeps Hadoop's semantics (modes,
@@ -56,22 +57,50 @@ class LocalFsSpec extends AnyFunSuite {
     } finally LocalFs.deleteTree(base)
   }
 
-  test("a failed stream drain leaves no checkpoint dir behind") {
-    def checkpoints(): Set[File] =
-      Seq(ops.StarJoins.scratchRoot, new File(sys.props("java.io.tmpdir")))
-        .flatMap(d => Option(d.listFiles()).toSeq.flatten)
-        .filter(_.getName.startsWith("graft_ckpt")).toSet
+  private def checkpoints(): Set[File] =
+    Seq(ops.StarJoins.scratchRoot, new File(sys.props("java.io.tmpdir")))
+      .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+      .filter(_.getName.startsWith("graft_ckpt")).toSet
+
+  /** `drain` into a rollup dir that already holds a pre-upgrade
+    * partial block (`old`'s columns only) must fail, name the missing
+    * partial columns, and leave no checkpoint dir behind. */
+  private def refusedDrain(old: Seq[String], missing: String)(
+      drain: String => Unit): Unit = {
     val before = checkpoints()
     val rollup = Files.createTempDirectory("graft_localfs_mv").resolve("rollup")
     try {
-      // a rollup without the mn/mx partials: the drain's first append refuses it
-      spark.range(1).toDF("day").write.parquet(rollup.toString)
-      val e = intercept[Exception](
-        streaming.Live.maintainDailyRollup(spark, TestSpark.sf, rollup.toString))
+      spark.range(1).select(old.map(col("id").as(_)): _*)
+        .write.parquet(rollup.toString)
+      val e = intercept[Exception](drain(rollup.toString))
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(c => String.valueOf(c.getMessage).contains("pre-mn/mx partials")), e)
+        .exists(c => String.valueOf(c.getMessage)
+          .contains(s"lacks the spec's partial columns $missing")), e)
       assert(checkpoints().subsetOf(before), checkpoints() -- before)
     } finally LocalFs.deleteTree(rollup.getParent)
+  }
+
+  test("a failed stream drain leaves no checkpoint dir behind") {
+    // a daily rollup without the mn/mx partials: the drain's first
+    // batch refuses it
+    refusedDrain(Seq("day", "user_id", "v_partial", "c_partial"),
+                 "mn_partial, mx_partial, vn_partial") { dir =>
+      streaming.Live.maintainRollup(
+        Tables.normalizeTs(TestSpark.fileStream(TestSpark.sf, "events.parquet")),
+        plans.RollupRouting.Spec("events.parquet", dir))
+    }
+  }
+
+  test("a failed join-MV drain leaves no checkpoint dir behind") {
+    // a revenue rollup from before the coverage column was added
+    refusedDrain(Seq("o_orderkey", "c_mktsegment", "rev_partial", "n_lines_partial"),
+                 "o_orderdate") { dir =>
+      streaming.Live.maintainJoinRollup(
+        TestSpark.fileStream(TestSpark.sf, "lineitem.parquet"), "lineitem",
+        Map("orders" -> Tables.orders(spark, TestSpark.sf),
+            "customer" -> Tables.customer(spark, TestSpark.sf)),
+        plans.RollupRouting.JoinSpec.revenueSegmentDated(dir))
+    }
   }
 
   test("getFileLinkStatus still reports a symlink and its target") {

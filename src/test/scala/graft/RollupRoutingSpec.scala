@@ -13,13 +13,15 @@ class RollupRoutingSpec extends AnyFunSuite {
   val sf = TestSpark.sf
 
   private def withRouting[A](f: => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_route").toString
-    Live.maintainDailyRollup(spark, sf, s"$dir/rollup")
-    RollupRouting.register(RollupRouting.Spec("events.parquet", s"$dir/rollup"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_route")
+    val spec = RollupRouting.Spec("events.parquet", s"$dir/rollup")
+    RollupRouting.buildPartials(Tables.events(spark, sf), spec).write.parquet(spec.rollupPath)
+    RollupRouting.register(spec)
     spark.experimental.extraOptimizations = Seq(new RollupRouting.RuleImpl(spark))
     try f finally {
       spark.experimental.extraOptimizations = Nil
       RollupRouting.clear()
+      LocalFs.deleteTree(dir)
     }
   }
 

@@ -1,15 +1,49 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Live
 import graft.ops.Lifecycle
+import graft.plans.RollupRouting
 
 /** Streaming semantics (T1–T6) + lifecycle jobs (S11/P1/P2). */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
   val sf = TestSpark.sf
+
+  /** A fresh `graft_<prefix>*` dir under this JVM's scratch root,
+    * which the JVM removes at exit. */
+  private def tempDir(prefix: String): String = ops.StarJoins.scratchTemp(prefix).toString
+
+  /** The events under `path` (a file or a dir of part files) as a
+    * file stream, one file per micro-batch. */
+  private def eventStream(path: String): DataFrame = {
+    val f = new java.io.File(path)
+    val reader = spark.readStream.schema(spark.read.parquet(path).schema)
+      .option("maxFilesPerTrigger", "1")
+    Tables.normalizeTs(
+      if (f.isDirectory) reader.parquet(path)
+      else reader.option("pathGlobFilter", f.getName).parquet(f.getParent))
+  }
+
+  /** The number of micro-batches with input that `f`'s drains ran. */
+  private def batchesWithInput(f: => Unit): Int = {
+    val n = new AtomicInteger(0)
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) n.incrementAndGet()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(l)
+    try f finally spark.streams.removeListener(l)
+    n.get
+  }
 
   test("T5: availableNow streaming rollup equals the batch rollup") {
     val streamed = Live.streamingDaily(spark, sf).collect().toSeq
@@ -18,8 +52,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("T5/A6: foreachBatch partial-state appends re-aggregate to batch truth") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rollup").toString
-    Live.maintainDailyRollup(spark, sf, s"$dir/rollup")
+    val dir = tempDir("graft_rollup")
+    Live.maintainRollup(eventStream(s"$sf/events.parquet"),
+      RollupRouting.Spec("events.parquet", s"$dir/rollup"))
     val merged = Live.readDailyRollup(spark, s"$dir/rollup").collect().toSeq
     val batch = graft.ops.Rollups.daily(spark, sf).collect().toSeq
     assert(merged == batch)
@@ -28,11 +63,12 @@ class StreamingSpec extends AnyFunSuite {
   test("T5: per-file micro-batches accumulate partials that merge to batch truth") {
     // multi-file ingest dir → one micro-batch per file (sf0.001 spans a
     // single month, so split by file count rather than partition key)
-    val lake = java.nio.file.Files.createTempDirectory("graft_lake3").toString
+    val lake = tempDir("graft_lake3")
     Tables.events(spark, sf).repartition(3)
       .write.mode("overwrite").parquet(lake)
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc").toString
-    val nBatches = Live.maintainDailyRollupPerFile(spark, lake, s"$dir/rollup")
+    val dir = tempDir("graft_inc")
+    val nBatches = batchesWithInput(Live.maintainRollup(eventStream(lake),
+      RollupRouting.Spec("events.parquet", s"$dir/rollup")))
     assert(nBatches > 1, s"expected multiple micro-batches, got $nBatches")
     val merged = Live.readDailyRollup(spark, s"$dir/rollup")
       .withColumn("day", $"day".cast("date"))
@@ -68,9 +104,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("A3/T5: mergeable HLL uniq states reaggregate to the whole-table sketch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_uniq").toString
-    Live.maintainUniqRollup(spark, sf, s"$dir/rollup")
-    val merged = Live.readUniqRollup(spark, s"$dir/rollup")
+    val dir = tempDir("graft_uniq")
+    Live.maintainRollup(eventStream(s"$sf/events.parquet"),
+      graft.ops.Rollups.uniqSketchSpec(s"$dir/rollup"))
+    val merged = spark.read.parquet(s"$dir/rollup")
+      .groupBy($"day")
+      .agg(expr("hll_sketch_estimate(hll_union_agg(uniq_state))").as("uniq_users"))
+      .orderBy("day")
     // estimate from merged per-batch sketches == estimate from one
     // whole-table sketch (merge associativity), and ≈ exact
     val perDay = merged.select($"day", $"uniq_users").collect().map(r => r.getLong(1))
@@ -90,7 +130,7 @@ class StreamingSpec extends AnyFunSuite {
   test("S9/T3: watermark dedup drops in-window duplicate event_ids") {
     // duplicate the whole events file within the same window → exactly
     // the original count must survive
-    val dir = java.nio.file.Files.createTempDirectory("graft_dup").toString
+    val dir = tempDir("graft_dup")
     val ev = Tables.events(spark, sf)
     ev.unionByName(ev).write.mode("overwrite")
       .parquet(s"$dir/events.parquet")
@@ -99,9 +139,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("S11: archive split is partition-exact and the complete view is lossless") {
-    val lake = java.nio.file.Files.createTempDirectory("graft_lake").toString
-    val arch = java.nio.file.Files.createTempDirectory("graft_arch").toString
-    val live = java.nio.file.Files.createTempDirectory("graft_live").toString
+    val lake = tempDir("graft_lake")
+    val arch = tempDir("graft_arch")
+    val live = tempDir("graft_live")
     // multi-month lake so BOTH sides of the split are non-empty (the
     // sf0.001 fixture spans one month, which left the live side — and
     // the two-root completeView — untested)
@@ -117,15 +157,15 @@ class StreamingSpec extends AnyFunSuite {
     val complete = Lifecycle.completeView(spark, Seq(arch, live))
     assert(complete.count() == total)
     // degenerate-but-real shape: every partition archived, live empty
-    val arch2 = java.nio.file.Files.createTempDirectory("graft_arch2").toString
-    val live2 = java.nio.file.Files.createTempDirectory("graft_live2").toString
+    val arch2 = tempDir("graft_arch2")
+    val live2 = tempDir("graft_live2")
     Lifecycle.archiveBefore(spark, lake, 202499, arch2, live2)
     assert(Lifecycle.completeView(spark, Seq(arch2, live2)).count() == total)
   }
 
   test("S11: keep-last-N archive moves exactly the cold partitions") {
-    val live = java.nio.file.Files.createTempDirectory("graft_liveN").toString
-    val arch = java.nio.file.Files.createTempDirectory("graft_archN").toString
+    val live = tempDir("graft_liveN")
+    val arch = tempDir("graft_archN")
     // the sf0.001 fixture spans one month — synthesize a 4-month lake
     spark.range(1000)
       .select($"id", ($"id" * 3).as("v"),
@@ -183,7 +223,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("S11: keep-last-N rejects a non-integer month partition value") {
-    val live = java.nio.file.Files.createTempDirectory("graft_liveBad").toString
+    val live = tempDir("graft_liveBad")
     spark.range(10)
       .select($"id", concat(lit("m"), ($"id" % 2).cast("string")).as("month"))
       .write.mode("overwrite").partitionBy("month").parquet(live)
@@ -196,7 +236,7 @@ class StreamingSpec extends AnyFunSuite {
   test("flatMapGroupsWithState sessionization equals the batch sessionize") {
     // shuffled 4-file split → events arrive out of order across
     // micro-batches; the interval-merge state must still converge
-    val lake = java.nio.file.Files.createTempDirectory("graft_lake4").toString
+    val lake = tempDir("graft_lake4")
     Tables.events(spark, sf).repartition(4)
       .write.mode("overwrite").parquet(lake)
     // exact equality incl. totals: the state quantizes to DECIMAL(38,6)
@@ -211,7 +251,7 @@ class StreamingSpec extends AnyFunSuite {
     // across micro-batches: a signup can land AFTER the purchase it
     // should match, so the state must retro-correct earlier emissions
     // and the max-version read must equal the batch join exactly
-    val lake = java.nio.file.Files.createTempDirectory("graft_lakeAsof").toString
+    val lake = tempDir("graft_lakeAsof")
     Tables.events(spark, sf).repartition(4)
       .write.mode("overwrite").parquet(s"$lake/events.parquet")
     val streamed = Live.streamingAsOf(spark, lake, maxFilesPerTrigger = Some(1))
@@ -225,7 +265,7 @@ class StreamingSpec extends AnyFunSuite {
     // time-ordered 4-file split (the watermark contract this form
     // assumes): file i holds the i-th timestamp quartile, mod-times
     // forced increasing so the file source replays them in order
-    val lake = java.nio.file.Files.createTempDirectory("graft_lakeAsofF").toString
+    val lake = tempDir("graft_lakeAsofF")
     val evDir = s"$lake/events.parquet"
     val ev = Tables.events(spark, sf)
     val tsCuts = ev.select(unix_micros($"ts").cast("double").as("us"))
@@ -274,19 +314,20 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("checkpoint restart resumes exactly-once: no double-counted files") {
-    val root = java.nio.file.Files.createTempDirectory("graft_eo").toString
+    val root = tempDir("graft_eo")
     val (lake, rollup, ckpt) = (s"$root/lake", s"$root/rollup", s"$root/ckpt")
     val ev = Tables.events(spark, sf)
     // first run: one file
     ev.filter($"user_id" < 8).coalesce(1).write.parquet(lake)
-    Live.maintainDailyRollupPerFile(spark, lake, rollup, Some(ckpt))
+    val spec = RollupRouting.Spec("events.parquet", rollup)
+    Live.maintainRollup(eventStream(lake), spec, checkpointDir = Some(ckpt))
     // restart on the same checkpoint after a second file lands: only the
     // new file may be processed
     ev.filter($"user_id" >= 8).coalesce(1)
       .write.mode("append").parquet(lake)
     // a session count that differs from the checkpoint's on restart
     TestSpark.withConf("spark.sql.shuffle.partitions" -> "2") {
-      Live.maintainDailyRollupPerFile(spark, lake, rollup, Some(ckpt))
+      Live.maintainRollup(eventStream(lake), spec, checkpointDir = Some(ckpt))
     }
     val merged = Live.readDailyRollup(spark, rollup)
       .agg(sum($"tx_count")).head.getLong(0)
@@ -304,7 +345,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("transformWithState totals accumulate across micro-batches") {
-    val lake = java.nio.file.Files.createTempDirectory("graft_lake5").toString
+    val lake = tempDir("graft_lake5")
     Tables.events(spark, sf).repartition(3)
       .write.mode("overwrite").parquet(s"$lake/events.parquet")
     val updates = Live.statefulUserTotals(spark, lake, maxFilesPerTrigger = Some(1))
@@ -322,7 +363,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("compaction merges small files losslessly and atomically swaps") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmp").toString + "/t"
+    val dir = tempDir("graft_cmp") + "/t"
     Tables.events(spark, sf).repartition(8).write.parquet(dir)
     val before = Tables.events(spark, sf)
       .agg(count(lit(1)), sum($"event_id")).head()
@@ -334,7 +375,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("P1: month-partition pruning reaches the file scan") {
-    val lake = java.nio.file.Files.createTempDirectory("graft_lake2").toString
+    val lake = tempDir("graft_lake2")
     Lifecycle.writePartitionedLake(spark, sf, lake)
     val q = spark.read.parquet(lake).filter($"month" === 202401)
     val scan = q.queryExecution.executedPlan.toString
@@ -356,7 +397,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, sum => fsum}
     val docs = Tables.documents(spark, sf)
     val isNew = col("doc_id") % 10 === 0
-    val tmp = java.nio.file.Files.createTempDirectory("graft_snd").toString
+    val tmp = tempDir("graft_snd")
     // snapshot job: persist the corpus signature index (text read once)
     graft.llm.Dedup.writeNearDupIndex(docs.filter(!isNew), s"$tmp/idx")
     // the delivery arrives as TWO files → two micro-batches
@@ -378,7 +419,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("profile partials merge typed slots with native rendering") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pslot").toString
+    val dir = tempDir("graft_pslot")
     // long ids straddle a lexicographic trap ("9" > "10"); floats must
     // render natively ("0.1", not the widened "0.10000000149011612")
     val b1 = Seq((1L, 0.1f, "a"), (2L, 9.5f, "b")).toDF("id", "f", "s")
@@ -396,7 +437,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streamed profile partials merge to the batch profile") {
     val docs = Tables.documents(spark, sf)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sprof").toString
+    val tmp = tempDir("graft_sprof")
     // the corpus arrives as THREE files → three partial-profile appends
     docs.repartition(3).write.parquet(s"$tmp/delivery")
     val cols = Seq("doc_id", "lang", "n_chars", "source", "text")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared session for all suites (forked test JVM). */
 object TestSpark {
@@ -29,6 +29,12 @@ object TestSpark {
     Tables.events(spark, sf).repartition(4).write.parquet(s"$dir/events.parquet")
     dir
   }
+
+  /** `dir`/`file` as a file stream: a file source reads a directory,
+    * so the file streams through its directory and a glob. */
+  def fileStream(dir: String, file: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(s"$dir/$file").schema)
+      .option("pathGlobFilter", file).parquet(dir)
 
   /** `f` with the session confs `kvs` set, each restored after. */
   def withConf[A](kvs: (String, String)*)(f: => A): A = {
